@@ -149,22 +149,7 @@ object Bench {
     // n_improved / n_regressed / per-query geomean / top-5 movers vs
     // the previously committed same-core-count artifact — in a bounded
     // ~400-char block.
-    val prevBlock = prevArtifact.map { p =>
-      val pq = parseQueries(p)
-      val shared = (pq.keySet & results.keySet).toSeq
-        .filter(q => pq(q) >= 0 && results(q) >= 0)
-      if (shared.isEmpty) """"prev":{"n_common":0}"""
-      else {
-        val speedups = shared.map(q => pq(q) / math.max(results(q), 1e-9))
-        val geomean = math.exp(speedups.map(math.log).sum / speedups.size)
-        val nImp = shared.count(q => pq(q) / math.max(results(q), 1e-9) > 1.1)
-        val nReg = shared.count(q => results(q) / math.max(pq(q), 1e-9) > 1.1)
-        val movers = shared.sortBy(q => -math.abs(results(q) - pq(q))).take(5)
-          .map(q => f""""$q":[${pq(q)}%.3f,${results(q)}%.3f]""")
-          .mkString("{", ",", "}")
-        f""""prev":{"n_common":${shared.size},"n_improved":$nImp,"n_regressed":$nReg,"geomean_speedup":$geomean%.4f,"top_movers":$movers}"""
-      }
-    }.getOrElse(""""prev":{"n_common":0}""")
+    val prev = prevBlock(prevArtifact.map(parseQueries).getOrElse(Map.empty), results)
     // The driver captures only a TAIL of stdout and the full line above
     // exceeds it (round 14 shipped `parsed: null`); a compact summary
     // printed AFTER it guarantees the tail always ends with parseable
@@ -172,7 +157,7 @@ object Bench {
     // values double as the compact line's `queries` so the driver's
     // parsed record still has per-query anchors measured the same way
     // round over round.
-    println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$allFloors,"n_queries":${results.size},"errors":$errors,"drift_probe":$driftProbe,$prevBlock,"sf":"$sfDir","full":"$outName"}""")
+    println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$allFloors,"n_queries":${results.size},"errors":$errors,"drift_probe":$driftProbe,$prev,"sf":"$sfDir","full":"$outName"}""")
     // The driver captures only a tail of stdout, which truncates per-query
     // timings past ~29 queries; persist the complete record alongside it.
     // The round-over-round notes are generated HERE, from the artifact
@@ -283,6 +268,28 @@ object Bench {
       "model_train=2.70); first rep in a fresh JVM is 1.5-2x (JIT " +
       "depth). The pre-optimization 4.9-6.1 s band is obsolete — a " +
       "return there would be a real regression, not noise"))
+
+  /** The compact line's `prev` block: improved/regressed counts, the
+    * per-query geomean speedup and the top-5 movers over the queries
+    * timed in both artifacts. A query counts as shared only when both
+    * timings are > 0 — failed queries report -1.0, and a 0.0 timing
+    * would put log(0) into the geomean.
+    */
+  private[graft] def prevBlock(pq: Map[String, Double], results: Map[String, Double]): String = {
+    val shared = (pq.keySet & results.keySet).toSeq
+      .filter(q => pq(q) > 0 && results(q) > 0)
+    if (shared.isEmpty) """"prev":{"n_common":0}"""
+    else {
+      val speedups = shared.map(q => pq(q) / results(q))
+      val geomean = math.exp(speedups.map(math.log).sum / speedups.size)
+      val nImp = speedups.count(_ > 1.1)
+      val nReg = shared.count(q => results(q) / pq(q) > 1.1)
+      val movers = shared.sortBy(q => -math.abs(results(q) - pq(q))).take(5)
+        .map(q => f""""$q":[${pq(q)}%.3f,${results(q)}%.3f]""")
+        .mkString("{", ",", "}")
+      f""""prev":{"n_common":${shared.size},"n_improved":$nImp,"n_regressed":$nReg,"geomean_speedup":$geomean%.4f,"top_movers":$movers}"""
+    }
+  }
 
   /** The inverse of this file's own `queries` writer — flat
     * `"name":seconds` pairs — so no JSON library is needed. Shared by

@@ -10,8 +10,8 @@ package graft
   * Recordings are scoped to a RUN, not just a query name: the consumer
   * ([[Bench]] / [[DriftProbe]]) opens a scope with [[withRun]] and the
   * reset/time/get triple all key on (run token, query). A concurrent
-  * run of the same query on another thread (Verify's multi-threaded
-  * submission, or Bench and Verify overlapping in one JVM) records into
+  * run of the same query on another thread (for example Bench and
+  * Verify overlapping in one JVM; Verify itself runs serially) records into
   * its own bucket — the default empty token for unscoped threads — so
   * it can never cross-contaminate a measured run's accumulated stage
   * times. The token rides an InheritableThreadLocal so worker threads a

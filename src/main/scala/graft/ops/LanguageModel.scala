@@ -59,12 +59,8 @@ object LanguageModel {
       .groupBy(col("token")).agg(sum(col("tf")).as("c"))
       .limit(maxVocab.toInt + 1)
       .collect().map(r => r.getString(0) -> r.getLong(1))
-    require(rows.nonEmpty, "trainUnigrams: empty corpus")
-    require(rows.length <= maxVocab,
-      s"trainUnigrams: distinct tokens exceed maxVocab=$maxVocab " +
-        "(~100 bytes of driver+executor heap per entry) — raise it " +
-        "deliberately or pre-prune the vocabulary")
-    Unigrams(rows.toMap, rows.map(_._2).sum, rows.length.toLong)
+    require(rows.length <= maxVocab, overVocab(maxVocab))
+    buildUnigrams(rows)
   }
 
   /** Phase 2: (idCol, n_tokens, avg_nll) per document with at least one
@@ -116,47 +112,36 @@ object LanguageModel {
       bi: Map[String, Long],
       prefix: Map[String, Long])
 
-  /** Train a bigram model: the unigram aggregate plus ONE bigram-keyed
-    * map-side-combined aggregate (a per-doc kernel emits adjacent
-    * pairs). `minCount` drops rare bigrams from the broadcast model.
-    *
-    * DRIVER-COLLECT PATH — the bigram vocabulary grows far faster than
-    * the unigram one (billions of entries at web scale), so the collect
-    * is gated by a MANDATORY `maxEntries` cap. The cap is enforced in
-    * the SAME job as the collect (limit maxEntries+1 — the extra row is
-    * the overflow signal), so the guarded path runs the explode+groupBy
-    * aggregation exactly once. The 5M default ≈ 600 MB of driver heap
-    * (~120 bytes/entry: two-word key string + boxed Long + map node).
-    * Past the cap, use [[scoreBigramsJoined]]: same numbers, bigram
-    * table never leaves the cluster.
-    */
   private val DefaultMaxVocab = 2000000L
 
-  /** ONE tokenize+explode pass AND ONE aggregate for the whole KN
+  private def overVocab(maxVocab: Long): String =
+    s"trainUnigrams: distinct tokens exceed maxVocab=$maxVocab " +
+      "(~100 bytes of driver+executor heap per entry) — raise it " +
+      "deliberately or pre-prune the vocabulary"
+
+  /** ONE tokenize+explode pass AND ONE aggregate for the whole n-gram
     * ladder: every token position emits an `(order, gram)` row for
     * each order up to `maxOrder` that fits in the document, and ALL
     * orders' counts ride a single `(order, gram)`-keyed aggregate with
-    * map-side partials — one shuffle where the previous shape ran one
-    * full aggregate job per order over a materialized ladder frame.
-    * The tiny aggregated result (one row per distinct gram across all
-    * orders) is materialized once, and the per-order driver collects
-    * are near-free scans of it that keep the standalone trainers'
-    * exact `limit(cap+1)` overflow-sentinel semantics (the downstream
-    * `require` throws past the cap, and the bound keeps an over-cap
-    * corpus from pulling an unbounded result onto the driver). Bigram
-    * counts honor `minCountBi` exactly as trainBigrams' filter did.
+    * map-side partials. The tiny aggregated result (one row per
+    * distinct gram across all orders) is materialized once; one
+    * row-count job over it checks every order against its cap
+    * (DefaultMaxVocab for tokens, `maxEntries` above, failing with
+    * `overCap(n)`) BEFORE anything is collected, so an over-cap corpus
+    * never reaches the driver. Then one collect brings
+    * the whole ladder over, split by order on the driver: element n of
+    * the result holds the n-gram rows. Bigram counts below `minCountBi`
+    * are dropped.
     */
   private def ladderCounts(
       train: DataFrame,
       textCol: String,
       maxOrder: Int,
-      capOf: Int => Long,
-      minCountBi: Long): Map[Int, Array[(String, Long)]] = {
+      minCountBi: Long,
+      maxEntries: Long,
+      overCap: Int => String): IndexedSeq[Array[(String, Long)]] = {
     require(maxOrder >= 1 && maxOrder <= 5)
     val mo = maxOrder
-    val caps = (1 to maxOrder).map(n => n -> capOf(n)).toMap
-    caps.values.foreach(cap => require(cap > 0 && cap < Int.MaxValue,
-      s"maxEntries must be in (0, Int.MaxValue), got $cap"))
     val ladderUdf = udf((text: String) => {
       val toks = HashKernels.tokensOf(text)
       val out = new scala.collection.mutable.ArrayBuilder.ofRef[(Int, String)]
@@ -180,38 +165,26 @@ object LanguageModel {
       .agg(count(lit(1)).as("c"))
       .filter(!(col("n") === 2 && col("c") < minCountBi))
       .localCheckpoint()
-    // per-order collects overlap on the scheduler (guide §2.6); model
-    // contents are collect-order-insensitive (maps + commutative sums),
-    // so the parallelism cannot move a gate hash.
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val futures = (1 to maxOrder).map { n =>
-      n -> Future {
-        agg.filter(col("n") === n).select(col("gram"), col("c"))
-          .limit(caps(n).toInt + 1)
-          .collect().map(r => r.getString(0) -> r.getLong(1))
-      }
-    }
-    futures.map { case (n, f) =>
-      n -> Await.result(f, scala.concurrent.duration.Duration.Inf)
-    }.toMap
+    // rows per order: one single-stage job (per-partition counts summed
+    // on the driver) — a groupBy would add a shuffle stage
+    val sizes = agg.select(col("n")).queryExecution.toRdd.mapPartitions { it =>
+      val c = new Array[Long](mo + 1)
+      it.foreach(r => c(r.getInt(0)) += 1)
+      Iterator(c)
+    }.reduce((a, b) => a.zip(b).map { case (x, y) => x + y })
+    require(sizes(1) <= DefaultMaxVocab, overVocab(DefaultMaxVocab))
+    (2 to maxOrder).foreach(n => require(sizes(n) <= maxEntries, overCap(n)))
+    val byOrder = Array.fill(maxOrder + 1)(Array.newBuilder[(String, Long)])
+    agg.collect().foreach(r => byOrder(r.getInt(0)) += (r.getString(1) -> r.getLong(2)))
+    byOrder.map(_.result()).toIndexedSeq
   }
 
-  private def buildUnigrams(rows: Array[(String, Long)], maxVocab: Long): Unigrams = {
+  private def buildUnigrams(rows: Array[(String, Long)]): Unigrams = {
     require(rows.nonEmpty, "trainUnigrams: empty corpus")
-    require(rows.length <= maxVocab,
-      s"trainUnigrams: distinct tokens exceed maxVocab=$maxVocab " +
-        "(~100 bytes of driver+executor heap per entry) — raise it " +
-        "deliberately or pre-prune the vocabulary")
     Unigrams(rows.toMap, rows.map(_._2).sum, rows.length.toLong)
   }
 
-  private def buildBigrams(uni: Unigrams, rows: Array[(String, Long)],
-      maxEntries: Long): Bigrams = {
-    require(rows.length <= maxEntries,
-      s"trainBigrams: distinct bigrams exceed the driver-collect cap " +
-      s"($maxEntries, ~120 bytes of driver heap per entry) — raise minCount " +
-      "or use scoreBigramsJoined, which keeps the bigram table distributed")
+  private def buildBigrams(uni: Unigrams, rows: Array[(String, Long)]): Bigrams = {
     val prefix = new scala.collection.mutable.HashMap[String, Long]()
     rows.foreach { case (bg, c) =>
       val w1 = bg.substring(0, bg.indexOf(' '))
@@ -220,6 +193,18 @@ object LanguageModel {
     Bigrams(uni, rows.toMap, prefix.toMap)
   }
 
+  /** Train a bigram model: the unigram aggregate plus ONE bigram-keyed
+    * map-side-combined aggregate (both ride one [[ladderCounts]] pass).
+    * `minCount` drops rare bigrams from the broadcast model.
+    *
+    * DRIVER-COLLECT PATH — the bigram vocabulary grows far faster than
+    * the unigram one (billions of entries at web scale), so the collect
+    * is gated by a MANDATORY `maxEntries` cap, checked by a row count
+    * before anything is collected. The 5M default ≈ 600 MB of driver
+    * heap (~120 bytes/entry: two-word key string + boxed Long + map
+    * node). Past the cap, use [[scoreBigramsJoined]]: same numbers,
+    * bigram table never leaves the cluster.
+    */
   def trainBigrams(
       train: DataFrame,
       idCol: String,
@@ -228,9 +213,11 @@ object LanguageModel {
       maxEntries: Long = 5000000L): Bigrams = {
     require(maxEntries > 0 && maxEntries < Int.MaxValue,
       s"maxEntries must be in (0, Int.MaxValue), got $maxEntries")
-    val lc = ladderCounts(train, textCol, 2,
-      n => if (n == 1) DefaultMaxVocab else maxEntries, minCount)
-    buildBigrams(buildUnigrams(lc(1), DefaultMaxVocab), lc(2), maxEntries)
+    val lc = ladderCounts(train, textCol, 2, minCount, maxEntries, _ =>
+      s"trainBigrams: distinct bigrams exceed the driver-collect cap " +
+        s"($maxEntries, ~120 bytes of driver heap per entry) — raise minCount " +
+        "or use scoreBigramsJoined, which keeps the bigram table distributed")
+    buildBigrams(buildUnigrams(lc(1)), lc(2))
   }
 
   /** Bigram scoring: the first token takes its add-one unigram NLL, each
@@ -280,86 +267,177 @@ object LanguageModel {
   def bigramScore(docs: DataFrame, idCol: String, textCol: String): DataFrame =
     scoreBigrams(docs, idCol, textCol, trainBigrams(docs, idCol, textCol))
 
-  /** Interpolated Kneser–Ney bigram model (Kneser & Ney ICASSP '95,
-    * Chen & Goodman '98 formulation, fixed discount): beyond the raw
-    * counts it carries the TYPE statistics KN smoothing runs on —
-    * N1+(w1·) distinct followers per prefix, N1+(·w2) distinct
-    * predecessors per word (the "how many contexts has this word
-    * completed" signal that beats raw frequency for backoff), and the
-    * distinct-bigram total. All derived from the SAME single bigram
-    * aggregate as [[Bigrams]].
+  /** One level k of an interpolated Kneser–Ney model: k-gram counts
+    * keyed `"w1 … wk"`, and per context `"w1 … wk-1"` the count total
+    * c(ctx·) and the follower type count N1+(ctx·) — the three numbers
+    * one interpolation step reads.
+    */
+  final case class KNLevel(
+      grams: Map[String, Long],
+      ctxTotals: Map[String, Long],
+      ctxTypes: Map[String, Long])
+
+  /** Interpolated Kneser–Ney model of order n ∈ 2..5 (Kneser & Ney
+    * ICASSP '95, Chen & Goodman '98 formulation, fixed discount D) —
+    * n = 5 is the KenLM/CCNet perplexity-filter order.
+    *
+    * The base is the half-count-floored continuation unigram
+    * `Pc(w) = (N1+(·w)+0.5) / (T + 0.5(|V|+1))`: N1+(·w) distinct
+    * predecessors per word (`leftTypes`, the "how many contexts has
+    * this word completed" signal that beats raw frequency for backoff),
+    * T distinct bigrams, |V| distinct tokens. The floor keeps OOV
+    * finite while preserving the continuation-count ordering KN is
+    * about. Above it sit levels 2..n: level n runs on RAW n-gram
+    * counts, every level k < n on CONTINUATION counts N1+(·g) — how
+    * many distinct words precede the k-gram g among the (k+1)-gram
+    * types. Chen & Goodman backoff levels run on continuation counts,
+    * so the raw k-gram counts of a lower order are never used.
     */
   final case class KneserNeyModel(
-      bi: Map[String, Long],
-      prefix: Map[String, Long],
-      rightTypes: Map[String, Long],
       leftTypes: Map[String, Long],
       nBigramTypes: Long,
       vocabSize: Long,
-      discount: Double)
+      levels: IndexedSeq[KNLevel]) {
+    def order: Int = levels.length + 1
 
+    /** Level k, 2 ≤ k ≤ order. */
+    def level(k: Int): KNLevel = levels(k - 2)
+  }
+
+  /** The absolute discount D of every KN level (and of every KN oracle). */
+  private final val Discount = 0.75
+
+  private def requireOrder(order: Int): Unit =
+    require(order >= 2 && order <= 5, s"KN order must be in 2..5, got $order")
+
+  /** Train an order-n KN model from ONE ladder aggregate: every level
+    * and the Pc base derive from the collected 1..n-gram rows on the
+    * driver. Each order is capped at `maxEntries` distinct grams — past
+    * the cap, use [[scoreKneserNeyJoined]], which never collects them.
+    */
   def trainKneserNey(
       train: DataFrame,
       idCol: String,
       textCol: String,
-      minCount: Long = 1L,
-      maxEntries: Long = 5000000L,
-      discount: Double = 0.75): KneserNeyModel = {
-    require(discount > 0 && discount < 1, s"discount in (0,1), got $discount")
-    kn2From(trainBigrams(train, idCol, textCol, minCount, maxEntries), discount)
+      order: Int,
+      maxEntries: Long = 5000000L): KneserNeyModel = {
+    requireOrder(order)
+    require(maxEntries > 0 && maxEntries < Int.MaxValue,
+      s"maxEntries must be in (0, Int.MaxValue), got $maxEntries")
+    val lc = ladderCounts(train, textCol, order, 1L, maxEntries, n =>
+      s"trainKneserNey: distinct $n-grams exceed the driver-collect " +
+        s"cap ($maxEntries) — use scoreKneserNeyJoined, which keeps the " +
+        "tables distributed")
+    require(lc(1).nonEmpty, "trainKneserNey: empty corpus")
+    KneserNeyModel(continuation(lc(2)), lc(2).length.toLong, lc(1).length.toLong,
+      (2 to order).map(k =>
+        buildLevel(if (k == order) lc(k).toMap else continuation(lc(k + 1)))))
   }
 
-  private def kn2From(base: Bigrams, discount: Double): KneserNeyModel = {
-    require(discount > 0 && discount < 1, s"discount in (0,1), got $discount")
-    val right = new scala.collection.mutable.HashMap[String, Long]()
-    val left = new scala.collection.mutable.HashMap[String, Long]()
-    base.bi.keysIterator.foreach { bg =>
-      val sp = bg.indexOf(' ')
-      val w1 = bg.substring(0, sp)
-      val w2 = bg.substring(sp + 1)
-      right.update(w1, right.getOrElse(w1, 0L) + 1L)
-      left.update(w2, left.getOrElse(w2, 0L) + 1L)
+  /** N1+(·g) for every suffix g of the given n-gram types: how many
+    * distinct words precede it.
+    */
+  private def continuation(rows: Array[(String, Long)]): Map[String, Long] = {
+    val h = new scala.collection.mutable.HashMap[String, Long]()
+    rows.foreach { case (g, _) =>
+      val suffix = g.substring(g.indexOf(' ') + 1)
+      h.update(suffix, h.getOrElse(suffix, 0L) + 1L)
     }
-    KneserNeyModel(base.bi, base.prefix, right.toMap, left.toMap,
-      base.bi.size.toLong, base.uni.vocabSize, discount)
+    h.toMap
   }
 
-  /** KN-smoothed scoring: the first token takes the floored continuation
-    * NLL −ln(Pc(w)), each following token the interpolated conditional
-    * `max(c₁₂−D,0)/c₁· + D·N1+(w₁·)/c₁· · Pc(w₂)` (backing off straight
-    * to Pc for unseen prefixes), with
-    * `Pc(w) = (N1+(·w)+0.5) / (T + 0.5(|V|+1))` — the half-count floor
-    * keeps OOV finite while preserving the continuation-count ordering
-    * KN is about. Always < 1 (c₁₂ ≤ c₁·, λ ≤ D, Pc < 1), so terms are
-    * positive; same 1e-9-quantized-Long accumulation as every scorer
-    * here — exactly SQL-replayable (q_bigram_kn).
+  /** A level from its k-gram counts: per context (the k-gram minus its
+    * last word) the count total and the follower type count.
+    */
+  private def buildLevel(grams: Map[String, Long]): KNLevel = {
+    val totals = new scala.collection.mutable.HashMap[String, Long]()
+    val types = new scala.collection.mutable.HashMap[String, Long]()
+    grams.foreach { case (g, c) =>
+      val ctx = g.substring(0, g.lastIndexOf(' '))
+      totals.update(ctx, totals.getOrElse(ctx, 0L) + c)
+      types.update(ctx, types.getOrElse(ctx, 0L) + 1L)
+    }
+    KNLevel(grams, totals.toMap, types.toMap)
+  }
+
+  /** One interpolation step, `max(cb−D,0)/cm + D·ct/cm · lower`, backing
+    * off to `lower` when the context was never seen (cm = 0). Every KN
+    * path evaluates exactly this expression, in the oracle's
+    * association order, so the paths agree bit for bit.
+    */
+  private def interpolate(cm: Long, cb: Long, ct: Long, lower: Double): Double =
+    if (cm > 0L) math.max(cb - Discount, 0.0) / cm + Discount * ct / cm * lower
+    else lower
+
+  private type JCounts = java.util.HashMap[String, java.lang.Long]
+
+  private def jcounts(m: Map[String, Long]): JCounts = {
+    val h = new JCounts(math.max(16, m.size * 2))
+    m.foreach { case (k, v) => h.put(k, java.lang.Long.valueOf(v)) }
+    h
+  }
+
+  private def cnt(h: JCounts, k: String): Long = {
+    val v = h.get(k); if (v eq null) 0L else v.longValue
+  }
+
+  /** The model's tables re-housed in java HashMaps for the scoring hot
+    * path (identical values — only the lookup structure changes;
+    * immutable-trie probes were the measured bulk of the 5-gram
+    * scorer's non-train time). Index k − 2 holds level k.
+    */
+  private final class KNTables(m: KneserNeyModel) extends Serializable {
+    val left: JCounts = jcounts(m.leftTypes)
+    val grams: Array[JCounts] = m.levels.map(l => jcounts(l.grams)).toArray
+    val totals: Array[JCounts] = m.levels.map(l => jcounts(l.ctxTotals)).toArray
+    val types: Array[JCounts] = m.levels.map(l => jcounts(l.ctxTypes)).toArray
+  }
+
+  /** KN scoring with the model broadcast: token i takes −ln P_top with
+    * top = min(i+1, n), where P_1 = Pc(w) and P_k interpolates level k's
+    * counts over P_(k-1). Token 0 thus takes the Pc floor, and only
+    * tokens i ≥ n−1 reach the raw top level. Every term is < 1 by the
+    * discount telescoping, so NLLs are positive. Same
+    * 1e-9-quantized-Long accumulation as every scorer here — exactly
+    * SQL-replayable (q_bigram_kn, q_trigram_kn, q_fourgram_kn,
+    * q_fivegram_kn restate the recursion term by term).
     */
   def scoreKneserNey(
       docs: DataFrame,
       idCol: String,
       textCol: String,
       m: KneserNeyModel): DataFrame = {
-    val d = m.discount
+    val n = m.order
     val pcDen = m.nBigramTypes + 0.5 * (m.vocabSize + 1.0)
-    val bi = m.bi; val prefix = m.prefix
-    val right = m.rightTypes; val left = m.leftTypes
+    val bcm = docs.sparkSession.sparkContext.broadcast(new KNTables(m))
     val f = udf((text: String) => {
+      val t = bcm.value
       val toks = HashKernels.tokensOf(text)
       if (toks.isEmpty) null
       else {
-        def pcont(w: String): Double = (left.getOrElse(w, 0L) + 0.5) / pcDen
-        var nanos = HashKernels.nanoQuant(-math.log(pcont(toks(0))))
-        var i = 1
+        // prev(j) / cur(j): the j-gram ending at the previous / current
+        // token. Level k's context is prev(k−1), so each composite key
+        // is built once per token and rolled forward.
+        var prev = new Array[String](n)
+        var cur = new Array[String](n)
+        var nanos = 0L
+        var i = 0
         while (i < toks.length) {
-          val w1 = toks(i - 1)
-          val c1 = prefix.getOrElse(w1, 0L)
-          val p =
-            if (c1 > 0L) {
-              val c12 = bi.getOrElse(w1 + " " + toks(i), 0L)
-              math.max(c12 - d, 0.0) / c1 +
-                d * right.getOrElse(w1, 0L) / c1 * pcont(toks(i))
-            } else pcont(toks(i))
+          val w = toks(i)
+          var p = (cnt(t.left, w) + 0.5) / pcDen
+          val top = math.min(i + 1, n)
+          var k = 2
+          while (k <= top) {
+            val ctx = prev(k - 1)
+            val g = ctx + " " + w
+            p = interpolate(cnt(t.totals(k - 2), ctx), cnt(t.grams(k - 2), g),
+              cnt(t.types(k - 2), ctx), p)
+            if (k < n) cur(k) = g
+            k += 1
+          }
+          cur(1) = w
           nanos += HashKernels.nanoQuant(-math.log(p))
+          val s = prev; prev = cur; cur = s
           i += 1
         }
         (toks.length, (nanos.toDouble / 1e9) / toks.length)
@@ -371,455 +449,115 @@ object LanguageModel {
         round(col("s._2"), 6).as("avg_nll"))
   }
 
-  /** Self-scoring convenience: train KN on `docs`, score `docs`. */
-  def kneserNeyScore(docs: DataFrame, idCol: String, textCol: String): DataFrame =
-    scoreKneserNey(docs, idCol, textCol, trainKneserNey(docs, idCol, textCol))
+  /** Self-scoring convenience: train order-n KN on `docs`, score `docs`. */
+  def kneserNeyScore(docs: DataFrame, idCol: String, textCol: String, order: Int): DataFrame =
+    scoreKneserNey(docs, idCol, textCol, trainKneserNey(docs, idCol, textCol, order))
 
-  /** Trigram interpolated Kneser–Ney (Chen & Goodman '98): the highest
-    * order runs on raw trigram counts, the bigram level on CONTINUATION
-    * counts (how many left contexts each bigram completes), and the
-    * unigram base is the same half-count-floored Pc as the bigram model
-    * — the n=3 instance of CCNet-style 5-gram KenLM filtering, with the
-    * identical machinery generalizing to higher n.
-    *
-    * Carries, all derived from ONE trigram aggregate plus the bigram
-    * model: raw trigram counts; per-(w1,w2) context totals c(w1w2·) and
-    * follower type counts N1+(w1w2·); per-(w2,w3) continuation counts
-    * N1+(·w2w3); per-w2 continuation totals N1+(·w2·) and completed-
-    * bigram type counts |{w3 : N1+(·w2w3)>0}|.
+  /** Columns of an order-n position frame: w1..wn, where wn is the
+    * token and w(n−j) the token j places back (null before the start).
     */
-  final case class TrigramKNModel(
-      kn2: KneserNeyModel,
-      tri: Map[String, Long],
-      ctx2: Map[String, Long],
-      ctx2Types: Map[String, Long],
-      contBi: Map[String, Long],
-      contMid: Map[String, Long],
-      contTypes: Map[String, Long])
+  private def wcols(n: Int): Seq[String] = (1 to n).map(j => s"w$j")
 
-  /** Train the trigram KN model: the bigram KN aggregate plus ONE
-    * trigram-keyed map-side-combined aggregate; every type statistic
-    * derives from the collected trigram map on the driver (the map is
-    * capped like [[trainBigrams]] — past the cap, use
-    * [[scoreTrigramKneserNeyJoined]], which never collects it).
+  /** `keep` columns + (pos, w1..wn) per token position — ONE
+    * tokenize+explode pass.
     */
-  def trainTrigramKneserNey(
-      train: DataFrame,
-      idCol: String,
-      textCol: String,
-      maxEntries: Long = 5000000L,
-      discount: Double = 0.75): TrigramKNModel = {
-    require(maxEntries > 0 && maxEntries < Int.MaxValue,
-      s"maxEntries must be in (0, Int.MaxValue), got $maxEntries")
-    // one shared ladder pass feeds the 1/2/3-gram counts (the embedded
-    // bigram KN level keeps its standalone defaults: minCount 1, 5M cap)
-    val lc = ladderCounts(train, textCol, 3,
-      n => n match {
-        case 1 => DefaultMaxVocab
-        case 2 => 5000000L
-        case _ => maxEntries
-      }, 1L)
-    val kn2 = kn2From(
-      buildBigrams(buildUnigrams(lc(1), DefaultMaxVocab), lc(2), 5000000L),
-      discount)
-    buildTrigramKN(kn2, lc(3), maxEntries)
-  }
-
-  private def buildTrigramKN(kn2: KneserNeyModel,
-      rows: Array[(String, Long)], maxEntries: Long): TrigramKNModel = {
-    require(rows.length <= maxEntries,
-      s"trainTrigramKneserNey: distinct trigrams exceed the driver-collect " +
-      s"cap ($maxEntries) — use scoreTrigramKneserNeyJoined, which keeps " +
-      "the table distributed")
-    val ctx2 = new scala.collection.mutable.HashMap[String, Long]()
-    val ctx2T = new scala.collection.mutable.HashMap[String, Long]()
-    val contBi = new scala.collection.mutable.HashMap[String, Long]()
-    rows.foreach { case (tg, c) =>
-      val sp2 = tg.lastIndexOf(' ')
-      val w12 = tg.substring(0, sp2)
-      ctx2.update(w12, ctx2.getOrElse(w12, 0L) + c)
-      ctx2T.update(w12, ctx2T.getOrElse(w12, 0L) + 1L)
-      val w23 = tg.substring(tg.indexOf(' ') + 1)
-      contBi.update(w23, contBi.getOrElse(w23, 0L) + 1L)
-    }
-    val contMid = new scala.collection.mutable.HashMap[String, Long]()
-    val contT = new scala.collection.mutable.HashMap[String, Long]()
-    contBi.foreach { case (w23, n1p) =>
-      val w2 = w23.substring(0, w23.indexOf(' '))
-      contMid.update(w2, contMid.getOrElse(w2, 0L) + n1p)
-      contT.update(w2, contT.getOrElse(w2, 0L) + 1L)
-    }
-    TrigramKNModel(kn2, rows.toMap, ctx2.toMap, ctx2T.toMap,
-      contBi.toMap, contMid.toMap, contT.toMap)
-  }
-
-  /** Trigram KN scoring with interpolated backoff through the bigram
-    * continuation level to the Pc floor:
-    *
-    *   Pc(w)        = (N1+(·w)+0.5) / (T + 0.5(|V|+1))   (bigram KN base)
-    *   P2(w3|w2)    = max(N1+(·w2w3)−D,0)/N1+(·w2·)
-    *                  + D·|{w3:N1+(·w2w3)>0}|/N1+(·w2·) · Pc(w3),
-    *                  backing off to Pc when w2 completes nothing
-    *   P3(w3|w1w2)  = max(c(w1w2w3)−D,0)/c(w1w2·)
-    *                  + D·N1+(w1w2·)/c(w1w2·) · P2(w3|w2),
-    *                  backing off to P2 for unseen (w1,w2) contexts
-    *
-    * Token 0 takes −ln Pc, token 1 takes −ln P2, token i ≥ 2 takes
-    * −ln P3 — every term < 1 by the discount telescoping (the bigram KN
-    * argument applied per level), so NLLs are positive. Same
-    * 1e-9-quantized-Long accumulation as every scorer here — exactly
-    * SQL-replayable (q_trigram_kn), and every double expression is
-    * written in the oracle's association order so the parity is
-    * bit-exact, not approximate.
-    */
-  def scoreTrigramKneserNey(
-      docs: DataFrame,
-      idCol: String,
-      textCol: String,
-      m: TrigramKNModel): DataFrame = {
-    val d = m.kn2.discount
-    val pcDen = m.kn2.nBigramTypes + 0.5 * (m.kn2.vocabSize + 1.0)
-    // java-map broadcast + rolling context keys, the q_fivegram_kn hot-
-    // path treatment one level down; identical doubles, gated hashes
-    val bcm = docs.sparkSession.sparkContext.broadcast((
-      jcounts(m.kn2.leftTypes), jcounts(m.tri), jcounts(m.ctx2),
-      jcounts(m.ctx2Types), jcounts(m.contBi), jcounts(m.contMid),
-      jcounts(m.contTypes)))
+  private def positions(df: DataFrame, textCol: String, n: Int, keep: Seq[String]): DataFrame = {
     val f = udf((text: String) => {
-      val (left, tri, ctx2, ctx2T, contBi, contMid, contT) = bcm.value
       val toks = HashKernels.tokensOf(text)
-      if (toks.isEmpty) null
-      else {
-        def cnt(h: JCounts, k: String): Long = {
-          val v = h.get(k); if (v eq null) 0L else v.longValue
-        }
-        def pcont(w: String): Double = (cnt(left, w) + 0.5) / pcDen
-        def lvl(cm: Long, cb: Long, ct: Long, lower: Double): Double =
-          if (cm > 0L) math.max(cb - d, 0.0) / cm + d * ct / cm * lower
-          else lower
-        val len = toks.length
-        var nanos = HashKernels.nanoQuant(-math.log(pcont(toks(0))))
-        if (len > 1) {
-          val e = toks(0); val w = toks(1)
-          val p = lvl(cnt(contMid, e), cnt(contBi, e + " " + w),
-            cnt(contT, e), pcont(w))
-          nanos += HashKernels.nanoQuant(-math.log(p))
-        }
-        if (len > 2) {
-          var k2 = toks(0) + " " + toks(1)
-          var i = 2
-          while (i < len) {
-            val e = toks(i - 1); val w = toks(i)
-            val bik = e + " " + w
-            val k3 = k2 + " " + w
-            val p2v = lvl(cnt(contMid, e), cnt(contBi, bik),
-              cnt(contT, e), pcont(w))
-            val p = lvl(cnt(ctx2, k2), cnt(tri, k3), cnt(ctx2T, k2), p2v)
-            nanos += HashKernels.nanoQuant(-math.log(p))
-            k2 = bik
-            i += 1
-          }
-        }
-        (len, (nanos.toDouble / 1e9) / len)
-      }
+      Array.tabulate(toks.length)(i => (i, Array.tabulate(n) { j =>
+        val at = i - n + 1 + j
+        if (at < 0) null else toks(at)
+      }))
     })
-    docs.select(col(idCol), f(col(textCol)).as("s"))
-      .filter(col("s").isNotNull)
-      .select(col(idCol), col("s._1").as("n_tokens"),
-        round(col("s._2"), 6).as("avg_nll"))
+    df.select(keep.map(col) :+ explode(f(col(textCol))).as("p"): _*)
+      .select(keep.map(col) ++ (col("p._1").as("pos") +:
+        (1 to n).map(j => col("p._2").getItem(j - 1).as(s"w$j"))): _*)
   }
 
-  /** Self-scoring convenience: train trigram KN on `docs`, score `docs`. */
-  def trigramKneserNeyScore(docs: DataFrame, idCol: String, textCol: String): DataFrame =
-    scoreTrigramKneserNey(docs, idCol, textCol,
-      trainTrigramKneserNey(docs, idCol, textCol))
-
-  /** 4-gram interpolated Kneser–Ney — one more level of the same
-    * recursion (and [[FivegramKNModel]] is the n=5 KenLM/CCNet level,
-    * repeating it once more): the TOP level runs on raw 4-gram counts; every
-    * level below runs on continuation counts taken from the table one
-    * order up (level 3 from the 4-gram types, level 2 from the trigram
-    * types — the trigram model's own contBi/contMid/contTypes — level 1
-    * the half-count Pc floor from bigram types). The embedded
-    * [[TrigramKNModel]]'s RAW trigram level is deliberately unused:
-    * inside a 4-gram model the trigram level is a backoff level, and
-    * Chen & Goodman backoff levels run on continuation counts.
+  /** The distributed model: the raw k-gram type tables T2..Tn — Tk has
+    * columns w(n−k+1)..wn and its count `t<k>` — and the two Pc scalars
+    * (distinct bigrams, distinct tokens).
     */
-  final case class FourgramKNModel(
-      tri: TrigramKNModel,
-      four: Map[String, Long],
-      ctx3: Map[String, Long],
-      ctx3Types: Map[String, Long],
-      cont3: Map[String, Long],
-      contMid3: Map[String, Long],
-      contTypes3: Map[String, Long])
-
-  def trainFourgramKneserNey(
-      train: DataFrame,
-      idCol: String,
-      textCol: String,
-      maxEntries: Long = 5000000L,
-      discount: Double = 0.75): FourgramKNModel = {
-    require(maxEntries > 0 && maxEntries < Int.MaxValue,
-      s"maxEntries must be in (0, Int.MaxValue), got $maxEntries")
-    val lc = ladderCounts(train, textCol, 4,
-      n => n match {
-        case 1 => DefaultMaxVocab
-        case 2 => 5000000L
-        case _ => maxEntries
-      }, 1L)
-    val tri = buildTrigramKN(
-      kn2From(buildBigrams(buildUnigrams(lc(1), DefaultMaxVocab),
-        lc(2), 5000000L), discount),
-      lc(3), maxEntries)
-    buildFourgramKN(tri, lc(4), maxEntries)
+  private final case class TypeTables(t: Seq[DataFrame], bt: Long, vsz: Long) {
+    def apply(k: Int): DataFrame = t(k - 2)
   }
 
-  private def buildFourgramKN(tri: TrigramKNModel,
-      rows: Array[(String, Long)], maxEntries: Long): FourgramKNModel = {
-    require(rows.length <= maxEntries,
-      s"trainFourgramKneserNey: distinct 4-grams exceed the driver-collect " +
-      s"cap ($maxEntries) — use scoreFourgramKneserNeyJoined")
-    val ctx3 = new scala.collection.mutable.HashMap[String, Long]()
-    val ctx3T = new scala.collection.mutable.HashMap[String, Long]()
-    val cont3 = new scala.collection.mutable.HashMap[String, Long]()
-    rows.foreach { case (qg, c) =>
-      val last = qg.lastIndexOf(' ')
-      val w123 = qg.substring(0, last)
-      ctx3.update(w123, ctx3.getOrElse(w123, 0L) + c)
-      ctx3T.update(w123, ctx3T.getOrElse(w123, 0L) + 1L)
-      val w234 = qg.substring(qg.indexOf(' ') + 1)
-      cont3.update(w234, cont3.getOrElse(w234, 0L) + 1L)
-    }
-    val contMid3 = new scala.collection.mutable.HashMap[String, Long]()
-    val contT3 = new scala.collection.mutable.HashMap[String, Long]()
-    cont3.foreach { case (w234, n1p) =>
-      val w23 = w234.substring(0, w234.lastIndexOf(' '))
-      contMid3.update(w23, contMid3.getOrElse(w23, 0L) + n1p)
-      contT3.update(w23, contT3.getOrElse(w23, 0L) + 1L)
-    }
-    FourgramKNModel(tri, rows.toMap, ctx3.toMap, ctx3T.toMap,
-      cont3.toMap, contMid3.toMap, contT3.toMap)
-  }
-
-  /** 4-gram KN scoring: token 0 → Pc, token 1 → P2 (continuation bigram
-    * level), token 2 → P3' (continuation TRIGRAM level — the backoff
-    * form, see [[FourgramKNModel]]), token i ≥ 3 → P4 interpolating
-    * down through P3' → P2 → Pc. Same nanoQuant kernel, same
-    * association-order discipline — q_fourgram_kn restates the full
-    * recursion and both Spark paths must land on its hash.
+  /** Every training statistic from ONE corpus-scale aggregate: the
+    * (w1..wn) context-tuple counts over a position frame (read once,
+    * so it needs no materializing). An
+    * n-gram ending at a position is the last n slots of its context
+    * tuple, so each lower-order table is a suffix-sum over the SMALL
+    * aggregated frame (one row per distinct context) instead of its own
+    * full pass over the position frame; Tn is the non-null-w1 slice
+    * verbatim. Both scalars come from one 1-row-aggregate job.
     */
-  def scoreFourgramKneserNey(
-      docs: DataFrame,
-      idCol: String,
-      textCol: String,
-      m: FourgramKNModel): DataFrame = {
-    val d = m.tri.kn2.discount
-    val pcDen = m.tri.kn2.nBigramTypes + 0.5 * (m.tri.kn2.vocabSize + 1.0)
-    // java-map broadcast + rolling context keys (the q_fivegram_kn
-    // hot-path treatment); identical doubles, gated hashes
-    val bcm = docs.sparkSession.sparkContext.broadcast((
-      jcounts(m.tri.kn2.leftTypes), jcounts(m.tri.contBi),
-      jcounts(m.tri.contMid), jcounts(m.tri.contTypes),
-      jcounts(m.four), jcounts(m.ctx3), jcounts(m.ctx3Types),
-      jcounts(m.cont3), jcounts(m.contMid3), jcounts(m.contTypes3)))
-    val f = udf((text: String) => {
-      val (left, contBi, contMid, contT, four, ctx3, ctx3T,
-        cont3, contMid3, contT3) = bcm.value
-      val toks = HashKernels.tokensOf(text)
-      if (toks.isEmpty) null
-      else {
-        def cnt(h: JCounts, k: String): Long = {
-          val v = h.get(k); if (v eq null) 0L else v.longValue
-        }
-        def pcont(w: String): Double = (cnt(left, w) + 0.5) / pcDen
-        def lvl(cm: Long, cb: Long, ct: Long, lower: Double): Double =
-          if (cm > 0L) math.max(cb - d, 0.0) / cm + d * ct / cm * lower
-          else lower
-        val len = toks.length
-        var nanos = HashKernels.nanoQuant(-math.log(pcont(toks(0))))
-        if (len > 1) {
-          val e = toks(0); val w = toks(1)
-          val p = lvl(cnt(contMid, e), cnt(contBi, e + " " + w),
-            cnt(contT, e), pcont(w))
-          nanos += HashKernels.nanoQuant(-math.log(p))
-        }
-        if (len > 2) {
-          val c = toks(0); val e = toks(1); val w = toks(2)
-          val km3 = c + " " + e
-          val p2v = lvl(cnt(contMid, e), cnt(contBi, e + " " + w),
-            cnt(contT, e), pcont(w))
-          val p = lvl(cnt(contMid3, km3), cnt(cont3, km3 + " " + w),
-            cnt(contT3, km3), p2v)
-          nanos += HashKernels.nanoQuant(-math.log(p))
-        }
-        if (len > 3) {
-          var k3 = toks(0) + " " + toks(1) + " " + toks(2)
-          var km3 = toks(1) + " " + toks(2)
-          var i = 3
-          while (i < len) {
-            val e = toks(i - 1); val w = toks(i)
-            val bik = e + " " + w
-            val c3k = km3 + " " + w
-            val k4 = k3 + " " + w
-            val p2v = lvl(cnt(contMid, e), cnt(contBi, bik),
-              cnt(contT, e), pcont(w))
-            val p3v = lvl(cnt(contMid3, km3), cnt(cont3, c3k),
-              cnt(contT3, km3), p2v)
-            val p = lvl(cnt(ctx3, k3), cnt(four, k4), cnt(ctx3T, k3), p3v)
-            nanos += HashKernels.nanoQuant(-math.log(p))
-            k3 = c3k; km3 = bik
-            i += 1
-          }
-        }
-        (len, (nanos.toDouble / 1e9) / len)
-      }
-    })
-    docs.select(col(idCol), f(col(textCol)).as("s"))
-      .filter(col("s").isNotNull)
-      .select(col(idCol), col("s._1").as("n_tokens"),
-        round(col("s._2"), 6).as("avg_nll"))
-  }
-
-  /** Self-scoring convenience: train 4-gram KN on `docs`, score `docs`. */
-  def fourgramKneserNeyScore(docs: DataFrame, idCol: String, textCol: String): DataFrame =
-    scoreFourgramKneserNey(docs, idCol, textCol,
-      trainFourgramKneserNey(docs, idCol, textCol))
-
-  /** 4-gram KN with every n-gram table DISTRIBUTED — the shape a 5-gram
-    * KenLM-style filter takes at corpus scale. One exploded
-    * (pos, w1..w4) frame feeds all training aggregates (4-gram counts →
-    * raw top level + its continuation table; trigram/bigram types →
-    * the lower continuation levels); scoring is seven token-keyed left
-    * joins + the one term kernel shared (in association order) with the
-    * broadcast path. Only the two Pc scalars are driver-side.
-    */
-  def scoreFourgramKneserNeyJoined(
-      docs: DataFrame,
-      idCol: String,
-      textCol: String,
-      train: DataFrame,
-      discount: Double = 0.75): DataFrame = {
-    val d = discount
-    val quadUdf = udf((text: String) => {
-      val toks = HashKernels.tokensOf(text)
-      Array.tabulate(toks.length)(i => (i,
-        if (i < 3) null else toks(i - 3),
-        if (i < 2) null else toks(i - 2),
-        if (i < 1) null else toks(i - 1),
-        toks(i)))
-    })
-    // ONE tokenize+explode pass in the self-scoring shape (train eq
-    // docs — the q_fourgram_kn_dist gate): the doc-side frame is
-    // materialized once and every training aggregate derives from it
-    // instead of re-running the tokenizer UDF over the corpus twice
-    val docPos = {
-      val p0 = docs
-        .select(col(idCol), explode(quadUdf(col(textCol))).as("p"))
-        .select(col(idCol), col("p._1").as("pos"),
-          col("p._2").as("w1"), col("p._3").as("w2"),
-          col("p._4").as("w3"), col("p._5").as("w4"))
-      if (train eq docs) p0.localCheckpoint() else p0
-    }
-    val base =
-      // toDF re-aliases with fresh expression ids so the type tables'
-      // grouping keys never collide with docPos's own w1..w4 in the
-      // scorer's self-join
-      if (train eq docs)
-        docPos.select(col("w1"), col("w2"), col("w3"), col("w4"))
-          .toDF("w1", "w2", "w3", "w4")
-      else train.select(explode(quadUdf(col(textCol))).as("p"))
-        .select(col("p._2").as("w1"), col("p._3").as("w2"),
-          col("p._4").as("w3"), col("p._5").as("w4"))
-        .localCheckpoint()
-    // every training statistic derives from ONE corpus-scale aggregate
-    // (guide §2.3): the (w1..w4) context-tuple counts — the lower-order
-    // tables are suffix-sums over the SMALL aggregated frame instead of
-    // their own full passes over the position frame (3 → 1 corpus
-    // aggregates, the same collapse as the 5-gram scorer). Counts are
-    // bit-identical.
-    val ctxCounts = base
-      .groupBy(col("w1"), col("w2"), col("w3"), col("w4"))
+  private def typeTables(base: DataFrame, n: Int): TypeTables = {
+    val w = wcols(n)
+    val ctxCounts = base.groupBy(w.map(col): _*)
       .agg(count(lit(1)).as("cc0"))
       .localCheckpoint()
-    val bic = ctxCounts.filter(col("w3").isNotNull)
-      .groupBy(col("w3"), col("w4")).agg(sum(col("cc0")).as("bc"))
-      .localCheckpoint()
-    // both Pc scalars in ONE 1-row-aggregate job (were two actions)
-    val scal = bic.agg(count(lit(1)).as("bt"))
-      .crossJoin(ctxCounts.agg(countDistinct(col("w4")).as("vsz"))).head()
-    val bt = scal.getLong(0)
-    val vsz = scal.getLong(1)
-    val pcDen = bt + 0.5 * (vsz + 1.0)
-    val lt = bic.groupBy(col("w4")).agg(count(lit(1)).as("ltc"))
-      .withColumnRenamed("w4", "lw")
-    // tic3 feeds exactly ONE consumer (cb2) — no checkpoint: the two
-    // chained aggregates pipeline in a single job, nothing recomputes
-    val tic3 = ctxCounts.filter(col("w2").isNotNull)
-      .groupBy(col("w2"), col("w3"), col("w4")).agg(sum(col("cc0")).as("t3"))
-    val cb2 = tic3.groupBy(col("w3"), col("w4")).agg(count(lit(1)).as("cbc"))
-      .withColumnRenamed("w3", "b3").withColumnRenamed("w4", "b4")
-      .localCheckpoint()
-    val cm2 = cb2.groupBy(col("b3"))
-      .agg(sum(col("cbc")).as("cmc"), count(lit(1)).as("ctp"))
-      .withColumnRenamed("b3", "m3")
-    // level-3/4 statistics from the 4-gram slice of the context frame
-    val tic4 = ctxCounts.filter(col("w1").isNotNull)
-      .select(col("w1"), col("w2"), col("w3"), col("w4"),
-        col("cc0").as("qc"))
-    val ctx = tic4.groupBy(col("w1"), col("w2"), col("w3"))
-      .agg(sum(col("qc")).as("cc"), count(lit(1)).as("nt"))
-      .withColumnRenamed("w1", "c1").withColumnRenamed("w2", "c2")
-      .withColumnRenamed("w3", "c3")
-    val cb3 = tic4.groupBy(col("w2"), col("w3"), col("w4"))
-      .agg(count(lit(1)).as("c3c"))
-      .withColumnRenamed("w2", "e2").withColumnRenamed("w3", "e3")
-      .withColumnRenamed("w4", "e4")
-      .localCheckpoint()
-    val cm3 = cb3.groupBy(col("e2"), col("e3"))
-      .agg(sum(col("c3c")).as("cm3c"), count(lit(1)).as("ct3"))
-      .withColumnRenamed("e2", "f2").withColumnRenamed("e3", "f3")
+    val t = (2 to n).map { k =>
+      val kc = w.drop(n - k).map(col)
+      val slice = ctxCounts.filter(kc.head.isNotNull)
+      val tk =
+        if (k == n) slice.select(kc :+ col("cc0").as(s"t$k"): _*)
+        else slice.groupBy(kc: _*).agg(sum(col("cc0")).as(s"t$k"))
+      // T2 feeds the scalars, the Pc table and the level-2 table
+      if (k == 2) tk.localCheckpoint() else tk
+    }
+    // distinct wn over the context frame == distinct tokens over the
+    // position frame (every position lands its token in wn)
+    val scal = t.head.agg(count(lit(1)).as("bt"))
+      .crossJoin(ctxCounts.agg(countDistinct(col(w.last)).as("vsz"))).head()
+    TypeTables(t, scal.getLong(0), scal.getLong(1))
+  }
 
-    // 10 counts + pos exceeds the typed-udf arity cap, so the counts
-    // travel as ONE array column (order documented inline below)
-    val termUdf = udf((pos: Int, v: Seq[Long]) => {
-      val qc = v(0); val cc = v(1); val nt = v(2)
-      val c3c = v(3); val cm3c = v(4); val ct3 = v(5)
-      val cbc = v(6); val cmc = v(7); val ctp = v(8); val ltc = v(9)
-      val pcw = (ltc + 0.5) / pcDen
-      val p2 =
-        if (cmc > 0L) math.max(cbc - d, 0.0) / cmc + d * ctp / cmc * pcw
-        else pcw
-      val p3 =
-        if (cm3c > 0L) math.max(c3c - d, 0.0) / cm3c + d * ct3 / cm3c * p2
-        else p2
-      val p =
-        if (pos == 0) pcw
-        else if (pos == 1) p2
-        else if (pos == 2) p3
-        else if (cc > 0L) math.max(qc - d, 0.0) / cc + d * nt / cc * p3
-        else p3
+  /** The joined scoring core over an exploded (id, pos, w1..wn) frame:
+    * per level k, the level's gram counts (raw Tn at the top,
+    * continuation counts from T(k+1) below) and its context totals and
+    * types arrive by token-keyed left joins, and one term kernel runs
+    * the broadcast scorer's recursion on the joined counts — so the
+    * per-document integer sum is bit-identical however the shuffle
+    * orders rows. Shared by the train-inline and persisted paths.
+    */
+  private def scoreFromPositions(
+      docPos: DataFrame, idCol: String, n: Int, tt: TypeTables): DataFrame = {
+    val pcDen = tt.bt + 0.5 * (tt.vsz + 1.0)
+    val w = wcols(n)
+    def renamed(from: Seq[String], to: Seq[String]) =
+      from.zip(to).map { case (a, b) => col(a).as(b) }
+    def on(left: Seq[String], right: Seq[String]) =
+      left.zip(right).map { case (a, b) => col(a) === col(b) }.reduce(_ && _)
+    val lt = tt(2).groupBy(col(w.last).as("lw")).agg(count(lit(1)).as("ltc"))
+    val joined = (2 to n).foldLeft(docPos.join(lt, col(w.last) === col("lw"), "left")) {
+      (acc, k) =>
+        val kc = w.drop(n - k)
+        val gc = (1 to k).map(j => s"g${k}_$j")
+        val mc = gc.init.map(c => "m" + c.tail)
+        val g =
+          if (k == n) tt(n).select(renamed(kc, gc) :+ col(s"t$n").as(s"cb$k"): _*)
+          else tt(k + 1).groupBy(renamed(kc, gc): _*)
+            .agg(count(lit(1)).as(s"cb$k")).localCheckpoint()
+        val c = g.groupBy(renamed(gc.init, mc): _*)
+          .agg(sum(col(s"cb$k")).as(s"cm$k"), count(lit(1)).as(s"ct$k"))
+        acc.join(c, on(kc.init, mc), "left").join(g, on(kc, gc), "left")
+    }
+    // counts travel as ONE array column: ltc, then (cb, cm, ct) per level
+    val term = udf((pos: Int, v: Seq[Long]) => {
+      var p = (v(0) + 0.5) / pcDen
+      val top = math.min(pos + 1, n)
+      var k = 2
+      while (k <= top) {
+        val j = 3 * k - 5
+        p = interpolate(v(j + 1), v(j), v(j + 2), p)
+        k += 1
+      }
       HashKernels.nanoQuant(-math.log(p))
     })
-    docPos
-      .join(lt, docPos("w4") === lt("lw"), "left")
-      .join(cm2, docPos("w3") === cm2("m3"), "left")
-      .join(cb2, docPos("w3") === cb2("b3") && docPos("w4") === cb2("b4"), "left")
-      .join(cm3, docPos("w2") === cm3("f2") && docPos("w3") === cm3("f3"), "left")
-      .join(cb3, docPos("w2") === cb3("e2") && docPos("w3") === cb3("e3") &&
-        docPos("w4") === cb3("e4"), "left")
-      .join(ctx, docPos("w1") === ctx("c1") && docPos("w2") === ctx("c2") &&
-        docPos("w3") === ctx("c3"), "left")
-      .join(tic4, docPos("w1") === tic4("w1") && docPos("w2") === tic4("w2") &&
-        docPos("w3") === tic4("w3") && docPos("w4") === tic4("w4"), "left")
+    val counts = "ltc" +: (2 to n).flatMap(k => Seq(s"cb$k", s"cm$k", s"ct$k"))
+    joined
       .select(col(idCol),
-        termUdf(col("pos"), array(
-          coalesce(col("qc"), lit(0L)), coalesce(col("cc"), lit(0L)),
-          coalesce(col("nt"), lit(0L)), coalesce(col("c3c"), lit(0L)),
-          coalesce(col("cm3c"), lit(0L)), coalesce(col("ct3"), lit(0L)),
-          coalesce(col("cbc"), lit(0L)), coalesce(col("cmc"), lit(0L)),
-          coalesce(col("ctp"), lit(0L)), coalesce(col("ltc"), lit(0L))))
-          .as("nanos"))
+        term(col("pos"), array(counts.map(c => coalesce(col(c), lit(0L))): _*)).as("nanos"))
       .groupBy(col(idCol))
       .agg(count(lit(1)).as("n"), sum(col("nanos")).as("nanos"))
       .select(col(idCol), col("n").cast("int").as("n_tokens"),
@@ -827,444 +565,63 @@ object LanguageModel {
           .as("avg_nll"))
   }
 
-  /** 5-gram interpolated Kneser–Ney — KenLM/CCNet order parity. The
-    * n=4 doc claimed the n=5 generalization is pure repetition; this is
-    * that repetition, verbatim: the TOP level runs on raw 5-gram
-    * counts, the 4-gram backoff level runs on continuation counts taken
-    * from the 5-gram types, and everything below is the embedded
-    * [[FourgramKNModel]]'s own backoff tower (whose raw 4-gram level is
-    * unused here for the same Chen & Goodman reason its raw trigram
-    * level is unused inside it: backoff levels run on continuation
-    * counts).
+  /** Order-n KN with every n-gram table kept DISTRIBUTED — the path a
+    * corpus-scale CCNet/KenLM filter takes, since n-gram vocabularies
+    * never fit a driver. No table is collected: documents explode to
+    * one (id, pos, w1..wn) row per token and the statistics arrive by
+    * token-keyed joins ([[scoreFromPositions]]); only the two Pc
+    * scalars are driver-side. Lands on the broadcast path's bits
+    * (AssemblySpec pins joined == broadcast; the q_*_kn_dist gates pin
+    * it against the same DuckDB oracles).
     */
-  final case class FivegramKNModel(
-      four: FourgramKNModel,
-      five: Map[String, Long],
-      ctx4: Map[String, Long],
-      ctx4Types: Map[String, Long],
-      cont4: Map[String, Long],
-      contMid4: Map[String, Long],
-      contTypes4: Map[String, Long])
-
-  def trainFivegramKneserNey(
-      train: DataFrame,
-      idCol: String,
-      textCol: String,
-      maxEntries: Long = 5000000L,
-      discount: Double = 0.75): FivegramKNModel = {
-    require(maxEntries > 0 && maxEntries < Int.MaxValue,
-      s"maxEntries must be in (0, Int.MaxValue), got $maxEntries")
-    // the whole n = 1..5 ladder from ONE tokenize+explode pass — the
-    // round-12 shape re-tokenized the corpus once per order
-    val lc = ladderCounts(train, textCol, 5,
-      n => n match {
-        case 1 => DefaultMaxVocab
-        case 2 => 5000000L
-        case _ => maxEntries
-      }, 1L)
-    val __tb = System.nanoTime()
-    val four = buildFourgramKN(
-      buildTrigramKN(
-        kn2From(buildBigrams(buildUnigrams(lc(1), DefaultMaxVocab),
-          lc(2), 5000000L), discount),
-        lc(3), maxEntries),
-      lc(4), maxEntries)
-    System.err.println(f"[ladder] build1-4 ${(System.nanoTime()-__tb)/1e9}%.2f s")
-    val __tc = System.nanoTime()
-    val rows = lc(5)
-    require(rows.length <= maxEntries,
-      s"trainFivegramKneserNey: distinct 5-grams exceed the driver-collect " +
-      s"cap ($maxEntries) — use scoreFivegramKneserNeyJoined")
-    val ctx4 = new scala.collection.mutable.HashMap[String, Long]()
-    val ctx4T = new scala.collection.mutable.HashMap[String, Long]()
-    val cont4 = new scala.collection.mutable.HashMap[String, Long]()
-    rows.foreach { case (pg, c) =>
-      val last = pg.lastIndexOf(' ')
-      val w1234 = pg.substring(0, last)
-      ctx4.update(w1234, ctx4.getOrElse(w1234, 0L) + c)
-      ctx4T.update(w1234, ctx4T.getOrElse(w1234, 0L) + 1L)
-      val w2345 = pg.substring(pg.indexOf(' ') + 1)
-      cont4.update(w2345, cont4.getOrElse(w2345, 0L) + 1L)
-    }
-    val contMid4 = new scala.collection.mutable.HashMap[String, Long]()
-    val contT4 = new scala.collection.mutable.HashMap[String, Long]()
-    cont4.foreach { case (w2345, n1p) =>
-      val w234 = w2345.substring(0, w2345.lastIndexOf(' '))
-      contMid4.update(w234, contMid4.getOrElse(w234, 0L) + n1p)
-      contT4.update(w234, contT4.getOrElse(w234, 0L) + 1L)
-    }
-    System.err.println(f"[ladder] build5 ${(System.nanoTime()-__tc)/1e9}%.2f s")
-    FivegramKNModel(four, rows.toMap, ctx4.toMap, ctx4T.toMap,
-      cont4.toMap, contMid4.toMap, contT4.toMap)
-  }
-
-  /** 5-gram KN scoring: token 0 → Pc, token 1 → P2, token 2 → P3'
-    * (continuation trigram level), token 3 → P4' (continuation 4-gram
-    * level), token i ≥ 4 → P5 interpolating down through
-    * P4' → P3' → P2 → Pc. Same nanoQuant kernel, same association-order
-    * discipline — q_fivegram_kn restates the full recursion and both
-    * Spark paths must land on its hash.
-    */
-  private type JCounts = java.util.HashMap[String, java.lang.Long]
-
-  private def jcounts(m: Map[String, Long]): JCounts = {
-    val h = new JCounts(math.max(16, m.size * 2))
-    m.foreach { case (k, v) => h.put(k, java.lang.Long.valueOf(v)) }
-    h
-  }
-
-  /** The 5-gram model's count tables re-housed in java HashMaps for the
-    * scoring hot path (identical values — only the lookup structure
-    * changes, so the gate hashes cannot move; immutable-trie probes and
-    * per-level key rebuilding were the measured bulk of q_fivegram_kn's
-    * non-train time at sf0.1).
-    */
-  private final class KN5Java(m: FivegramKNModel) extends Serializable {
-    val left: JCounts = jcounts(m.four.tri.kn2.leftTypes)
-    val contMid: JCounts = jcounts(m.four.tri.contMid)
-    val contBi: JCounts = jcounts(m.four.tri.contBi)
-    val contT: JCounts = jcounts(m.four.tri.contTypes)
-    val contMid3: JCounts = jcounts(m.four.contMid3)
-    val cont3: JCounts = jcounts(m.four.cont3)
-    val contT3: JCounts = jcounts(m.four.contTypes3)
-    val five: JCounts = jcounts(m.five)
-    val ctx4: JCounts = jcounts(m.ctx4)
-    val ctx4T: JCounts = jcounts(m.ctx4Types)
-    val cont4: JCounts = jcounts(m.cont4)
-    val contMid4: JCounts = jcounts(m.contMid4)
-    val contT4: JCounts = jcounts(m.contTypes4)
-  }
-
-  def scoreFivegramKneserNey(
-      docs: DataFrame,
-      idCol: String,
-      textCol: String,
-      m: FivegramKNModel): DataFrame = {
-    val d = m.four.tri.kn2.discount
-    val pcDen = m.four.tri.kn2.nBigramTypes + 0.5 * (m.four.tri.kn2.vocabSize + 1.0)
-    // the model rides as ONE explicit broadcast of java-map tables; the
-    // scoring loop builds each composite key exactly once and ROLLS the
-    // context strings forward (position i's "b c e w" IS position i+1's
-    // context key), replacing the ~10 string builds per token of the
-    // recursive spelling. Every double expression keeps the original
-    // association order — q_fivegram_kn's shared oracle hash is the proof.
-    val bcm = docs.sparkSession.sparkContext.broadcast(new KN5Java(m))
-    val f = udf((text: String) => {
-      val mm = bcm.value
-      val toks = HashKernels.tokensOf(text)
-      if (toks.isEmpty) null
-      else {
-        def cnt(h: JCounts, k: String): Long = {
-          val v = h.get(k); if (v eq null) 0L else v.longValue
-        }
-        def pcont(w: String): Double = (cnt(mm.left, w) + 0.5) / pcDen
-        // one interpolation level: max(cb−D,0)/cm + D·ct/cm · lower,
-        // backing off to `lower` when the context completes nothing —
-        // the identical expression (and association order) every level
-        // of the old recursion spelled out
-        def lvl(cm: Long, cb: Long, ct: Long, lower: Double): Double =
-          if (cm > 0L) math.max(cb - d, 0.0) / cm + d * ct / cm * lower
-          else lower
-        val len = toks.length
-        var nanos = HashKernels.nanoQuant(-math.log(pcont(toks(0))))
-        if (len > 1) {
-          val e = toks(0); val w = toks(1)
-          val p = lvl(cnt(mm.contMid, e), cnt(mm.contBi, e + " " + w),
-            cnt(mm.contT, e), pcont(w))
-          nanos += HashKernels.nanoQuant(-math.log(p))
-        }
-        if (len > 2) {
-          val c = toks(0); val e = toks(1); val w = toks(2)
-          val km3 = c + " " + e
-          val p2v = lvl(cnt(mm.contMid, e), cnt(mm.contBi, e + " " + w),
-            cnt(mm.contT, e), pcont(w))
-          val p = lvl(cnt(mm.contMid3, km3), cnt(mm.cont3, km3 + " " + w),
-            cnt(mm.contT3, km3), p2v)
-          nanos += HashKernels.nanoQuant(-math.log(p))
-        }
-        if (len > 3) {
-          val b = toks(0); val c = toks(1); val e = toks(2); val w = toks(3)
-          val km4 = b + " " + c + " " + e
-          val km3 = c + " " + e
-          val p2v = lvl(cnt(mm.contMid, e), cnt(mm.contBi, e + " " + w),
-            cnt(mm.contT, e), pcont(w))
-          val p3v = lvl(cnt(mm.contMid3, km3), cnt(mm.cont3, km3 + " " + w),
-            cnt(mm.contT3, km3), p2v)
-          val p = lvl(cnt(mm.contMid4, km4), cnt(mm.cont4, km4 + " " + w),
-            cnt(mm.contT4, km4), p3v)
-          nanos += HashKernels.nanoQuant(-math.log(p))
-        }
-        if (len > 4) {
-          var k4 = toks(0) + " " + toks(1) + " " + toks(2) + " " + toks(3)
-          var km4 = toks(1) + " " + toks(2) + " " + toks(3)
-          var km3 = toks(2) + " " + toks(3)
-          var i = 4
-          while (i < len) {
-            val e = toks(i - 1); val w = toks(i)
-            val bik = e + " " + w
-            val c3k = km3 + " " + w
-            val c4k = km4 + " " + w
-            val k5 = k4 + " " + w
-            val p2v = lvl(cnt(mm.contMid, e), cnt(mm.contBi, bik),
-              cnt(mm.contT, e), pcont(w))
-            val p3v = lvl(cnt(mm.contMid3, km3), cnt(mm.cont3, c3k),
-              cnt(mm.contT3, km3), p2v)
-            val p4v = lvl(cnt(mm.contMid4, km4), cnt(mm.cont4, c4k),
-              cnt(mm.contT4, km4), p3v)
-            val p = lvl(cnt(mm.ctx4, k4), cnt(mm.five, k5), cnt(mm.ctx4T, k4), p4v)
-            nanos += HashKernels.nanoQuant(-math.log(p))
-            k4 = c4k; km4 = c3k; km3 = bik
-            i += 1
-          }
-        }
-        (len, (nanos.toDouble / 1e9) / len)
-      }
-    })
-    docs.select(col(idCol), f(col(textCol)).as("s"))
-      .filter(col("s").isNotNull)
-      .select(col(idCol), col("s._1").as("n_tokens"),
-        round(col("s._2"), 6).as("avg_nll"))
-  }
-
-  /** Self-scoring convenience: train 5-gram KN on `docs`, score `docs`. */
-  def fivegramKneserNeyScore(docs: DataFrame, idCol: String, textCol: String): DataFrame =
-    scoreFivegramKneserNey(docs, idCol, textCol,
-      trainFivegramKneserNey(docs, idCol, textCol))
-
-  /** 5-gram KN with every n-gram table DISTRIBUTED — the exact shape of
-    * a production CCNet/KenLM perplexity filter at corpus scale. One
-    * exploded (pos, w1..w5) frame feeds all training aggregates
-    * (5-gram counts → raw top level + its continuation table;
-    * 4-gram/trigram/bigram types → the lower continuation levels);
-    * scoring is nine token-keyed left joins + the one term kernel
-    * shared (in association order) with the broadcast path. Only the
-    * two Pc scalars are driver-side.
-    */
-  def scoreFivegramKneserNeyJoined(
+  def scoreKneserNeyJoined(
       docs: DataFrame,
       idCol: String,
       textCol: String,
       train: DataFrame,
-      discount: Double = 0.75): DataFrame = {
+      order: Int): DataFrame = {
+    requireOrder(order)
     // ONE tokenize+explode pass in the self-scoring shape (train eq
-    // docs — the q_fivegram_kn_dist gate): the scored position frame is
-    // materialized once and doubles as the training base, instead of
-    // re-running the tokenizer UDF over the corpus a second time
+    // docs — every q_*_kn_dist gate): the scored position frame is
+    // materialized once and doubles as the training base
     val docPos = {
-      val p0 = docs
-        .select(col(idCol), explode(quintUdf(col(textCol))).as("p"))
-        .select(col(idCol), col("p._1").as("pos"),
-          col("p._2").as("w1"), col("p._3").as("w2"),
-          col("p._4").as("w3"), col("p._5").as("w4"), col("p._6").as("w5"))
+      val p0 = positions(docs, textCol, order, Seq(idCol))
       if (train eq docs) p0.localCheckpoint() else p0
     }
+    val w = wcols(order)
     val base =
       // toDF re-aliases with fresh expression ids so the type tables'
-      // grouping keys never collide with docPos's own w1..w5 in the
+      // grouping keys never collide with docPos's own w1..wn in the
       // scorer's self-join
-      if (train eq docs)
-        docPos.select(col("w1"), col("w2"), col("w3"), col("w4"), col("w5"))
-          .toDF("w1", "w2", "w3", "w4", "w5")
-      else train.select(explode(quintUdf(col(textCol))).as("p"))
-        .select(col("p._2").as("w1"), col("p._3").as("w2"),
-          col("p._4").as("w3"), col("p._5").as("w4"), col("p._6").as("w5"))
-        .localCheckpoint()
-    // the four n-gram TYPE tables + the two Pc scalars — everything the
-    // scorer needs (and everything [[saveFivegramTables]] persists) —
-    // all derive from ONE corpus-scale aggregate (guide §2.3): the
-    // (w1..w5) context-tuple counts. An n-gram ending at a position is
-    // the last n slots of its context tuple, so each lower-order table
-    // is a suffix-sum over the SMALL aggregated frame (one row per
-    // distinct context) instead of its own full pass over the 10M-row
-    // position frame; tic5 is the non-null-w1 slice verbatim. Counts
-    // are bit-identical — only the number of corpus passes changes
-    // (4 → 1, the same collapse ladderCounts got).
-    val ctxCounts = base
-      .groupBy(col("w1"), col("w2"), col("w3"), col("w4"), col("w5"))
-      .agg(count(lit(1)).as("cc0"))
-      .localCheckpoint()
-    val bic = ctxCounts.filter(col("w4").isNotNull)
-      .groupBy(col("w4"), col("w5")).agg(sum(col("cc0")).as("bc"))
-      .localCheckpoint()
-    // both Pc scalars in ONE 1-row-aggregate job (were two actions);
-    // distinct w5 over the context frame == distinct tokens over the
-    // position frame (every position lands its token in w5)
-    val scal = bic.agg(count(lit(1)).as("bt"))
-      .crossJoin(ctxCounts.agg(countDistinct(col("w5")).as("vsz"))).head()
-    val bt = scal.getLong(0)
-    val vsz = scal.getLong(1)
-    val tic3 = ctxCounts.filter(col("w3").isNotNull)
-      .groupBy(col("w3"), col("w4"), col("w5")).agg(sum(col("cc0")).as("t3"))
-    val tic4 = ctxCounts.filter(col("w2").isNotNull)
-      .groupBy(col("w2"), col("w3"), col("w4"), col("w5"))
-      .agg(sum(col("cc0")).as("t4"))
-    val tic5 = ctxCounts.filter(col("w1").isNotNull)
-      .select(col("w1"), col("w2"), col("w3"), col("w4"), col("w5"),
-        col("cc0").as("qc"))
-    scoreFivegramFromPositions(docPos, idCol,
-      bic, tic3, tic4, tic5, bt, vsz, discount)
+      if (train eq docs) docPos.select(w.map(col): _*).toDF(w: _*)
+      else positions(train, textCol, order, Nil)
+    scoreFromPositions(docPos, idCol, order, typeTables(base, order))
   }
 
-  private val quintUdf = udf((text: String) => {
-    val toks = HashKernels.tokensOf(text)
-    Array.tabulate(toks.length)(i => (i,
-      if (i < 4) null else toks(i - 4),
-      if (i < 3) null else toks(i - 3),
-      if (i < 2) null else toks(i - 2),
-      if (i < 1) null else toks(i - 1),
-      toks(i)))
-  })
-
-  /** The scoring core over the four n-gram TYPE tables — shared
-    * verbatim by the train-inline path ([[scoreFivegramKneserNeyJoined]])
-    * and the persisted-model path ([[scoreFivegramKneserNeyPersisted]]),
-    * so both land on the identical bits.
-    */
-  private def scoreFivegramFromTypeTables(
-      docs: DataFrame, idCol: String, textCol: String,
-      bic: DataFrame, tic3: DataFrame, tic4: DataFrame, tic5: DataFrame,
-      bt: Long, vsz: Long, discount: Double): DataFrame =
-    scoreFivegramFromPositions(
-      docs.select(col(idCol), explode(quintUdf(col(textCol))).as("p"))
-        .select(col(idCol), col("p._1").as("pos"),
-          col("p._2").as("w1"), col("p._3").as("w2"),
-          col("p._4").as("w3"), col("p._5").as("w4"), col("p._6").as("w5")),
-      idCol, bic, tic3, tic4, tic5, bt, vsz, discount)
-
-  /** The scoring core over a pre-exploded (id, pos, w1..w5) frame — lets
-    * the self-scoring joined path reuse its one materialized explode.
-    */
-  private def scoreFivegramFromPositions(
-      docPos: DataFrame, idCol: String,
-      bic: DataFrame, tic3: DataFrame, tic4: DataFrame, tic5: DataFrame,
-      bt: Long, vsz: Long, discount: Double): DataFrame = {
-    val d = discount
-    val pcDen = bt + 0.5 * (vsz + 1.0)
-    val lt = bic.groupBy(col("w5")).agg(count(lit(1)).as("ltc"))
-      .withColumnRenamed("w5", "lw")
-    val cb2 = tic3.groupBy(col("w4"), col("w5")).agg(count(lit(1)).as("cbc"))
-      .withColumnRenamed("w4", "b4").withColumnRenamed("w5", "b5")
-      .localCheckpoint()
-    val cm2 = cb2.groupBy(col("b4"))
-      .agg(sum(col("cbc")).as("cmc"), count(lit(1)).as("ctp"))
-      .withColumnRenamed("b4", "m4")
-    val cb3 = tic4.groupBy(col("w3"), col("w4"), col("w5"))
-      .agg(count(lit(1)).as("c3c"))
-      .withColumnRenamed("w3", "e3").withColumnRenamed("w4", "e4")
-      .withColumnRenamed("w5", "e5")
-      .localCheckpoint()
-    val cm3 = cb3.groupBy(col("e3"), col("e4"))
-      .agg(sum(col("c3c")).as("cm3c"), count(lit(1)).as("ct3"))
-      .withColumnRenamed("e3", "f3").withColumnRenamed("e4", "f4")
-    val ctx = tic5.groupBy(col("w1"), col("w2"), col("w3"), col("w4"))
-      .agg(sum(col("qc")).as("cc"), count(lit(1)).as("nt"))
-      .withColumnRenamed("w1", "c1").withColumnRenamed("w2", "c2")
-      .withColumnRenamed("w3", "c3").withColumnRenamed("w4", "c4")
-    val cb4 = tic5.groupBy(col("w2"), col("w3"), col("w4"), col("w5"))
-      .agg(count(lit(1)).as("c4c"))
-      .withColumnRenamed("w2", "g2").withColumnRenamed("w3", "g3")
-      .withColumnRenamed("w4", "g4").withColumnRenamed("w5", "g5")
-      .localCheckpoint()
-    val cm4 = cb4.groupBy(col("g2"), col("g3"), col("g4"))
-      .agg(sum(col("c4c")).as("cm4c"), count(lit(1)).as("ct4"))
-      .withColumnRenamed("g2", "h2").withColumnRenamed("g3", "h3")
-      .withColumnRenamed("g4", "h4")
-
-    // 13 counts + pos: the counts travel as ONE array column
-    // (order: qc, cc, nt, c4c, cm4c, ct4, c3c, cm3c, ct3, cbc, cmc, ctp, ltc)
-    val termUdf = udf((pos: Int, v: Seq[Long]) => {
-      val qc = v(0); val cc = v(1); val nt = v(2)
-      val c4c = v(3); val cm4c = v(4); val ct4 = v(5)
-      val c3c = v(6); val cm3c = v(7); val ct3 = v(8)
-      val cbc = v(9); val cmc = v(10); val ctp = v(11); val ltc = v(12)
-      val pcw = (ltc + 0.5) / pcDen
-      val p2 =
-        if (cmc > 0L) math.max(cbc - d, 0.0) / cmc + d * ctp / cmc * pcw
-        else pcw
-      val p3 =
-        if (cm3c > 0L) math.max(c3c - d, 0.0) / cm3c + d * ct3 / cm3c * p2
-        else p2
-      val p4 =
-        if (cm4c > 0L) math.max(c4c - d, 0.0) / cm4c + d * ct4 / cm4c * p3
-        else p3
-      val p =
-        if (pos == 0) pcw
-        else if (pos == 1) p2
-        else if (pos == 2) p3
-        else if (pos == 3) p4
-        else if (cc > 0L) math.max(qc - d, 0.0) / cc + d * nt / cc * p4
-        else p4
-      HashKernels.nanoQuant(-math.log(p))
-    })
-    docPos
-      .join(lt, docPos("w5") === lt("lw"), "left")
-      .join(cm2, docPos("w4") === cm2("m4"), "left")
-      .join(cb2, docPos("w4") === cb2("b4") && docPos("w5") === cb2("b5"), "left")
-      .join(cm3, docPos("w3") === cm3("f3") && docPos("w4") === cm3("f4"), "left")
-      .join(cb3, docPos("w3") === cb3("e3") && docPos("w4") === cb3("e4") &&
-        docPos("w5") === cb3("e5"), "left")
-      .join(cm4, docPos("w2") === cm4("h2") && docPos("w3") === cm4("h3") &&
-        docPos("w4") === cm4("h4"), "left")
-      .join(cb4, docPos("w2") === cb4("g2") && docPos("w3") === cb4("g3") &&
-        docPos("w4") === cb4("g4") && docPos("w5") === cb4("g5"), "left")
-      .join(ctx, docPos("w1") === ctx("c1") && docPos("w2") === ctx("c2") &&
-        docPos("w3") === ctx("c3") && docPos("w4") === ctx("c4"), "left")
-      .join(tic5, docPos("w1") === tic5("w1") && docPos("w2") === tic5("w2") &&
-        docPos("w3") === tic5("w3") && docPos("w4") === tic5("w4") &&
-        docPos("w5") === tic5("w5"), "left")
-      .select(col(idCol),
-        termUdf(col("pos"), array(
-          coalesce(col("qc"), lit(0L)), coalesce(col("cc"), lit(0L)),
-          coalesce(col("nt"), lit(0L)), coalesce(col("c4c"), lit(0L)),
-          coalesce(col("cm4c"), lit(0L)), coalesce(col("ct4"), lit(0L)),
-          coalesce(col("c3c"), lit(0L)), coalesce(col("cm3c"), lit(0L)),
-          coalesce(col("ct3"), lit(0L)), coalesce(col("cbc"), lit(0L)),
-          coalesce(col("cmc"), lit(0L)), coalesce(col("ctp"), lit(0L)),
-          coalesce(col("ltc"), lit(0L))))
-          .as("nanos"))
-      .groupBy(col(idCol))
-      .agg(count(lit(1)).as("n"), sum(col("nanos")).as("nanos"))
-      .select(col(idCol), col("n").cast("int").as("n_tokens"),
-        round(col("nanos").cast("double") / lit(1e9) / col("n").cast("double"), 6)
-          .as("avg_nll"))
-  }
+  /** Directory of each persisted 5-gram type table T2..T5. */
+  private val PersistedTables = Seq("bic", "tic3", "tic4", "tic5")
 
   /** Persist the 5-gram KN model's four n-gram TYPE tables + the two Pc
     * scalars as parquet under `path` — the KenLM-model-file analog:
     * train ONCE over the corpus (the expensive aggregates), then score
     * any number of batches/days from disk without touching the training
-    * text again. Tables stay distributed frames end to end; the meta
-    * file (bt, vsz) is written LAST via write-temp+rename as the commit
-    * marker, the [[graft.ops.Layout]]/[[graft.ops.Dedup]] discipline.
+    * text again. The tables are [[scoreKneserNeyJoined]]'s own and stay
+    * distributed frames end to end; the meta file (bt, vsz) is written
+    * LAST via write-temp+rename as the commit marker, the
+    * [[graft.ops.Layout]]/[[graft.ops.Dedup]] discipline.
     */
   def saveFivegramTables(train: DataFrame, textCol: String, path: String): Unit = {
     val spark = train.sparkSession
-    val base = train.select(explode(quintUdf(col(textCol))).as("p"))
-      .select(col("p._2").as("w1"), col("p._3").as("w2"),
-        col("p._4").as("w3"), col("p._5").as("w4"), col("p._6").as("w5"))
-      .localCheckpoint()
-    base.filter(col("w4").isNotNull)
-      .groupBy(col("w4"), col("w5")).agg(count(lit(1)).as("bc"))
-      .write.mode("overwrite").parquet(s"$path/bic")
-    base.filter(col("w3").isNotNull)
-      .groupBy(col("w3"), col("w4"), col("w5")).agg(count(lit(1)).as("t3"))
-      .write.mode("overwrite").parquet(s"$path/tic3")
-    base.filter(col("w2").isNotNull)
-      .groupBy(col("w2"), col("w3"), col("w4"), col("w5"))
-      .agg(count(lit(1)).as("t4"))
-      .write.mode("overwrite").parquet(s"$path/tic4")
-    base.filter(col("w1").isNotNull)
-      .groupBy(col("w1"), col("w2"), col("w3"), col("w4"), col("w5"))
-      .agg(count(lit(1)).as("qc"))
-      .write.mode("overwrite").parquet(s"$path/tic5")
-    val bt = spark.read.parquet(s"$path/bic").count()
-    val vsz = base.agg(countDistinct(col("w5"))).head().getLong(0)
+    val tt = typeTables(positions(train, textCol, 5, Nil), 5)
+    PersistedTables.zip(tt.t).foreach { case (dir, t) =>
+      t.write.mode("overwrite").parquet(s"$path/$dir")
+    }
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sessionState.newHadoopConf())
     val tmp = new org.apache.hadoop.fs.Path(
       path, s"._meta-${java.util.UUID.randomUUID().toString.take(8)}")
     val out = fs.create(tmp, false)
-    try out.write(s"$bt\t$vsz\n".getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    try out.write(s"${tt.bt}\t${tt.vsz}\n".getBytes(java.nio.charset.StandardCharsets.UTF_8))
     finally out.close()
     val meta = new org.apache.hadoop.fs.Path(path, "_model_meta.txt")
     if (fs.exists(meta)) fs.delete(meta, false)
@@ -1273,13 +630,13 @@ object LanguageModel {
   }
 
   /** Score against a model persisted by [[saveFivegramTables]]: the
-    * identical scoring core as [[scoreFivegramKneserNeyJoined]] over the
+    * identical scoring core as [[scoreKneserNeyJoined]] over the
     * on-disk tables — q_fivegram_kn_persist pins persisted == inline ==
-    * oracle on one shared hash.
+    * oracle on one shared hash. Columns are read by position, so the
+    * count columns' names do not matter.
     */
   def scoreFivegramKneserNeyPersisted(
-      docs: DataFrame, idCol: String, textCol: String,
-      path: String, discount: Double = 0.75): DataFrame = {
+      docs: DataFrame, idCol: String, textCol: String, path: String): DataFrame = {
     val spark = docs.sparkSession
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sessionState.newHadoopConf())
@@ -1290,135 +647,12 @@ object LanguageModel {
       try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
       finally in.close()
     val f = line.split("\t")
-    scoreFivegramFromTypeTables(docs, idCol, textCol,
-      spark.read.parquet(s"$path/bic"),
-      spark.read.parquet(s"$path/tic3"),
-      spark.read.parquet(s"$path/tic4"),
-      spark.read.parquet(s"$path/tic5"),
-      f(0).toLong, f(1).toLong, discount)
-  }
-
-  /** Trigram KN scoring with the model kept DISTRIBUTED — the 100 TB
-    * path (trigram vocabularies explode far faster than bigram ones;
-    * CCNet-scale 5-gram tables never fit a driver). No n-gram table is
-    * ever collected: documents explode to one (id, pos, w1, w2, w3) row
-    * per token, the trigram/context/continuation statistics arrive via
-    * token-keyed shuffle joins, and each row's NLL term goes through
-    * the SAME double arithmetic + [[HashKernels.nanoQuant]] kernel as
-    * [[scoreTrigramKneserNey]] in the same association order, so the
-    * per-document integer sum is bit-identical however the shuffle
-    * orders rows (LanguageModelSpec pins joined == collected;
-    * q_trigram_kn_dist pins it against the same DuckDB oracle). Only
-    * two scalars (distinct-bigram total, vocab size) are driver-side —
-    * one 1-row aggregate.
-    */
-  def scoreTrigramKneserNeyJoined(
-      docs: DataFrame,
-      idCol: String,
-      textCol: String,
-      train: DataFrame,
-      discount: Double = 0.75): DataFrame = {
-    val d = discount
-    // one row per token position: (pos, w1 = tok[pos-2], w2 = tok[pos-1], w3 = tok[pos])
-    val tripleUdf = udf((text: String) => {
-      val toks = HashKernels.tokensOf(text)
-      Array.tabulate(toks.length)(i => (i,
-        if (i < 2) null else toks(i - 2),
-        if (i < 1) null else toks(i - 1),
-        toks(i)))
-    })
-    // ONE tokenize+explode pass for the whole query in the self-scoring
-    // shape (train eq docs — every q_*_kn_dist gate): the doc-side frame
-    // is materialized once and every training aggregate derives from it.
-    // The round-14 shape re-ran the tokenizer UDF over the corpus FOUR
-    // times (pairs, vocab scalar, trigrams, doc positions); the counts
-    // are bit-identical — only the number of corpus passes changes.
-    val docPos = {
-      val p0 = docs
-        .select(col(idCol), explode(tripleUdf(col(textCol))).as("p"))
-        .select(col(idCol), col("p._1").as("pos"),
-          col("p._2").as("w1"), col("p._3").as("w2"), col("p._4").as("w3"))
-      if (train eq docs) p0.localCheckpoint() else p0
+    val w = wcols(5)
+    val t = (2 to 5).zip(PersistedTables).map { case (k, dir) =>
+      spark.read.parquet(s"$path/$dir").toDF(w.drop(5 - k) :+ s"t$k": _*)
     }
-    // distinct-train path: still ONE explode, materialized once.
-    // toDF in the shared branch re-aliases with fresh expression ids so
-    // the n-gram tables' grouping keys never collide with docPos's own
-    // w1..w3 in the scorer's self-join
-    val trainTok =
-      if (train eq docs)
-        docPos.select(col("w1"), col("w2"), col("w3"))
-          .toDF("w1", "w2", "w3")
-      else train.select(explode(tripleUdf(col(textCol))).as("p"))
-        .select(col("p._2").as("w1"), col("p._3").as("w2"),
-          col("p._4").as("w3"))
-        .localCheckpoint()
-    // every training statistic derives from ONE corpus-scale aggregate
-    // (guide §2.3): the (w1,w2,w3) context-tuple counts — lower-order
-    // tables are suffix-sums over the SMALL aggregated frame (2 → 1
-    // corpus aggregates, the same collapse as the 4/5-gram scorers).
-    val ctxCounts = trainTok
-      .groupBy(col("w1"), col("w2"), col("w3"))
-      .agg(count(lit(1)).as("cc0"))
-      .localCheckpoint()
-    val bic = ctxCounts.filter(col("w2").isNotNull)
-      .groupBy(col("w2"), col("w3"))
-      .agg(sum(col("cc0")).as("bc")).localCheckpoint()
-    // the two scalars of the Pc floor — ONE 1-row-aggregate job (they
-    // were two separate driver actions)
-    val scal = bic.agg(count(lit(1)).as("bt"))
-      .crossJoin(ctxCounts.agg(countDistinct(col("w3")).as("vsz"))).head()
-    val bt = scal.getLong(0)
-    val vsz = scal.getLong(1)
-    val pcDen = bt + 0.5 * (vsz + 1.0)
-    val lt = bic.groupBy(col("w3")).agg(count(lit(1)).as("ltc"))
-      .withColumnRenamed("w3", "lw")
-
-    val tic = ctxCounts.filter(col("w1").isNotNull)
-      .select(col("w1"), col("w2"), col("w3"), col("cc0").as("tc"))
-    val ctx = tic.groupBy(col("w1"), col("w2"))
-      .agg(sum(col("tc")).as("cc"), count(lit(1)).as("nt"))
-      .withColumnRenamed("w1", "c1").withColumnRenamed("w2", "c2")
-    val cb = tic.groupBy(col("w2"), col("w3"))
-      .agg(count(lit(1)).as("cbc"))
-      .withColumnRenamed("w2", "b2").withColumnRenamed("w3", "b3")
-      .localCheckpoint()
-    val cm = cb.groupBy(col("b2"))
-      .agg(sum(col("cbc")).as("cmc"), count(lit(1)).as("ctp"))
-      .withColumnRenamed("b2", "m2")
-
-    // every branch goes through the ONE kernel so association order and
-    // quantization are shared with the broadcast scorer literally
-    val termUdf = udf((pos: Int, tc: Long, cc: Long, nt: Long,
-        cbc: Long, cmc: Long, ctp: Long, ltc: Long) => {
-      val pcw = (ltc + 0.5) / pcDen
-      val p2 =
-        if (cmc > 0L) math.max(cbc - d, 0.0) / cmc + d * ctp / cmc * pcw
-        else pcw
-      val p =
-        if (pos == 0) pcw
-        else if (pos == 1) p2
-        else if (cc > 0L) math.max(tc - d, 0.0) / cc + d * nt / cc * p2
-        else p2
-      HashKernels.nanoQuant(-math.log(p))
-    })
-    docPos
-      .join(lt, docPos("w3") === lt("lw"), "left")
-      .join(cm, docPos("w2") === cm("m2"), "left")
-      .join(cb, docPos("w2") === cb("b2") && docPos("w3") === cb("b3"), "left")
-      .join(ctx, docPos("w1") === ctx("c1") && docPos("w2") === ctx("c2"), "left")
-      .join(tic, docPos("w1") === tic("w1") && docPos("w2") === tic("w2") &&
-        docPos("w3") === tic("w3"), "left")
-      .select(col(idCol),
-        termUdf(col("pos"),
-          coalesce(col("tc"), lit(0L)), coalesce(col("cc"), lit(0L)),
-          coalesce(col("nt"), lit(0L)), coalesce(col("cbc"), lit(0L)),
-          coalesce(col("cmc"), lit(0L)), coalesce(col("ctp"), lit(0L)),
-          coalesce(col("ltc"), lit(0L))).as("nanos"))
-      .groupBy(col(idCol))
-      .agg(count(lit(1)).as("n"), sum(col("nanos")).as("nanos"))
-      .select(col(idCol), col("n").cast("int").as("n_tokens"),
-        round(col("nanos").cast("double") / lit(1e9) / col("n").cast("double"), 6)
-          .as("avg_nll"))
+    scoreFromPositions(positions(docs, textCol, 5, Seq(idCol)), idCol, 5,
+      TypeTables(t, f(0).toLong, f(1).toLong))
   }
 
   /** Bigram scoring with the model kept DISTRIBUTED — the 100 TB path.

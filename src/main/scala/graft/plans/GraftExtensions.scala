@@ -4,6 +4,7 @@ import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.types.{Decimal, NumericType}
 
 /** Session extension wiring (SURVEY §4.2: no custom optimizer `Rule` or
   * `SparkStrategy` is required for this engine — every operator is
@@ -92,8 +93,10 @@ object GraftExtensions {
         lint(children(2), "minSize"), lint(children(3), "maxSize"))
     })
 
-  /** jaccard_sorted_min(sh_a, sh_b, t) — the threshold must be a double
-    * literal (it parameterizes the lossless early exit, not the row).
+  /** jaccard_sorted_min(sh_a, sh_b, t) — the threshold must be a
+    * foldable numeric literal (it parameterizes the lossless early exit,
+    * not the row). Any numeric type is taken as a double: SQL parses
+    * `0.8` as a DECIMAL.
     */
   private def jaccardMinDescriptor: Descriptor = (
     FunctionIdentifier("jaccard_sorted_min"),
@@ -102,9 +105,14 @@ object GraftExtensions {
       require(children.size == 3,
         "jaccard_sorted_min(a, b, t) takes 3 arguments")
       val t = children(2) match {
-        case org.apache.spark.sql.catalyst.expressions.Literal(v: Double, _) => v
+        case e if e.foldable && e.dataType.isInstanceOf[NumericType] => e.eval() match {
+          case d: Decimal => d.toDouble
+          case n: Number => n.doubleValue
+          case other => throw new IllegalArgumentException(
+            s"jaccard_sorted_min: t must not be null, got $other")
+        }
         case other => throw new IllegalArgumentException(
-          s"jaccard_sorted_min: t must be a double literal, got $other")
+          s"jaccard_sorted_min: t must be a numeric literal, got $other")
       }
       JaccardSortedMinLong(children(0), children(1), t)
     })

@@ -154,6 +154,8 @@ case class JaccardSortedLong(left: Expression, right: Expression)
   */
 case class JaccardSortedMinLong(left: Expression, right: Expression, t: Double)
     extends BinaryExpression {
+  // t is spliced into generated Java: NaN/Infinity would not compile
+  require(java.lang.Double.isFinite(t), s"jaccard_sorted_min: t must be finite, got $t")
 
   override def nullIntolerant: Boolean = true
   override def dataType: DataType = DoubleType

@@ -1503,7 +1503,7 @@ object Pipeline {
     // the interpolation formula term by term.
     "q_bigram_kn" -> ((s, dir) =>
       graft.ops.LanguageModel.kneserNeyScore(
-        Tables(s, dir, "documents"), "doc_id", "text")
+        Tables(s, dir, "documents"), "doc_id", "text", order = 2)
         .orderBy(col("doc_id"))),
 
     // Same numbers, model kept distributed (token-keyed joins instead of
@@ -1522,8 +1522,8 @@ object Pipeline {
     // counts/totals/types, the Pc floor) as CTEs, term for term in the
     // same association order.
     "q_trigram_kn" -> ((s, dir) =>
-      graft.ops.LanguageModel.trigramKneserNeyScore(
-        Tables(s, dir, "documents"), "doc_id", "text")
+      graft.ops.LanguageModel.kneserNeyScore(
+        Tables(s, dir, "documents"), "doc_id", "text", order = 3)
         .orderBy(col("doc_id"))),
 
     // Same numbers, every n-gram table kept distributed (token-keyed
@@ -1533,8 +1533,8 @@ object Pipeline {
     // joined == broadcast is additionally spec-pinned bit-for-bit.
     "q_trigram_kn_dist" -> ((s, dir) => {
       val docs = Tables(s, dir, "documents")
-      graft.ops.LanguageModel.scoreTrigramKneserNeyJoined(
-        docs, "doc_id", "text", docs)
+      graft.ops.LanguageModel.scoreKneserNeyJoined(
+        docs, "doc_id", "text", docs, order = 3)
         .orderBy(col("doc_id"))
     }),
 
@@ -1543,13 +1543,13 @@ object Pipeline {
     // generalization is pure repetition. Broadcast and distributed
     // plans share one oracle hash, like the trigram pair.
     "q_fourgram_kn" -> ((s, dir) =>
-      graft.ops.LanguageModel.fourgramKneserNeyScore(
-        Tables(s, dir, "documents"), "doc_id", "text")
+      graft.ops.LanguageModel.kneserNeyScore(
+        Tables(s, dir, "documents"), "doc_id", "text", order = 4)
         .orderBy(col("doc_id"))),
     "q_fourgram_kn_dist" -> ((s, dir) => {
       val docs = Tables(s, dir, "documents")
-      graft.ops.LanguageModel.scoreFourgramKneserNeyJoined(
-        docs, "doc_id", "text", docs)
+      graft.ops.LanguageModel.scoreKneserNeyJoined(
+        docs, "doc_id", "text", docs, order = 4)
         .orderBy(col("doc_id"))
     }),
 
@@ -1562,17 +1562,17 @@ object Pipeline {
       // train split out as a sub-timing stage: it is the suite's #2
       // cost and the bench artifact should attribute train vs score
       val m = graft.SubTimings.time("q_fivegram_kn", "model_train") {
-        graft.ops.LanguageModel.trainFivegramKneserNey(
-          Tables(s, dir, "documents"), "doc_id", "text")
+        graft.ops.LanguageModel.trainKneserNey(
+          Tables(s, dir, "documents"), "doc_id", "text", order = 5)
       }
-      graft.ops.LanguageModel.scoreFivegramKneserNey(
+      graft.ops.LanguageModel.scoreKneserNey(
         Tables(s, dir, "documents"), "doc_id", "text", m)
         .orderBy(col("doc_id"))
     }),
     "q_fivegram_kn_dist" -> ((s, dir) => {
       val docs = Tables(s, dir, "documents")
-      graft.ops.LanguageModel.scoreFivegramKneserNeyJoined(
-        docs, "doc_id", "text", docs)
+      graft.ops.LanguageModel.scoreKneserNeyJoined(
+        docs, "doc_id", "text", docs, order = 5)
         .orderBy(col("doc_id"))
     }),
 

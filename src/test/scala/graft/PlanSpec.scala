@@ -65,7 +65,7 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("distributed trigram/4-gram KN: token-keyed joins only, no cartesian, no window") {
-    for (q <- Seq("q_trigram_kn_dist", "q_fourgram_kn_dist")) {
+    for (q <- Seq("q_trigram_kn_dist", "q_fourgram_kn_dist", "q_fivegram_kn_dist")) {
       val p = physicalPlan(q)
       assert(!p.contains("CartesianProduct"), s"$q:\n" + p.take(800))
       assert(!p.contains("BroadcastNestedLoopJoin"), s"$q:\n" + p.take(800))

@@ -180,11 +180,11 @@ class AssemblySpec extends AnyFunSuite {
   }
 
   test("Kneser-Ney: hand-computed type counts and interpolated NLL") {
-    val m = LanguageModel.trainKneserNey(docs, "doc_id", "text")
+    val m = LanguageModel.trainKneserNey(docs, "doc_id", "text", order = 2)
     // distinct bigram types: the-cat, cat-sat, sat-on, on-the, the-mat,
     // the-dog, cat-cat, mat-dog = 8; followers of 'the' = {cat,mat,dog}
     assert(m.nBigramTypes == 8)
-    assert(m.rightTypes("the") == 3 && m.rightTypes("cat") == 2)
+    assert(m.level(2).ctxTypes("the") == 3 && m.level(2).ctxTypes("cat") == 2)
     assert(m.leftTypes("cat") == 2 && m.leftTypes("dog") == 2) // the-dog, mat-dog
     def nanos(x: Double): Long = math.floor(x * 1e9 + 0.5).toLong
     val pcDen = 8 + 0.5 * (m.vocabSize + 1.0)
@@ -213,7 +213,7 @@ class AssemblySpec extends AnyFunSuite {
     val corpus = Seq(
       (1L, "lot of a lot of b lot of c lot of d lot of e"),
       (2L, "one thing two thing red thing blue thing")).toDF("doc_id", "text")
-    val m = LanguageModel.trainKneserNey(corpus, "doc_id", "text")
+    val m = LanguageModel.trainKneserNey(corpus, "doc_id", "text", order = 2)
     assert(m.leftTypes("of") == 1 && m.leftTypes("thing") == 4)
     val scored = LanguageModel.scoreKneserNey(
       Seq((1L, "zzz of"), (2L, "zzz thing")).toDF("doc_id", "text"),
@@ -224,47 +224,47 @@ class AssemblySpec extends AnyFunSuite {
   }
 
   test("trigram KN: hand-computed interpolated backoff chain") {
-    val m = LanguageModel.trainTrigramKneserNey(docs, "doc_id", "text")
+    val m = LanguageModel.trainKneserNey(docs, "doc_id", "text", order = 3)
     // trigrams: the-cat-sat, cat-sat-on, sat-on-the, on-the-mat,
     // cat-cat-cat — all count 1 except none repeated; ctx2(cat,cat)=1
-    assert(m.tri("the cat sat") == 1 && m.tri("cat cat cat") == 1)
-    assert(m.ctx2("the cat") == 1 && m.ctx2Types("the cat") == 1)
+    assert(m.level(3).grams("the cat sat") == 1 && m.level(3).grams("cat cat cat") == 1)
+    assert(m.level(3).ctxTotals("the cat") == 1 && m.level(3).ctxTypes("the cat") == 1)
     // continuation: N1+(.cat sat)=1 (only 'the' precedes "cat sat")
-    assert(m.contBi("cat sat") == 1)
+    assert(m.level(2).grams("cat sat") == 1)
     // N1+(.cat.) = distinct (w1,w3) around middle 'cat' = cat-sat(the),
     // cat-cat(cat) -> 2; completed types {sat, cat} -> 2
-    assert(m.contMid("cat") == 2 && m.contTypes("cat") == 2)
+    assert(m.level(2).ctxTotals("cat") == 2 && m.level(2).ctxTypes("cat") == 2)
     def nanos(x: Double): Long = math.floor(x * 1e9 + 0.5).toLong
-    val pcDen = m.kn2.nBigramTypes + 0.5 * (m.kn2.vocabSize + 1.0)
-    def pc(w: String): Double = (m.kn2.leftTypes.getOrElse(w, 0L) + 0.5) / pcDen
+    val pcDen = m.nBigramTypes + 0.5 * (m.vocabSize + 1.0)
+    def pc(w: String): Double = (m.leftTypes.getOrElse(w, 0L) + 0.5) / pcDen
     def p2(w2: String, w3: String): Double = {
-      val cm = m.contMid.getOrElse(w2, 0L)
-      if (cm > 0) math.max(m.contBi.getOrElse(w2 + " " + w3, 0L) - 0.75, 0.0) / cm +
-        0.75 * m.contTypes.getOrElse(w2, 0L) / cm * pc(w3)
+      val cm = m.level(2).ctxTotals.getOrElse(w2, 0L)
+      if (cm > 0) math.max(m.level(2).grams.getOrElse(w2 + " " + w3, 0L) - 0.75, 0.0) / cm +
+        0.75 * m.level(2).ctxTypes.getOrElse(w2, 0L) / cm * pc(w3)
       else pc(w3)
     }
     // "the cat sat": pc(the), p2(the,cat), p3(sat|the cat)
-    val p3 = math.max(m.tri("the cat sat") - 0.75, 0.0) / m.ctx2("the cat") +
-      0.75 * m.ctx2Types("the cat") / m.ctx2("the cat") * p2("cat", "sat")
+    val p3 = math.max(m.level(3).grams("the cat sat") - 0.75, 0.0) / m.level(3).ctxTotals("the cat") +
+      0.75 * m.level(3).ctxTypes("the cat") / m.level(3).ctxTotals("the cat") * p2("cat", "sat")
     val expect = BigDecimal((nanos(-math.log(pc("the"))) +
       nanos(-math.log(p2("the", "cat"))) + nanos(-math.log(p3))).toDouble / 1e9 / 3)
       .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-    val got = LanguageModel.scoreTrigramKneserNey(
+    val got = LanguageModel.scoreKneserNey(
       Seq((9L, "the cat sat")).toDF("doc_id", "text"), "doc_id", "text", m)
       .as[(Long, Int, Double)].collect().head
     assert(got == ((9L, 3, expect)))
     // unseen (w1,w2) context backs off to the bigram continuation level
-    val oov = LanguageModel.scoreTrigramKneserNey(
+    val oov = LanguageModel.scoreKneserNey(
       Seq((10L, "zzz qqq dog sat")).toDF("doc_id", "text"), "doc_id", "text", m)
       .as[(Long, Int, Double)].collect().head
     assert(oov._3 > 0 && !oov._3.isInfinite)
   }
 
   test("trigram KN: distributed joins == broadcast maps, bit for bit") {
-    val broadcastScores = LanguageModel.trigramKneserNeyScore(docs, "doc_id", "text")
+    val broadcastScores = LanguageModel.kneserNeyScore(docs, "doc_id", "text", order = 3)
       .as[(Long, Int, Double)].collect().sortBy(_._1).toSeq
-    val joined = LanguageModel.scoreTrigramKneserNeyJoined(
-      docs, "doc_id", "text", docs)
+    val joined = LanguageModel.scoreKneserNeyJoined(
+      docs, "doc_id", "text", docs, order = 3)
       .as[(Long, Int, Double)].collect().sortBy(_._1).toSeq
     assert(joined == broadcastScores)
     assert(broadcastScores.nonEmpty)
@@ -281,75 +281,75 @@ class AssemblySpec extends AnyFunSuite {
       df.as[(Long, Int, Double)].collect().sortBy(_._1).toSeq
     assert(rows(LanguageModel.scoreBigramsJoined(docs, "doc_id", "text", docs))
       == rows(LanguageModel.scoreBigramsJoined(docs, "doc_id", "text", trainCopy)))
-    assert(rows(LanguageModel.scoreTrigramKneserNeyJoined(docs, "doc_id", "text", docs))
-      == rows(LanguageModel.scoreTrigramKneserNeyJoined(docs, "doc_id", "text", trainCopy)))
-    assert(rows(LanguageModel.scoreFourgramKneserNeyJoined(docs, "doc_id", "text", docs))
-      == rows(LanguageModel.scoreFourgramKneserNeyJoined(docs, "doc_id", "text", trainCopy)))
-    assert(rows(LanguageModel.scoreFivegramKneserNeyJoined(docs, "doc_id", "text", docs))
-      == rows(LanguageModel.scoreFivegramKneserNeyJoined(docs, "doc_id", "text", trainCopy)))
+    assert(rows(LanguageModel.scoreKneserNeyJoined(docs, "doc_id", "text", docs, order = 3))
+      == rows(LanguageModel.scoreKneserNeyJoined(docs, "doc_id", "text", trainCopy, order = 3)))
+    assert(rows(LanguageModel.scoreKneserNeyJoined(docs, "doc_id", "text", docs, order = 4))
+      == rows(LanguageModel.scoreKneserNeyJoined(docs, "doc_id", "text", trainCopy, order = 4)))
+    assert(rows(LanguageModel.scoreKneserNeyJoined(docs, "doc_id", "text", docs, order = 5))
+      == rows(LanguageModel.scoreKneserNeyJoined(docs, "doc_id", "text", trainCopy, order = 5)))
   }
 
   test("4-gram KN: continuation levels, backoff chain, dist == broadcast") {
-    val m = LanguageModel.trainFourgramKneserNey(docs, "doc_id", "text")
+    val m = LanguageModel.trainKneserNey(docs, "doc_id", "text", order = 4)
     // 4-grams: the-cat-sat-on, cat-sat-on-the, sat-on-the-mat — all x1
-    assert(m.four("the cat sat on") == 1)
-    assert(m.ctx3("the cat sat") == 1 && m.ctx3Types("the cat sat") == 1)
+    assert(m.level(4).grams("the cat sat on") == 1)
+    assert(m.level(4).ctxTotals("the cat sat") == 1 && m.level(4).ctxTypes("the cat sat") == 1)
     // N1+(.cat sat on) = 1 ('the' is the only left extension)
-    assert(m.cont3("cat sat on") == 1)
-    assert(m.contMid3("cat sat") == 1 && m.contTypes3("cat sat") == 1)
+    assert(m.level(3).grams("cat sat on") == 1)
+    assert(m.level(3).ctxTotals("cat sat") == 1 && m.level(3).ctxTypes("cat sat") == 1)
     // level-2 statistics are the trigram model's own continuation tables
-    assert(m.tri.contBi("cat sat") == 1)
+    assert(m.level(2).grams("cat sat") == 1)
     // backoff chain on an unseen 4-gram context stays finite and positive
-    val oov = LanguageModel.scoreFourgramKneserNey(
+    val oov = LanguageModel.scoreKneserNey(
       Seq((10L, "zz qq the cat sat on")).toDF("doc_id", "text"),
       "doc_id", "text", m)
       .as[(Long, Int, Double)].collect().head
     assert(oov._3 > 0 && !oov._3.isInfinite)
     // distributed joins land on the identical bits
-    val broadcastScores = LanguageModel.fourgramKneserNeyScore(docs, "doc_id", "text")
+    val broadcastScores = LanguageModel.kneserNeyScore(docs, "doc_id", "text", order = 4)
       .as[(Long, Int, Double)].collect().sortBy(_._1).toSeq
-    val joined = LanguageModel.scoreFourgramKneserNeyJoined(
-      docs, "doc_id", "text", docs)
+    val joined = LanguageModel.scoreKneserNeyJoined(
+      docs, "doc_id", "text", docs, order = 4)
       .as[(Long, Int, Double)].collect().sortBy(_._1).toSeq
     assert(joined == broadcastScores && broadcastScores.nonEmpty)
   }
 
   test("5-gram KN: continuation levels one more up, backoff chain, dist == broadcast") {
-    val m = LanguageModel.trainFivegramKneserNey(docs, "doc_id", "text")
+    val m = LanguageModel.trainKneserNey(docs, "doc_id", "text", order = 5)
     // 5-grams in the fixture: the-cat-sat-on-the, cat-sat-on-the-mat — x1
-    assert(m.five("the cat sat on the") == 1)
-    assert(m.ctx4("the cat sat on") == 1 && m.ctx4Types("the cat sat on") == 1)
+    assert(m.level(5).grams("the cat sat on the") == 1)
+    assert(m.level(5).ctxTotals("the cat sat on") == 1 && m.level(5).ctxTypes("the cat sat on") == 1)
     // N1+(.cat sat on the) = 1 ('the' is the only left extension)
-    assert(m.cont4("cat sat on the") == 1)
-    assert(m.contMid4("cat sat on") == 1 && m.contTypes4("cat sat on") == 1)
+    assert(m.level(4).grams("cat sat on the") == 1)
+    assert(m.level(4).ctxTotals("cat sat on") == 1 && m.level(4).ctxTypes("cat sat on") == 1)
     // level-3 statistics are the embedded 4-gram model's continuation
     // tables; its RAW 4-gram level stays unused inside the 5-gram model
-    assert(m.four.cont3("cat sat on") == 1)
+    assert(m.level(3).grams("cat sat on") == 1)
     // hand-computed chain on "the cat sat on the": pc, p2, p3', p4', p5
     def nanos(x: Double): Long = math.floor(x * 1e9 + 0.5).toLong
-    val kn2 = m.four.tri.kn2
+    val kn2 = m
     val pcDen = kn2.nBigramTypes + 0.5 * (kn2.vocabSize + 1.0)
     def pc(w: String): Double = (kn2.leftTypes.getOrElse(w, 0L) + 0.5) / pcDen
     def p2(a: String, b: String): Double = {
-      val cm = m.four.tri.contMid.getOrElse(a, 0L)
-      if (cm > 0) math.max(m.four.tri.contBi.getOrElse(a + " " + b, 0L) - 0.75, 0.0) / cm +
-        0.75 * m.four.tri.contTypes.getOrElse(a, 0L) / cm * pc(b)
+      val cm = m.level(2).ctxTotals.getOrElse(a, 0L)
+      if (cm > 0) math.max(m.level(2).grams.getOrElse(a + " " + b, 0L) - 0.75, 0.0) / cm +
+        0.75 * m.level(2).ctxTypes.getOrElse(a, 0L) / cm * pc(b)
       else pc(b)
     }
     def p3(a: String, b: String, c: String): Double = {
-      val cm = m.four.contMid3.getOrElse(a + " " + b, 0L)
-      if (cm > 0) math.max(m.four.cont3.getOrElse(a + " " + b + " " + c, 0L) - 0.75, 0.0) / cm +
-        0.75 * m.four.contTypes3.getOrElse(a + " " + b, 0L) / cm * p2(b, c)
+      val cm = m.level(3).ctxTotals.getOrElse(a + " " + b, 0L)
+      if (cm > 0) math.max(m.level(3).grams.getOrElse(a + " " + b + " " + c, 0L) - 0.75, 0.0) / cm +
+        0.75 * m.level(3).ctxTypes.getOrElse(a + " " + b, 0L) / cm * p2(b, c)
       else p2(b, c)
     }
     def p4(a: String, b: String, c: String, w: String): Double = {
-      val cm = m.contMid4.getOrElse(a + " " + b + " " + c, 0L)
-      if (cm > 0) math.max(m.cont4.getOrElse(a + " " + b + " " + c + " " + w, 0L) - 0.75, 0.0) / cm +
-        0.75 * m.contTypes4.getOrElse(a + " " + b + " " + c, 0L) / cm * p3(b, c, w)
+      val cm = m.level(4).ctxTotals.getOrElse(a + " " + b + " " + c, 0L)
+      if (cm > 0) math.max(m.level(4).grams.getOrElse(a + " " + b + " " + c + " " + w, 0L) - 0.75, 0.0) / cm +
+        0.75 * m.level(4).ctxTypes.getOrElse(a + " " + b + " " + c, 0L) / cm * p3(b, c, w)
       else p3(b, c, w)
     }
-    val p5 = math.max(m.five("the cat sat on the") - 0.75, 0.0) / m.ctx4("the cat sat on") +
-      0.75 * m.ctx4Types("the cat sat on") / m.ctx4("the cat sat on") *
+    val p5 = math.max(m.level(5).grams("the cat sat on the") - 0.75, 0.0) / m.level(5).ctxTotals("the cat sat on") +
+      0.75 * m.level(5).ctxTypes("the cat sat on") / m.level(5).ctxTotals("the cat sat on") *
         p4("cat", "sat", "on", "the")
     val expect = BigDecimal((nanos(-math.log(pc("the"))) +
       nanos(-math.log(p2("the", "cat"))) +
@@ -357,21 +357,21 @@ class AssemblySpec extends AnyFunSuite {
       nanos(-math.log(p4("the", "cat", "sat", "on"))) +
       nanos(-math.log(p5))).toDouble / 1e9 / 5)
       .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-    val got = LanguageModel.scoreFivegramKneserNey(
+    val got = LanguageModel.scoreKneserNey(
       Seq((9L, "the cat sat on the")).toDF("doc_id", "text"), "doc_id", "text", m)
       .as[(Long, Int, Double)].collect().head
     assert(got == ((9L, 5, expect)))
     // backoff chain on an unseen 5-gram context stays finite and positive
-    val oov = LanguageModel.scoreFivegramKneserNey(
+    val oov = LanguageModel.scoreKneserNey(
       Seq((10L, "zz qq rr the cat sat on")).toDF("doc_id", "text"),
       "doc_id", "text", m)
       .as[(Long, Int, Double)].collect().head
     assert(oov._3 > 0 && !oov._3.isInfinite)
     // distributed joins land on the identical bits
-    val broadcastScores = LanguageModel.fivegramKneserNeyScore(docs, "doc_id", "text")
+    val broadcastScores = LanguageModel.kneserNeyScore(docs, "doc_id", "text", order = 5)
       .as[(Long, Int, Double)].collect().sortBy(_._1).toSeq
-    val joined = LanguageModel.scoreFivegramKneserNeyJoined(
-      docs, "doc_id", "text", docs)
+    val joined = LanguageModel.scoreKneserNeyJoined(
+      docs, "doc_id", "text", docs, order = 5)
       .as[(Long, Int, Double)].collect().sortBy(_._1).toSeq
     assert(joined == broadcastScores && broadcastScores.nonEmpty)
     // ... and so does scoring from the PERSISTED model tables
