@@ -54,8 +54,12 @@ object AlignRead {
     val q = if (qual == null || qual == "*" || qual.length != seq.length)
       nullQual.toString * seq.length else qual
 
-    val outSeq = Array.fill(winLen)(edgeGap)
-    val outQual = Array.fill(winLen)(nullQual)
+    // not Array.fill: C2 inlines it here only if its own compiled code is
+    // still small when this kernel compiles, a race lost for a JVM's life
+    val outSeq = new Array[Char](winLen)
+    val outQual = new Array[Char](winLen)
+    java.util.Arrays.fill(outSeq, edgeGap)
+    java.util.Arrays.fill(outQual, nullQual)
 
     if (pos > maxPos)
       return Some(AlignedRead(new String(outSeq), new String(outQual), Nil))

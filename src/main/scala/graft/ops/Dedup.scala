@@ -60,33 +60,14 @@ object Dedup {
       .select(cols.map(c => col(s"__rep.`$c`")) :+ col("dup_count"): _*)
   }
 
-  /** Distinct k-char shingles via array slice (codegen'd, no UDF). */
+  /** Distinct k-char shingles, one `substring` per start (text shorter
+    * than k yields one shingle, the whole text).
+    */
   def shinglesOf(text: Column, k: Int): Column =
     array_distinct(
       transform(
         sequence(lit(1), greatest(length(text) - lit(k) + lit(1), lit(1))),
-        i => array_join(slice(split(text, ""), i, lit(k)), "")))
-
-  /** Distinct shingles hashed to 64-bit longs: set operations (intersect /
-    * union sizing) over longs are several times cheaper than over short
-    * strings, and at 2^64 the collision probability within a document pair
-    * is ~|A||B|/2^64 ≈ 0 — Jaccard values are unchanged in practice.
-    */
-  def hashedShinglesOf(text: Column, k: Int): Column =
-    transform(shinglesOf(text, k), s => xxhash64(s))
-
-  /** MinHash signature (numHashes 64-bit mins) over hashed shingles.
-    * h_i(x) = xxhash64(i, x) — seeding the hash with the function index
-    * gives numHashes independent hash families without the modular
-    * arithmetic that would overflow ANSI-mode longs. All expression-level —
-    * whole-stage codegen.
-    */
-  def minhashSignature(shingleArr: Column, numHashes: Int): Column = {
-    val hashes = (0 until numHashes).map { i =>
-      array_min(transform(shingleArr, s => xxhash64(lit(i), s)))
-    }
-    array(hashes: _*)
-  }
+        i => text.substr(i, lit(k))))
 
   /** Pick (bands, rowsPerBand) for a hash budget so the LSH S-curve
     * 1-(1-s^r)^b best separates at `threshold`: among every divisor

@@ -5,13 +5,11 @@ import org.apache.spark.sql.functions.udf
 
 /** Pure-Scala hot-loop kernels for the dedup/similarity family.
   *
-  * The expression-level variants (shinglesOf + minhashSignature composed
-  * from split/transform/aggregate) are semantically identical but run
-  * interpreted — Spark's higher-order array functions are not part of
-  * whole-stage codegen, and profiling at sf0.1 put >80% of the dedup
-  * queries' time into those interpreted lambdas. These kernels do the same
-  * work as JIT-compiled Scala over primitive arrays (Spark passes
-  * ARRAY<BIGINT> to a UDF typed Array[Long] without boxing). This mirrors
+  * Spark's higher-order array functions are not part of whole-stage
+  * codegen: their lambdas run interpreted, and profiling at sf0.1 put >80%
+  * of the dedup queries' time into them. These kernels do that work as
+  * JIT-compiled Scala over primitive arrays (Spark passes ARRAY<BIGINT> to
+  * a UDF typed Array[Long] without boxing). This mirrors
   * the reference's own escape hatch — its one Cython kernel
   * (/root/reference/seqtables/core/internals/cython/sam_to_arr.pyx) exists
   * for exactly this reason.

@@ -17,17 +17,17 @@ import org.apache.spark.sql.functions._
 object Kmers {
 
   /** Contiguous k-mers at every start position of the window.
-    * Output: (start_position, kmer, cnt).
+    * Output: (start_position, kmer, cnt). One code-point `substring` per
+    * exploded start index, in whole-stage codegen: per read, window × k
+    * characters are copied (the walk to each start allocates nothing).
     */
   def contiguous(reads: DataFrame, k: Int, minPos: Int): DataFrame =
     reads
       .filter(length(col("seq")) >= k)
-      .select(posexplode(
-        transform(
-          sequence(lit(1), length(col("seq")) - lit(k) + lit(1)),
-          i => array_join(slice(split(col("seq"), ""), i, lit(k)), ""))))
-      .select((col("pos") + lit(minPos)).as("start_position"), col("col").as("kmer"))
-      .groupBy(col("start_position"), col("kmer"))
+      .select(col("seq"), explode(sequence(lit(1), length(col("seq")) - lit(k) + lit(1))).as("i"))
+      .groupBy(
+        (col("i") + lit(minPos - 1)).as("start_position"),
+        col("seq").substr(col("i"), lit(k)).as("kmer"))
       .agg(count(lit(1)).as("cnt"))
 
   /** Gapped k-mers over explicit position combinations (reference

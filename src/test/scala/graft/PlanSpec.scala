@@ -51,6 +51,14 @@ class PlanSpec extends AnyFunSuite {
     assert(exchanges <= 2, s"per-position distribution should be one shuffle:\n$p")
   }
 
+  test("contiguous k-mers explode start indexes, no per-position lambda") {
+    val p = physicalPlan("q_kmer3")
+    assert(p.contains("Generate"), p.take(800))
+    assert(!p.contains("lambdafunction"), s"per-position lambda is back:\n$p")
+    val exchanges = "Exchange hashpartitioning".r.findAllIn(p).length
+    assert(exchanges <= 2, s"k-mer counts should be one shuffle:\n$p")
+  }
+
   test("comparison queries broadcast the reference side") {
     val p = physicalPlan("q_hamming_doc0")
     assert(p.contains("BroadcastHashJoin") || p.contains("BroadcastExchange"),

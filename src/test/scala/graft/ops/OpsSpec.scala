@@ -23,6 +23,42 @@ class KmersSpec extends AnyFunSuite {
     assert(k((3, "GT")) == 1 && k((3, "GA")) == 1)
   }
 
+  test("contiguous k-mers match a sliding(k) reference") {
+    import spark.implicits._
+    val k = 3
+    val minPos = 5
+    // mixed lengths, one read shorter than k (dropped), one of exactly k,
+    // N and '-' bases
+    val seqs = Seq("ACGTACGTAA", "ACGNNA-TG", "AC", "TTG", "ACGTAC", "--ACG", "NNNN")
+    val reads = seqs.zipWithIndex.map { case (s, i) => (s"r$i", s) }.toDF("read_id", "seq")
+    val got = Kmers.contiguous(reads, k, minPos)
+      .collect().map(r => ((r.getInt(0), r.getString(1)), r.getLong(2))).toMap
+    val expected = seqs.filter(_.length >= k)
+      .flatMap(_.sliding(k).zipWithIndex.map { case (w, i) => (i + minPos, w) })
+      .groupBy(identity).map { case (key, ws) => key -> ws.size.toLong }
+    assert(got == expected)
+    assert(got((minPos, "TTG")) == 1, "a read of exactly k gives one k-mer")
+  }
+
+  test("shinglesOf matches a code-point sliding reference") {
+    import spark.implicits._
+    val k = 3
+    // a non-BMP character (one code point, two UTF-16 chars) and text
+    // shorter than k
+    val emoji = new String(Character.toChars(0x1F600))
+    val texts = Seq(s"ab${emoji}cdab${emoji}c", s"x$emoji", "abcab")
+    val got = texts.toDF("text")
+      .select(Dedup.shinglesOf(col("text"), k))
+      .collect().map(_.getSeq[String](0).toSet).toSeq
+    val expected = texts.map { t =>
+      val cps = t.codePoints().toArray
+      if (cps.length < k) Set(t)
+      else cps.sliding(k).map(w => new String(w, 0, w.length)).toSet
+    }
+    assert(got == expected)
+    assert(got.head.contains(s"${emoji}cd") && got(1) == Set(s"x$emoji"))
+  }
+
   test("gapped k-mers over explicit position combos") {
     val g = Kmers.gapped(st.reads, Seq(Seq(1, 3), Seq(2, 4)), st.minPos)
       .collect().map(r => ((r.getString(0), r.getString(1)), r.getLong(2))).toMap
