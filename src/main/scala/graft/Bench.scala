@@ -1,122 +1,65 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import java.nio.file.{Files, Paths}
+import scala.util.control.NonFatal
+import org.apache.spark.sql.{DataFrame, SparkSession}
 object Bench {
+  /** What a query's seconds measure: the action every bench run (and
+    * [[DriftProbe]]) times.
+    */
+  private[graft] val timed: DataFrame => Unit = _.count()
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // default to the full machine — the driver contract benches at local[32]
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(32)
+    val cpus = spark.conf.get("spark.sql.shuffle.partitions")
+    def measure(name: String, fn: (SparkSession, String) => DataFrame, dir: String) =
+      Harness.run(spark, name, fn, dir)(timed)
     // JMH-style warm-up before measuring: ONE pass at the SMALLEST SF
     // compiles every plan and drives the shared kernels into C2 — both
     // costs are data-size-independent, so the cheapest data warms. The
     // first measured pass at the target SF then doubles as the
     // target-scale warm-up, with min-of-2 discarding its residual JIT
-    // cost. (The former 3-SF warm-up + 2 measured = 5 full suite passes
-    // was the direct cause of the round-13 driver-bench wall-clock
-    // kill.)
-    val sc = spark.sparkContext
+    // cost. (A 3-SF warm-up + 2 measured = 5 full suite passes
+    // overran the bench's wall-clock budget.)
     Seq("/root/testdata/sf0.001").filterNot(_ == sfDir).foreach { warmDir =>
-      SparkEntry.queries.foreach { case (_, fn) =>
-        val before = Checkpoints.mark(sc)
-        try fn(spark, warmDir).count() catch { case _: Throwable => }
-        Checkpoints.releaseSince(sc, before): Unit
-      }
+      SparkEntry.queries.foreach { case (name, fn) => measure(name, fn, warmDir) }
     }
     // two measured iterations, report the per-query min: steady-state
     // latency, insulated from one-off GC/scheduler hiccups. A throwing
     // query reports -1.0 (never its elapsed time) so a broken query can't
-    // masquerade as a fast one; failures are also listed under "errors".
-    //
-    // Every query's checkpoints are released once its count lands
-    // (graft.Checkpoints; lifecycle-memoized frames are retained): the
-    // round-14 artifact shipped four rows distorted 8-46× by
-    // accumulated localCheckpoint blocks across 228 queries × 2 passes,
-    // and the per-pass storage summary below makes any regrowth visible
-    // in the run log instead of surfacing as unexplained late-bench
-    // slowdowns.
-    def once(tag: String): (Map[String, Double], Map[String, Map[String, Double]]) = {
-      val subs = Map.newBuilder[String, Map[String, Double]]
-      val times = SparkEntry.queries.map { case (name, fn) =>
-        SubTimings.reset(name)
-        val before = Checkpoints.mark(sc)
-        val t0 = System.nanoTime()
-        val ok = try { fn(spark, sfDir).count(); true } catch { case _: Throwable => false }
-        val elapsed = (System.nanoTime() - t0) / 1e9
-        Checkpoints.releaseSince(sc, before): Unit
-        val st = SubTimings.get(name)
-        if (ok && st.nonEmpty) subs += (name -> st)
-        name -> (if (ok) elapsed else -1.0)
-      }
-      System.err.println(s"[bench] pass $tag done: ${Checkpoints.storageSummary(sc)}")
-      (times, subs.result())
+    // masquerade as a fast one; failures are also listed under "errors"
+    // and their messages under "error_text". The per-pass storage
+    // summary makes any regrowth of unreleased checkpoint blocks visible
+    // in the run log.
+    def pass(tag: String): Map[String, Harness.Outcome] = {
+      val out = SparkEntry.queries.map { case (name, fn) => name -> measure(name, fn, sfDir) }
+      System.err.println(s"[bench] pass $tag done: ${Checkpoints.storageSummary(spark.sparkContext)}")
+      out
     }
     // scope the stage recordings to THIS measured run: a Verify (or any
     // other submitter) sharing the JVM records into its own bucket and
     // cannot contaminate these accumulated stage times
-    val ((r1, s1), (r2, s2)) =
-      SubTimings.withRun(s"bench-${System.nanoTime()}")((once("1"), once("2")))
-    val results = r1.map { case (k, v) =>
-      k -> (if (v < 0 || r2(k) < 0) -1.0 else math.min(v, r2(k)))
-    }
-    // sub-timings from whichever run produced the reported (min) total,
-    // with the plan-side remainder made explicit: the fixture-writing
-    // queries' drift lives mostly in the write stage, and splitting it
-    // out stops file-system noise from masking real plan movement
-    val subtimings = results.collect {
-      case (k, v) if v >= 0 && (s1.contains(k) || s2.contains(k)) =>
-        val st = if (r1(k) <= r2(k)) s1.getOrElse(k, s2(k)) else s2.getOrElse(k, s1(k))
-        val rest = math.max(0.0, v - st.values.sum)
-        val parts = (st.toSeq.sortBy(_._1) :+ ("rest" -> rest))
-          .map { case (stage, secs) => f"$stage=$secs%.2f" }.mkString(";")
-        k -> parts
-    }
+    val passes = SubTimings.withRun(s"bench-${System.nanoTime()}")(Seq(pass("1"), pass("2")))
+    val results = minOf(passes)
     val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    val subJson = subtimings.toSeq.sortBy(_._1)
-      .map { case (k, v) => s"\"" + k + "\":\"" + v + "\"" }
       .mkString("{", ",", "}")
     val errors = results.collect { case (k, v) if v < 0 => "\"" + k + "\"" }
       .mkString("[", ",", "]")
     val total = results.values.filter(_ >= 0).sum
-    // host-speed sentinels for cross-session drift attribution: three
+    // host-speed sentinels for cross-session drift attribution:
     // fixture-free, code-stable queries re-measured in a SHORT DEDICATED
     // loop (min-of-3 each) immediately before artifact write — NOT their
-    // in-suite values, which round 14 proved can be poisoned by the very
-    // late-bench JVM state they exist to diagnose (q_pagerank read 2.8×
-    // its floor inside the degraded run while its siblings read 0.88×,
-    // mutually inconsistent and useless for attribution). The dedicated
-    // loop runs on an otherwise idle pool at full JIT depth, so the
-    // three values are a clean same-JVM floor sample; a judge divides
-    // cross-artifact movement by these before calling a regression.
-    //
-    // Round-16 re-base (r15 verdict #4): q_trustrank/q_pagerank were
-    // OPTIMIZED in round 15, so their cross-round movement is code, not
-    // host — the HOST sentinels are now q_heaps_fit / q_lr_quality /
-    // q_bam_dist (untouched for >= 2 rounds, no in-query fixture write
-    // at floor depth, round-11 DriftProbe bands re-pinned in round 16).
-    // The two retired sentinels stay in the floor loop as CONTINUITY
-    // anchors: the previous round's compact line carried their floors,
-    // so keeping them measured the same way preserves the driver's
-    // per-query round-over-round diff.
+    // in-suite values, which late-bench JVM state can poison (q_pagerank
+    // once read 2.8× its floor inside a degraded run while its siblings
+    // read 0.88×). q_trustrank/q_pagerank are continuity anchors only:
+    // earlier compact lines carried their floors, and their code has
+    // changed since, so only the last three are host sentinels.
     val hostSentinels = Seq("q_heaps_fit", "q_lr_quality", "q_bam_dist")
     val sentinels = Seq("q_trustrank", "q_pagerank") ++ hostSentinels
     val sentinelFloors = sentinels.flatMap { q =>
       SparkEntry.queries.get(q).map { fn =>
-        val floors = (1 to 3).map { _ =>
-          val before = Checkpoints.mark(sc)
-          val t0 = System.nanoTime()
-          try fn(spark, sfDir).count() catch { case _: Throwable => }
-          val t = (System.nanoTime() - t0) / 1e9
-          Checkpoints.releaseSince(sc, before): Unit
-          t
-        }
-        q -> floors.min
+        q -> (1 to 3).flatMap(_ => measure(q, fn, sfDir).seconds).minOption.getOrElse(-1.0)
       }
     }
     val allFloors = sentinelFloors
@@ -126,148 +69,84 @@ object Bench {
       .filter { case (q, _) => hostSentinels.contains(q) }
       .map { case (q, v) => s"\"" + q + "\":" + v }
       .mkString("{", ",", "}")
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"subtimings":$subJson,"errors":$errors,"drift_probe":$driftProbe,"sf":"$sfDir"}"""
+    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"subtimings":${subtimingsJson(passes, results)},"errors":$errors,"error_text":${errorTextJson(passes)},"spread":${spreadJson(passes)},"drift_probe":$driftProbe,"sf":"$sfDir"}"""
     println(line)
-    // Per-core-count artifact (r15 verdict #1/#2): a c8 scaling run must
-    // not clobber the c32 record, so the full record lands in
-    // bench_full_c<N>.json and the previous SAME-CORE-COUNT artifact is
-    // the round-over-round baseline. The auto-notes are per-core too.
+    // Per-core-count artifact: a c8 scaling run must not clobber the c32
+    // record, so the full record lands in bench_full_c<N>.json and the
+    // previous SAME-CORE-COUNT artifact is the round-over-round baseline.
+    // The auto-notes are per-core too.
     val outName = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
       s"bench_full_c$cpus.json")
+    val out = Paths.get(outName)
     val prevArtifact: Option[String] =
-      try {
-        val out = java.nio.file.Paths.get(outName)
-        if (java.nio.file.Files.exists(out))
-          Some(java.nio.file.Files.readString(out))
-        else None
-      } catch { case _: Throwable => None }
-    // In-harness round-over-round comparison for the driver's compact
-    // line (r15 verdict "Next round" #2): the driver's stdout tail is
-    // ~2000 chars, far too small for 233 per-query timings, so PERF
-    // could only diff the sentinel anchors. The compact line now ALSO
-    // carries the comparison the driver cannot compute itself —
-    // n_improved / n_regressed / per-query geomean / top-5 movers vs
-    // the previously committed same-core-count artifact — in a bounded
-    // ~400-char block.
+      try if (Files.exists(out)) Some(Files.readString(out)) else None
+      catch { case NonFatal(e) =>
+        System.err.println(s"[bench] cannot read previous artifact $outName: ${e.getMessage}")
+        None
+      }
+    // A reader that keeps only the last ~2000 chars of stdout cannot
+    // hold 233 per-query timings, so the compact line ALSO carries the
+    // comparison it cannot compute itself — n_improved / n_regressed /
+    // per-query geomean / top-5 movers vs the previous same-core-count
+    // artifact — in a bounded ~400-char block.
     val prev = prevBlock(prevArtifact.map(parseQueries).getOrElse(Map.empty), results)
-    // The driver captures only a TAIL of stdout and the full line above
-    // exceeds it (round 14 shipped `parsed: null`); a compact summary
+    // The full line above exceeds that tail; a compact summary
     // printed AFTER it guarantees the tail always ends with parseable
     // JSON carrying the headline numbers. The sentinel floor loop's
     // values double as the compact line's `queries` so the driver's
     // parsed record still has per-query anchors measured the same way
     // round over round.
     println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$allFloors,"n_queries":${results.size},"errors":$errors,"drift_probe":$driftProbe,$prev,"sf":"$sfDir","full":"$outName"}""")
-    // The driver captures only a tail of stdout, which truncates per-query
-    // timings past ~29 queries; persist the complete record alongside it.
-    // The round-over-round notes are generated HERE, from the artifact
-    // being shipped and the previous round's committed one — the round-7
-    // failure mode (hand-written notes quoting an intermediate run) is
-    // structurally impossible when the bench main is the only author.
+    // Persist the complete record, and generate the round-over-round
+    // notes HERE from the artifact being shipped and the previous one,
+    // so notes can never quote an intermediate run.
     try {
-      val out = java.nio.file.Paths.get(outName)
-      java.nio.file.Files.writeString(out, line)
+      Files.writeString(out, line)
       prevArtifact.foreach { p =>
-        java.nio.file.Files.writeString(
-          out.resolveSibling(s"BENCH_NOTES_AUTO_c$cpus.md"), notes(p, line, sfDir))
+        Files.writeString(out.resolveSibling(s"BENCH_NOTES_AUTO_c$cpus.md"), notes(p, line, sfDir))
       }
-    } catch { case _: Throwable => () }
+    } catch { case NonFatal(e) =>
+      System.err.println(s"[bench] cannot write artifact $outName or its notes: ${e.getMessage}")
+    }
     spark.stop()
   }
 
-  /** Measured-noise annotations for queries whose min-of-2 is known to
-    * swing across identical code, so a future regression line carries
-    * its attribution instead of reading as an unexplained mover. Each
-    * entry cites the probe that measured it.
+  /** Per-query reported seconds: the min over the passes, or -1.0 when
+    * any pass failed.
     */
-  private val KnownNoise: Map[String, String] = Map(
-    "q_bam_fetch" -> ("JIT-depth noise, not a plan change: 10 same-JVM reps " +
-      "at sf0.1 descend 7.7 (cold) / 1.69 -> 0.94 s steady-state " +
-      "(graft.FetchProbe, round 9; stage split: fixture write ~0.5, bai " +
-      "~0.15, fetch+agg ~0.9-1.6); min-of-2 after one warm pass lands " +
-      "anywhere in 0.9-1.7 s. BamScanSpec still pins block pruning"),
-    // round-11 DriftProbe attribution of the four r10 unattributed movers:
-    // 8 same-JVM reps at sf0.1 in TWO fresh JVMs each (graft.DriftProbe)
-    "q_bam_fetch_sharded" -> ("JIT-depth noise, the unsharded twin's " +
-      "signature: descent 9.3/9.4 (cold) -> floor 1.10-1.48 s across two " +
-      "fresh JVMs (DriftProbe, round 11); the descent needs 4+ sf0.1 reps " +
-      "to settle, so min-of-2 after warm-up lands anywhere in 1.1-1.8 s"),
-    "q_bam_dist" -> ("HOST SENTINEL, re-pinned round 16 (DriftProbe, " +
-      "2 fresh JVMs x 8 reps): floor 0.61-0.89 s, cold 1.8-2.0; the r11 " +
-      "0.87-1.02 band shifted down with the host. Swings beyond ~0.3 s " +
-      "at floor would be a real plan change"),
-    "q_heaps_fit" -> ("HOST SENTINEL, re-pinned round 16 (DriftProbe, " +
-      "2 fresh JVMs x 8 reps + 4 in-batch windows): floors 1.6-2.5 s on " +
-      "identical code across windows, cold first rep 8-12 s; min-of-2 in " +
-      "the suite lands 1.4-2.5 s. The r11 2.08-2.78 band is superseded"),
-    "q_lr_quality" -> ("HOST SENTINEL, re-pinned round 16 (DriftProbe, " +
-      "2 fresh JVMs x 8 reps): floors 2.14 vs 2.76 s on identical code — " +
-      "the ~30% cross-JVM spread r11 measured persists; band 2.1-2.9 s, " +
-      "suite min-of-2 2.2-2.8 s"),
-    "q_crawl_frontier" -> ("RE-PINNED after the round-15 optimization " +
-      "(shared normalized base + PageRank loop hoists cut the floor): " +
-      "fresh-JVM floor 2.4-3.0 s in quiet windows (DriftProbe, round-15 " +
-      "opt, 6 reps, untouched control steady), reading up to ~1.7x " +
-      "higher in contended host windows; min-of-2 in the artifact lands " +
-      "2.9-3.6 s. The pre-optimization 5.2-8.5 s band is obsolete — a " +
-      "return there would be a real regression, not noise"),
-    "q_approx_dedup_quality" -> ("RE-PINNED after the round-16 " +
-      "jaccard_sorted_min early-exit (lossless threshold bail in the " +
-      "shingle merge): fresh-JVM floor 5.0-5.2 s (DriftProbe r16, " +
-      "steady control), suite min-of-2 4.3-4.5; truth_build floor " +
-      "3.8-4.1 with the per-chain t_<chain> stages now recorded — " +
-      "t_jaccard_allpairs 1.9-2.6 owns the largest share, every other " +
-      "chain <= 1.2. The r15 8.5-11.5 band is obsolete — a return " +
-      "there would be a real regression, not noise; judge detector " +
-      "growth from the v_<method> sub-timings"),
-    "q_dedup_quality" -> ("RE-PINNED after the round-16 " +
-      "jaccard_sorted_min early-exit (the v_minhash detector rescleans " +
-      "with it): suite min-of-2 1.8-2.4 s (was 3.3-5.3 in the r15 " +
-      "band), probe floor ~3.1 in a visibly degraded window " +
-      "(control-adjusted ~2). Proportional growth of BOTH detector " +
-      "stages is still the noise signature; a single stage growing " +
-      "alone would be a plan change"),
-    "q_manifest_prune" -> ("band SPLIT by sub-timings (DriftProbe, round 12, " +
-      "two fresh JVMs x 6 reps): fixture_write floor 1.3-2.1 s (file-system " +
-      "cache rides along), plan-side rest floor 0.45-0.77 s — judge the " +
-      "PLAN from the rest stage in bench_full.json subtimings, not the total"),
-    "q_compact_files" -> ("band split by sub-timings (DriftProbe, round 12): " +
-      "fixture_write floor 1.4-1.6 s (cold 7.8-8.6), compact floor " +
-      "0.94-1.06 s (cold 2.5-2.9), plan-side rest floor ~0.47 s; total " +
-      "min-of-2 lands 2.8-3.9 s on identical code — the write stages own " +
-      "the drift"),
-    "q_manifest_commit" -> ("fixture-writing like q_compact_files (round-12 " +
-      "DriftProbe): fixture_write 1.3-2.7 s, compact 0.8-2.3 s, plan-side " +
-      "rest 0.5-1.2 s across two fresh JVMs; cross-JVM floors 2.7 vs 3.2 s " +
-      "on identical code"),
-    // round-13 fixture-writing lifecycles (DriftProbe, round 13, sf0.1
-    // where noted): totals are write-dominated, judge the rest stage
-    "q_manifest_rewrite" -> ("4 clustered fixture writes + vacuum (round-13 " +
-      "DriftProbe, sf0.1, 3 reps): fixture_write floor 3.5-5.5 s, plan-side " +
-      "rest 1.3-2.3 s; total floor ~4.9-5.0 s — write stages own the drift"),
-    "q_table_changes" -> ("4 fixture writes + compact (round-13 DriftProbe, " +
-      "sf0.1): fixture_write ~4.0-4.5 s, compact 0.8-1.2 s, plan-side rest " +
-      "~0.35 s — the feed itself is snapshot-diff planning, near-free"),
-    "q_dedup_index_persist" -> ("index_write 2.4-6.0 s dominates (round-13 " +
-      "DriftProbe, sf0.1, post-sharpening: the exceptAll parity proof was " +
-      "replaced by one bit_xor aggregate per path); total floor ~5.8 s, " +
-      "was 6.5 s in the r12 artifact"),
-    "q_data_release" -> ("fresh-JVM floor 4.4-4.7 s (DriftProbe, round " +
-      "15 close, 5 reps; cold 24.5) — the capstone chains most of the " +
-      "pipeline kernels, so its first reps carry the suite's deepest " +
-      "JIT descent; min-of-2 lands 3.4-8.0 s across host windows on " +
-      "identical code"),
-    "q_hits_warm" -> ("fresh-JVM floor 6.1-6.4 s (DriftProbe, round 15 " +
-      "close, 5 reps) — warm-start HITS reads higher than q_hits " +
-      "because the warm leg compiles a second full recurrence; swings " +
-      "with the host window (sentinels moved 1.3-1.45x the same day)"),
-    "q_fivegram_kn" -> ("RE-PINNED after the round-15 optimization " +
-      "(parallel per-order ladder collects): model_train floor " +
-      "1.9-2.9 s, total floor 3.5-4.6 s (DriftProbe, round-15 opt, two " +
-      "windows x 4-5 reps; artifact min-of-2 4.5 s with " +
-      "model_train=2.70); first rep in a fresh JVM is 1.5-2x (JIT " +
-      "depth). The pre-optimization 4.9-6.1 s band is obsolete — a " +
-      "return there would be a real regression, not noise"))
+  private[graft] def minOf(passes: Seq[Map[String, Harness.Outcome]]): Map[String, Double] =
+    passes.head.keys.map { q =>
+      val secs = passes.map(_(q).seconds)
+      q -> (if (secs.forall(_.nonEmpty)) secs.flatten.min else -1.0)
+    }.toMap
+
+  /** Stage timings from the pass that produced the reported (min) total,
+    * with the plan-side remainder made explicit: the fixture-writing
+    * queries' drift lives mostly in the write stage, and splitting it
+    * out stops file-system noise from masking real plan movement.
+    */
+  private def subtimingsJson(
+      passes: Seq[Map[String, Harness.Outcome]], results: Map[String, Double]): String =
+    results.toSeq.filter(_._2 >= 0).sortBy(_._1).flatMap { case (q, v) =>
+      passes.map(_(q)).sortBy(_.seconds.get).map(_.stages).find(_.nonEmpty).map { st =>
+        val rest = math.max(0.0, v - st.values.sum)
+        val parts = (st.toSeq.sortBy(_._1) :+ ("rest" -> rest))
+          .map { case (stage, secs) => f"$stage=$secs%.2f" }.mkString(";")
+        s"\"" + q + "\":\"" + parts + "\""
+      }
+    }.mkString("{", ",", "}")
+
+  /** Failed query → first line of its first failure's message. */
+  private[graft] def errorTextJson(passes: Seq[Map[String, Harness.Outcome]]): String =
+    passes.head.keys.toSeq.sorted.flatMap { q =>
+      passes.flatMap(_(q).errorLine).headOption.map(e => s"${Harness.quote(q)}:${Harness.quote(e)}")
+    }.mkString("{", ",", "}")
+
+  /** Query → its seconds in each timed pass (-1.0 for a failed pass). */
+  private[graft] def spreadJson(passes: Seq[Map[String, Harness.Outcome]]): String =
+    passes.head.keys.toSeq.sorted.map { q =>
+      s"\"" + q + "\":" + passes.map(_(q).seconds.getOrElse(-1.0)).mkString("[", ",", "]")
+    }.mkString("{", ",", "}")
 
   /** The compact line's `prev` block: improved/regressed counts, the
     * per-query geomean speedup and the top-5 movers over the queries
@@ -302,19 +181,29 @@ object Bench {
       .map(m => m.group(1) -> m.group(2).toDouble).toMap
   }
 
-  /** Markdown comparison of two Bench JSON lines (prev vs current), the
-    * Scala twin of tools/bench_notes.py.
+  private def parseSubs(s: String): Map[String, String] = {
+    val body = "\"subtimings\":\\{([^}]*)\\}".r.findFirstMatchIn(s)
+      .map(_.group(1)).getOrElse("")
+    "\"([^\"]+)\":\"([^\"]+)\"".r.findAllMatchIn(body)
+      .map(m => m.group(1) -> m.group(2)).toMap
+  }
+
+  private def parseSpread(s: String): Map[String, Seq[Double]] = {
+    val body = "\"spread\":\\{([^}]*)\\}".r.findFirstMatchIn(s)
+      .map(_.group(1)).getOrElse("")
+    "\"([^\"]+)\":\\[([^\\]]*)\\]".r.findAllMatchIn(body)
+      .map(m => m.group(1) -> m.group(2).split(",").toSeq.filter(_.nonEmpty).map(_.toDouble))
+      .toMap
+  }
+
+  /** Markdown comparison of two Bench JSON lines (prev vs current). Each
+    * regression row carries the current run's own per-pass range, so a
+    * mover can be read against the spread the run actually measured.
     */
   private[graft] def notes(prevJson: String, curJson: String, sfDir: String): String = {
-    def parse(s: String): Map[String, Double] = parseQueries(s)
-    def parseSubs(s: String): Map[String, String] = {
-      val body = "\"subtimings\":\\{([^}]*)\\}".r.findFirstMatchIn(s)
-        .map(_.group(1)).getOrElse("")
-      "\"([^\"]+)\":\"([^\"]+)\"".r.findAllMatchIn(body)
-        .map(m => m.group(1) -> m.group(2)).toMap
-    }
-    val (pq, cq) = (parse(prevJson), parse(curJson))
+    val (pq, cq) = (parseQueries(prevJson), parseQueries(curJson))
     val (pSub, cSub) = (parseSubs(prevJson), parseSubs(curJson))
+    val spread = parseSpread(curJson)
     val shared = (pq.keySet & cq.keySet).toSeq.sorted
       .filter(q => pq(q) >= 0 && cq(q) >= 0)
     val pTot = shared.map(pq).sum
@@ -333,29 +222,18 @@ object Bench {
     if (newQ.nonEmpty)
       sb ++= s"- Newly timed: ${newQ.map(q => s"$q ${f(cq(q))}s").mkString(", ")}\n"
     sb ++= s"- Regressions > 0.25 s: ${if (regress.isEmpty) "none" else ""}\n"
+    if (regress.nonEmpty)
+      sb ++= ("  (previous -> current min, then this run's per-pass range; attribute a " +
+        s"row with `runMain graft.DriftProbe $sfDir <query> 8` in two fresh JVMs)\n")
     regress.foreach { q =>
-      val ratio = cq(q) / math.max(pq(q), 1e-9)
-      // a multi-× mover is NEVER band-eligible: round 14 stamped a
-      // 45.8× JVM-state artifact with the "<~25%" boilerplate below.
-      // Anything past 2× gets an explicit probe-required flag — the
-      // KnownNoise prose (when present) rides along as context only.
-      val note =
-        if (ratio > 2.0)
-          f" [${ratio}%.1fx — OUTSIDE any drift band — probe before shipping:" +
-            " run `runMain graft.DriftProbe <sfDir> " + q + " 8` in a fresh JVM" +
-            " and attribute (JVM state / host / plan) before treating this row" +
-            " as real" +
-            KnownNoise.get(q).map(n => s"; stale band context: $n").getOrElse("") + "]"
-        else KnownNoise.get(q).map(n => s" [$n]").getOrElse(
-          " [unattributed — within the measured cross-JVM drift band if < ~25%;" +
-          " run `runMain graft.DriftProbe <sfDir> " + q + " 8` twice to attribute" +
-          " before treating as a plan change]")
+      val range = spread.get(q).filter(_.nonEmpty)
+        .map(v => s" [passes ${f(v.min)}–${f(v.max)} s]").getOrElse("")
       val split = (pSub.get(q), cSub.get(q)) match {
         case (Some(p), Some(c)) => s" {stages: $p -> $c}"
         case (None, Some(c)) => s" {stages: $c}"
         case _ => ""
       }
-      sb ++= s"  - $q ${f(pq(q))} -> ${f(cq(q))}$split$note\n"
+      sb ++= s"  - $q ${f(pq(q))} -> ${f(cq(q))}$range$split\n"
     }
     if (cSub.nonEmpty) {
       sb ++= "- Fixture-writing queries, write vs plan sub-timings (from the min run):\n"
@@ -364,30 +242,6 @@ object Bench {
         sb ++= s"  - $q: $parts$prev\n"
       }
     }
-    sb ++= ("- Drift band (measured, DriftProbe round 11): two fresh JVMs on " +
-      "identical code showed cross-JVM floors differing up to ~25% " +
-      "(q_lr_quality 2.7 vs 3.4 s) and 4+-rep JIT descents from 4-9x cold " +
-      "(q_bam_fetch_sharded, q_heaps_fit); movers inside that band are " +
-      "session noise, not plan changes.\n")
-    sb ++= ("- Round-14 harness change: lifecycle and persisted-index gates " +
-      "run their multi-commit fixture story ONCE per JVM and reruns time " +
-      "only the oracle-gated read, so totals for the q_manifest_*/" +
-      "q_incremental_*/q_replicate_committed/q_*_persist families dropped " +
-      "by construction (not a plan change; invariants are spec-pinned and " +
-      "driver-verified once per round). The suite also now measures at JIT " +
-      "depth 2-3 (one smallest-SF warm pass + two timed target passes) " +
-      "instead of depth 5, so slow-JIT-descent queries (the graph family, " +
-      "q_*_kn_dist, q_crawl_frontier) read HIGHER than r13-era artifacts " +
-      "on identical code — divide by the drift_probe sentinels in the same " +
-      "artifact before calling a regression.\n")
-    sb ++= ("- Machine drift (measured, DriftProbe round 13 close, 6 reps at " +
-      "sf0.1): the box itself slowed vs the r12-era artifacts on " +
-      "byte-identical fixture-free queries — q_trustrank floor 5.3-5.9 s " +
-      "(shipped r12-era 2.96 s), q_pagerank 3.6-4.6 s (2.17 s), q_heaps_fit " +
-      "3.0-3.8 s (r11 band 2.1-2.8 s). A UNIFORM ~1.5-1.8x shift across " +
-      "queries whose code did not change is host-level attribution; judge " +
-      "round-over-round movement on ratios between queries within one " +
-      "artifact, or re-probe on a quiet box.\n")
     sb ++= s"- Improvements > 0.25 s:\n"
     improve.foreach(q => sb ++= s"  - $q ${f(pq(q))} -> ${f(cq(q))}\n")
     sb ++= s"- Expensive tail: ${tail.map { case (q, v) => s"$q ${f(v)}s" }.mkString(", ")}\n"

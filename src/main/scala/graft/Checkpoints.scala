@@ -12,9 +12,9 @@ import org.apache.spark.SparkContext
   * q_manifest_append 0.32→14.65 s with the fixture write itself
   * degrading, not the plan). A localCheckpoint's blocks are only
   * reachable through the returned DataFrame, so once a harness has
-  * fully consumed a query's result (Bench's `count()`, Verify's parquet
-  * write) every checkpoint the query created is garbage — EXCEPT the
-  * frames memoized across invocations by
+  * fully consumed a query's result ([[Harness.run]]'s action: Bench's
+  * `count()`, Verify's parquet write) every checkpoint the query
+  * created is garbage — EXCEPT the frames memoized across invocations by
   * [[graft.queries.ScaleDomain.lifecycleOnce]], whose lineage is
   * truncated and therefore cannot be recomputed after an unpersist.
   *
@@ -52,7 +52,11 @@ object Checkpoints {
   private lazy val quietRddWarnings: Unit =
     try org.apache.logging.log4j.core.config.Configurator.setLevel(
       "org.apache.spark.rdd", org.apache.logging.log4j.Level.ERROR)
-    catch { case _: Throwable => () }
+    catch { case e: Throwable =>
+      // e.g. log4j-core absent from the classpath: the release still
+      // works, only the per-RDD WARN lines stay
+      System.err.println(s"[checkpoints] cannot raise the org.apache.spark.rdd log level: $e")
+    }
 
   /** Unpersist every RDD persisted since `before` and not retained.
     * Returns the number released.

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-audit utility: time one named [[SparkEntry.queries]] entry at a
   * given SF dir and print its formatted physical plan. Usage:
   *
@@ -9,33 +7,22 @@ import org.apache.spark.sql.SparkSession
   *
   * The per-iteration wall times bracket the plan dump so a slow query can
   * be attributed (exchange? UDF? broadcast wait?) without re-running the
-  * whole bench. Mirrors Bench's session config (local[32], 32 shuffle
-  * partitions) so timings are comparable to BENCH_r{N}.json lines.
+  * whole bench. Uses Bench's session (local[32] unless `SPARK_GRAFT_CPUS`
+  * is set) so timings are comparable to the bench artifact.
   */
 object Explain {
   def main(args: Array[String]): Unit = {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val iters = if (args.length > 2) args(2).toInt else 2
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(32)
     val fn = SparkEntry.queries(name)
     fn(spark, sfDir).explain("formatted")
-    // SPARK_GRAFT_SHOW=1: also print the first rows (verdict-style
-    // queries are tiny; seeing the booleans beats re-running Verify)
-    if (sys.env.get("SPARK_GRAFT_SHOW").contains("1"))
-      fn(spark, sfDir).show(20, truncate = false)
-    var i = 0
-    while (i < iters) {
-      val t0 = System.nanoTime()
-      val n = fn(spark, sfDir).count()
-      println(f"iter $i%d: ${(System.nanoTime() - t0) / 1e9}%.3f s ($n%d rows)")
-      i += 1
+    (0 until iters).foreach { i =>
+      var n = 0L
+      val outcome = Harness.run(spark, name, fn, sfDir)(df => n = df.count())
+      println(outcome.seconds.fold(s"iter $i: failed: ${outcome.errorLine.get}")(
+        s => f"iter $i%d: $s%.3f s ($n%d rows)"))
     }
     spark.stop()
   }

@@ -22,7 +22,9 @@ import org.apache.spark.sql.DataFrame
   *   - `reliable`: `DataFrame.checkpoint()` against the session's
   *     checkpoint dir (set from `spark.graft.checkpointDir` on first
   *     use if the context has none) — bit-identical results, blocks
-  *     survive executor loss.
+  *     survive executor loss. Spark deletes the checkpoint files only
+  *     when the session sets
+  *     `spark.cleaner.referenceTracking.cleanCheckpoints=true`.
   *
   * Both modes are eager and both truncate lineage, so swapping them
   * cannot change a plan downstream of the seam — MaterializeSpec pins
@@ -35,20 +37,21 @@ object Materialize {
 
   def apply(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
-    val mode =
-      try spark.conf.get(ModeKey, "local")
-      catch { case _: Throwable => "local" }
-    mode match {
+    spark.conf.get(ModeKey, "local") match {
       case "local" => df.localCheckpoint()
       case "reliable" =>
-        if (spark.sparkContext.getCheckpointDir.isEmpty) {
-          val dir =
-            try spark.conf.get(DirKey, "")
-            catch { case _: Throwable => "" }
-          require(dir.nonEmpty,
-            s"$ModeKey=reliable needs a checkpoint dir: set $DirKey or " +
-              "SparkContext.setCheckpointDir")
-          spark.sparkContext.setCheckpointDir(dir)
+        // check-then-set under the context's lock: concurrent jobs
+        // (pipeline futures) reaching here at once must not each create
+        // their own checkpoint subdirectory
+        val sc = spark.sparkContext
+        sc.synchronized {
+          if (sc.getCheckpointDir.isEmpty) {
+            val dir = spark.conf.get(DirKey, "")
+            require(dir.nonEmpty,
+              s"$ModeKey=reliable needs a checkpoint dir: set $DirKey or " +
+                "SparkContext.setCheckpointDir")
+            sc.setCheckpointDir(dir)
+          }
         }
         df.checkpoint()
       case other =>

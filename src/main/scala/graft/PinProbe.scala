@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev utility behind every [[graft.queries.GoldenGate]] pin: prints the
   * BIT_XOR(xxhash64(row)) fold of each named query's output so a pin can
   * be DERIVED instead of hand-typed, and so determinism can be checked
@@ -9,6 +7,7 @@ import org.apache.spark.sql.SparkSession
   * parallelism settings (`SPARK_GRAFT_CPUS` changes the shuffle partition
   * count, which changes partition merge order and exposes any
   * tie-breaking or float-accumulation instability the output may hide).
+  * The pins were derived at 4 and 16 cores; 4 is the default.
   *
   * Usage: runMain graft.PinProbe <sfDir> <q1,q2,...>
   * Emits one `PIN <sf> <query> <hash>` line per query; a query that
@@ -17,25 +16,15 @@ import org.apache.spark.sql.SparkSession
 object PinProbe {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, names) = args.take(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session(4)
     val sf = sfDir.replaceAll("/+$", "").split('/').last
     names.split(',').foreach { name =>
-      try {
-        // rawQueries: pin derivation must bypass the gate, or a stale pin
-        // would block computing its own replacement
-        val h = queries.GoldenGate.hashOf(SparkEntry.rawQueries(name)(spark, sfDir))
-        println(s"PIN $sf $name $h")
-      } catch {
-        case e: Throwable =>
-          println(s"ERR $sf $name ${e.getMessage.linesIterator.next()}")
-      }
+      var hash = 0L
+      // rawQueries: pin derivation must bypass the gate, or a stale pin
+      // would block computing its own replacement
+      val outcome = Harness.run(spark, name,
+        (s, d) => SparkEntry.rawQueries(name)(s, d), sfDir)(df => hash = queries.GoldenGate.hashOf(df))
+      println(outcome.errorLine.fold(s"PIN $sf $name $hash")(e => s"ERR $sf $name $e"))
     }
     spark.stop()
   }

@@ -8,8 +8,9 @@ package graft
   * inert outside the bench mains.
   *
   * Recordings are scoped to a RUN, not just a query name: the consumer
-  * ([[Bench]] / [[DriftProbe]]) opens a scope with [[withRun]] and the
-  * reset/time/get triple all key on (run token, query). A concurrent
+  * ([[Bench]] / [[DriftProbe]]) opens a scope with [[withRun]],
+  * [[Harness.run]] resets and reads each query's stages inside it, and
+  * the reset/time/get triple all key on (run token, query). A concurrent
   * run of the same query on another thread (for example Bench and
   * Verify overlapping in one JVM; Verify itself runs serially) records into
   * its own bucket — the default empty token for unscoped threads — so

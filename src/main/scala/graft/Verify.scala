@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,62 +9,36 @@ object Verify {
     // query-name filter for fast single-query iteration
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(4)
     // declare which SF's learned artifacts the oracle dump must pair
     // with (OracleStash entries are keyed by data dir; a multi-SF JVM
     // would otherwise have no principled winner)
     graft.queries.OracleStash.setEmitDir(sfDir)
     new java.io.File(outDir).mkdirs()
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val failed = scala.collection.mutable.ListBuffer.empty[String]
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .foreach { case (name, fn) =>
-      // checkpoint hygiene: once the parquet write has fully consumed
-      // the result, the query's localCheckpoint frames (gate truths,
-      // GoldenGate pin materializations) are garbage — release them so
-      // a 228-query dump doesn't accumulate block-manager pressure
-      // (lifecycle-memoized frames are retained; see graft.Checkpoints)
-      val before = Checkpoints.mark(spark.sparkContext)
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        failed += name
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        Harness.run(spark, name, fn, sfDir)(
+          _.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name"))
+          .error.foreach { e =>
+            failed += name
+            System.err.println(s"[verify] $name failed: $e")
+          }
       }
-      Checkpoints.releaseSince(spark.sparkContext, before): Unit
-    }
     // Gate self-check: a registered query that produced no parquet is a
     // silently-invisible hole in the round's correctness record (round 6
     // shipped 11 of them). Persist the hole list as a machine-readable
     // artifact and scream on stderr; rc stays 0 so the driver still
     // compares every query that DID produce output.
     Files.writeString(Paths.get(s"$outDir/_missing.json"),
-      failed.map(q).mkString("[", ",", "]"))
+      failed.map(Harness.quote).mkString("[", ",", "]"))
     if (failed.nonEmpty)
       System.err.println(
         s"[verify] GATE HOLE: ${failed.size} of ${SparkEntry.queries.size} " +
         s"registered queries produced no result: ${failed.mkString(", ")}")
     val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${Harness.quote(k)}: ${Harness.quote(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }

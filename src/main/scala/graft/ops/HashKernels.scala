@@ -562,16 +562,6 @@ object HashKernels {
     c => f(c)
   }
 
-  def minhashSigUdf(numHashes: Int): Column => Column = {
-    val f = udf((sh: Array[Long]) => minhashSig(sh, numHashes))
-    c => f(c)
-  }
-
-  def minhashSigOPHUdf(numHashes: Int): Column => Column = {
-    val f = udf((sh: Array[Long]) => minhashSigOPH(sh, numHashes))
-    c => f(c)
-  }
-
   def minhashBandBucketsUdf(numHashes: Int, bands: Int): Column => Column = {
     val f = udf((sh: Array[Long]) => minhashBandBuckets(sh, numHashes, bands))
     c => f(c)
@@ -617,11 +607,6 @@ object HashKernels {
 
   val normUdf: Column => Column = {
     val f = udf((a: Array[Float]) => math.sqrt(dotD(a, a)))
-    c => f(c)
-  }
-
-  def hyperplaneSigUdf(bits: Int, seed: Int): Column => Column = {
-    val f = udf((v: Array[Float]) => hyperplaneSig(v, bits, seed))
     c => f(c)
   }
 

@@ -67,15 +67,54 @@ class MaterializeSpec extends AnyFunSuite {
     assert(local.nonEmpty)
   }
 
+  /** Run `body` with no checkpoint dir on the shared test context (the
+    * cases above leave one set), then restore the previous dir.
+    */
+  private def withoutCheckpointDir[T](body: => T): T = {
+    val sc = spark.sparkContext
+    val setDir = classOf[org.apache.spark.SparkContext]
+      .getMethod("checkpointDir_$eq", classOf[Option[_]])
+    val saved = sc.getCheckpointDir
+    setDir.invoke(sc, None)
+    try body finally setDir.invoke(sc, saved): Unit
+  }
+
+  test("concurrent reliable calls agree and set one checkpoint dir") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_ck_race").toFile
+    val df = (1 to 50).toDF("x")
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
+    try withoutCheckpointDir {
+      spark.conf.set(Materialize.ModeKey, "reliable")
+      spark.conf.set(Materialize.DirKey, dir.toString)
+      val start = new java.util.concurrent.CountDownLatch(1)
+      val calls = (1 to 4).map { _ =>
+        pool.submit(new java.util.concurrent.Callable[Seq[Int]] {
+          def call(): Seq[Int] = {
+            start.await()
+            Materialize(df).as[Int].collect().sorted.toSeq
+          }
+        })
+      }
+      start.countDown()
+      val rows = calls.map(_.get(120, java.util.concurrent.TimeUnit.SECONDS))
+      assert(rows.forall(_ == (1 to 50)))
+      assert(dir.listFiles().count(_.isDirectory) == 1)
+      assert(spark.sparkContext.getCheckpointDir.exists(_.contains(dir.getName)))
+    } finally {
+      pool.shutdownNow(): Unit
+      spark.conf.unset(Materialize.ModeKey)
+      spark.conf.unset(Materialize.DirKey)
+    }
+  }
+
   test("unknown mode throws, reliable without a dir throws") {
     val df = Seq(1).toDF("x")
     try {
       spark.conf.set(Materialize.ModeKey, "bogus")
       intercept[IllegalArgumentException](Materialize(df))
     } finally spark.conf.unset(Materialize.ModeKey)
-    // reliable with neither a context checkpoint dir nor the conf key:
-    // only assert when the shared test context has no dir set already
-    if (spark.sparkContext.getCheckpointDir.isEmpty) {
+    // reliable with neither a context checkpoint dir nor the conf key
+    withoutCheckpointDir {
       try {
         spark.conf.set(Materialize.ModeKey, "reliable")
         intercept[IllegalArgumentException](Materialize(df))
