@@ -543,9 +543,10 @@ object SeqTable {
     * BAM → realigned SeqTable. `region` mirrors `fetch_args`
     * ((contig, start, stop), 1-based inclusive like the frame's `pos`) and
     * routes through the .bai index ([[graft.io.Bam.fetch]] — only
-    * overlapping BGZF blocks are read); without it the whole corpus
-    * streams through the byte-range split reader. `minMapq` is the
-    * reference's ingest-time `min_mapping_quality` filter.
+    * overlapping BGZF blocks are read, for a file, a glob or a sharded
+    * directory alike); without it the whole corpus streams through the
+    * byte-range split reader. `minMapq` is the reference's ingest-time
+    * `min_mapping_quality` filter.
     */
   def fromBam(
       spark: SparkSession,
@@ -557,16 +558,7 @@ object SeqTable {
       phredAdjust: Int = Alphabets.PhredAdjust): SeqTable = {
     val frame = region match {
       case Some((rname, beg, end)) =>
-        // a directory is a sharded layout (Bam.writeSharded) — route the
-        // region through the per-shard .bai-pruned fetch
-        val isDir = {
-          val hp = new org.apache.hadoop.fs.Path(path)
-          hp.getFileSystem(spark.sessionState.newHadoopConf())
-            .getFileStatus(hp).isDirectory
-        }
-        val fetched =
-          if (isDir) graft.io.Bam.fetchSharded(spark, path, rname, beg, end)
-          else graft.io.Bam.fetch(spark, path, rname, beg, end)
+        val fetched = graft.io.Bam.fetch(spark, path, rname, beg, end)
         if (minMapq >= 0) fetched.filter(col("mapq") >= minMapq) else fetched
       case None => graft.io.Bam.read(spark, path, minMapq)
     }

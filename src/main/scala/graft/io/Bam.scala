@@ -22,9 +22,10 @@ import org.apache.spark.sql.functions._
   * each file is cut into `splitSize` splits and every task block-syncs +
   * record-resyncs inside its range (see [[BamScan]]), so one huge BAM
   * shards exactly as a huge CSV does; many-BAM corpora parallelize across
-  * files AND within them. [[fetch]] is the random-access path: a .bai
-  * index ([[Bai]]) maps a genomic region to the handful of BGZF blocks
-  * holding overlapping reads — pysam `fetch(region)` parity.
+  * files AND within them. [[fetch]] is the random-access path, for one
+  * file or a sharded layout alike: each file's .bai index ([[Bai]]) maps
+  * a genomic region to the handful of BGZF blocks holding overlapping
+  * reads, and one job reads them — pysam `fetch(region)` parity.
   * [[write]] is the inverse: one BAM shard per partition, so a decode →
   * transform → re-encode pipeline never funnels through the driver.
   */
@@ -207,43 +208,59 @@ object Bam {
 
   /** pysam-`fetch(contig, start, stop)` parity
     * (ref: seqtables.py:233-246 passes `fetch_args` to `Samfile.fetch`):
-    * region-restricted read of ONE coordinate-sorted, indexed BAM.
-    * `beg1`/`end1` are 1-based inclusive, matching the frame's `pos`.
-    * Only the BGZF blocks whose .bai chunks overlap the region are read —
-    * the point of the index; everything else of the file stays untouched.
-    * The .bai is searched at `<path>.bai` unless `baiPath` overrides; use
-    * [[Bai.build]] + [[Bai.write]] to index a BAM this library wrote.
-    * Returned reads OVERLAP the region (pysam semantics) — their span
-    * `[pos, pos+refConsumed-1]` intersects `[beg1, end1]`.
+    * region-restricted read of the coordinate-sorted, indexed BAMs under
+    * `path` — one file, a glob or a sharded directory ([[writeSharded]]),
+    * listed by [[listBams]]. `beg1`/`end1` are 1-based inclusive, matching
+    * the frame's `pos`. Returned reads OVERLAP the region (pysam
+    * semantics) — their span `[pos, pos+refConsumed-1]` intersects
+    * `[beg1, end1]`.
+    *
+    * The driver reads each file's header and `<file>.bai` (the index
+    * [[Bai.buildAll]] writes; [[Bai.build]] + [[Bai.write]] for a single
+    * file) — kilobytes per file, never record data — and keeps the BGZF
+    * chunks overlapping the region. A file whose header lacks `rname`, or
+    * whose bins miss the region, prunes to nothing; if no file names
+    * `rname` the call fails. One Spark job then byte-range-reads only the
+    * surviving chunks, each carrying its file's reference names, so no
+    * task re-reads a header. The `.bai`s are the manifest.
+    *
+    * Trade-off: the probe is serial on the driver, one header + index
+    * open per file before the job starts. That is nothing at one shard
+    * per core, the layouts the suite and the benchmark write; a layout of
+    * thousands of shards pays it thousands of times.
     */
   def fetch(
       spark: SparkSession,
       path: String,
       rname: String,
       beg1: Int,
-      end1: Int,
-      baiPath: Option[String] = None): DataFrame = {
+      end1: Int): DataFrame = {
     import spark.implicits._
     require(beg1 >= 1 && end1 >= beg1, s"bad region $rname:$beg1-$end1")
-    val hPath = new org.apache.hadoop.fs.Path(path)
-    val fs = hPath.getFileSystem(spark.sessionState.newHadoopConf())
-    val hdr = {
-      val in = fs.open(hPath)
-      try BamScan.readHeader(in) finally in.close()
+    val fs = new org.apache.hadoop.fs.Path(path)
+      .getFileSystem(spark.sessionState.newHadoopConf())
+    val headers = listBams(fs, path).map { st =>
+      val in = fs.open(st.getPath)
+      try (st.getPath, BamScan.readHeader(in).refs) finally in.close()
     }
-    val refId = hdr.refs.indexOf(rname)
-    require(refId >= 0, s"reference '$rname' not in $path header " +
-      s"(has ${hdr.refs.take(5).mkString(", ")}${if (hdr.refs.length > 5) ", …" else ""})")
-    val idx = Bai.read(fs, new org.apache.hadoop.fs.Path(baiPath.getOrElse(path + ".bai")))
-    val chunks = Bai.chunksFor(idx, refId, beg1 - 1, end1)
+    require(headers.nonEmpty, s"no .bam files under $path")
+    val named = headers.filter(_._2.contains(rname))
+    require(named.nonEmpty, {
+      val seen = headers.flatMap(_._2).distinct
+      s"reference '$rname' not in $path header " +
+        s"(has ${seen.take(5).mkString(", ")}${if (seen.length > 5) ", …" else ""})"
+    })
+    val chunks: Seq[(String, Array[String], Long, Long)] = named.flatMap { case (hp, refs) =>
+      val idx = Bai.read(fs, new org.apache.hadoop.fs.Path(hp.toString + ".bai"))
+      Bai.chunksFor(idx, refs.indexOf(rname), beg1 - 1, end1)
+        .map(c => (hp.toString, refs, c.beg, c.end))
+    }
     val serConf = new SerializableHadoopConf(spark.sessionState.newHadoopConf())
-    val refs = hdr.refs
-    val pathStr = path
     val rdd = spark.sparkContext
       .parallelize(chunks, math.max(chunks.size, 1))
-      .flatMap { c =>
-        val hp = new org.apache.hadoop.fs.Path(pathStr)
-        BamScan.chunkRecords(hp.getFileSystem(serConf.value), hp, refs, c.beg, c.end)
+      .flatMap { case (p, refs, cb, ce) =>
+        val hp = new org.apache.hadoop.fs.Path(p)
+        BamScan.chunkRecords(hp.getFileSystem(serConf.value), hp, refs, cb, ce)
           .filter { r =>
             r.rname == rname && r.pos <= end1 &&
               r.pos + math.max(1, graft.align.Cigar.refConsumed(r.cigar)) - 1 >= beg1
@@ -267,7 +284,7 @@ object Bam {
       blockData: Int = Bgzf.MaxBlockData): Seq[String] = {
     require(nShards >= 1, s"nShards must be >= 1, got $nShards")
     // re-sharding into a dir that already holds shards must not leave
-    // stale part-*.bam behind — listBams-driven readers (read, fetchSharded,
+    // stale part-*.bam behind — listBams-driven readers (read, fetch,
     // Bai.buildAll) would silently mix old records into results
     val dirPath = new org.apache.hadoop.fs.Path(dir)
     val fs = dirPath.getFileSystem(df.sparkSession.sessionState.newHadoopConf())
@@ -287,56 +304,12 @@ object Bam {
     files
   }
 
-  /** Region fetch over a sharded layout: one tiny distributed probe job
-    * reads each shard's header + `.bai` (kilobytes — never record data)
-    * and emits the byte-range chunks overlapping the region; shards not
-    * containing `rname`, or with no overlapping bins, prune to nothing
-    * right there. A second job byte-range-reads only the surviving
-    * (shard, chunk) pairs. No manifest file needed — the `.bai`s ARE the
-    * manifest, and both jobs scale with the shard count, not the data.
+  /** [[fetch]] under the name the sharded-layout callers use: a
+    * [[writeSharded]] directory is one of the paths `fetch` takes.
     */
   def fetchSharded(
-      spark: SparkSession,
-      dir: String,
-      rname: String,
-      beg1: Int,
-      end1: Int): DataFrame = {
-    import spark.implicits._
-    require(beg1 >= 1 && end1 >= beg1, s"bad region $rname:$beg1-$end1")
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    val files = listBams(fs, dir).map(_.getPath.toString)
-    require(files.nonEmpty, s"no .bam shards under $dir")
-    val serConf = new SerializableHadoopConf(spark.sessionState.newHadoopConf())
-    val chunks: Array[(String, Long, Long)] = spark.sparkContext
-      .parallelize(files, files.size)
-      .flatMap { p =>
-        val hp = new org.apache.hadoop.fs.Path(p)
-        val f = hp.getFileSystem(serConf.value)
-        val hdr = { val in = f.open(hp); try BamScan.readHeader(in) finally in.close() }
-        val refId = hdr.refs.indexOf(rname)
-        if (refId < 0) Iterator.empty
-        else {
-          val idx = Bai.read(f, new org.apache.hadoop.fs.Path(p + ".bai"))
-          Bai.chunksFor(idx, refId, beg1 - 1, end1)
-            .map(c => (p, c.beg, c.end)).iterator
-        }
-      }
-      .collect()
-    val rdd = spark.sparkContext
-      .parallelize(chunks.toSeq, math.max(chunks.length, 1))
-      .flatMap { case (p, cb, ce) =>
-        val hp = new org.apache.hadoop.fs.Path(p)
-        val f = hp.getFileSystem(serConf.value)
-        val refs = { val in = f.open(hp); try BamScan.readHeader(in).refs finally in.close() }
-        BamScan.chunkRecords(f, hp, refs, cb, ce)
-          .filter { r =>
-            r.rname == rname && r.pos <= end1 &&
-              r.pos + math.max(1, graft.align.Cigar.refConsumed(r.cigar)) - 1 >= beg1
-          }
-      }
-    rdd.toDF()
-  }
+      spark: SparkSession, dir: String, rname: String, beg1: Int, end1: Int): DataFrame =
+    fetch(spark, dir, rname, beg1, end1)
 
   // ---- encode -----------------------------------------------------------
 
@@ -463,7 +436,7 @@ object Bam {
   }
 
   /** `.bam` files under a file/glob/dir path — the one listing rule shared
-    * by [[read]] and [[Bai.buildAll]] so their notion of "which files
+    * by [[read]], [[fetch]] and [[Bai.buildAll]] so their notion of "which files
     * exist" can't drift. Zero-length files are skipped here: they hold no
     * records (a valid empty BAM still has a header + EOF block) and are
     * usually in-flight writes or touch artifacts — letting one through

@@ -94,10 +94,10 @@ object SamDomain {
       // .bai requires coordinate order. coalesce(1) is the single-shard
       // FIXTURE path only — the production layout is
       // Bam.writeSharded (range-partitioned coordinate-sorted shards,
-      // one .bai each) + Bam.fetchSharded (bai-probe prune, then
-      // byte-range reads of surviving chunks only), spec-pinned against
-      // the full-scan filter in BamScanSpec. Do NOT copy this coalesce
-      // into a production layout.
+      // one .bai each) + Bam.fetch over the directory (driver-side .bai
+      // prune, then one job of byte-range reads of the surviving chunks
+      // only), spec-pinned against the full-scan filter in BamScanSpec.
+      // Do NOT copy this coalesce into a production layout.
       graft.io.Bam.write(
         sam.coalesce(1).sortWithinPartitions("rname", "pos"),
         tmp, blockData = 4096)
@@ -112,11 +112,11 @@ object SamDomain {
     // The PRODUCTION sharded layout under the oracle (round 8): the same
     // reads range-partitioned into 4 coordinate-sorted shards via
     // writeSharded (one .bai each), region-fetched through
-    // SeqTable.fromBam(dir, region) — which routes a directory through
-    // fetchSharded's distributed .bai-probe prune + byte-range chunk
-    // reads. Same oracle as q_bam_fetch, so the multi-shard path (shard
-    // pruning, per-shard binning, chunk merge) is hash-checked end to
-    // end, not just spec-pinned.
+    // SeqTable.fromBam(dir, region) — the same Bam.fetch as q_bam_fetch,
+    // here over four shards: a driver-side .bai prune per shard, then one
+    // job of byte-range chunk reads. Same oracle as q_bam_fetch, so the
+    // multi-shard path (shard pruning, per-shard binning, chunk merge) is
+    // hash-checked end to end, not just spec-pinned.
     "q_bam_fetch_sharded" -> ((s, dir) => {
       val sam = samFrame(s, dir, "20M")
         .withColumn("flag", lit(0)).withColumn("mapq", lit(60))
@@ -332,7 +332,7 @@ object SamDomain {
          |WHERE pos <= 12
          |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
     // identical region semantics through the sharded production layout:
-    // writeSharded + fetchSharded must reproduce the single-shard fetch
+    // writeSharded + a directory fetch must reproduce the single-shard fetch
     "q_bam_fetch_sharded" ->
       s"""WITH $sqlNts
          |SELECT pos + gs.i - 1 AS position, substring(nt, gs.i, 1) AS base, COUNT(*) AS cnt

@@ -4,6 +4,7 @@ import java.nio.file.Files
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -178,12 +179,18 @@ class BamScanSpec extends AnyFunSuite {
     assert(pruned >= 1, "expected at least one shard to prune via its .bai")
 
     // from_pysam parity surface: a region fromBam over the sharded DIR
-    // routes through fetchSharded and matches the single-file reads
+    // goes through the same fetch and matches the single-file reads
     val viaSeqTable = graft.core.SeqTable
       .fromBam(spark, dir, region = Some((rname, beg, end)))
       .reads.select("read_id").collect().map(_.getString(0)).toSeq.sorted
     val expectIds = full.map(_._1).sorted
-    assert(viaSeqTable == expectIds, "fromBam(dir, region) must route through the sharded fetch")
+    assert(viaSeqTable == expectIds, "fromBam(dir, region) must equal the full-scan filter")
+    val viaGlob = graft.core.SeqTable
+      .fromBam(spark, s"$dir/*.bam", region = Some((rname, beg, end)))
+      .reads.select("read_id").collect().map(_.getString(0)).toSeq.sorted
+    assert(viaGlob == viaSeqTable, "fromBam(glob, region) must equal fromBam(dir, region)")
+    val unknown = intercept[IllegalArgumentException](Bam.fetchSharded(spark, dir, "chrX", 1, 100))
+    assert(unknown.getMessage.contains(s"reference 'chrX' not in $dir header"), unknown.getMessage)
 
     // re-sharding the SAME dir with fewer shards must clean the old
     // layout — stale part-*.bam would be mixed into listBams-driven reads
@@ -194,6 +201,58 @@ class BamScanSpec extends AnyFunSuite {
       s"stale shards survived the re-shard: $onDisk vs ${files2.map(p => new Path(p).getName)}")
     assert(Bam.read(spark, dir).count() == recs.length.toLong,
       "re-sharded dir must hold exactly one copy of every record")
+  }
+
+  /** Jobs that `body` starts, counted by a listener on a job group. */
+  private def jobsRun(body: => Unit): Int = {
+    val group = s"jobs-${java.util.UUID.randomUUID()}"
+    val started = new java.util.concurrent.atomic.AtomicInteger
+    val running = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group) {
+          started.incrementAndGet()
+          running.add(e.jobId)
+        }
+      override def onJobEnd(e: SparkListenerJobEnd): Unit = running.remove(e.jobId)
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "job count")
+    try {
+      body
+      // the listener bus is async: wait until our jobs have all ended on
+      // it and the count stops moving
+      var stable = 0
+      var waited = 0
+      var last = -1
+      while (stable < 3 && waited < 100) {
+        val now = started.get()
+        if (now == last && running.isEmpty) stable += 1 else { stable = 0; last = now }
+        Thread.sleep(50); waited += 1
+      }
+      started.get()
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("a region fetch is one Spark job, over a sharded layout and over one file") {
+    import spark.implicits._
+    val recs = mkRecords(800)
+    val dir = Files.createTempDirectory("graft_bam_jobs").toString
+    val files = Bam.writeSharded(spark.createDataset(recs).toDF(), dir, nShards = 4,
+      blockData = 2048)
+    assert(files.length == 4, s"fixture must write 4 shards, got ${files.length}")
+    val sharded = jobsRun {
+      Bam.fetchSharded(spark, dir, "chr2", 2000, 9000).write.format("noop").mode("overwrite").save()
+    }
+    assert(sharded == 1, s"sharded fetch ran $sharded jobs")
+    val single = jobsRun {
+      Bam.fetch(spark, files.head, "chr1", 1, 100000).write.format("noop").mode("overwrite").save()
+    }
+    assert(single == 1, s"single-file fetch ran $single jobs")
   }
 
   test("buildAll indexes every .bam in a directory, one task per file") {
@@ -211,6 +270,12 @@ class BamScanSpec extends AnyFunSuite {
     // and the written indexes drive a real fetch
     val bam = dir.resolve("s0.bam").toFile.getAbsolutePath
     assert(Bam.fetch(spark, bam, "chr1", 1, 100000).count() > 0)
+    // a file, its directory and a glob are all fetch inputs: the
+    // directory and the glob return every indexed file's rows
+    def rows(p: String) = Bam.fetch(spark, p, "chr1", 1, 100000).collect().map(key).toSeq
+    val perFile = (0 until 3).flatMap(i => rows(dir.resolve(s"s$i.bam").toString)).sorted
+    assert(rows(dir.toString).sorted == perFile)
+    assert(rows(s"$dir/s*.bam").sorted == perFile)
   }
 
   test("property: random records/blocks/split grids never lose or duplicate a record") {

@@ -154,17 +154,3 @@ class DistributionsSpec extends AnyFunSuite {
     assert(sample == expected)
   }
 }
-
-class BaseCountsAggregatorSpec extends AnyFunSuite {
-  private val spark = TestSpark.spark
-
-  test("aggregator path equals the groupBy path exactly") {
-    val st = SeqTable.fromReads(spark, Seq(
-      ("r1", "AAGT", null), ("r2", "ACGT", null),
-      ("r3", "ACGA", null), ("r4", "TCGA", null)))
-    def canon(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => ((r.getInt(0), r.getString(1)), r.getLong(2))).toMap
-    assert(canon(BaseCountsAggregator.seqDistFast(st.long)) ==
-      canon(Distributions.seqDist(st.long)))
-  }
-}
