@@ -452,13 +452,18 @@ object SeqTable {
       pos, pos + maxLen - 1)
   }
 
+  /** Most reference names [[fromSam]] records in `meta.references`. */
+  private val MaxRefs = 100
+
   /** Build from a SAM-shaped DataFrame with columns
     * (header, rname, pos, cigar, seq, qual) — the T1 realignment
     * (ref: constructor_ops.py:189-205 + sam_to_arr.pyx df_to_algn_arr).
     *
-    * Two-pass plan: (1) a tiny per-partition min/max aggregate for the
-    * window unless supplied; (2) a map-only application of the pure
-    * AlignRead kernel (as a UDF so non-core columns ride along untouched).
+    * Two-pass plan: (1) one per-partition scan for the window (unless
+    * supplied) and the reference names — `meta.references` holds the
+    * sorted distinct rnames, at most the 100 smallest; (2) a map-only
+    * application of the pure AlignRead kernel (as a UDF so non-core
+    * columns ride along untouched).
     * The insertion table is derived from the same plan by exploding the
     * per-read insertion array — no shuffle anywhere.
     *
@@ -492,25 +497,40 @@ object SeqTable {
         col("qual").cast(StringType), col("pos").cast(IntegerType),
         col("cigar").cast(StringType)) ++ extras.map(col): _*)
 
-    val (mn, mx) = window.getOrElse {
-      val partials = clean.select(col("pos"), col("seq"), col("cigar"))
-        .as[(Int, String, String)]
-        .mapPartitions { it =>
-          var lo = Int.MaxValue; var hi = Int.MinValue; var any = false
-          it.foreach { case (p, s, c) =>
-            any = true
-            if (p < lo) lo = p
-            val e = Cigar.endPos(p, s.length, c)
-            if (e > hi) hi = e
+    // one scan, one job, no shuffle: each partition returns its window
+    // bounds over the `clean` rows (unless `window` is given) and its
+    // reference names over every placed read (rname <> '*', cigar or
+    // not), keeping the 100 smallest; collect() merges and sorts them
+    val findWindow = window.isEmpty
+    val scanned =
+      if (findWindow) df.select(col("rname").cast(StringType), col("pos").cast(IntegerType),
+        col("seq").cast(StringType), col("cigar").cast(StringType))
+      else df.select(col("rname").cast(StringType))
+    val partials = scanned
+      .mapPartitions { it =>
+        var lo = Int.MaxValue; var hi = Int.MinValue; var any = false
+        val names = new java.util.TreeSet[String]()
+        it.foreach { r =>
+          if (!r.isNullAt(0) && r.getString(0) != "*") {
+            names.add(r.getString(0))
+            if (names.size > MaxRefs) names.pollLast()
+            if (findWindow && !r.isNullAt(3) && r.getString(3) != "*") {
+              any = true
+              val p = r.getInt(1)
+              if (p < lo) lo = p
+              val e = Cigar.endPos(p, r.getString(2).length, r.getString(3))
+              if (e > hi) hi = e
+            }
           }
-          if (any) Iterator.single((lo, hi)) else Iterator.empty
-        }.collect()
-      require(partials.nonEmpty, "no aligned reads")
-      (partials.map(_._1).min, partials.map(_._2).max)
+        }
+        Iterator.single((any, lo, hi, names.toArray(Array.empty[String]).toSeq))
+      }.collect()
+    val refs = partials.flatMap(_._4).distinct.sorted.take(MaxRefs).toSeq
+    val (mn, mx) = window.getOrElse {
+      val found = partials.filter(_._1)
+      require(found.nonEmpty, "no aligned reads")
+      (found.map(_._2).min, found.map(_._3).max)
     }
-
-    val refs = df.select(col("rname")).filter(col("rname") =!= "*")
-      .distinct().limit(100).as[String].collect().toSeq
 
     // native codegen realignment (plans.AlignReadExpr) — delegates to the
     // same AlignRead.align kernel the old UDF wrapped (bit-identical), but

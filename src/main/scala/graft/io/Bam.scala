@@ -28,6 +28,10 @@ import org.apache.spark.sql.functions._
   * reads, and one job reads them — pysam `fetch(region)` parity.
   * [[write]] is the inverse: one BAM shard per partition, so a decode →
   * transform → re-encode pipeline never funnels through the driver.
+  * [[writeSharded]] range-partitions on (rname, pos) with a read-name
+  * hash as tie-break, so a deep pile-up at one position is spread over
+  * shards; neighbouring shards may share a boundary position, and every
+  * reader here treats a sharded directory as an unordered set of files.
   */
 object Bam {
 
@@ -250,17 +254,19 @@ object Bam {
       s"reference '$rname' not in $path header " +
         s"(has ${seen.take(5).mkString(", ")}${if (seen.length > 5) ", …" else ""})"
     })
-    val chunks: Seq[(String, Array[String], Long, Long)] = named.flatMap { case (hp, refs) =>
+    val chunks: Seq[(String, Array[String], Int, Long, Long)] = named.flatMap { case (hp, refs) =>
       val idx = Bai.read(fs, new org.apache.hadoop.fs.Path(hp.toString + ".bai"))
-      Bai.chunksFor(idx, refs.indexOf(rname), beg1 - 1, end1)
-        .map(c => (hp.toString, refs, c.beg, c.end))
+      val refId = refs.indexOf(rname)
+      Bai.chunksFor(idx, refId, beg1 - 1, end1)
+        .map(c => (hp.toString, refs, refId, c.beg, c.end))
     }
     val serConf = new SerializableHadoopConf(spark.sessionState.newHadoopConf())
     val rdd = spark.sparkContext
       .parallelize(chunks, math.max(chunks.size, 1))
-      .flatMap { case (p, refs, cb, ce) =>
+      .flatMap { case (p, refs, refId, cb, ce) =>
         val hp = new org.apache.hadoop.fs.Path(p)
-        BamScan.chunkRecords(hp.getFileSystem(serConf.value), hp, refs, cb, ce)
+        BamScan.chunkRecords(hp.getFileSystem(serConf.value), hp, refs, cb, ce,
+            refId, beg1, end1)
           .filter { r =>
             r.rname == rname && r.pos <= end1 &&
               r.pos + math.max(1, graft.align.Cigar.refConsumed(r.cigar)) - 1 >= beg1
@@ -271,10 +277,19 @@ object Bam {
 
   /** Multi-shard coordinate-sorted BAM layout — the production form of
     * the single-shard fixture `q_bam_fetch` builds: range-partition on
-    * (rname, pos) so each shard covers a contiguous coordinate slice,
-    * sort within shards (the `.bai` precondition), write one BAM per
-    * shard through the existing per-partition sink, and index every
-    * shard. Returns the shard paths.
+    * (rname, pos, xxhash64(header)), sort within shards on (rname, pos)
+    * (the `.bai` precondition), write one BAM per shard through the
+    * existing per-partition sink, and index every shard. Returns the
+    * shard paths.
+    *
+    * The read-name hash is a deterministic tie-break: a range partitioner
+    * cannot split one key, so without it every read of a deep amplicon
+    * (most reads at one start, the normal shape of amplicon NGS) lands in
+    * one shard, and every reader whose unit of work is a shard runs that
+    * one task alone. With it, a run of equal positions spreads over as
+    * many shards as its share of the rows asks for. Each shard still
+    * covers one coordinate slice, but neighbouring shards may share their
+    * boundary position, so no reader may assume shard ranges are disjoint.
     */
   def writeSharded(
       df: DataFrame,
@@ -297,7 +312,7 @@ object Bam {
       }
     }
     val sorted = df
-      .repartitionByRange(nShards, col("rname"), col("pos"))
+      .repartitionByRange(nShards, col("rname"), col("pos"), xxhash64(col("header")))
       .sortWithinPartitions(col("rname"), col("pos"))
     val files = write(sorted, dir, refLength, blockData)
     Bai.buildAll(df.sparkSession, dir)

@@ -359,14 +359,23 @@ private[io] object BamScan {
     }
   }
 
-  /** Decode the records of one .bai chunk [vBeg, vEnd) (virtual offsets).
-    * Chunk boundaries come from the index, so both ends are exact record
-    * boundaries — no resync needed, and only the chunk's blocks (plus any
-    * continuation of its last record) are read.
+  /** Decode the records of one .bai chunk [vBeg, vEnd) (virtual offsets)
+    * that may overlap the region `refId`:`beg1`-`end1` (1-based,
+    * inclusive). Chunk boundaries come from the index, so both ends are
+    * exact record boundaries — no resync needed, and only the chunk's
+    * blocks (plus any continuation of its last record) are read.
+    *
+    * htslib iterator parity: each record's refID, pos and binary CIGAR are
+    * read from its raw bytes first. A record on another contig, or one
+    * ending before `beg1`, is stepped over without decoding its strings;
+    * the first record on `refId` starting past `end1` ends the chunk, as
+    * the file is coordinate-sorted (a `.bai` exists only for such files,
+    * see [[Bai.build]]). The caller's overlap filter stays the definition
+    * of "overlaps"; this only skips records it would drop.
     */
   def chunkRecords(
       fs: FileSystem, path: Path, refs: Array[String],
-      vBeg: Long, vEnd: Long): Iterator[Bam.BamRecord] = {
+      vBeg: Long, vEnd: Long, refId: Int, beg1: Int, end1: Int): Iterator[Bam.BamRecord] = {
     val in = fs.open(path)
     Option(TaskContext.get()).foreach(
       _.addTaskCompletionListener[Unit](_ => in.close()))
@@ -380,28 +389,54 @@ private[io] object BamScan {
       while (w.end < n && feed.feed(w)) {}
       w.end >= n
     }
+    // reference bases the record at `c` spans (M, D, N, =, X ops), from
+    // its binary CIGAR: the record body starts at c + 4, its read name at
+    // c + 36 and the CIGAR right after the name
+    def refSpan(c: Long): Int = {
+      val nCig = w.u16(c + 16)
+      var op = c + 36 + w.u8(c + 12)
+      var n = 0
+      var i = 0
+      while (i < nCig) {
+        val v = w.i32(op)
+        if (RefOps(v & 0xf)) n += v >>> 4
+        op += 4
+        i += 1
+      }
+      n
+    }
 
     new Iterator[Bam.BamRecord] {
       private var cur = (vBeg & 0xffff)
       private var finished = false
+      private var atRecord = false // cur is the next record to decode
       def hasNext: Boolean = {
-        if (finished) false
-        else if (!ensure(cur + 4)) {
-          finished = true
-          if (cur != w.end) throw new IllegalStateException(
-            s"truncated BAM record at inflated offset $cur of $path")
-          closeNow(); false
-        } else if (w.voffset(cur) >= vEnd) {
-          finished = true; closeNow(); false
-        } else {
-          val bs = w.i32(cur)
-          if (!ensure(cur + 4 + bs)) {
+        while (!finished && !atRecord) {
+          if (!ensure(cur + 4)) {
             finished = true
-            throw new IllegalStateException(
+            if (cur != w.end) throw new IllegalStateException(
               s"truncated BAM record at inflated offset $cur of $path")
+            closeNow()
+          } else if (w.voffset(cur) >= vEnd) {
+            finished = true; closeNow()
+          } else {
+            val bs = w.i32(cur)
+            if (!ensure(cur + 4 + bs)) {
+              finished = true
+              throw new IllegalStateException(
+                s"truncated BAM record at inflated offset $cur of $path")
+            }
+            val onRef = w.i32(cur + 4) == refId
+            val pos1 = w.i32(cur + 8) + 1
+            if (onRef && pos1 > end1) {
+              finished = true; closeNow()
+            } else if (!onRef || pos1 + math.max(1, refSpan(cur)) - 1 < beg1) {
+              cur += 4 + bs
+              w.trimBefore(cur)
+            } else atRecord = true
           }
-          true
         }
+        atRecord
       }
       def next(): Bam.BamRecord = {
         if (!hasNext) throw new NoSuchElementException("past end of BAM chunk")
@@ -410,8 +445,15 @@ private[io] object BamScan {
         val rec = Bam.decodeRecord(arr, idx, bs, refs)
         cur += 4 + bs
         w.trimBefore(cur)
+        atRecord = false
         rec
       }
     }
   }
+
+  /** BAM CIGAR op codes (`MIDNSHP=X` order) that consume reference bases:
+    * M, D, N, = and X — the ops [[graft.align.Cigar.refConsumed]] counts.
+    */
+  private val RefOps: Array[Boolean] =
+    Array.tabulate(16)(i => i == 0 || i == 2 || i == 3 || i == 7 || i == 8)
 }

@@ -114,9 +114,12 @@ object SamDomain {
     // writeSharded (one .bai each), region-fetched through
     // SeqTable.fromBam(dir, region) — the same Bam.fetch as q_bam_fetch,
     // here over four shards: a driver-side .bai prune per shard, then one
-    // job of byte-range chunk reads. Same oracle as q_bam_fetch, so the
-    // multi-shard path (shard pruning, per-shard binning, chunk merge) is
-    // hash-checked end to end, not just spec-pinned.
+    // job of byte-range chunk reads. Many reads share each start here, and
+    // the range key's read-name tie-break spreads them, so the region's
+    // reads span several shards that share boundary positions — the fetch
+    // must not assume disjoint shard ranges. Same oracle as q_bam_fetch,
+    // so the multi-shard path (shard pruning, per-shard binning, chunk
+    // merge) is hash-checked end to end, not just spec-pinned.
     "q_bam_fetch_sharded" -> ((s, dir) => {
       val sam = samFrame(s, dir, "20M")
         .withColumn("flag", lit(0)).withColumn("mapq", lit(60))

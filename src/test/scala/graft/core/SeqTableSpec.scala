@@ -112,6 +112,30 @@ class SeqTableSpec extends AnyFunSuite {
     assert(st.meta.references == Seq("ref1"))
   }
 
+  test("fromSam: one scan gives the window and the sorted reference names") {
+    import spark.implicits._
+    val df = Seq(
+      ("A", "refC", 5, "4M", "ACGT", "IIII"),
+      ("B", "refA", 2, "4M", "ACGT", "IIII"),
+      ("C", "refB", 3, "2M1D2M", "ACGT", "IIII"),
+      // placed but not aligned: its contig is named, its span is not windowed
+      ("D", "refZ", 900, "*", "ACGT", "IIII"),
+      ("E", "*", 0, "*", "TTTT", "IIII")
+    ).toDF("header", "rname", "pos", "cigar", "seq", "qual")
+    var st: SeqTable = null
+    val jobs = TestSpark.jobsRun { st = SeqTable.fromSam(df) }
+    assert(jobs == 1, s"fromSam ran $jobs eager jobs")
+    assert(st.meta.references == Seq("refA", "refB", "refC", "refZ"))
+    assert(st.minPos == 2 && st.maxPos == 8)
+    // a given window still names the contigs
+    assert(SeqTable.fromSam(df, window = Some((1, 10))).meta.references ==
+      Seq("refA", "refB", "refC", "refZ"))
+    // at most 100 names, the smallest
+    val many = (0 until 150).reverse.map(i => (s"r$i", f"c$i%03d", 1, "4M", "ACGT", "IIII"))
+      .toDF("header", "rname", "pos", "cigar", "seq", "qual")
+    assert(SeqTable.fromSam(many).meta.references == (0 until 100).map(i => f"c$i%03d"))
+  }
+
   test("subsampleExact: exact count, seeded determinism, insertions pruned") {
     import spark.implicits._
     val df = (0 until 50).map(i => (s"r$i", "ref1", 1,

@@ -4,7 +4,6 @@ import java.nio.file.Files
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -165,8 +164,10 @@ class BamScanSpec extends AnyFunSuite {
     assert(fetched.nonEmpty, "fixture must contain reads in the queried region")
     assert(fetched == full, "sharded fetch must equal full-scan + overlap filter")
 
-    // range sharding means the region's reads live in few shards: at
-    // least one shard prunes entirely (no chr2, or no overlapping bins)
+    // range sharding keeps each shard on one coordinate slice (the
+    // read-name tie-break only splits runs of equal positions), so the
+    // region's reads live in few shards: at least one shard prunes
+    // entirely (no chr2, or no overlapping bins)
     val conf = new org.apache.hadoop.conf.Configuration()
     val pruned = files.count { p =>
       val hp = new Path(p)
@@ -203,39 +204,90 @@ class BamScanSpec extends AnyFunSuite {
       "re-sharded dir must hold exactly one copy of every record")
   }
 
-  /** Jobs that `body` starts, counted by a listener on a job group. */
-  private def jobsRun(body: => Unit): Int = {
-    val group = s"jobs-${java.util.UUID.randomUUID()}"
-    val started = new java.util.concurrent.atomic.AtomicInteger
-    val running = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group) {
-          started.incrementAndGet()
-          running.add(e.jobId)
-        }
-      override def onJobEnd(e: SparkListenerJobEnd): Unit = running.remove(e.jobId)
+  /** The reads of `recs` whose span overlaps `rname:beg-end`, by the
+    * predicate [[Bam.fetch]] applies.
+    */
+  private def overlapping(rows: Seq[org.apache.spark.sql.Row], rname: String, beg: Int, end: Int) =
+    rows.filter { r =>
+      r.getString(2) == rname && r.getInt(3) <= end &&
+        r.getInt(3) + math.max(1, graft.align.Cigar.refConsumed(r.getString(5))) - 1 >= beg
+    }.map(key).sorted
+
+  test("sharded layout: a hot position spreads over shards, each still sorted and indexed") {
+    import spark.implicits._
+    // 85% of the reads share chr1:500, as in a deep amplicon; the rest
+    // are spread over chr1 and chr2
+    val hot = (0 until 1700).map { i =>
+      Bam.BamRecord(f"hot$i%05d", 0, "chr1", 500, 60, "30M", "*", 0, 0,
+        "ACGT" * 7 + "AC", "I" * 30, Map.empty)
     }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    sc.setJobGroup(group, "job count")
-    try {
-      body
-      // the listener bus is async: wait until our jobs have all ended on
-      // it and the count stops moving
-      var stable = 0
-      var waited = 0
-      var last = -1
-      while (stable < 3 && waited < 100) {
-        val now = started.get()
-        if (now == last && running.isEmpty) stable += 1 else { stable = 0; last = now }
-        Thread.sleep(50); waited += 1
-      }
-      started.get()
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
+    val cold = mkRecords(300)
+    val recs = hot ++ cold
+    val dir = Files.createTempDirectory("graft_bam_hot").toString
+    val files = Bam.writeSharded(spark.createDataset(rnd.shuffle(recs)).toDF(), dir,
+      nShards = 4, blockData = 2048)
+    val perShard = files.map(f => Bam.read(spark, f).count())
+    assert(perShard.sum == recs.length.toLong)
+    assert(perShard.max <= recs.length * 0.4,
+      s"one shard holds ${perShard.max} of ${recs.length} records: $perShard")
+    // Bai.build refuses unsorted input, so indexing proves every shard is
+    // still coordinate-sorted
+    assert(Bai.buildAll(spark, dir).length == files.length)
+    val all = Bam.read(spark, dir).collect().toSeq
+    assert(all.map(key).sorted ==
+      recs.map(r => (r.header, r.rname, r.pos, r.cigar, r.seq, r.qual)).sorted,
+      "the sharded directory must hold exactly the input records")
+    val fetched = Bam.fetch(spark, dir, "chr1", 500, 500).collect().map(key).toSeq.sorted
+    assert(fetched.length >= hot.length)
+    assert(fetched == overlapping(all, "chr1", 500, 500),
+      "hot-position fetch must equal the full-scan overlap filter")
+  }
+
+  test("region fetch stops at the region end and skips reads that end before it") {
+    // one multi-block file: thousands of chr1 reads before the region,
+    // reads that reach into it from far left through long D/N cigars
+    // (and one that stops just short), reads starting exactly at its end,
+    // one just past it, a '*' cigar inside it, then a second contig
+    val (beg, end) = (40000, 40100)
+    val seq = "ACGTACGTAC" * 5
+    def rec(name: String, rname: String, pos: Int, cigar: String, s: String = seq) =
+      Bam.BamRecord(name, 0, rname, pos, 60, cigar, "*", 0, 0, s,
+        if (s == "*") "*" else "I" * s.length, Map.empty)
+    val recs = (
+      (0 until 3000).map(i => rec(f"a$i%05d", "chr1", 1 + i * 13, "50M")) ++
+        Seq(
+          rec("longN", "chr1", 30000, "20M10000N30M"), // spans 30000-40049
+          rec("longD", "chr1", 39000, "25M1000D25M"), // spans 39000-40049
+          rec("shortN", "chr1", 35000, "20M4950N30M"), // ends at 39999
+          rec("edgeL", "chr1", beg - 49, "50M"), // ends exactly at beg
+          rec("star", "chr1", 40050, "*", "*")) ++
+        (0 until 40).map(i => rec(f"in$i%03d", "chr1", beg + i * 2, "50M")) ++
+        (0 until 5).map(i => rec(s"atEnd$i", "chr1", end, "50M")) ++
+        Seq(rec("pastEnd", "chr1", end + 1, "50M")) ++
+        (0 until 2000).map(i => rec(f"b$i%05d", "chr1", end + 2 + i * 7, "50M")) ++
+        (0 until 500).map(i => rec(f"c$i%05d", "chr2", beg - 100 + i, "50M"))
+      ).sortBy(r => (r.rname, r.pos))
+    val path = writeBam(recs, blockData = 2048)
+    val conf = new Configuration()
+    val fs = new Path(path).getFileSystem(conf)
+    val idx = Bai.build(fs, new Path(path))
+    Bai.write(idx, fs, new Path(path + ".bai"))
+    val chunks = Bai.chunksFor(idx, 0, beg - 1, end)
+    assert(chunks.exists(c => (c.end >> 16) > (c.beg >> 16)),
+      "fixture must put the region's chunk over more than one block")
+
+    val want = overlapping(Bam.read(spark, path).collect().toSeq, "chr1", beg, end)
+    val wantNames = want.map(_._1).toSet
+    assert(Set("longN", "longD", "edgeL", "star", "atEnd0", "in000").subsetOf(wantNames))
+    assert(!wantNames.contains("shortN") && !wantNames.contains("pastEnd"))
+    assert(Bam.fetch(spark, path, "chr1", beg, end).collect().map(key).toSeq.sorted == want,
+      "fetch must equal the full-scan overlap filter")
+    // the chunk reader alone already yields exactly the overlapping reads:
+    // everything else was stepped over undecoded or ended the chunk
+    val refs = Array("chr1", "chr2", "chr3")
+    val raw = chunks.flatMap(c => BamScan.chunkRecords(fs, new Path(path), refs, c.beg, c.end,
+      0, beg, end))
+    assert(raw.map(r => (r.header, r.rname, r.pos, r.cigar, r.seq, r.qual)).sorted == want)
   }
 
   test("a region fetch is one Spark job, over a sharded layout and over one file") {
@@ -245,11 +297,11 @@ class BamScanSpec extends AnyFunSuite {
     val files = Bam.writeSharded(spark.createDataset(recs).toDF(), dir, nShards = 4,
       blockData = 2048)
     assert(files.length == 4, s"fixture must write 4 shards, got ${files.length}")
-    val sharded = jobsRun {
+    val sharded = TestSpark.jobsRun {
       Bam.fetchSharded(spark, dir, "chr2", 2000, 9000).write.format("noop").mode("overwrite").save()
     }
     assert(sharded == 1, s"sharded fetch ran $sharded jobs")
-    val single = jobsRun {
+    val single = TestSpark.jobsRun {
       Bam.fetch(spark, files.head, "chr1", 1, 100000).write.format("noop").mode("overwrite").save()
     }
     assert(single == 1, s"single-file fetch ran $single jobs")
