@@ -2,8 +2,6 @@ package graft.io
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 
-import graft.align.Cigar
-
 /** BAI (BAM index) — the SAM spec's §5 binning scheme, re-implemented from
   * the published format (magic "BAI\1"; per reference: bins of chunks as
   * virtual-offset pairs, plus a 16 KiB-window linear index). This is what
@@ -59,58 +57,35 @@ object Bai {
   }
 
   /** Build the index by one sequential walk of a coordinate-sorted BAM,
-    * tracking each record's virtual start/end offsets. Unmapped records
-    * (refID −1) are not indexed — `fetch` never returns them, matching
-    * pysam's region fetch. Throws on out-of-order records: a binning
-    * index over an unsorted file would silently miss reads.
+    * tracking each record's virtual start/end offsets. Bins, chunks and
+    * the linear index come from each record's raw refID, pos and binary
+    * CIGAR ([[BamScan.Records]]); no record is decoded to strings.
+    * Unmapped records (refID −1) are not indexed — `fetch` never returns
+    * them, matching pysam's region fetch. Throws on out-of-order records:
+    * a binning index over an unsorted file would silently miss reads.
     */
   def build(fs: FileSystem, path: Path): Index = {
-    val in = fs.open(path)
+    val r = new BamScan.Records(fs, path, 0L)
     try {
-      val hdr = BamScan.readHeader(in)
-      val nRef = hdr.refs.length
+      val refs = r.readHeader().refs
+      val nRef = refs.length
       val bins = Array.fill(nRef)(
         scala.collection.mutable.LinkedHashMap.empty[Int, scala.collection.mutable.ArrayBuffer[Chunk]])
       val linear = Array.fill(nRef)(
         scala.collection.mutable.ArrayBuffer.empty[Long])
-      if (hdr.firstRecBlock == Long.MaxValue)
-        return Index(Vector.tabulate(nRef)(_ => RefIndex(Map.empty, Vector.empty)))
-
-      in.seek(hdr.firstRecBlock)
-      val w = new BamScan.InflatedWindow
-      val feed = new BamScan.BlockFeed(in, hdr.firstRecBlock)
-      def ensure(n: Long): Boolean = {
-        while (w.end < n && feed.feed(w)) {}
-        w.end >= n
-      }
-      var cur = hdr.firstRecIntra.toLong
       var lastRef = -1
       var lastPos = -1
-      var done = false
-      while (!done) {
-        if (!ensure(cur + 4)) {
-          require(cur == w.end, s"truncated BAM record at $cur of $path")
-          done = true
-        } else {
-        val bs = w.i32(cur)
-        require(ensure(cur + 4 + bs), s"truncated BAM record at $cur of $path")
-        val vBeg = w.voffset(cur)
-        val refId = w.i32(cur + 4) // raw field — no name lookup needed
-        require(refId >= -1 && refId < nRef, s"BAM refID $refId out of range at $cur")
-        val (arr, idx) = w.raw(cur + 4)
-        val rec = Bam.decodeRecord(arr, idx, bs, hdr.refs)
-        cur += 4 + bs
-        val vEnd =
-          if (cur < w.end) w.voffset(cur)
-          else (feed.fileOffset << 16) // record flush with last block read
+      while (r.advance()) {
+        val refId = r.refId
+        require(refId >= -1 && refId < nRef, s"BAM refID $refId out of range at ${r.voffset} of $path")
         if (refId >= 0) {
-          require(refId > lastRef || (refId == lastRef && rec.pos >= lastPos),
-            s"BAI requires a coordinate-sorted BAM: ${rec.rname}:${rec.pos} after " +
-              s"ref#$lastRef:$lastPos in $path")
-          if (refId > lastRef) { lastRef = refId; lastPos = -1 }
-          lastPos = rec.pos
-          val beg0 = rec.pos - 1
-          val end0 = beg0 + math.max(1, Cigar.refConsumed(rec.cigar))
+          val beg0 = r.pos0
+          require(refId > lastRef || (refId == lastRef && beg0 >= lastPos),
+            s"BAI requires a coordinate-sorted BAM: ${refs(refId)}:${beg0 + 1} after " +
+              s"ref#$lastRef:${lastPos + 1} in $path")
+          lastRef = refId
+          lastPos = beg0
+          val end0 = beg0 + math.max(1, r.refSpan)
           // BAI addresses at most 512 Mbp: beyond 1<<29 the level-1 bin
           // numbers alias into the level-2 range (beg>>26 == 8 → bin 9)
           // and external readers (htslib/pysam) misread the index.
@@ -118,8 +93,10 @@ object Bai {
           // format for them.
           require(end0 <= (1 << 29),
             s"BAI cannot index positions beyond 512 Mbp (record " +
-              s"${rec.rname}:${rec.pos} spans to $end0 in $path); " +
+              s"${refs(refId)}:${beg0 + 1} spans to $end0 in $path); " +
               "use a CSI-capable indexer for long contigs")
+          val vBeg = r.voffset
+          val vEnd = r.voffsetEnd
           val bin = reg2bin(beg0, end0)
           val bucket = bins(refId).getOrElseUpdate(
             bin, scala.collection.mutable.ArrayBuffer.empty[Chunk])
@@ -138,13 +115,12 @@ object Bai {
             win += 1
           }
         }
-        w.trimBefore(cur)
-        }
+        r.skip()
       }
-      Index(Vector.tabulate(nRef)(r =>
-        RefIndex(bins(r).map { case (b, cs) => b -> cs.toVector }.toMap,
-          linear(r).toVector)))
-    } finally in.close()
+      Index(Vector.tabulate(nRef)(i =>
+        RefIndex(bins(i).map { case (b, cs) => b -> cs.toVector }.toMap,
+          linear(i).toVector)))
+    } finally r.close()
   }
 
   /** Chunks to read for 0-based half-open [beg0, end0) on `refId`:

@@ -216,8 +216,10 @@ object Bam {
     * `path` — one file, a glob or a sharded directory ([[writeSharded]]),
     * listed by [[listBams]]. `beg1`/`end1` are 1-based inclusive, matching
     * the frame's `pos`. Returned reads OVERLAP the region (pysam
-    * semantics) — their span `[pos, pos+refConsumed-1]` intersects
-    * `[beg1, end1]`.
+    * semantics): their span `[pos, pos + max(1, refSpan) - 1]` intersects
+    * `[beg1, end1]`, a test [[BamScan.chunkRecords]] makes on each
+    * record's raw bytes — it is the one definition, and no filter on the
+    * decoded rows follows it.
     *
     * The driver reads each file's header and `<file>.bai` (the index
     * [[Bai.buildAll]] writes; [[Bai.build]] + [[Bai.write]] for a single
@@ -243,10 +245,7 @@ object Bam {
     require(beg1 >= 1 && end1 >= beg1, s"bad region $rname:$beg1-$end1")
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sessionState.newHadoopConf())
-    val headers = listBams(fs, path).map { st =>
-      val in = fs.open(st.getPath)
-      try (st.getPath, BamScan.readHeader(in).refs) finally in.close()
-    }
+    val headers = listBams(fs, path).map(st => (st.getPath, BamScan.readHeader(fs, st.getPath).refs))
     require(headers.nonEmpty, s"no .bam files under $path")
     val named = headers.filter(_._2.contains(rname))
     require(named.nonEmpty, {
@@ -266,11 +265,7 @@ object Bam {
       .flatMap { case (p, refs, refId, cb, ce) =>
         val hp = new org.apache.hadoop.fs.Path(p)
         BamScan.chunkRecords(hp.getFileSystem(serConf.value), hp, refs, cb, ce,
-            refId, beg1, end1)
-          .filter { r =>
-            r.rname == rname && r.pos <= end1 &&
-              r.pos + math.max(1, graft.align.Cigar.refConsumed(r.cigar)) - 1 >= beg1
-          }
+          refId, beg1, end1)
       }
     rdd.toDF()
   }

@@ -4,14 +4,23 @@ import org.apache.hadoop.fs.{FSDataInputStream, FileSystem, Path}
 
 import org.apache.spark.TaskContext
 
-/** Within-file BAM split scanning (ref contract:
-  * seqtables/core/seqtables.py:227-283 `from_pysam`; format: SAM spec §4).
+/** BAM record walks (ref contract: seqtables/core/seqtables.py:227-283
+  * `from_pysam`; format: SAM spec §4).
+  *
+  * Every reader of BAM records walks the inflated BGZF block chain through
+  * one cursor, [[Records]]: the header parse, the byte-range split reader
+  * ([[splitRecords]], behind `Bam.read`), the region chunk reader
+  * ([[chunkRecords]], behind `Bam.fetch`) and the index build
+  * ([[Bai.build]]). The cursor owns the stream, the inflated window, the
+  * one truncation check and the raw field reads, binary CIGAR span
+  * included; each caller adds only its own rule for where to start and
+  * which records to take.
   *
   * BGZF blocks are independently inflatable, so any byte range of a BAM
   * can be decompressed without touching the rest — but neither a split
-  * boundary nor a block boundary is a RECORD boundary. This module solves
-  * both resyncs, giving a single huge BAM the same task-per-byte-range
-  * sharding a text file gets:
+  * boundary nor a block boundary is a RECORD boundary. The split reader
+  * solves both resyncs, giving a single huge BAM the same
+  * task-per-byte-range sharding a text file gets:
   *
   *  1. '''Block sync''': from an arbitrary file offset, scan forward for
   *     the gzip magic and validate the candidate by inflating it — the
@@ -118,7 +127,7 @@ private[io] object BamScan {
   }
 
   /** Sequentially inflates blocks from a stream into a window. */
-  final class BlockFeed(in: java.io.InputStream, startOffset: Long) {
+  private final class BlockFeed(in: java.io.InputStream, startOffset: Long) {
     private var off = startOffset
     def fileOffset: Long = off
     /** Inflate the next block into `w`; false at EOF. (Zero-payload
@@ -131,39 +140,10 @@ private[io] object BamScan {
       }
   }
 
-  /** Parse the BAM header from a stream positioned at offset 0. */
-  def readHeader(in: java.io.InputStream): BamHeader = {
-    val w = new InflatedWindow
-    val feed = new BlockFeed(in, 0L)
-    def ensure(n: Long): Unit = {
-      while (w.end < n && feed.feed(w)) {}
-      require(w.end >= n, s"truncated BAM header (have ${w.end}, need $n bytes)")
-    }
-    ensure(4)
-    require(w.u8(0) == 'B' && w.u8(1) == 'A' && w.u8(2) == 'M' && w.u8(3) == 1,
-      "not a BAM payload (bad magic)")
-    ensure(12)
-    val lText = w.i32(4)
-    ensure(12L + lText)
-    val nRef = w.i32(8L + lText)
-    var p = 12L + lText
-    val refs = new Array[String](nRef)
-    var r = 0
-    while (r < nRef) {
-      ensure(p + 4)
-      val lName = w.i32(p)
-      ensure(p + 8 + lName)
-      refs(r) = w.string(p + 4, lName - 1) // drop NUL
-      p += 8 + lName
-      r += 1
-    }
-    if (p == w.end) {
-      // first record starts in a later block (or the file has none)
-      var more = true
-      while (p == w.end && more) more = feed.feed(w)
-    }
-    if (p == w.end) BamHeader(refs, Long.MaxValue, 0)
-    else BamHeader(refs, w.ownerFileOffset(p), (w.voffset(p) & 0xffff).toInt)
+  /** Parse the header of the BAM at `path`. */
+  def readHeader(fs: FileSystem, path: Path): BamHeader = {
+    val r = new Records(fs, path, 0L)
+    try r.readHeader() finally r.close()
   }
 
   /** Executor-local header memo keyed by (path, fileLen, mtime): with
@@ -181,10 +161,7 @@ private[io] object BamScan {
 
   def cachedHeader(fs: FileSystem, path: Path, fileLen: Long, mtime: Long): BamHeader = {
     if (headerCache.size > 64) headerCache.clear()
-    headerCache.computeIfAbsent((path.toString, fileLen, mtime), _ => {
-      val in = fs.open(path)
-      try readHeader(in) finally in.close()
-    })
+    headerCache.computeIfAbsent((path.toString, fileLen, mtime), _ => readHeader(fs, path))
   }
 
   /** Smallest validated BGZF block boundary ≥ `from`; `fileLen` if none.
@@ -247,9 +224,161 @@ private[io] object BamScan {
   private val MaxRecordBytes = 1 << 26 // 64 MiB
   private val MaxSeqLen = 1 << 28
 
+  /** What a record walk does with the whole record at the cursor. */
+  sealed trait Step
+  case object Take extends Step
+  case object Skip extends Step
+  case object Stop extends Step
+
+  /** The one walk over a BAM's records, from virtual offset `vStart` on.
+    * It opens the stream (closed on task completion too, so an abandoned
+    * iterator — limit/take — does not leak the fd), owns the inflated
+    * window and its feed, and reads each record's fixed fields and
+    * binary CIGAR in place, so a caller that only needs coordinates never
+    * decodes strings. Inflated offsets count from the block at `vStart`.
+    */
+  final class Records(fs: FileSystem, path: Path, vStart: Long) {
+    private val in = fs.open(path)
+    Option(TaskContext.get()).foreach(_.addTaskCompletionListener[Unit](_ => in.close()))
+    in.seek(vStart >>> 16)
+    val window = new InflatedWindow
+    private val feed = new BlockFeed(in, vStart >>> 16)
+    private var at = vStart & 0xffff // inflated offset of the record at the cursor
+    private var size = 0 // its block_size, once advance() has returned true
+
+    def close(): Unit = try in.close() catch { case _: java.io.IOException => () }
+
+    /** Inflate blocks until the window reaches inflated offset `n`; false
+      * if the chain ends first.
+      */
+    def ensure(n: Long): Boolean = {
+      while (window.end < n && feed.feed(window)) {}
+      window.end >= n
+    }
+
+    private def need(n: Long): Unit =
+      if (!ensure(n)) throw new IllegalStateException(
+        s"truncated BAM at inflated offset $at of $path: needs ${n - at} bytes, " +
+          s"${window.end - at} remain")
+
+    /** Parse the header; the cursor must be at virtual offset 0, and is
+      * left on the first record.
+      */
+    def readHeader(): BamHeader = {
+      val w = window
+      need(4)
+      require(w.u8(0) == 'B' && w.u8(1) == 'A' && w.u8(2) == 'M' && w.u8(3) == 1,
+        s"not a BAM payload (bad magic): $path")
+      need(12)
+      val lText = w.i32(4)
+      need(12L + lText)
+      val nRef = w.i32(8L + lText)
+      var p = 12L + lText
+      val refs = new Array[String](nRef)
+      var r = 0
+      while (r < nRef) {
+        need(p + 4)
+        val lName = w.i32(p)
+        need(p + 8 + lName)
+        refs(r) = w.string(p + 4, lName - 1) // drop NUL
+        p += 8 + lName
+        r += 1
+      }
+      at = p
+      // the first record may start in a later block, or the file has none
+      if (ensure(p + 1)) BamHeader(refs, w.ownerFileOffset(p), (w.voffset(p) & 0xffff).toInt)
+      else BamHeader(refs, Long.MaxValue, 0)
+    }
+
+    /** Put the cursor on the record at inflated offset `abs`. */
+    def moveTo(abs: Long): Unit = at = abs
+
+    /** True when a whole record is at the cursor, false at a clean end of
+      * the block chain; a record cut short is the one truncation error.
+      */
+    def advance(): Boolean =
+      (ensure(at + 4) || at != window.end) && {
+        need(at + 4)
+        size = window.i32(at)
+        require(size >= 32, s"corrupt BAM record at inflated offset $at of $path: block_size $size")
+        need(at + 4 + size)
+        true
+      }
+
+    // raw fields of the record at the cursor: its body starts at at + 4,
+    // its read name at at + 36 and its CIGAR right after the name
+    def refId: Int = window.i32(at + 4)
+    def pos0: Int = window.i32(at + 8)
+    def voffset: Long = window.voffset(at)
+    def ownerBlock: Long = window.ownerFileOffset(at)
+
+    /** Virtual offset just past the record at the cursor. */
+    def voffsetEnd: Long = {
+      val e = at + 4 + size
+      if (e < window.end) window.voffset(e)
+      else feed.fileOffset << 16 // record flush with the last block read
+    }
+
+    /** Reference bases the record spans, from its binary CIGAR (the
+      * [[RefOps]]); an op code past X fails here, for every walk.
+      */
+    def refSpan: Int = {
+      val nCig = window.u16(at + 16)
+      var op = at + 36 + window.u8(at + 12)
+      var n = 0
+      var i = 0
+      while (i < nCig) {
+        val v = window.i32(op)
+        val code = v & 0xf
+        if (code >= RefOps.length) throw new IllegalStateException(
+          s"invalid CIGAR op code $code at inflated offset $at of $path")
+        if (RefOps(code)) n += v >>> 4
+        op += 4
+        i += 1
+      }
+      n
+    }
+
+    /** Step past the record at the cursor. */
+    def skip(): Unit = {
+      at += 4 + size
+      window.trimBefore(at)
+    }
+
+    /** Decode the record at the cursor and step past it. */
+    def decode(refs: Array[String]): Bam.BamRecord = {
+      refSpan // the op-code check
+      val (arr, idx) = window.raw(at + 4)
+      val rec = Bam.decodeRecord(arr, idx, size, refs)
+      skip()
+      rec
+    }
+
+    /** The records from the cursor on that `step` takes, decoded; the walk
+      * ends at the first Stop or at the end of the chain.
+      */
+    def decoded(refs: Array[String])(step: Records => Step): Iterator[Bam.BamRecord] =
+      new Iterator[Bam.BamRecord] {
+        private var state: Step = Skip // Skip: no taken record at the cursor yet
+        def hasNext: Boolean = {
+          while (state == Skip) {
+            state = if (advance()) step(Records.this) else Stop
+            if (state == Skip) skip()
+            else if (state == Stop) close()
+          }
+          state == Take
+        }
+        def next(): Bam.BamRecord = {
+          if (!hasNext) throw new NoSuchElementException(s"past the last record of $path")
+          state = Skip
+          decode(refs)
+        }
+      }
+  }
+
   /** Decode the records of one byte-range split [start, end) of a BAM
-    * file. Registers stream close on task completion (abandoned iterators
-    * — limit/take — must not leak the fd).
+    * file: block sync, record resync, then every record whose first byte
+    * lies in a block this split owns.
     */
   def splitRecords(
       fs: FileSystem, path: Path, fileLen: Long,
@@ -257,203 +386,83 @@ private[io] object BamScan {
     val hdr = cachedHeader(fs, path, fileLen, mtime)
     if (hdr.firstRecBlock >= end || hdr.firstRecBlock >= fileLen)
       return Iterator.empty
-
-    val in = fs.open(path)
-    Option(TaskContext.get()).foreach(
-      _.addTaskCompletionListener[Unit](_ => in.close()))
-    def closeNow(): Unit = try in.close() catch { case _: java.io.IOException => () }
-
+    val resync = hdr.firstRecBlock < start
     val b0 =
-      if (hdr.firstRecBlock >= start) hdr.firstRecBlock
-      else
-        try syncToBlock(in, start, fileLen)
-        catch { case e: Throwable => closeNow(); throw e }
-    if (b0 >= end || b0 >= fileLen) { closeNow(); return Iterator.empty }
+      if (!resync) hdr.firstRecBlock
+      else { val in = fs.open(path); try syncToBlock(in, start, fileLen) finally in.close() }
+    if (b0 >= end || b0 >= fileLen) return Iterator.empty
 
-    in.seek(b0)
-    val w = new InflatedWindow
-    val feed = new BlockFeed(in, b0)
-    def ensure(n: Long): Boolean = {
-      while (w.end < n && feed.feed(w)) {}
-      w.end >= n
-    }
-    val nRefs = hdr.refs.length
-
-    def looksLikeRecord(c: Long): Boolean =
-      ensure(c + 36) && {
-        val bs = w.i32(c)
-        val refId = w.i32(c + 4)
-        val pos0 = w.i32(c + 8)
-        val lrn = w.u8(c + 12)
-        val nCig = w.u16(c + 16)
-        val lseq = w.i32(c + 20)
-        val nref2 = w.i32(c + 24)
-        val npos = w.i32(c + 28)
-        bs >= 32 && bs <= MaxRecordBytes &&
-        refId >= -1 && refId < nRefs && pos0 >= -1 &&
-        lrn >= 2 && lseq >= 0 && lseq <= MaxSeqLen &&
-        nref2 >= -1 && nref2 < nRefs && npos >= -1 &&
-        32L + lrn + 4L * nCig + (lseq + 1L) / 2 + lseq <= bs &&
-        ensure(c + 36 + lrn) && w.u8(c + 35 + lrn) == 0 // name NUL in place
-      }
-
-    def validAt(c: Long, depth: Int): Boolean =
-      looksLikeRecord(c) && {
-        if (depth == 0) true
-        else {
-          val nxt = c + 4 + w.i32(c)
-          if (!ensure(nxt + 4)) nxt == w.end // clean end-of-records
-          else validAt(nxt, depth - 1)
+    val r = new Records(fs, path, (b0 << 16) | (if (resync) 0 else hdr.firstRecIntra))
+    if (resync) {
+      val w = r.window
+      val nRefs = hdr.refs.length
+      def looksLikeRecord(c: Long): Boolean =
+        r.ensure(c + 36) && {
+          val bs = w.i32(c)
+          val refId = w.i32(c + 4)
+          val pos0 = w.i32(c + 8)
+          val lrn = w.u8(c + 12)
+          val nCig = w.u16(c + 16)
+          val lseq = w.i32(c + 20)
+          val nref2 = w.i32(c + 24)
+          val npos = w.i32(c + 28)
+          bs >= 32 && bs <= MaxRecordBytes &&
+          refId >= -1 && refId < nRefs && pos0 >= -1 &&
+          lrn >= 2 && lseq >= 0 && lseq <= MaxSeqLen &&
+          nref2 >= -1 && nref2 < nRefs && npos >= -1 &&
+          32L + lrn + 4L * nCig + (lseq + 1L) / 2 + lseq <= bs &&
+          r.ensure(c + 36 + lrn) && w.u8(c + 35 + lrn) == 0 // name NUL in place
         }
-      }
-
-    // first record owned by this split
-    var first = -1L
-    if (b0 == hdr.firstRecBlock) {
-      if (ensure(hdr.firstRecIntra + 1L)) first = hdr.firstRecIntra.toLong
-    } else {
-      var c = 0L
-      var stop = false
-      while (first < 0 && !stop) {
-        if (!ensure(c + 1)) stop = true // ran out of bytes entirely
-        else if (w.ownerFileOffset(c) >= end) stop = true // not ours
-        else if (validAt(c, 2)) first = c
-        else c += 1
-      }
-    }
-    if (first < 0) { closeNow(); return Iterator.empty }
-
-    val firstRec = first
-    new Iterator[Bam.BamRecord] {
-      private var cur = firstRec
-      private var finished = false
-      def hasNext: Boolean = {
-        if (finished) false
-        else if (!ensure(cur + 4)) {
-          finished = true
-          if (cur != w.end) throw new IllegalStateException(
-            s"truncated BAM record: 4-byte block_size missing at inflated offset $cur of $path")
-          closeNow(); false
-        } else if (w.ownerFileOffset(cur) >= end) {
-          finished = true; closeNow(); false
-        } else {
-          val bs = w.i32(cur)
-          if (!ensure(cur + 4 + bs)) {
-            finished = true
-            throw new IllegalStateException(
-              s"truncated BAM record at inflated offset $cur of $path: " +
-                s"block_size $bs exceeds remaining bytes")
+      def validAt(c: Long, depth: Int): Boolean =
+        looksLikeRecord(c) && {
+          if (depth == 0) true
+          else {
+            val nxt = c + 4 + w.i32(c)
+            if (!r.ensure(nxt + 4)) nxt == w.end // clean end-of-records
+            else validAt(nxt, depth - 1)
           }
-          true
         }
-      }
-      def next(): Bam.BamRecord = {
-        if (!hasNext) throw new NoSuchElementException("past end of BAM split")
-        val bs = w.i32(cur)
-        val (arr, idx) = w.raw(cur + 4)
-        val rec = Bam.decodeRecord(arr, idx, bs, hdr.refs)
-        cur += 4 + bs
-        w.trimBefore(cur)
-        rec
-      }
+      // first record owned by this split
+      var c = 0L
+      var found = false
+      while (!found && r.ensure(c + 1) && w.ownerFileOffset(c) < end)
+        if (validAt(c, 2)) found = true else c += 1
+      if (!found) { r.close(); return Iterator.empty }
+      r.moveTo(c)
     }
+    r.decoded(hdr.refs)(c => if (c.ownerBlock >= end) Stop else Take)
   }
 
   /** Decode the records of one .bai chunk [vBeg, vEnd) (virtual offsets)
-    * that may overlap the region `refId`:`beg1`-`end1` (1-based,
-    * inclusive). Chunk boundaries come from the index, so both ends are
-    * exact record boundaries — no resync needed, and only the chunk's
-    * blocks (plus any continuation of its last record) are read.
+    * that overlap the region `refId`:`beg1`-`end1` (1-based, inclusive).
+    * Chunk boundaries come from the index, so both ends are exact record
+    * boundaries — no resync needed, and only the chunk's blocks (plus any
+    * continuation of its last record) are read.
     *
-    * htslib iterator parity: each record's refID, pos and binary CIGAR are
-    * read from its raw bytes first. A record on another contig, or one
-    * ending before `beg1`, is stepped over without decoding its strings;
-    * the first record on `refId` starting past `end1` ends the chunk, as
-    * the file is coordinate-sorted (a `.bai` exists only for such files,
-    * see [[Bai.build]]). The caller's overlap filter stays the definition
-    * of "overlaps"; this only skips records it would drop.
+    * This is the definition of "overlaps", with htslib iterator parity:
+    * each record's refID, pos and binary CIGAR are read from its raw
+    * bytes. A record on another contig, or one whose span
+    * `[pos, pos + max(1, refSpan) - 1]` ends before `beg1`, is stepped
+    * over without decoding its strings; the first record on `refId`
+    * starting past `end1` ends the chunk, as the file is
+    * coordinate-sorted (a `.bai` exists only for such files, see
+    * [[Bai.build]]). Every record decoded overlaps the region.
     */
   def chunkRecords(
       fs: FileSystem, path: Path, refs: Array[String],
-      vBeg: Long, vEnd: Long, refId: Int, beg1: Int, end1: Int): Iterator[Bam.BamRecord] = {
-    val in = fs.open(path)
-    Option(TaskContext.get()).foreach(
-      _.addTaskCompletionListener[Unit](_ => in.close()))
-    def closeNow(): Unit = try in.close() catch { case _: java.io.IOException => () }
-
-    val b0 = vBeg >> 16
-    in.seek(b0)
-    val w = new InflatedWindow
-    val feed = new BlockFeed(in, b0)
-    def ensure(n: Long): Boolean = {
-      while (w.end < n && feed.feed(w)) {}
-      w.end >= n
-    }
-    // reference bases the record at `c` spans (M, D, N, =, X ops), from
-    // its binary CIGAR: the record body starts at c + 4, its read name at
-    // c + 36 and the CIGAR right after the name
-    def refSpan(c: Long): Int = {
-      val nCig = w.u16(c + 16)
-      var op = c + 36 + w.u8(c + 12)
-      var n = 0
-      var i = 0
-      while (i < nCig) {
-        val v = w.i32(op)
-        if (RefOps(v & 0xf)) n += v >>> 4
-        op += 4
-        i += 1
-      }
-      n
+      vBeg: Long, vEnd: Long, refId: Int, beg1: Int, end1: Int): Iterator[Bam.BamRecord] =
+    new Records(fs, path, vBeg).decoded(refs) { r =>
+      val onRef = r.refId == refId
+      val pos1 = r.pos0 + 1
+      if (r.voffset >= vEnd || (onRef && pos1 > end1)) Stop
+      else if (!onRef || pos1 + math.max(1, r.refSpan) - 1 < beg1) Skip
+      else Take
     }
 
-    new Iterator[Bam.BamRecord] {
-      private var cur = (vBeg & 0xffff)
-      private var finished = false
-      private var atRecord = false // cur is the next record to decode
-      def hasNext: Boolean = {
-        while (!finished && !atRecord) {
-          if (!ensure(cur + 4)) {
-            finished = true
-            if (cur != w.end) throw new IllegalStateException(
-              s"truncated BAM record at inflated offset $cur of $path")
-            closeNow()
-          } else if (w.voffset(cur) >= vEnd) {
-            finished = true; closeNow()
-          } else {
-            val bs = w.i32(cur)
-            if (!ensure(cur + 4 + bs)) {
-              finished = true
-              throw new IllegalStateException(
-                s"truncated BAM record at inflated offset $cur of $path")
-            }
-            val onRef = w.i32(cur + 4) == refId
-            val pos1 = w.i32(cur + 8) + 1
-            if (onRef && pos1 > end1) {
-              finished = true; closeNow()
-            } else if (!onRef || pos1 + math.max(1, refSpan(cur)) - 1 < beg1) {
-              cur += 4 + bs
-              w.trimBefore(cur)
-            } else atRecord = true
-          }
-        }
-        atRecord
-      }
-      def next(): Bam.BamRecord = {
-        if (!hasNext) throw new NoSuchElementException("past end of BAM chunk")
-        val bs = w.i32(cur)
-        val (arr, idx) = w.raw(cur + 4)
-        val rec = Bam.decodeRecord(arr, idx, bs, refs)
-        cur += 4 + bs
-        w.trimBefore(cur)
-        atRecord = false
-        rec
-      }
-    }
-  }
-
-  /** BAM CIGAR op codes (`MIDNSHP=X` order) that consume reference bases:
-    * M, D, N, = and X — the ops [[graft.align.Cigar.refConsumed]] counts.
+  /** BAM CIGAR op codes, in `MIDNSHP=X` order; true for the ones that
+    * consume reference bases: M, D, N, = and X. Codes 9–15 are invalid.
+    * [[graft.align.Cigar.refConsumed]] is the same span over CIGAR text.
     */
   private val RefOps: Array[Boolean] =
-    Array.tabulate(16)(i => i == 0 || i == 2 || i == 3 || i == 7 || i == 8)
+    Array.tabulate(9)(i => i == 0 || i == 2 || i == 3 || i == 7 || i == 8)
 }

@@ -20,8 +20,10 @@ class BamScanSpec extends AnyFunSuite {
   private val rnd = new scala.util.Random(11)
   private val bases = "ACGT"
 
-  /** Coordinate-sorted synthetic records across three references. */
-  private def mkRecords(n: Int): Seq[Bam.BamRecord] = {
+  /** Coordinate-sorted synthetic records across three references; with
+    * `everyOp`, cigars drawn by [[anyCigar]].
+    */
+  private def mkRecords(n: Int, everyOp: Boolean = false): Seq[Bam.BamRecord] = {
     var pos = Map("chr1" -> 1, "chr2" -> 1, "chr3" -> 1)
     (0 until n).map { i =>
       val rname = s"chr${i * 3 / n + 1}" // sorted: chr1 block, then chr2, chr3
@@ -31,7 +33,8 @@ class BamScanSpec extends AnyFunSuite {
       val seq = Array.fill(len)(bases(rnd.nextInt(4))).mkString
       val qual = Array.fill(len)((33 + rnd.nextInt(60)).toChar).mkString
       val cigar =
-        if (i % 7 == 0 && len > 12) s"5S${len - 10}M5S"
+        if (everyOp) anyCigar(len)
+        else if (i % 7 == 0 && len > 12) s"5S${len - 10}M5S"
         else if (i % 5 == 0 && len > 8) s"${len - 4}M2D4M"
         else s"${len}M"
       val opt: Map[String, String] =
@@ -39,6 +42,24 @@ class BamScanSpec extends AnyFunSuite {
       Bam.BamRecord(f"r$i%05d", 0, rname, p, 60, cigar, "*", 0, 0, seq, qual, opt)
     }
   }
+
+  /** A CIGAR over `len` (≥ 20) read bases from every op class the span
+    * definitions tell apart: I, N, = and X, clips and pads, and "*".
+    */
+  private def anyCigar(len: Int): String = rnd.nextInt(7) match {
+    case 0 => "*"
+    case 1 => s"${len - 3}M3I"
+    case 2 => s"${len - 8}M${1 + rnd.nextInt(20000)}N8M"
+    case 3 => s"${len / 2}=1X${len - len / 2 - 1}="
+    case 4 => s"2H4S${len - 8}M${1 + rnd.nextInt(40)}D4M"
+    case 5 => s"${len - 10}M1P2I${1 + rnd.nextInt(9)}D8X"
+    case _ => s"${len}M"
+  }
+
+  /** True when `e` or a cause of it says `msg`. */
+  private def mentions(e: Throwable, msg: String): Boolean =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+      .exists(t => Option(t.getMessage).exists(_.contains(msg)))
 
   private def writeBam(recs: Seq[Bam.BamRecord], blockData: Int): String = {
     val refs = Seq(("chr1", 1 << 20), ("chr2", 1 << 20), ("chr3", 1 << 20))
@@ -84,7 +105,11 @@ class BamScanSpec extends AnyFunSuite {
   }
 
   test("truncated BAM fails loudly through the split reader") {
-    val recs = mkRecords(100)
+    // the last read spans more than two blocks, so a cut at the last data
+    // block boundary falls inside it
+    val long = Bam.BamRecord("long", 0, "chr3", 100000, 60, "5000M", "*", 0, 0,
+      "ACGT" * 1250, "I" * 5000, Map.empty)
+    val recs = mkRecords(100) :+ long
     val path = writeBam(recs, blockData = 2048)
     val bytes = Files.readAllBytes(java.nio.file.Paths.get(path))
     val cut = java.util.Arrays.copyOf(bytes, bytes.length - 40) // rips the EOF + part of last block
@@ -95,6 +120,49 @@ class BamScanSpec extends AnyFunSuite {
     }
     assert(e.getMessage.contains("BGZF") || e.getMessage.contains("truncated") ||
       Option(e.getCause).exists(c => c.getMessage.contains("BGZF") || c.getMessage.contains("truncated")))
+
+    // the index build and a region fetch over a file cut at its last data
+    // block boundary; the fetch's .bai is built from the whole file first
+    val blocks = Iterator.iterate(0L)(p => p + Bgzf.inflateBlockAt(bytes, p.toInt)._2)
+      .takeWhile(_ < bytes.length).toVector
+    val atBlock = java.util.Arrays.copyOf(bytes, blocks(blocks.length - 2).toInt)
+    val g = Files.createTempFile("bamcut", ".bam")
+    Files.write(g, bytes)
+    val fs = new Path(g.toString).getFileSystem(new Configuration())
+    Bai.write(Bai.build(fs, new Path(g.toString)), fs, new Path(g.toString + ".bai"))
+    Files.write(g, atBlock)
+    val built = intercept[IllegalStateException](Bai.build(fs, new Path(g.toString)))
+    assert(built.getMessage.contains("truncated"), built.getMessage)
+    val fetched = intercept[org.apache.spark.SparkException] {
+      Bam.fetch(spark, g.toString, "chr3", 100000, 100010).collect()
+    }
+    assert(mentions(fetched, "truncated"), fetched.getMessage)
+  }
+
+  test("a corrupt record fails the index build and the split reader, with path and offset") {
+    val refs = Seq(("chr1", 1 << 20), ("chr2", 1 << 20), ("chr3", 1 << 20))
+    val clean = Bam.encode(mkRecords(60).iterator, refs)
+    val le = java.nio.ByteBuffer.wrap(clean).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+    var p = Bam.encode(Iterator.empty, refs).length
+    for (_ <- 0 until 30) p += 4 + le.getInt(p)
+    // the 31st record's first CIGAR op gets code 9, one past X; or its
+    // block_size gets -4, which would step the walk back onto the record
+    val badOp = clean.clone()
+    val op = p + 36 + (clean(p + 12) & 0xff)
+    badOp(op) = ((badOp(op) & 0xf0) | 9).toByte
+    val badSize = clean.clone()
+    java.nio.ByteBuffer.wrap(badSize).order(java.nio.ByteOrder.LITTLE_ENDIAN).putInt(p, -4)
+    for ((payload, msg) <- Seq(
+        badOp -> s"invalid CIGAR op code 9 at inflated offset $p of",
+        badSize -> s"corrupt BAM record at inflated offset $p of")) {
+      val f = Files.createTempFile("bambad", ".bam")
+      Files.write(f, Bgzf.compress(payload, 2048))
+      val fs = new Path(f.toString).getFileSystem(new Configuration())
+      val built = intercept[RuntimeException](Bai.build(fs, new Path(f.toString)))
+      assert(built.getMessage.contains(msg) && built.getMessage.contains(f.toString), built.getMessage)
+      val read = intercept[org.apache.spark.SparkException](Bam.read(spark, f.toString).collect())
+      assert(mentions(read, msg) && mentions(read, f.toString), read.getMessage)
+    }
   }
 
   test("reg2bin/reg2bins match the SAM-spec binning scheme") {
@@ -172,7 +240,7 @@ class BamScanSpec extends AnyFunSuite {
     val pruned = files.count { p =>
       val hp = new Path(p)
       val fs = hp.getFileSystem(conf)
-      val hdr = { val in = fs.open(hp); try BamScan.readHeader(in) finally in.close() }
+      val hdr = BamScan.readHeader(fs, hp)
       val refId = hdr.refs.indexOf(rname)
       refId < 0 ||
         Bai.chunksFor(Bai.read(fs, new Path(p + ".bai")), refId, beg - 1, end).isEmpty
@@ -335,9 +403,12 @@ class BamScanSpec extends AnyFunSuite {
     // (record count, block size, split size) triples — the union of all
     // splits must be exactly the whole-file decode, every time. This is
     // the ownership contract under fuzz, not just at hand-picked sizes.
+    // Each case also fetches one random region through the index and the
+    // chunk reader, whose raw-CIGAR span must agree with the text one.
     val conf = new Configuration()
+    var overlaps = 0
     for (c <- 1 to 25) {
-      val recs = mkRecords(20 + rnd.nextInt(150))
+      val recs = mkRecords(20 + rnd.nextInt(150), everyOp = true)
       val blockData = 256 + rnd.nextInt(4000)
       val path = writeBam(recs, blockData)
       val fileLen = new java.io.File(path).length()
@@ -355,8 +426,27 @@ class BamScanSpec extends AnyFunSuite {
           s"fileLen=$fileLen → ${got.size} records, expected ${want.size}")
       assert(got.sortBy(_.header) == want.sortBy(_.header),
         s"case $c: record content drifted through the split path")
+
+      val refId = rnd.nextInt(3)
+      val rname = s"chr${refId + 1}"
+      val onRef = want.filter(_.rname == rname)
+      val beg = if (onRef.isEmpty) 1 else math.max(1, onRef(rnd.nextInt(onRef.size)).pos - rnd.nextInt(3000))
+      val end = beg + rnd.nextInt(5000)
+      val fetched = Bai.chunksFor(Bai.build(fs, new Path(path)), refId, beg - 1, end).flatMap { ch =>
+        BamScan.chunkRecords(fs, new Path(path), Array("chr1", "chr2", "chr3"), ch.beg, ch.end,
+          refId, beg, end)
+      }
+      val overlap = want.filter { r =>
+        r.rname == rname && r.pos <= end &&
+          r.pos + math.max(1, graft.align.Cigar.refConsumed(r.cigar)) - 1 >= beg
+      }
+      assert(fetched.sortBy(_.header) == overlap.sortBy(_.header),
+        s"case $c: region $rname:$beg-$end fetched ${fetched.size} records, " +
+          s"the text-CIGAR overlap has ${overlap.size}")
+      overlaps += overlap.size
       new java.io.File(path).delete()
     }
+    assert(overlaps > 0, "the random regions must overlap some records")
   }
 
   test("property: syncToBlock always lands on the next true block boundary") {
