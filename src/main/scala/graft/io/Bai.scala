@@ -157,25 +157,20 @@ object Bai {
   def compressedBytesTouched(chunks: Seq[Chunk], blockLenHint: Long = 65536L): Long =
     chunks.map(c => ((c.end >> 16) - (c.beg >> 16)) + blockLenHint).sum
 
-  /** Index every `.bam` under `path` (file/glob/dir), one task per file —
-    * index construction is inherently sequential WITHIN a file (virtual
-    * offsets accumulate along the block chain) but embarrassingly parallel
-    * ACROSS files, which is the shape of real many-BAM corpora. Writes
-    * `<file>.bai` next to each input; returns the .bai paths.
+  /** Index every `.bam` under `path` (file/glob/dir, listed by
+    * [[SplitFiles.list]]: hidden and zero-length files skipped), one task
+    * per file — index construction is inherently sequential WITHIN a file
+    * (virtual offsets accumulate along the block chain) but embarrassingly
+    * parallel ACROSS files, which is the shape of real many-BAM corpora.
+    * Writes `<file>.bai` next to each input; returns the .bai paths.
     */
   def buildAll(spark: org.apache.spark.sql.SparkSession, path: String): Seq[String] = {
     val fs = new Path(path).getFileSystem(spark.sessionState.newHadoopConf())
-    val files = Bam.listBams(fs, path).map(_.getPath.toString)
-    val serConf = new SerializableHadoopConf(spark.sessionState.newHadoopConf())
-    spark.sparkContext
-      .parallelize(files, math.max(files.size, 1))
-      .map { p =>
-        val hp = new Path(p)
-        val f = hp.getFileSystem(serConf.value)
-        write(build(f, hp), f, new Path(p + ".bai"))
-        p + ".bai"
-      }
-      .collect().toSeq
+    val files = SplitFiles.list(fs, path, Bam.isBam).map(_.getPath.toString)
+    SplitFiles.launch(spark, files, files.size)(identity) { (f, p) =>
+      write(build(f, new Path(p)), f, new Path(p + ".bai"))
+      Iterator.single(p + ".bai")
+    }.collect().toSeq
   }
 
   // ---- .bai file format (little-endian) ---------------------------------

@@ -3,6 +3,8 @@ package graft.io
 import java.io.ByteArrayOutputStream
 import java.nio.charset.StandardCharsets.US_ASCII
 
+import org.apache.hadoop.fs.Path
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -177,9 +179,11 @@ object Bam {
     }
 
   /** BAM files/glob/dir → the [[Sam.read]] frame (11 std columns + opt).
-    * Each file is cut into `splitSize` byte ranges and scanned in
-    * parallel with block + record resync ([[BamScan.splitRecords]]) —
-    * a single huge BAM gets bytes/`splitSize` tasks, not one.
+    * [[SplitFiles.scan]] lists the `.bam` files (hidden and zero-length
+    * ones skipped), cuts each into `splitSize` byte ranges and pools
+    * contiguous ranges into tasks; each range is scanned with block +
+    * record resync ([[BamScan.splitRecords]]), so a single huge BAM is
+    * read by many tasks, not one.
     * `minMapq` mirrors the reference's `min_mapping_quality`
     * (seqtables.py:254-256: reads below it are skipped on ingest).
     */
@@ -189,24 +193,9 @@ object Bam {
       minMapq: Int = -1,
       splitSize: Long = 64L * 1024 * 1024): DataFrame = {
     import spark.implicits._
-    require(splitSize > 0, s"splitSize must be positive, got $splitSize")
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    val splits: Seq[(String, Long, Long, Long, Long)] = listBams(fs, path).flatMap { st =>
-      val p = st.getPath.toString
-      val len = st.getLen
-      (0L until math.max(len, 1L) by splitSize).map { off =>
-        (p, off, math.min(off + splitSize, len), len, st.getModificationTime)
-      }
-    }
-    val serConf = new SerializableHadoopConf(spark.sessionState.newHadoopConf())
-    val rdd = spark.sparkContext
-      .parallelize(splits, math.max(splits.size, 1))
-      .flatMap { case (p, start, end, fileLen, mtime) =>
-        val hp = new org.apache.hadoop.fs.Path(p)
-        BamScan.splitRecords(hp.getFileSystem(serConf.value), hp, fileLen, start, end, mtime)
-      }
-    val df = rdd.toDF()
+    val df = SplitFiles.scan(spark, path, splitSize, isBam) { (fs, s) =>
+      BamScan.splitRecords(fs, new Path(s.path), s.fileLen, s.start, s.end, s.mtime)
+    }.toDF()
     if (minMapq >= 0) df.filter(col("mapq") >= minMapq) else df
   }
 
@@ -214,7 +203,7 @@ object Bam {
     * (ref: seqtables.py:233-246 passes `fetch_args` to `Samfile.fetch`):
     * region-restricted read of the coordinate-sorted, indexed BAMs under
     * `path` — one file, a glob or a sharded directory ([[writeSharded]]),
-    * listed by [[listBams]]. `beg1`/`end1` are 1-based inclusive, matching
+    * listed by [[SplitFiles.list]]. `beg1`/`end1` are 1-based inclusive, matching
     * the frame's `pos`. Returned reads OVERLAP the region (pysam
     * semantics): their span `[pos, pos + max(1, refSpan) - 1]` intersects
     * `[beg1, end1]`, a test [[BamScan.chunkRecords]] makes on each
@@ -243,9 +232,9 @@ object Bam {
       end1: Int): DataFrame = {
     import spark.implicits._
     require(beg1 >= 1 && end1 >= beg1, s"bad region $rname:$beg1-$end1")
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    val headers = listBams(fs, path).map(st => (st.getPath, BamScan.readHeader(fs, st.getPath).refs))
+    val fs = new Path(path).getFileSystem(spark.sessionState.newHadoopConf())
+    val headers = SplitFiles.list(fs, path, isBam)
+      .map(st => (st.getPath, BamScan.readHeader(fs, st.getPath).refs))
     require(headers.nonEmpty, s"no .bam files under $path")
     val named = headers.filter(_._2.contains(rname))
     require(named.nonEmpty, {
@@ -254,20 +243,14 @@ object Bam {
         s"(has ${seen.take(5).mkString(", ")}${if (seen.length > 5) ", …" else ""})"
     })
     val chunks: Seq[(String, Array[String], Int, Long, Long)] = named.flatMap { case (hp, refs) =>
-      val idx = Bai.read(fs, new org.apache.hadoop.fs.Path(hp.toString + ".bai"))
+      val idx = Bai.read(fs, new Path(hp.toString + ".bai"))
       val refId = refs.indexOf(rname)
       Bai.chunksFor(idx, refId, beg1 - 1, end1)
         .map(c => (hp.toString, refs, refId, c.beg, c.end))
     }
-    val serConf = new SerializableHadoopConf(spark.sessionState.newHadoopConf())
-    val rdd = spark.sparkContext
-      .parallelize(chunks, math.max(chunks.size, 1))
-      .flatMap { case (p, refs, refId, cb, ce) =>
-        val hp = new org.apache.hadoop.fs.Path(p)
-        BamScan.chunkRecords(hp.getFileSystem(serConf.value), hp, refs, cb, ce,
-          refId, beg1, end1)
-      }
-    rdd.toDF()
+    SplitFiles.launch(spark, chunks, chunks.size)(_._1) { case (f, (p, refs, refId, cb, ce)) =>
+      BamScan.chunkRecords(f, new Path(p), refs, cb, ce, refId, beg1, end1)
+    }.toDF()
   }
 
   /** Multi-shard coordinate-sorted BAM layout — the production form of
@@ -293,19 +276,6 @@ object Bam {
       refLength: Int = 500000000,
       blockData: Int = Bgzf.MaxBlockData): Seq[String] = {
     require(nShards >= 1, s"nShards must be >= 1, got $nShards")
-    // re-sharding into a dir that already holds shards must not leave
-    // stale part-*.bam behind — listBams-driven readers (read, fetch,
-    // Bai.buildAll) would silently mix old records into results
-    val dirPath = new org.apache.hadoop.fs.Path(dir)
-    val fs = dirPath.getFileSystem(df.sparkSession.sessionState.newHadoopConf())
-    if (fs.exists(dirPath)) {
-      listBams(fs, dir).foreach { st =>
-        val p = st.getPath
-        fs.delete(p, false)
-        val bai = new org.apache.hadoop.fs.Path(p.toString + ".bai")
-        if (fs.exists(bai)) fs.delete(bai, false)
-      }
-    }
     val sorted = df
       .repartitionByRange(nShards, col("rname"), col("pos"), xxhash64(col("header")))
       .sortWithinPartitions(col("rname"), col("pos"))
@@ -410,15 +380,22 @@ object Bam {
     * nature — a genome has dozens of contigs). Returns the shard paths.
     * Writes through the Hadoop FileSystem API, so any configured scheme
     * (local, HDFS, object stores) works; the partition-parallel shape —
-    * no driver funnel — is the point.
+    * no driver funnel — is the point. The `.bam` files `dir` already
+    * holds, and their `.bai`s, are deleted first: a write of fewer
+    * partitions must not leave stale shards that [[read]], [[fetch]] and
+    * [[Bai.buildAll]] would mix into their results.
     */
   def write(
       df: DataFrame, dir: String, refLength: Int = 500000000,
       blockData: Int = Bgzf.MaxBlockData): Seq[String] = {
     val spark = df.sparkSession
     import spark.implicits._
-    val dirPath = new org.apache.hadoop.fs.Path(dir)
+    val dirPath = new Path(dir)
     val dirFs = dirPath.getFileSystem(spark.sessionState.newHadoopConf())
+    SplitFiles.list(dirFs, dir, isBam).foreach { st =>
+      dirFs.delete(st.getPath, false)
+      dirFs.delete(new Path(st.getPath.toString + ".bai"), false)
+    }
     dirFs.mkdirs(dirPath)
     val refs = df.select(col("rname")).where(col("rname") =!= "*").distinct()
       .collect().map(_.getString(0)).sorted.map(n => (n, refLength)).toSeq
@@ -435,7 +412,7 @@ object Bam {
         if (it.isEmpty) Iterator.empty
         else {
           val pid = org.apache.spark.TaskContext.getPartitionId()
-          val shard = new org.apache.hadoop.fs.Path(s"$dir/part-$pid.bam")
+          val shard = new Path(s"$dir/part-$pid.bam")
           val payload = encode(it, refs)
           val out = shard.getFileSystem(serConf.value).create(shard, true)
           try out.write(Bgzf.compress(payload, blockData)) finally out.close()
@@ -445,24 +422,8 @@ object Bam {
       .collect().toSeq
   }
 
-  /** `.bam` files under a file/glob/dir path — the one listing rule shared
-    * by [[read]], [[fetch]] and [[Bai.buildAll]] so their notion of "which files
-    * exist" can't drift. Zero-length files are skipped here: they hold no
-    * records (a valid empty BAM still has a header + EOF block) and are
-    * usually in-flight writes or touch artifacts — letting one through
-    * would abort the whole job deep inside readHeader's magic check.
-    */
-  private[io] def listBams(
-      fs: org.apache.hadoop.fs.FileSystem,
-      path: String): Seq[org.apache.hadoop.fs.FileStatus] =
-    Option(fs.globStatus(new org.apache.hadoop.fs.Path(path)))
-      .getOrElse(Array.empty)
-      .flatMap { st =>
-        if (st.isDirectory) fs.listStatus(st.getPath).filter(_.isFile).toSeq
-        else Seq(st)
-      }
-      .filter(st => st.getPath.getName.endsWith(".bam") && st.getLen > 0)
-      .toSeq
+  /** The name test [[SplitFiles.list]] applies for every BAM reader. */
+  private[io] def isBam(name: String): Boolean = name.endsWith(".bam")
 
   // ---- little-endian helpers -------------------------------------------
 

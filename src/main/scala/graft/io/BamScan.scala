@@ -12,9 +12,9 @@ import org.apache.spark.TaskContext
   * ([[splitRecords]], behind `Bam.read`), the region chunk reader
   * ([[chunkRecords]], behind `Bam.fetch`) and the index build
   * ([[Bai.build]]). The cursor owns the stream, the inflated window, the
-  * one truncation check and the raw field reads, binary CIGAR span
-  * included; each caller adds only its own rule for where to start and
-  * which records to take.
+  * one truncation check, the EOF-marker check and the raw field reads,
+  * binary CIGAR span included; each caller adds only its own rule for
+  * where to start and which records to take.
   *
   * BGZF blocks are independently inflatable, so any byte range of a BAM
   * can be decompressed without touching the rest — but neither a split
@@ -130,12 +130,15 @@ private[io] object BamScan {
   private final class BlockFeed(in: java.io.InputStream, startOffset: Long) {
     private var off = startOffset
     def fileOffset: Long = off
+    /** True when the last block read had no payload (the EOF marker). */
+    var endedEmpty = false
     /** Inflate the next block into `w`; false at EOF. (Zero-payload
       * blocks — the EOF marker — return true and append nothing.)
       */
     def feed(w: InflatedWindow): Boolean =
       Bgzf.readBlockFrom(in) match {
-        case Some((u, blockLen)) => w.append(off, u); off += blockLen; true
+        case Some((u, blockLen)) =>
+          w.append(off, u); off += blockLen; endedEmpty = u.isEmpty; true
         case None => false
       }
   }
@@ -256,6 +259,14 @@ private[io] object BamScan {
       window.end >= n
     }
 
+    /** The chain ended cleanly: that is the end of the file only after
+      * the empty block BGZF writers put last. Without it, a file cut at
+      * a block boundary that is also a record boundary would read as a
+      * shorter, valid file.
+      */
+    private def cleanEnd(): Unit =
+      if (!feed.endedEmpty) throw new IllegalStateException(s"missing BGZF EOF marker in $path")
+
     private def need(n: Long): Unit =
       if (!ensure(n)) throw new IllegalStateException(
         s"truncated BAM at inflated offset $at of $path: needs ${n - at} bytes, " +
@@ -287,17 +298,19 @@ private[io] object BamScan {
       at = p
       // the first record may start in a later block, or the file has none
       if (ensure(p + 1)) BamHeader(refs, w.ownerFileOffset(p), (w.voffset(p) & 0xffff).toInt)
-      else BamHeader(refs, Long.MaxValue, 0)
+      else { cleanEnd(); BamHeader(refs, Long.MaxValue, 0) }
     }
 
     /** Put the cursor on the record at inflated offset `abs`. */
     def moveTo(abs: Long): Unit = at = abs
 
     /** True when a whole record is at the cursor, false at a clean end of
-      * the block chain; a record cut short is the one truncation error.
+      * the block chain (which must be the EOF marker); a record cut short
+      * is the one truncation error.
       */
     def advance(): Boolean =
-      (ensure(at + 4) || at != window.end) && {
+      if (!ensure(at + 4) && at == window.end) { cleanEnd(); false }
+      else {
         need(at + 4)
         size = window.i32(at)
         require(size >= 32, s"corrupt BAM record at inflated offset $at of $path: block_size $size")

@@ -1,7 +1,5 @@
 package graft.io
 
-import java.io.InputStream
-
 import org.apache.hadoop.fs.Path
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -23,13 +21,16 @@ import org.apache.spark.sql.functions._
   * by the split containing their first byte — the classic Hadoop text-split
   * contract, one record-length of overread per task).
   *
-  * Scan parallelism is total bytes / `splitSize` with NO exchange in the
-  * plan (the round-1 version moved every byte through a full shuffle just
-  * to group lines by index — and a global line index also silently
-  * misassembles multi-file inputs whose line counts aren't multiples of 4;
-  * per-file offsets make that impossible). Gzipped inputs are detected by
-  * suffix and read as one split per file (gzip is not splittable).
-  * Truncated trailing records fail loudly.
+  * The files, the byte ranges and the tasks come from [[SplitFiles]]:
+  * hidden and zero-length files are skipped, each file is cut into
+  * `splitSize` ranges and contiguous ranges are pooled into tasks, with
+  * NO exchange in the plan (the round-1 version moved every byte through
+  * a full shuffle just to group lines by index — and a global line index
+  * also silently misassembles multi-file inputs whose line counts aren't
+  * multiples of 4; per-file offsets make that impossible). Lines are
+  * decoded as UTF-8, so a non-ASCII read name survives. Gzipped inputs
+  * are detected by suffix and read as one split per file (gzip is not
+  * splittable). Truncated trailing records fail loudly.
   */
 object Fastq {
 
@@ -38,65 +39,24 @@ object Fastq {
       spark: SparkSession,
       path: String,
       splitSize: Long = 128L * 1024 * 1024): DataFrame = {
-    val hPath = new Path(path)
-    val fs = hPath.getFileSystem(spark.sessionState.newHadoopConf())
-    val statuses = Option(fs.globStatus(hPath)).getOrElse(Array.empty)
-      .flatMap { st =>
-        if (st.isDirectory) fs.listStatus(st.getPath).filter(_.isFile).toSeq
-        else Seq(st)
-      }
-      .filter { s =>
-        val n = s.getPath.getName
-        !n.startsWith("_") && !n.startsWith(".")
-      }
-    val splits: Seq[(String, Long, Long, Boolean)] = statuses.toSeq.flatMap { st =>
-      val p = st.getPath.toString
-      val len = st.getLen
-      if (p.endsWith(".gz")) Seq((p, 0L, Long.MaxValue, true))
-      else (0L until math.max(len, 1L) by splitSize).map { off =>
-        (p, off, math.min(off + splitSize, len), false)
-      }
+    val rdd = SplitFiles.scan(spark, path, splitSize, _ => true, p => !gzipped(p.getName)) {
+      (fs, s) =>
+        if (gzipped(s.path)) {
+          val in = new java.util.zip.GZIPInputStream(fs.open(new Path(s.path)))
+          splitRecords(new OffsetLineReader(in, 0L), Long.MaxValue)
+        } else splitRecords(SplitFiles.lines(fs, s), s.end)
     }
-    // ship the SESSION Hadoop conf to executors (a bare new Configuration()
-    // would drop spark.hadoop.* settings — object-store credentials,
-    // custom filesystems — so listing would work and opening would not)
-    val serConf = new SerializableHadoopConf(spark.sessionState.newHadoopConf())
-    val rdd = spark.sparkContext
-      .parallelize(splits, math.max(splits.size, 1))
-      .mapPartitions { it =>
-        it.flatMap { case (p, start, end, gz) =>
-          val hp = new Path(p)
-          val stream = hp.getFileSystem(serConf.value).open(hp)
-          if (gz) {
-            val in = new java.util.zip.GZIPInputStream(stream)
-            splitRecords(in, 0L, Long.MaxValue, 0L)
-          } else {
-            // start one byte early: if the split begins exactly at a line
-            // start, the discarded "partial line" is just the previous
-            // line's '\n' and nothing real is skipped
-            val seekTo = math.max(0L, start - 1)
-            stream.seek(seekTo)
-            splitRecords(stream, start, end, seekTo)
-          }
-        }
-      }
     spark.createDataFrame(rdd).toDF("read_id", "seq", "qual")
   }
 
-  /** Assemble records whose header line starts in [splitStart, splitEnd)
-    * from a stream positioned at `streamPos` (≤ splitStart).
+  private def gzipped(name: String): Boolean = name.endsWith(".gz")
+
+  /** Assemble the records whose header line starts before `splitEnd`,
+    * from a reader on the first line of the split.
     */
-  private[io] def splitRecords(
-      in: InputStream,
-      splitStart: Long,
-      splitEnd: Long,
-      streamPos: Long): Iterator[(String, String, String)] = {
-    val r = new OffsetLineReader(in, streamPos)
-    // abandoned iterators (limit/take over many splits) never reach the
-    // close() below — release the stream at task end regardless
-    Option(org.apache.spark.TaskContext.get()).foreach(
-      _.addTaskCompletionListener[Unit](_ => r.close()))
-    if (splitStart > 0) r.readLine() // discard the partial line
+  private def splitRecords(
+      r: OffsetLineReader,
+      splitEnd: Long): Iterator[(String, String, String)] = {
     val buf = scala.collection.mutable.Queue.empty[(Long, String)]
     def fill(n: Int): Unit = {
       var more = true
@@ -137,46 +97,6 @@ object Fastq {
         buf.dequeue() // '+' line
         val q = buf.dequeue()._2
         (h.stripPrefix("@").split("\\s+", 2)(0), s, q)
-      }
-    }
-  }
-
-  /** Byte-offset-tracking ASCII line reader ('\n' terminated, '\r' stripped). */
-  private final class OffsetLineReader(in: InputStream, startPos: Long) {
-    private var pos = startPos
-    private val buf = new Array[Byte](64 * 1024)
-    private var bufLen = 0
-    private var bufPos = 0
-    private var eof = false
-
-    /** Idempotent; latches EOF so later readLine() calls stay null. */
-    def close(): Unit = {
-      if (!eof) { eof = true; try in.close() catch { case _: java.io.IOException => } }
-    }
-
-    /** (lineStartOffset, line) or null at EOF (latched — safe to re-call). */
-    def readLine(): (Long, String) = {
-      if (eof) return null
-      val start = pos
-      val sb = new java.lang.StringBuilder()
-      var done = false
-      var sawAny = false
-      while (!done) {
-        if (bufPos == bufLen) {
-          bufLen = in.read(buf)
-          bufPos = 0
-          if (bufLen <= 0) { done = true; eof = true; in.close() }
-        } else {
-          val b = buf(bufPos); bufPos += 1; pos += 1
-          sawAny = true
-          if (b == '\n') done = true else sb.append(b.toChar)
-        }
-      }
-      if (!sawAny) null
-      else {
-        var s = sb.toString
-        if (s.nonEmpty && s.charAt(s.length - 1) == '\r') s = s.substring(0, s.length - 1)
-        (start, s)
       }
     }
   }

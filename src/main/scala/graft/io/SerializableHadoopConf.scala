@@ -7,7 +7,8 @@ import org.apache.hadoop.conf.Configuration
   * session configuration (a bare `new Configuration()` on the executor
   * would drop `spark.hadoop.*` settings — object-store credentials,
   * custom filesystems — so listing would work and opening would not).
-  * Shared by the split readers ([[Fastq]], [[Bam]]).
+  * Shipped by [[SplitFiles.launch]] and by the sinks ([[Bam.write]],
+  * [[Warc.write]]).
   */
 private[io] final class SerializableHadoopConf(
     @transient private var conf: Configuration)

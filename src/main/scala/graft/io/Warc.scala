@@ -308,7 +308,7 @@ object Warc {
               bos.toByteArray
             } else raw
           val one = splitRecords(
-            new java.io.ByteArrayInputStream(recBytes), 0L, Long.MaxValue, 0L)
+            new OffsetLineReader(new java.io.ByteArrayInputStream(recBytes), 0L), Long.MaxValue)
           if (!one.hasNext)
             throw new IllegalStateException(
               s"CDX entry at $shard:$off+$len does not parse as a WARC record")
@@ -332,6 +332,9 @@ object Warc {
 
   /** Read `.warc` / `.warc.gz` files under a file/glob/dir path. Output:
     * (record_id, warc_type, target_uri, content_length, payload BINARY).
+    * [[SplitFiles.scan]] lists the files (hidden and zero-length ones
+    * skipped), cuts them into `splitSize` byte ranges and pools
+    * contiguous ranges into tasks.
     *
     * BOTH layouts shard by byte range. Plain `.warc` resyncs on
     * validated `WARC/1.0` header blocks; `.warc.gz` resyncs on gzip
@@ -374,48 +377,15 @@ object Warc {
       path: String,
       splitSize: Long = 128L * 1024 * 1024,
       maxMemberBytes: Int = DefaultMaxMemberBytes): DataFrame = {
-    val hPath = new Path(path)
-    val fs = hPath.getFileSystem(spark.sessionState.newHadoopConf())
-    val statuses = listWarcs(fs, path)
-    val splits: Seq[(String, Long, Long, Boolean)] = statuses.flatMap { st =>
-      val p = st.getPath.toString
-      val len = st.getLen
-      val gz = p.endsWith(".gz")
-      (0L until math.max(len, 1L) by splitSize).map { off =>
-        (p, off, math.min(off + splitSize, len), gz)
-      }
+    val rdd = SplitFiles.scan(spark, path, splitSize,
+        n => n.endsWith(".warc") || n.endsWith(".warc.gz")) { (fs, s) =>
+      val hp = new Path(s.path)
+      if (s.path.endsWith(".gz")) {
+        val stream = fs.open(hp)
+        stream.seek(s.start)
+        gzMemberRecords(stream, s.start, s.end, maxMemberBytes, () => fs.open(hp))
+      } else splitRecords(SplitFiles.lines(fs, s), s.end)
     }
-    val serConf = new SerializableHadoopConf(spark.sessionState.newHadoopConf())
-    // Split POOLING (FileSourceScanExec-style bin-packing): every split
-    // keeps its exact byte range — ownership-by-first-byte and the
-    // boundary resync logic are exercised at every splitSize boundary
-    // exactly as before — but contiguous splits share one TASK instead
-    // of paying a scheduler launch each (a small-splitSize stress read
-    // of a 10 MB archive used to schedule ~1300 tasks). The partition
-    // count stays scale-adaptive: one task per split once splits reach
-    // ~128 MB (the production shape, where pooling is inert), and at
-    // most ~4 waves of the available cores for many-tiny-split layouts.
-    val totalBytes = statuses.map(_.getLen).sum
-    val targetParts = math.max(
-      spark.sparkContext.defaultParallelism * 4,
-      (totalBytes / (128L * 1024 * 1024)).toInt + 1)
-    val rdd = spark.sparkContext
-      .parallelize(splits, math.max(1, math.min(splits.size, targetParts)))
-      .mapPartitions { it =>
-        it.flatMap { case (p, start, end, gz) =>
-          val hp = new Path(p)
-          val stream = hp.getFileSystem(serConf.value).open(hp)
-          if (gz) {
-            stream.seek(start)
-            gzMemberRecords(stream, start, end, maxMemberBytes,
-              () => hp.getFileSystem(serConf.value).open(hp))
-          } else {
-            val seekTo = math.max(0L, start - 1)
-            stream.seek(seekTo)
-            splitRecords(stream, start, end, seekTo)
-          }
-        }
-      }
     spark.createDataFrame(rdd)
       .toDF("record_id", "warc_type", "target_uri", "refers_to", "content_length", "payload")
   }
@@ -470,13 +440,13 @@ object Warc {
                 scanner.close()
                 done = true
                 current = splitRecords(
-                  new java.util.zip.GZIPInputStream(reopen()),
-                  0L, Long.MaxValue, 0L)
+                  new OffsetLineReader(new java.util.zip.GZIPInputStream(reopen()), 0L),
+                  Long.MaxValue)
                 return
             }
           if (member == null) { done = true; scanner.close() }
           else current = splitRecords(
-            new java.io.ByteArrayInputStream(member), 0L, Long.MaxValue, 0L)
+            new OffsetLineReader(new java.io.ByteArrayInputStream(member), 0L), Long.MaxValue)
         }
       }
 
@@ -489,17 +459,12 @@ object Warc {
 
   private val HeaderRe = "^([A-Za-z][A-Za-z0-9-]*):\\s*(.*)$".r
 
-  /** Emit records whose version line starts in [splitStart, splitEnd). */
+  /** Emit the records whose version line starts before `splitEnd`, from
+    * a reader on the first line of the split.
+    */
   private[io] def splitRecords(
-      in: InputStream,
-      splitStart: Long,
-      splitEnd: Long,
-      streamPos: Long): Iterator[(String, String, String, String, Long, Array[Byte])] = {
-    val r = new WarcByteReader(in, streamPos)
-    Option(org.apache.spark.TaskContext.get()).foreach(
-      _.addTaskCompletionListener[Unit](_ => r.close()))
-    if (splitStart > 0) r.readLine() // discard the partial line
-
+      r: OffsetLineReader,
+      splitEnd: Long): Iterator[(String, String, String, String, Long, Array[Byte])] = {
     // one-line pushback: when header validation fails ON a line that
     // could itself open a record (a payload ending in "WARC/1.0"
     // immediately before a real record), the scanner must re-examine
@@ -574,21 +539,6 @@ object Warc {
       }
     }
   }
-
-  private[io] def listWarcs(
-      fs: org.apache.hadoop.fs.FileSystem,
-      path: String): Seq[org.apache.hadoop.fs.FileStatus] =
-    Option(fs.globStatus(new Path(path)))
-      .getOrElse(Array.empty)
-      .flatMap { st =>
-        if (st.isDirectory) fs.listStatus(st.getPath).filter(_.isFile).toSeq
-        else Seq(st)
-      }
-      .filter { st =>
-        val n = st.getPath.getName
-        (n.endsWith(".warc") || n.endsWith(".warc.gz")) && st.getLen > 0
-      }
-      .toSeq
 
   /** Splittable gzip MEMBER scanner: finds member starts in
     * [splitStart, splitEnd) by magic-byte scan, validates each candidate
@@ -745,79 +695,6 @@ object Warc {
         expectedNext = winStart + scanPos
         bytes
       } finally inf.end()
-    }
-  }
-
-  /** Byte reader tracking absolute offsets: CRLF/LF line reads for the
-    * header region plus exact-length raw reads for payloads.
-    */
-  private final class WarcByteReader(in: InputStream, startPos: Long) {
-    private var pos = startPos
-    private val buf = new Array[Byte](64 * 1024)
-    private var bufLen = 0
-    private var bufPos = 0
-    private var eof = false
-
-    def close(): Unit = {
-      if (!eof) { eof = true; try in.close() catch { case _: java.io.IOException => } }
-    }
-
-    /** (lineStartOffset, line sans CR/LF) or null at latched EOF.
-      *
-      * The line's bytes are accumulated RAW and decoded as UTF-8 at the
-      * end — appending `b.toChar` on a signed Byte would sign-extend
-      * every non-ASCII byte (0xE2 -> U+FFE2) and never assemble
-      * multi-byte sequences, silently corrupting non-ASCII
-      * WARC-Target-URI values that [[Warc.write]] emits as UTF-8.
-      */
-    def readLine(): (Long, String) = {
-      if (eof) return null
-      val start = pos
-      var line = new Array[Byte](128)
-      var lineLen = 0
-      var done = false
-      var sawAny = false
-      while (!done) {
-        if (bufPos == bufLen) {
-          bufLen = in.read(buf)
-          bufPos = 0
-          if (bufLen <= 0) { done = true; eof = true; in.close() }
-        } else {
-          val b = buf(bufPos); bufPos += 1; pos += 1
-          sawAny = true
-          if (b == '\n') done = true
-          else {
-            if (lineLen == line.length)
-              line = java.util.Arrays.copyOf(line, lineLen * 2)
-            line(lineLen) = b
-            lineLen += 1
-          }
-        }
-      }
-      if (!sawAny) null
-      else {
-        if (lineLen > 0 && line(lineLen - 1) == '\r') lineLen -= 1
-        (start, new String(line, 0, lineLen, StandardCharsets.UTF_8))
-      }
-    }
-
-    /** Exactly n raw bytes, or null if EOF interrupts. */
-    def readFully(n: Int): Array[Byte] = {
-      if (eof && n > 0) return null
-      val out = new Array[Byte](n)
-      var got = 0
-      while (got < n) {
-        if (bufPos == bufLen) {
-          bufLen = in.read(buf)
-          bufPos = 0
-          if (bufLen <= 0) { eof = true; in.close(); return null }
-        } else {
-          val take = math.min(n - got, bufLen - bufPos)
-          System.arraycopy(buf, bufPos, out, got, take)
-          bufPos += take; got += take; pos += take
-        }
-      }
-      out
     }
   }
 }

@@ -62,8 +62,6 @@ object SamDomain {
         .withColumn("rnext", lit("*")).withColumn("pnext", lit(0))
         .withColumn("tlen", lit(0))
       val tmp = s"/tmp/graft_bam_fixture/${new java.io.File(dir).getName}"
-      val d = new java.io.File(tmp)
-      if (d.exists) d.listFiles.foreach(_.delete())
       // two big shards with small (4 KiB) BGZF blocks, read through 16 KiB
       // splits: at the sf0.01 gate each shard spans >=4 splits, so block
       // sync + record resync run under the oracle hash — not just the
@@ -89,8 +87,6 @@ object SamDomain {
         .withColumn("rnext", lit("*")).withColumn("pnext", lit(0))
         .withColumn("tlen", lit(0))
       val tmp = s"/tmp/graft_bam_fetch/${new java.io.File(dir).getName}"
-      val d = new java.io.File(tmp)
-      if (d.exists) d.listFiles.foreach(_.delete())
       // .bai requires coordinate order. coalesce(1) is the single-shard
       // FIXTURE path only — the production layout is
       // Bam.writeSharded (range-partitioned coordinate-sorted shards,

@@ -137,6 +137,31 @@ class BamScanSpec extends AnyFunSuite {
       Bam.fetch(spark, g.toString, "chr3", 100000, 100010).collect()
     }
     assert(mentions(fetched, "truncated"), fetched.getMessage)
+
+    // a cut at a block boundary that is also a record boundary: 100
+    // records in small blocks, one of which ends with the 50th record;
+    // only the blocks holding the first 50 are kept, so the file lacks
+    // just its EOF marker
+    val refs = Seq(("chr1", 1 << 20), ("chr2", 1 << 20), ("chr3", 1 << 20))
+    val payload = Bam.encode(mkRecords(100).iterator, refs)
+    val le = java.nio.ByteBuffer.wrap(payload).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+    var at50 = Bam.encode(Iterator.empty, refs).length
+    for (_ <- 0 until 50) at50 += 4 + le.getInt(at50)
+    val head = Bgzf.compress(payload.take(at50), 512).dropRight(Bgzf.EofMarker.length)
+    val whole = Files.createTempFile("bamwhole", ".bam")
+    Files.write(whole, head ++ Bgzf.compress(payload.drop(at50), 512))
+    assert(Bam.read(spark, whole.toString, splitSize = 1024).count() == 100)
+    val noEof = Files.createTempFile("bamnoeof", ".bam")
+    Files.write(noEof, head)
+    val msg = s"missing BGZF EOF marker in file:$noEof"
+    for (splitSize <- Seq(64L << 20, 1024L)) {
+      val read = intercept[org.apache.spark.SparkException] {
+        Bam.read(spark, noEof.toString, splitSize = splitSize).collect()
+      }
+      assert(mentions(read, msg), read.getMessage)
+    }
+    val unmarked = intercept[IllegalStateException](Bai.build(fs, new Path(noEof.toString)))
+    assert(unmarked.getMessage.contains("missing BGZF EOF marker"), unmarked.getMessage)
   }
 
   test("a corrupt record fails the index build and the split reader, with path and offset") {
@@ -517,12 +542,26 @@ class BamScanSpec extends AnyFunSuite {
   }
 
   test("zero-length .bam files are skipped at listing, not aborted on (advice r3)") {
-    val dir = Files.createTempDirectory("bamdir")
+    // one listing rule for every reader: a directory holding one real
+    // file, a zero-length one (e.g. an in-progress write), and _SUCCESS
+    // and hidden copies of the real file; only the real file is read
+    def layout(ext: String, real: Array[Byte]): String = {
+      val dir = Files.createTempDirectory(s"listing_$ext")
+      Files.write(dir.resolve(s"good.$ext"), real)
+      Files.createFile(dir.resolve(s"inflight.$ext"))
+      Files.write(dir.resolve("_SUCCESS"), real)
+      Files.write(dir.resolve(s".part-0.$ext"), real)
+      dir.toString
+    }
     val recs = mkRecords(40)
-    val good = dir.resolve("good.bam")
-    Files.copy(java.nio.file.Paths.get(writeBam(recs, 2048)), good)
-    Files.createFile(dir.resolve("inflight.bam")) // zero bytes — e.g. an in-progress write
-    val df = Bam.read(spark, dir.toString)
-    assert(df.count() == 40, "valid file must still be read, empty one skipped")
+    val bamDir = layout("bam", Files.readAllBytes(java.nio.file.Paths.get(writeBam(recs, 2048))))
+    assert(Bam.read(spark, bamDir).count() == 40, "valid file must still be read, empty one skipped")
+    assert(Bai.buildAll(spark, bamDir).map(new Path(_).getName) == Seq("good.bam.bai"))
+    val fqDir = layout("fq", "@q1\nACGT\n+\nIIII\n@q2\nTTGG\n+\nIIII\n".getBytes("UTF-8"))
+    assert(Fastq.read(spark, fqDir).collect().map(_.getString(0)).sorted.toSeq == Seq("q1", "q2"))
+    val warcDir = layout("warc", ("WARC/1.0\r\nWARC-Type: response\r\n" +
+      "WARC-Record-ID: <urn:graft:w1>\r\nWARC-Target-URI: http://w1.example/\r\n" +
+      "Content-Length: 5\r\n\r\nhello\r\n\r\n").getBytes("UTF-8"))
+    assert(Warc.read(spark, warcDir).collect().map(_.getString(0)).toSeq == Seq("<urn:graft:w1>"))
   }
 }

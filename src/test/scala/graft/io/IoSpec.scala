@@ -66,6 +66,15 @@ class FastqSpec extends AnyFunSuite {
         .map(r => (r.getString(0), r.getString(1), r.getString(2))).toSeq
       assert(split == whole, s"splitSize=$splitSize mismatch: ${split.size} records")
     }
+    // a non-ASCII read name is decoded as UTF-8, whole and with a split
+    // boundary inside its header line (inside the two bytes of 'é')
+    val utf8 = new java.io.File(Files.createTempDirectory("fastq3u").toFile, "utf8.fq")
+    Files.writeString(utf8.toPath, "@réad_1 desc\nACGT\n+\nIIII\n@r2\nTTTT\n+\nIIII\n")
+    for (splitSize <- Seq(1L << 20, 3L)) {
+      val ids = Fastq.read(spark, utf8.getAbsolutePath, splitSize = splitSize)
+        .collect().map(_.getString(0)).sorted.toSeq
+      assert(ids == Seq("r2", "réad_1"), s"splitSize=$splitSize: $ids")
+    }
   }
 
   test("multi-file reads assemble per file (no cross-file line-index shift)") {
@@ -298,6 +307,8 @@ class BamSpec extends AnyFunSuite {
       ("r3", 0, "chr1", 9, 60, "4M", "*", 0, 0, "GGCC", "!!!!", Map.empty[String, String]))
       .toDF("header", "flag", "rname", "pos", "mapq", "cigar", "rnext",
         "pnext", "tlen", "seq", "qual", "opt")
+    // a 2-partition write over a 4-shard one leaves no stale shard behind
+    assert(Bam.write(df.union(df).union(df).repartition(4), dir).size == 4)
     val paths = Bam.write(df.repartition(2), dir)
     assert(paths.nonEmpty && paths.forall(_.endsWith(".bam")))
     val back = Bam.read(spark, dir).orderBy("header")
