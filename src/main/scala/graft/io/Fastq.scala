@@ -43,7 +43,7 @@ object Fastq {
       (fs, s) =>
         if (gzipped(s.path)) {
           val in = new java.util.zip.GZIPInputStream(fs.open(new Path(s.path)))
-          splitRecords(new OffsetLineReader(in, 0L), Long.MaxValue)
+          splitRecords(SplitFiles.reader(in, 0L), Long.MaxValue)
         } else splitRecords(SplitFiles.lines(fs, s), s.end)
     }
     spark.createDataFrame(rdd).toDF("read_id", "seq", "qual")

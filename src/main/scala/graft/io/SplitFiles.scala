@@ -98,24 +98,38 @@ private[io] object SplitFiles {
     val seekTo = math.max(0L, split.start - 1)
     val in = fs.open(new Path(split.path))
     in.seek(seekTo)
-    val r = new OffsetLineReader(in, seekTo)
+    val r = reader(in, seekTo)
     if (split.start > 0) r.readLine()
+    r
+  }
+
+  /** A line reader over a stream opened on a file, at offset `pos`. The
+    * stream is closed when the task completes, since an abandoned
+    * iterator (limit/take over many splits) never reaches EOF: one
+    * listener per opened stream, never one per record.
+    */
+  def reader(in: InputStream, pos: Long): OffsetLineReader = {
+    val r = new OffsetLineReader(in, pos)
+    Option(TaskContext.get()).foreach(_.addTaskCompletionListener[Unit](_ => r.close()))
     r
   }
 }
 
 /** Byte reader tracking absolute offsets: LF (CR-stripped) line reads
-  * plus exact-length raw reads for binary payloads. The stream is closed
-  * at EOF, by [[close]], or when the task completes, since an abandoned
-  * iterator (limit/take over many splits) never reaches EOF.
+  * plus exact-length raw reads for binary payloads, through a
+  * `bufSize`-byte buffer. The stream is closed at EOF or by [[close]];
+  * whoever opens a file stream also closes it at task end (see
+  * [[SplitFiles.reader]]). A reader over an in-memory record
+  * ([[OffsetLineReader.of]]) holds no stream and registers nothing, so
+  * it is garbage as soon as its record is parsed.
   */
-private[io] final class OffsetLineReader(in: InputStream, startPos: Long) {
+private[io] final class OffsetLineReader(in: InputStream, startPos: Long,
+    bufSize: Int = 64 * 1024) {
   private var pos = startPos
-  private val buf = new Array[Byte](64 * 1024)
+  private val buf = new Array[Byte](bufSize)
   private var bufLen = 0
   private var bufPos = 0
   private var eof = false
-  Option(TaskContext.get()).foreach(_.addTaskCompletionListener[Unit](_ => close()))
 
   /** Idempotent; latches EOF so later reads stay null. */
   def close(): Unit = {
@@ -179,4 +193,13 @@ private[io] final class OffsetLineReader(in: InputStream, startPos: Long) {
     }
     out
   }
+}
+
+private[io] object OffsetLineReader {
+  /** A reader over one in-memory record, its buffer sized to the record
+    * (at most 64 KiB).
+    */
+  def of(bytes: Array[Byte]): OffsetLineReader =
+    new OffsetLineReader(new java.io.ByteArrayInputStream(bytes), 0L,
+      math.max(1, math.min(bytes.length, 64 * 1024)))
 }

@@ -307,8 +307,7 @@ object Warc {
               while (n > 0) { bos.write(buf, 0, n); n = gin.read(buf) }
               bos.toByteArray
             } else raw
-          val one = splitRecords(
-            new OffsetLineReader(new java.io.ByteArrayInputStream(recBytes), 0L), Long.MaxValue)
+          val one = splitRecords(OffsetLineReader.of(recBytes), Long.MaxValue)
           if (!one.hasNext)
             throw new IllegalStateException(
               s"CDX entry at $shard:$off+$len does not parse as a WARC record")
@@ -440,13 +439,12 @@ object Warc {
                 scanner.close()
                 done = true
                 current = splitRecords(
-                  new OffsetLineReader(new java.util.zip.GZIPInputStream(reopen()), 0L),
+                  SplitFiles.reader(new java.util.zip.GZIPInputStream(reopen()), 0L),
                   Long.MaxValue)
                 return
             }
           if (member == null) { done = true; scanner.close() }
-          else current = splitRecords(
-            new OffsetLineReader(new java.io.ByteArrayInputStream(member), 0L), Long.MaxValue)
+          else current = splitRecords(OffsetLineReader.of(member), Long.MaxValue)
         }
       }
 

@@ -126,9 +126,7 @@ object BloomIndex {
   def writeBloomSidecar(spark: SparkSession, path: String, column: String,
       bitsPerKey: Int = 10, k: Int = 7): BloomMeta = {
     require(bitsPerKey >= 1 && k >= 1)
-    val snap = Layout.latestSnapshot(spark, path).getOrElse(
-      throw new IllegalStateException(
-        s"writeBloomSidecar: no committed table under $path"))
+    val snap = Layout.head(spark, path, "writeBloomSidecar")
     val maxRows = snap.files.map(_.rows).max
     val mBits = math.max(64L, ((maxRows * bitsPerKey + 63L) / 64L) * 64L)
     require(mBits <= Int.MaxValue.toLong, s"bloom bitset of $mBits bits per " +
@@ -179,9 +177,7 @@ object BloomIndex {
     */
   def extendBloomSidecar(spark: SparkSession, path: String, column: String)
       : BloomMeta = {
-    val snap = Layout.latestSnapshot(spark, path).getOrElse(
-      throw new IllegalStateException(
-        s"extendBloomSidecar: no committed table under $path"))
+    val snap = Layout.head(spark, path, "extendBloomSidecar")
     val meta = readMeta(spark, path, column)
     if (meta.version == snap.version) return meta // already current
     require(meta.version < snap.version,
@@ -228,9 +224,7 @@ object BloomIndex {
   def bloomPrunedRead(spark: SparkSession, path: String, column: String,
       values: Seq[Any]): (Int, Int, DataFrame) = {
     require(values.nonEmpty, "bloomPrunedRead: empty probe set")
-    val snap = Layout.latestSnapshot(spark, path).getOrElse(
-      throw new IllegalStateException(
-        s"bloomPrunedRead: no committed table under $path"))
+    val snap = Layout.head(spark, path, "bloomPrunedRead")
     val meta = readMeta(spark, path, column)
     require(meta.version == snap.version,
       s"bloom sidecar for '$column' under $path indexes snapshot " +

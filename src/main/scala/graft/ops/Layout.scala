@@ -74,6 +74,14 @@ final case class DvRef(name: String, nDeleted: Long)
   * NULL for the new column instead of failing the merge. None on
   * snapshots from before schema recording; such tables read bare (all
   * files share one physical schema) until their next commit records it.
+  *
+  * `minWriter` is derived at commit, never carried: [[next]] resets it
+  * and [[Layout.commitSnapshot]] stamps the level the snapshot's own
+  * features need (2 for deletion vectors or CHECK constraints, else
+  * nothing). A carried value could only be at most
+  * [[Layout.WriterVersion]] after the writable check, so carrying it
+  * would only keep a level whose feature is gone: a table whose last
+  * constraint was dropped reads as level 1 again.
   */
 final case class TableSnapshot(
     version: Long, keyName: String, files: Seq[SnapshotFile],
@@ -94,6 +102,29 @@ final case class TableSnapshot(
     * have held the extreme).
     */
   def hasDeletionVectors: Boolean = files.exists(_.dv.isDefined)
+  /** Each listed file's deletion-vector ref, by file name. */
+  def dvRefs: Map[String, Option[DvRef]] = files.iterator.map(f => f.name -> f.dv).toMap
+  /** File `f`'s [min, max] box on column `c`: the key box for the
+    * cluster key, else the recorded stats.
+    */
+  def box(f: SnapshotFile, c: String): (Long, Long) =
+    if (c == keyName) (f.minKey, f.maxKey) else f.stats(c)
+
+  /** The commit after this one: the next version, listing `files` under `op`,
+    * with every field the caller does not name carried unchanged. Every
+    * commit of an existing table is built here, so a new verb cannot
+    * forget a CHECK constraint, a tombstone or a txn mark.
+    */
+  def next(files: Seq[SnapshotFile], op: String,
+      keyName: String = this.keyName,
+      schemaHash: Option[String] = this.schemaHash,
+      txns: Map[String, Long] = this.txns,
+      statsCols: Seq[String] = this.statsCols,
+      schema: Option[org.apache.spark.sql.types.StructType] = this.schema,
+      droppedCols: Seq[String] = this.droppedCols,
+      constraints: Seq[(String, String)] = this.constraints): TableSnapshot =
+    TableSnapshot(version + 1, keyName, files, schemaHash, txns, op,
+      statsCols, schema, droppedCols, constraints)
 }
 
 object Layout {
@@ -319,50 +350,34 @@ object Layout {
     val smallPaths = candidates.map(_.getPath.toString).toIndexedSeq
     // an evolved table's smalls can span schema generations — read them
     // through the recorded schema so older files serve NULL columns.
-    // Committed candidates go through readFilesDv: compaction is the
+    // Committed candidates go through readFiles: compaction is the
     // deletion-vector MATERIALIZATION path (the rewritten generation
     // carries none), and a raw read would resurrect deleted rows.
     val smalls = committed match {
       case Some(snap) =>
-        readFilesDv(spark, path, snap,
-          candidates.map(_.getPath.getName).toIndexedSeq,
-          snap.files.iterator.map(f => f.name -> f.dv).toMap)
+        readFiles(spark, path, snap, candidates.map(_.getPath.getName).toIndexedSeq)
       case None => spark.read.parquet(smallPaths: _*)
     }
     val nRows = smalls.count()
     val totalBytes = candidates.map(_.getLen).sum
     val nOut = math.max(1L,
       (totalBytes + targetFileBytes - 1) / targetFileBytes).toInt
-    val token = java.util.UUID.randomUUID().toString.take(8)
-    val tmp = new org.apache.hadoop.fs.Path(s"$path/.compact-$token")
-    smalls.repartitionByRange(nOut, col(keyName))
-      .sortWithinPartitions(keyName)
-      .write.mode("overwrite").parquet(tmp.toString)
     // commit: move the rewritten files in under fresh names, verify the
-    // rewrite row count, then drop the originals + scratch
-    val rewritten = fs.listStatus(tmp)
-      .filter(st => st.isFile && st.getPath.getName.startsWith("part-"))
-    val moved = rewritten.zipWithIndex.map { case (st, i) =>
-      val target = new org.apache.hadoop.fs.Path(
-        s"$path/part-compact-$token-$i${suffixOf(st.getPath.getName)}")
-      if (!fs.rename(st.getPath, target))
-        throw new java.io.IOException(s"compact rename ${st.getPath} -> $target failed")
-      target.toString
-    }
-    val movedNames = moved.map(m => new org.apache.hadoop.fs.Path(m).getName)
+    // rewrite row count, then drop the originals
+    val movedNames = stageAndMoveIn(smalls, path, "compact", keyName, nOut)
     // one column-pruned scan of the rewritten files doubles as the
     // row-count verification AND the snapshot entries for the commit
     // (recomputed with the table's recorded stats columns, so the
     // rewritten generation stays as prunable as the original)
     val movedEntries = snapshotEntries(spark, path, keyName,
-      movedNames.toIndexedSeq, committed.map(_.statsCols).getOrElse(Nil))
+      movedNames, committed.map(_.statsCols).getOrElse(Nil))
     val nRowsAfter = movedEntries.map(_.rows).sum
     if (nRowsAfter != nRows) {
       // refuse to delete sources on a lossy rewrite — fail loudly with
       // both generations on disk (recoverable), never silently drop rows
       throw new IllegalStateException(
         s"compactFiles: rewrite row count $nRowsAfter != source $nRows; " +
-        s"sources left in place, rewrite committed under part-compact-$token-*")
+        s"sources left in place, rewrite moved in as ${movedNames.mkString(", ")}")
     }
     if (commit) {
       val candidateNames = candidates.map(_.getPath.getName).toSet
@@ -380,13 +395,10 @@ object Layout {
       // schema fingerprint, txn map and stats columns survive a
       // compaction unchanged — it permutes bytes, never the schema, the
       // ingest high-water marks, or the pruning contract
-      commitSnapshot(spark, path, TableSnapshot(
-        prev.map(_.version).getOrElse(0L) + 1, keyName, carried ++ movedEntries,
-        prev.flatMap(_.schemaHash), prev.map(_.txns).getOrElse(Map.empty),
-        op = "compact", statsCols = prev.map(_.statsCols).getOrElse(Nil),
-        schema = prev.flatMap(_.schema),
-        droppedCols = prev.map(_.droppedCols).getOrElse(Nil),
-        constraints = prev.map(_.constraints).getOrElse(Nil)))
+      val files = carried ++ movedEntries
+      commitSnapshot(spark, path, prev.fold(
+        TableSnapshot(1L, keyName, files, op = "compact"))(
+        _.next(files, "compact", keyName = keyName)))
     }
     // physical deletion: on a COMMITTED table the compacted originals
     // are only LOGICALLY deleted (absent from snapshot N+1) — they stay
@@ -397,7 +409,6 @@ object Layout {
     // the originals are dropped immediately as before.
     if (committed.isEmpty)
       candidates.foreach(st => fs.delete(st.getPath, false))
-    fs.delete(tmp, true)
     val nAfter =
       if (committed.isDefined) before.length - candidates.length + movedNames.length
       else dataFiles().length
@@ -492,6 +503,69 @@ object Layout {
       s"writer is $WriterVersion — mutating it could silently void a " +
       "feature this build does not understand (refusing is the " +
       "minWriterVersion contract)")
+
+  /** Commit `snap` (see [[commitSnapshot]]) and return it. */
+  private def commitNext(spark: SparkSession, path: String,
+      snap: TableSnapshot): TableSnapshot = {
+    commitSnapshot(spark, path, snap)
+    snap
+  }
+
+  /** The latest snapshot of the committed table at `path`, or a named
+    * error: where every verb on an existing table starts.
+    */
+  private[ops] def head(spark: SparkSession, path: String, who: String): TableSnapshot =
+    latestSnapshot(spark, path).getOrElse(throw new IllegalStateException(
+      s"$who: no committed table under $path"))
+
+  /** [[head]] of a table `who` is about to mutate, past the writer gate. */
+  private def writableHead(spark: SparkSession, path: String, who: String): TableSnapshot = {
+    val snap = head(spark, path, who)
+    assertWritable(snap, who)
+    snap
+  }
+
+  /** The files of `snap` whose stats boxes meet every [lo, hi] range (on
+    * the cluster key or a recorded stats column), and the rest: the
+    * pruning every stats-planned read and mutation plans from. No range
+    * keeps every file.
+    */
+  private def affected(snap: TableSnapshot, ranges: Seq[(String, Long, Long)],
+      who: String): (Seq[SnapshotFile], Seq[SnapshotFile]) = {
+    ranges.foreach { case (c, _, _) =>
+      require(c == snap.keyName || snap.statsCols.contains(c),
+        s"$who: snapshot v${snap.version} carries no stats " +
+        s"for '$c' (recorded: key=${snap.keyName}, " +
+        s"stats=${snap.statsCols.mkString(",")})")
+    }
+    snap.files.partition(f => ranges.forall { case (c, lo, hi) =>
+      val (mn, mx) = snap.box(f, c)
+      mx >= lo && mn <= hi
+    })
+  }
+
+  /** The files of `snap` whose `c` box holds a value of the long column
+    * `ids` of `probe`, and the rest: one broadcast interval join of the
+    * probe against the file list, never a table scan. A probe that hits
+    * no box (a pure-insert batch) anchors on the smallest file, so its
+    * rows still enter through the caller's rewrite.
+    */
+  private def probed(snap: TableSnapshot, c: String, probe: DataFrame,
+      ids: Column): (Seq[SnapshotFile], Seq[SnapshotFile]) = {
+    val spark = probe.sparkSession
+    import spark.implicits._
+    val boxes = snap.files.map { f =>
+      val (mn, mx) = snap.box(f, c)
+      (f.name, mn, mx)
+    }.toDF("__name", "__mn", "__mx")
+    val hit = probe.select(ids.as("__id"))
+      .join(broadcast(boxes), col("__id") >= col("__mn") && col("__id") <= col("__mx"))
+      .select(col("__name")).distinct().as[String].collect().toSet
+    val anchor =
+      if (snap.files.exists(f => hit.contains(f.name))) hit
+      else snap.files.sortBy(_.rows).take(1).map(_.name).toSet
+    snap.files.partition(f => anchor.contains(f.name))
+  }
 
   /** Parse one snapshot file body. Header lines (`key=`, `schema=`,
     * repeatable `txn=writer:batchId`) precede the tab-separated file
@@ -730,51 +804,59 @@ object Layout {
     */
   private[ops] def readFiles(spark: SparkSession, path: String,
       snap: TableSnapshot, names: Seq[String]): DataFrame =
-    readFilesDv(spark, path, snap,
-      names, snap.files.iterator.map(f => f.name -> f.dv).toMap)
+    readFilesDv(spark, path, snap, names, snap.dvRefs)
 
   /** [[readFiles]] with the deletion-vector ownership made explicit:
     * `dvOf` maps file name -> that file's DV ref AS OF the version being
-    * read. The change-feed legs need this split because they read a
-    * PREVIOUS version's removed files through the window-end schema —
-    * the schema comes from `snap`, the DV state from the version that
-    * owned the files.
+    * read (pass none for the physical rows). The change-feed legs need
+    * this split because they read a PREVIOUS version's removed files
+    * through the window-end schema — the schema comes from `snap`, the
+    * DV state from the version that owned the files.
+    *
+    * With `positioned`, every row keeps its file name and parquet row
+    * index as `_graft_dv_file` and `_graft_dv_pos`: what the
+    * deletion-vector verbs record and the position diffs join on. The
+    * names are collision-proof, so a table column named `file` or `pos`
+    * (SAM tables have `pos`) still resolves to the data.
     */
-  private[ops] def readFilesDv(spark: SparkSession, path: String,
+  private def readFilesDv(spark: SparkSession, path: String,
       snap: TableSnapshot, names: Seq[String],
-      dvOf: Map[String, Option[DvRef]]): DataFrame = {
+      dvOf: Map[String, Option[DvRef]], positioned: Boolean = false): DataFrame = {
     require(names.nonEmpty, "readFiles: empty file list")
     val paths = names.map(n => s"$path/$n")
     val base = snap.schema match {
       case Some(st) => spark.read.schema(st).parquet(paths: _*)
       case None     => spark.read.parquet(paths: _*)
     }
-    val dvd = names.flatMap(n => dvOf.getOrElse(n, None).map(n -> _))
-    if (dvd.isEmpty) base
-    else {
-      // merge-on-read: anti-join the scan against the referenced DV
-      // positions on (file name, parquet row index). The positions side
-      // is BROADCAST — it is bounded by rows deleted since the last
-      // rewrite of these files (compaction materializes DVs and resets
-      // it), so the scan side never shuffles; predicate pushdown and
-      // column pruning on the data columns are untouched below the
-      // join. A shared DV parquet may also hold OTHER files' positions,
-      // so the probe filters to the files actually being read.
-      val dvNames = dvd.map(_._2.name).distinct
-      val fileNames = dvd.map(_._1)
-      val positions = spark.read
-        .parquet(dvNames.map(n => s"$path/$n"): _*)
-        .filter(col("file").isin(fileNames: _*))
-        .withColumnRenamed("file", "_graft_dv_file")
-        .withColumnRenamed("pos", "_graft_dv_pos")
-      base
-        .withColumn("_graft_dv_file", col("_metadata.file_name"))
-        .withColumn("_graft_dv_pos", col("_metadata.row_index"))
-        .join(broadcast(positions), Seq("_graft_dv_file", "_graft_dv_pos"),
-          "left_anti")
-        .drop("_graft_dv_file", "_graft_dv_pos")
+    def tagged = base
+      .withColumn("_graft_dv_file", col("_metadata.file_name"))
+      .withColumn("_graft_dv_pos", col("_metadata.row_index"))
+    // merge-on-read: anti-join the scan against the referenced DV
+    // positions on (file name, parquet row index). The positions side
+    // is BROADCAST — it is bounded by rows deleted since the last
+    // rewrite of these files (compaction materializes DVs and resets
+    // it), so the scan side never shuffles; predicate pushdown and
+    // column pruning on the data columns are untouched below the join.
+    dvPositions(spark, path, names.flatMap(n => dvOf.getOrElse(n, None).map(n -> _))) match {
+      case None => if (positioned) tagged else base
+      case Some(deleted) =>
+        val live = tagged.join(broadcast(deleted
+          .withColumnRenamed("file", "_graft_dv_file")
+          .withColumnRenamed("pos", "_graft_dv_pos")),
+          Seq("_graft_dv_file", "_graft_dv_pos"), "left_anti")
+        if (positioned) live else live.drop("_graft_dv_file", "_graft_dv_pos")
     }
   }
+
+  /** The (file, pos) rows the deletion vectors `refs` (data file name ->
+    * its ref) hold, or None for no ref. A shared DV parquet may also
+    * hold OTHER files' positions, so the read keeps only the named files.
+    */
+  private def dvPositions(spark: SparkSession, path: String,
+      refs: Seq[(String, DvRef)]): Option[DataFrame] =
+    if (refs.isEmpty) None
+    else Some(spark.read.parquet(refs.map(r => s"$path/${r._2.name}").distinct: _*)
+      .filter(col("file").isin(refs.map(_._1): _*)))
 
   /** Read `path` through a specific snapshot: exactly the listed files,
     * nothing else. A reader holding snapshot N keeps a consistent view
@@ -791,10 +873,7 @@ object Layout {
     * are simply not in the plan.
     */
   def readCommitted(spark: SparkSession, path: String): DataFrame =
-    readSnapshot(spark, path, latestSnapshot(spark, path).getOrElse(
-      throw new IllegalStateException(
-        s"no committed snapshot under $path/$ManifestDir — " +
-        "write through writeClustered/compactFiles first")))
+    readSnapshot(spark, path, head(spark, path, "readCommitted"))
 
   /** Manifest-log twin of [[prunedRead]]: plan the pruned scan from the
     * PERSISTED per-file key boxes — one manifest fetch, zero data-file
@@ -805,9 +884,8 @@ object Layout {
     */
   def prunedCommittedRead(spark: SparkSession, path: String, lo: Long, hi: Long)
       : (Seq[String], Long, DataFrame) = {
-    val snap = latestSnapshot(spark, path).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot under $path"))
-    val kept = snap.files.filter(f => f.maxKey >= lo && f.minKey <= hi)
+    val snap = head(spark, path, "prunedCommittedRead")
+    val (kept, _) = affected(snap, Seq((snap.keyName, lo, hi)), "prunedCommittedRead")
     val residual = col(snap.keyName) >= lit(lo) && col(snap.keyName) <= lit(hi)
     val df =
       if (kept.isEmpty) readSnapshot(spark, path, snap).filter(lit(false))
@@ -829,20 +907,8 @@ object Layout {
   def prunedCommittedReadCols(spark: SparkSession, path: String,
       ranges: Seq[(String, Long, Long)]): (Seq[String], Long, DataFrame) = {
     require(ranges.nonEmpty, "prunedCommittedReadCols: no ranges")
-    val snap = latestSnapshot(spark, path).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot under $path"))
-    ranges.foreach { case (c, _, _) =>
-      require(c == snap.keyName || snap.statsCols.contains(c),
-        s"prunedCommittedReadCols: snapshot v${snap.version} carries no stats " +
-        s"for '$c' (recorded: key=${snap.keyName}, " +
-        s"stats=${snap.statsCols.mkString(",")})")
-    }
-    val kept = snap.files.filter { f =>
-      ranges.forall { case (c, lo, hi) =>
-        val (mn, mx) = if (c == snap.keyName) (f.minKey, f.maxKey) else f.stats(c)
-        mx >= lo && mn <= hi
-      }
-    }
+    val snap = head(spark, path, "prunedCommittedReadCols")
+    val (kept, _) = affected(snap, ranges, "prunedCommittedReadCols")
     val residual = ranges.map { case (c, lo, hi) =>
       col(c) >= lit(lo) && col(c) <= lit(hi)
     }.reduce(_ && _)
@@ -961,8 +1027,7 @@ object Layout {
     // would be re-reported), a post-image leg the DVs after
     def read(names: Seq[String], dvOwner: TableSnapshot): DataFrame =
       if (names.isEmpty) empty
-      else readFilesDv(spark, path, toSnap, names,
-        dvOwner.files.iterator.map(f => f.name -> f.dv).toMap)
+      else readFilesDv(spark, path, toSnap, names, dvOwner.dvRefs)
     // the rows at the positions `from`'s DVs hold that `to`'s do NOT —
     // i.e. the per-file DV position diff over same-named files, joined
     // back to the data. Direction gives both CDF legs: (prev -> cur)
@@ -973,15 +1038,10 @@ object Layout {
       val changed = from.filter(f =>
         to.contains(f.name) && to(f.name) != f.dv && f.dv.isDefined)
       if (changed.isEmpty) return None
-      def positions(refs: Seq[SnapshotFile]): Option[DataFrame] = {
-        val withDv = refs.filter(_.dv.isDefined)
-        if (withDv.isEmpty) None
-        else Some(spark.read
-          .parquet(withDv.map(f => s"$path/${f.dv.get.name}").distinct: _*)
-          .filter(col("file").isin(withDv.map(_.name): _*)))
-      }
-      val fromPos = positions(changed).get // changed filters on dv.isDefined
-      val toPos = positions(changed.map(f => f.copy(dv = to(f.name))))
+      def positions(dvOf: SnapshotFile => Option[DvRef]) =
+        dvPositions(spark, path, changed.flatMap(f => dvOf(f).map(f.name -> _)))
+      val fromPos = positions(_.dv).get // changed filters on dv.isDefined
+      val toPos = positions(f => to(f.name))
       val diff = toPos match {
         case None => fromPos
         case Some(t) => fromPos.join(
@@ -989,16 +1049,8 @@ object Layout {
           col("file") === col("_pf") && col("pos") === col("_pp"),
           "left_anti")
       }
-      val raw = {
-        val paths = changed.map(f => s"$path/${f.name}")
-        val base = toSnap.schema match {
-          case Some(st) => spark.read.schema(st).parquet(paths: _*)
-          case None     => spark.read.parquet(paths: _*)
-        }
-        base
-          .withColumn("_graft_dv_file", col("_metadata.file_name"))
-          .withColumn("_graft_dv_pos", col("_metadata.row_index"))
-      }
+      val raw = readFilesDv(spark, path, toSnap, changed.map(_.name), Map.empty,
+        positioned = true)
       Some(raw.join(
         broadcast(diff
           .withColumnRenamed("file", "_graft_dv_file")
@@ -1041,11 +1093,9 @@ object Layout {
               .withColumn("_change_type", lit("insert")))
             .unionByName(pre.exceptAll(post)
               .withColumn("_change_type", lit("delete")))
-          val prevDvB = prev.files.iterator.map(f => f.name -> f.dv).toMap
-          val curDvB = cur.files.iterator.map(f => f.name -> f.dv).toMap
-          dvDiffRows(cur.files, prevDvB).foreach(d =>
+          dvDiffRows(cur.files, prev.dvRefs).foreach(d =>
             out = out.unionByName(d.withColumn("_change_type", lit("delete"))))
-          dvDiffRows(prev.files, curDvB).foreach(d =>
+          dvDiffRows(prev.files, cur.dvRefs).foreach(d =>
             out = out.unionByName(d.withColumn("_change_type", lit("insert"))))
         case "deletedv" | "updatedv" =>
           // a merge-on-read delete names its rows exactly: the commit's
@@ -1060,8 +1110,7 @@ object Layout {
             read(added, cur).withColumn("_change_type", lit("insert")))
           out = out.unionByName(
             read(removed, prev).withColumn("_change_type", lit("delete")))
-          val prevDv = prev.files.iterator.map(f => f.name -> f.dv).toMap
-          dvDiffRows(cur.files, prevDv).foreach(d =>
+          dvDiffRows(cur.files, prev.dvRefs).foreach(d =>
             out = out.unionByName(d.withColumn("_change_type", lit("delete"))))
         case other =>
           throw new IllegalArgumentException(
@@ -1085,9 +1134,7 @@ object Layout {
   private def resolveAsOf(spark: SparkSession, srcPath: String,
       asOfVersion: Long, who: String): TableSnapshot =
     if (asOfVersion >= 0L) snapshotAt(spark, srcPath, asOfVersion)
-    else latestSnapshot(spark, srcPath).getOrElse(
-      throw new IllegalStateException(
-        s"$who: no committed source table under $srcPath"))
+    else head(spark, srcPath, who)
 
   /** What [[incrementalEtl]] did: the source window it processed
     * ((fromVersion, toVersion]; fromVersion = 0 on the bootstrap run),
@@ -1143,7 +1190,7 @@ object Layout {
         val written = writeClustered(out, dstPath, key, nFiles,
           txn = Some(writer -> srcSnap.version), statsCols = statsCols)
         EtlStats(0L, srcSnap.version, written.count(),
-          latestSnapshot(spark, dstPath).get.version, caughtUp = false)
+          head(spark, dstPath, "incrementalEtl").version, caughtUp = false)
       case Some(dst) =>
         val from = dst.txns.getOrElse(writer, throw new IllegalStateException(
           s"incrementalEtl: derived table at $dstPath carries no high-water " +
@@ -1170,23 +1217,51 @@ object Layout {
 
   /** Stage `df` clustered on `keyName` into a hidden dir and move the
     * parts in under `part-<tag>-<token>-<i>` names — the shared
-    * rewrite-generation discipline (delete/update/upsert/aggregate all
-    * stage exactly this way; vacuum sweeps the matching `.<tag>-` dirs).
+    * rewrite-generation discipline (append/compact/delete/update/upsert/
+    * purge/aggregate all stage exactly this way).
     */
   private def stageAndMoveIn(df: DataFrame, path: String, tag: String,
-      keyName: String, nOut: Int): IndexedSeq[String] = {
-    val spark = df.sparkSession
-    val fs = fsOf(spark, path)
+      keyName: String, nOut: Int): IndexedSeq[String] =
+    moveIn(df.repartitionByRange(nOut, col(keyName)).sortWithinPartitions(keyName),
+      path, tag, s"part-$tag")
+
+  /** Stage `rows` as a new generation of `snap`'s table (`nOut` files
+    * clustered on its key) and return its snapshot entries; no rows stage
+    * nothing. Refuses, before anything commits, a generation that does
+    * not hold exactly `expect` rows: both generations stay on disk and
+    * the staged files are vacuum-able orphans.
+    */
+  private def stageGeneration(spark: SparkSession, path: String,
+      snap: TableSnapshot, rows: DataFrame, tag: String, nOut: Int,
+      expect: Long, who: String): Seq[SnapshotFile] =
+    if (expect == 0L) Nil
+    else {
+      val entries = snapshotEntries(spark, path, snap.keyName,
+        stageAndMoveIn(rows, path, tag, snap.keyName, nOut), snap.statsCols)
+      val got = entries.map(_.rows).sum
+      require(got == expect,
+        s"$who: the staged generation holds $got rows where $expect were " +
+        "expected; nothing committed, both generations on disk")
+      entries
+    }
+
+  /** Write `df` into a hidden `.<tag>-<token>` dir under `path`, move its
+    * parts in as `<prefix>-<token>-<i>` and drop the dir; returns the
+    * moved names. Until a snapshot lists them they are invisible to
+    * committed readers, and vacuum sweeps what a crash leaves (the
+    * `.<tag>-` dir, or moved-in files no snapshot references).
+    */
+  private def moveIn(df: DataFrame, path: String, tag: String,
+      prefix: String): IndexedSeq[String] = {
+    val fs = fsOf(df.sparkSession, path)
     val token = java.util.UUID.randomUUID().toString.take(8)
     val tmp = new org.apache.hadoop.fs.Path(s"$path/.$tag-$token")
-    df.repartitionByRange(nOut, col(keyName))
-      .sortWithinPartitions(keyName)
-      .write.mode("overwrite").parquet(tmp.toString)
+    df.write.mode("overwrite").parquet(tmp.toString)
     val staged = fs.listStatus(tmp)
       .filter(st => st.isFile && st.getPath.getName.startsWith("part-"))
     val moved = staged.zipWithIndex.map { case (st, i) =>
       val target = new org.apache.hadoop.fs.Path(
-        s"$path/part-$tag-$token-$i${suffixOf(st.getPath.getName)}")
+        s"$path/$prefix-$token-$i${suffixOf(st.getPath.getName)}")
       if (!fs.rename(st.getPath, target))
         throw new java.io.IOException(
           s"$tag rename ${st.getPath} -> $target failed")
@@ -1290,7 +1365,7 @@ object Layout {
         val n = if (nFiles > 0) nFiles else math.max(1, srcSnap.files.size / 2)
         writeClustered(boot, dstPath, xxhash64(col(groupCol)), n,
           txn = Some(writer -> srcSnap.version)): Unit
-        val d = latestSnapshot(spark, dstPath).get
+        val d = head(spark, dstPath, "incrementalAggregate")
         AggEtlStats(0L, srcSnap.version, d.totalRows, 0L,
           d.files.size.toLong, d.version, caughtUp = false)
       case Some(dst0) =>
@@ -1347,17 +1422,8 @@ object Layout {
           // and contributes the same zero rows (the incrementalEtl rule)
           return AggEtlStats(from, srcSnap.version, 0L, 0L,
             dst0.files.size.toLong, dst0.version, caughtUp = false)
-        import spark.implicits._
         val keyName = dst0.keyName
-        val boxes = dst0.files.map(f => (f.name, f.minKey, f.maxKey))
-          .toDF("__name", "__mn", "__mx")
-        val hit = part.select(xxhash64(col(groupCol)).as("__h"))
-          .join(broadcast(boxes),
-            col("__h") >= col("__mn") && col("__h") <= col("__mx"))
-          .select(col("__name")).distinct().as[String].collect().toSet
-        val affected0 = dst0.files.filter(f => hit.contains(f.name))
-        val affected =
-          if (affected0.nonEmpty) affected0 else dst0.files.sortBy(_.rows).take(1)
+        val (affected, untouched) = probed(dst0, keyName, part, xxhash64(col(groupCol)))
         val current = readFiles(spark, dstPath, dst0, affected.map(_.name))
           .drop(keyName)
         val mergedRows = merge(current.unionByName(part))
@@ -1372,14 +1438,8 @@ object Layout {
         val nOut = math.max(1, affected.size)
         val moved = stageAndMoveIn(clustered, dstPath, "upsert", keyName, nOut)
         val movedEntries = snapshotEntries(spark, dstPath, keyName, moved, Nil)
-        val untouched = dst0.files
-          .filterNot(affected.map(_.name).toSet contains _.name)
-        val next = TableSnapshot(dst0.version + 1, keyName,
-          untouched ++ movedEntries, dst0.schemaHash,
-          dst0.txns + (writer -> srcSnap.version),
-          op = "upsert", statsCols = dst0.statsCols, schema = dst0.schema,
-          droppedCols = dst0.droppedCols, constraints = dst0.constraints)
-        commitSnapshot(spark, dstPath, next)
+        val next = commitNext(spark, dstPath, dst0.next(untouched ++ movedEntries,
+          "upsert", txns = dst0.txns + (writer -> srcSnap.version)))
         AggEtlStats(from, srcSnap.version, nGroups, affected.size.toLong,
           dst0.files.size.toLong, next.version, caughtUp = false)
     }
@@ -1428,6 +1488,16 @@ object Layout {
       s"replicateCommitted: '$idCol' has no per-file stats in the source " +
       s"(key=${srcSnap.keyName}, stats=${srcSnap.statsCols.mkString(",")}) — " +
       "create the source with statsCols including the replication id")
+    def replica(): TableSnapshot = head(spark, dstPath, "replicateCommitted")
+    // mirror a source CHECK-constraint list so the replica enforces the
+    // same invariants on ITS future batches; a matching list commits
+    // nothing. Content equality makes re-validation redundant — the rows
+    // are the source's, which the source verified on add.
+    def mirrorConstraints(want: Seq[(String, String)]): Unit = {
+      val d = replica()
+      if (d.constraints != want)
+        commitSnapshot(spark, dstPath, d.next(d.files, "constraint", constraints = want))
+    }
     latestSnapshot(spark, dstPath) match {
       case None =>
         val n = if (nFiles > 0) nFiles else srcSnap.files.size
@@ -1439,13 +1509,8 @@ object Layout {
         // catch-up loop starts PAST the version that added them, so
         // without this seed a replica of a constrained table would
         // never enforce the invariants on its own future batches
-        if (srcSnap.constraints.nonEmpty) {
-          val d = latestSnapshot(spark, dstPath).get
-          commitSnapshot(spark, dstPath, d.copy(version = d.version + 1,
-            op = "constraint", constraints = srcSnap.constraints))
-        }
-        SyncStats(0L, srcSnap.version, 1L,
-          latestSnapshot(spark, dstPath).get.version, caughtUp = false)
+        mirrorConstraints(srcSnap.constraints)
+        SyncStats(0L, srcSnap.version, 1L, replica().version, caughtUp = false)
       case Some(dst0) =>
         val from = dst0.txns.getOrElse(writer, throw new IllegalStateException(
           s"replicateCommitted: replica at $dstPath carries no high-water " +
@@ -1459,7 +1524,7 @@ object Layout {
         // the mutation's legs against the post-evolve column set, or the
         // upsert's schema-fingerprint check refuses the run
         def payloadCols(): Seq[String] = {
-          val d = latestSnapshot(spark, dstPath).get
+          val d = replica()
           d.schema.map(_.fieldNames.toIndexedSeq)
             .getOrElse(readCommitted(spark, dstPath).columns.toIndexedSeq)
             .filterNot(_ == idCol)
@@ -1499,24 +1564,14 @@ object Layout {
               prev = cur
               v += 1
             case "constraint" =>
-              // mirror the constraint list so the replica enforces the
-              // same invariants on ITS future batches; idempotent (a
-              // matching list commits nothing). Content equality makes
-              // re-validation redundant — the rows are the source's,
-              // which the source verified on add.
-              val dstSnap = latestSnapshot(spark, dstPath).get
-              if (dstSnap.constraints != cur.constraints)
-                commitSnapshot(spark, dstPath,
-                  dstSnap.copy(version = dstSnap.version + 1,
-                    op = "constraint", constraints = cur.constraints))
+              mirrorConstraints(cur.constraints)
               applied += 1
               prev = cur
               v += 1
             case "evolve" =>
               // mirror the schema change (adds AND drops); idempotent
               // under replays (present columns skip, absent ones too)
-              val dstSnap = latestSnapshot(spark, dstPath).get
-              val have = dstSnap.schema.map(_.fieldNames.toSet).getOrElse(Set.empty)
+              val have = replica().schema.map(_.fieldNames.toSet).getOrElse(Set.empty)
               val want = cur.schema.map(_.fieldNames.toSet).getOrElse(have)
               cur.schema.foreach(_.fields
                 .filterNot(f => have.contains(f.name))
@@ -1552,11 +1607,7 @@ object Layout {
               // back; resync it or the replica keeps enforcing a stale
               // stricter list and wedges on the source's next
               // legitimately-unconstrained append
-              val dstAfterMut = latestSnapshot(spark, dstPath).get
-              if (dstAfterMut.constraints != cur.constraints)
-                commitSnapshot(spark, dstPath,
-                  dstAfterMut.copy(version = dstAfterMut.version + 1,
-                    op = "constraint", constraints = cur.constraints))
+              mirrorConstraints(cur.constraints)
               applied += 1
               prev = cur
               v += 1
@@ -1570,12 +1621,10 @@ object Layout {
         // a window tail of no-op versions (compact/evolve/txn) advances
         // no mark through the data commits above — record it with a
         // txn-only commit so the next run reports caughtUp instead of
-        // re-walking (and re-counting) the tail forever
-        val dstAfter = latestSnapshot(spark, dstPath).get
-        if (!dstAfter.txns.get(writer).exists(_ >= srcSnap.version))
-          commitTxn(spark, dstPath, writer, srcSnap.version): Unit
-        SyncStats(from, srcSnap.version, applied,
-          latestSnapshot(spark, dstPath).get.version, caughtUp = false)
+        // re-walking (and re-counting) the tail forever; commitTxn
+        // commits nothing when a data commit already recorded the mark
+        val dstAfter = commitTxn(spark, dstPath, writer, srcSnap.version)
+        SyncStats(from, srcSnap.version, applied, dstAfter.version, caughtUp = false)
     }
   }
 
@@ -1590,9 +1639,7 @@ object Layout {
     */
   def statsAggregate(spark: SparkSession, path: String,
       cols: Seq[String] = Nil): DataFrame = {
-    val snap = latestSnapshot(spark, path).getOrElse(
-      throw new IllegalStateException(
-        s"statsAggregate: no committed table under $path"))
+    val snap = head(spark, path, "statsAggregate")
     // n_rows stays exact under deletion vectors (every DV ref records
     // its count); per-column MIN/MAX do NOT — a deleted row may have
     // held the extreme, and the boxes are computed at write time —
@@ -1606,8 +1653,7 @@ object Layout {
       require(c == snap.keyName || snap.statsCols.contains(c),
         s"statsAggregate: snapshot v${snap.version} carries no stats for " +
         s"'$c' (key=${snap.keyName}, stats=${snap.statsCols.mkString(",")})")
-      val boxes = snap.files.map(f =>
-        if (c == snap.keyName) (f.minKey, f.maxKey) else f.stats(c))
+      val boxes = snap.files.map(snap.box(_, c))
       Seq(lit(boxes.map(_._1).min).as(s"min_$c"),
         lit(boxes.map(_._2).max).as(s"max_$c"))
     }
@@ -1655,10 +1701,7 @@ object Layout {
     */
   def addCheckConstraint(spark: SparkSession, path: String,
       name: String, sqlExpr: String): TableSnapshot = {
-    val snap = latestSnapshot(spark, path).getOrElse(
-      throw new IllegalStateException(
-        s"addCheckConstraint: no committed table under $path"))
-    assertWritable(snap, "addCheckConstraint")
+    val snap = writableHead(spark, path, "addCheckConstraint")
     require(name.nonEmpty && name.forall(ch => ch.isLetterOrDigit || ch == '_'),
       s"addCheckConstraint: name '$name' must be [A-Za-z0-9_]+")
     require(!snap.constraints.exists(_._1 == name),
@@ -1667,10 +1710,8 @@ object Layout {
       s"addCheckConstraint: expression contains reserved characters")
     verifyConstraints(readSnapshot(spark, path, snap),
       Seq(name -> sqlExpr), "addCheckConstraint")
-    val next = snap.copy(version = snap.version + 1, op = "constraint",
-      constraints = snap.constraints :+ (name -> sqlExpr))
-    commitSnapshot(spark, path, next)
-    next
+    commitNext(spark, path, snap.next(snap.files, "constraint",
+      constraints = snap.constraints :+ (name -> sqlExpr)))
   }
 
   /** DROP CHECK CONSTRAINT — manifest-only removal; future batches stop
@@ -1679,17 +1720,12 @@ object Layout {
     */
   def dropCheckConstraint(spark: SparkSession, path: String,
       name: String): TableSnapshot = {
-    val snap = latestSnapshot(spark, path).getOrElse(
-      throw new IllegalStateException(
-        s"dropCheckConstraint: no committed table under $path"))
-    assertWritable(snap, "dropCheckConstraint")
+    val snap = writableHead(spark, path, "dropCheckConstraint")
     require(snap.constraints.exists(_._1 == name),
       s"dropCheckConstraint: table at $path has no constraint '$name' " +
       s"(recorded: ${snap.constraints.map(_._1).mkString(",")})")
-    val next = snap.copy(version = snap.version + 1, op = "constraint",
-      constraints = snap.constraints.filterNot(_._1 == name))
-    commitSnapshot(spark, path, next)
-    next
+    commitNext(spark, path, snap.next(snap.files, "constraint",
+      constraints = snap.constraints.filterNot(_._1 == name)))
   }
 
   /** ADD COLUMN — schema evolution without rewriting a byte: commit
@@ -1707,10 +1743,7 @@ object Layout {
     */
   def addColumn(spark: SparkSession, path: String, name: String,
       dataType: org.apache.spark.sql.types.DataType): TableSnapshot = {
-    val snap = latestSnapshot(spark, path).getOrElse(
-      throw new IllegalStateException(
-        s"addColumn: no committed table under $path"))
-    assertWritable(snap, "addColumn")
+    val snap = writableHead(spark, path, "addColumn")
     val cur = snap.schema.getOrElse(throw new IllegalStateException(
       s"addColumn: snapshot v${snap.version} under $path records no schema " +
       "(pre-evolution era) — append or rewrite once to record it"))
@@ -1731,12 +1764,8 @@ object Layout {
     val nf = org.apache.spark.sql.types.StructField(name, dataType, nullable = true)
     val widened = org.apache.spark.sql.types.StructType(
       cur.fields.patch(at, Seq(nf), 0))
-    val next = TableSnapshot(snap.version + 1, snap.keyName, snap.files,
-      Some(schemaHashOf(widened)), snap.txns, op = "evolve",
-      statsCols = snap.statsCols, schema = Some(widened),
-      droppedCols = snap.droppedCols, constraints = snap.constraints)
-    commitSnapshot(spark, path, next)
-    next
+    commitNext(spark, path, snap.next(snap.files, "evolve",
+      schemaHash = Some(schemaHashOf(widened)), schema = Some(widened)))
   }
 
   /** DROP COLUMN — the narrowing twin of [[addColumn]]: commit snapshot
@@ -1752,10 +1781,7 @@ object Layout {
     * rewrite with new statsCols — not by accident).
     */
   def dropColumn(spark: SparkSession, path: String, name: String): TableSnapshot = {
-    val snap = latestSnapshot(spark, path).getOrElse(
-      throw new IllegalStateException(
-        s"dropColumn: no committed table under $path"))
-    assertWritable(snap, "dropColumn")
+    val snap = writableHead(spark, path, "dropColumn")
     val cur = snap.schema.getOrElse(throw new IllegalStateException(
       s"dropColumn: snapshot v${snap.version} under $path records no schema " +
       "(pre-evolution era) — append or rewrite once to record it"))
@@ -1783,13 +1809,9 @@ object Layout {
         s"dropColumn: CHECK constraint '$cname' ($sql) references '$name' — " +
         "drop the constraint first")
     }
-    val next = TableSnapshot(snap.version + 1, snap.keyName, snap.files,
-      Some(schemaHashOf(narrowed)), snap.txns, op = "evolve",
-      statsCols = snap.statsCols, schema = Some(narrowed),
-      droppedCols = snap.droppedCols :+ name,
-      constraints = snap.constraints)
-    commitSnapshot(spark, path, next)
-    next
+    commitNext(spark, path, snap.next(snap.files, "evolve",
+      schemaHash = Some(schemaHashOf(narrowed)), schema = Some(narrowed),
+      droppedCols = snap.droppedCols :+ name))
   }
 
   /** Committed APPEND — the micro-batch ingest step: write `df` (keyed
@@ -1837,42 +1859,24 @@ object Layout {
       txn: Option[(String, Long)] = None,
       onFilesStaged: () => Unit = () => ()): TableSnapshot = {
     val spark = df.sparkSession
-    val prev0 = latestSnapshot(spark, path).getOrElse(throw new IllegalStateException(
-      s"appendClustered: no committed table under $path — create it with writeClustered"))
-    assertWritable(prev0, "appendClustered")
+    val prev0 = writableHead(spark, path, "appendClustered")
     val keyName = prev0.keyName
     txn.foreach { case (app, id) =>
       if (prev0.txns.get(app).exists(_ >= id)) return prev0 // replayed batch
     }
-    val batchHash = schemaHashOf(df.withColumn(keyName, key).schema)
+    val batch = df.withColumn(keyName, key)
+    val batchHash = schemaHashOf(batch.schema)
     prev0.schemaHash.foreach { expect =>
       require(expect == batchHash,
         s"appendClustered: batch schema (hash $batchHash, columns " +
-        df.withColumn(keyName, key).schema.fieldNames.mkString("[", ",", "]") +
+        batch.schema.fieldNames.mkString("[", ",", "]") +
         s") does not match the committed table's recorded schema (hash $expect) " +
         s"under $path — refusing the append before it poisons committed reads")
     }
     // the batch must satisfy every recorded CHECK constraint before a
     // byte is staged — cost ∝ the batch (one combined aggregate)
-    verifyConstraints(df.withColumn(keyName, key), prev0.constraints,
-      "appendClustered")
-    val fs = fsOf(spark, path)
-    val token = java.util.UUID.randomUUID().toString.take(8)
-    val tmp = new org.apache.hadoop.fs.Path(s"$path/.append-$token")
-    df.withColumn(keyName, key)
-      .repartitionByRange(nFiles, col(keyName))
-      .sortWithinPartitions(keyName)
-      .write.mode("overwrite").parquet(tmp.toString)
-    val staged = fs.listStatus(tmp)
-      .filter(st => st.isFile && st.getPath.getName.startsWith("part-"))
-    val moved = staged.zipWithIndex.map { case (st, i) =>
-      val target = new org.apache.hadoop.fs.Path(
-        s"$path/part-append-$token-$i${suffixOf(st.getPath.getName)}")
-      if (!fs.rename(st.getPath, target))
-        throw new java.io.IOException(s"append rename ${st.getPath} -> $target failed")
-      target.getName
-    }.toIndexedSeq
-    fs.delete(tmp, true)
+    verifyConstraints(batch, prev0.constraints, "appendClustered")
+    val moved = stageAndMoveIn(batch, path, "append", keyName, nFiles)
     val mine = snapshotEntries(spark, path, keyName, moved, prev0.statsCols)
     onFilesStaged()
     var attempt = 0
@@ -1891,16 +1895,13 @@ object Layout {
           // a racing replay of the SAME (writer, batch) won the commit:
           // our staged files are duplicates — drop them, return the winner
           moved.foreach(n =>
-            fs.delete(new org.apache.hadoop.fs.Path(s"$path/$n"), false))
+            fsOf(spark, path).delete(new org.apache.hadoop.fs.Path(s"$path/$n"), false))
           return prev
         }
       }
-      val snap = TableSnapshot(prev.version + 1, keyName, prev.files ++ mine,
-        prev.schemaHash.orElse(Some(batchHash)),
-        txn.fold(prev.txns) { case (app, id) => prev.txns + (app -> id) },
-        op = "append", statsCols = prev.statsCols,
-        schema = prev.schema.orElse(Some(df.withColumn(keyName, key).schema)),
-        droppedCols = prev.droppedCols, constraints = prev.constraints)
+      val snap = prev.next(prev.files ++ mine, "append",
+        schemaHash = prev.schemaHash.orElse(Some(batchHash)), txns = prev.txns ++ txn,
+        schema = prev.schema.orElse(Some(batch.schema)))
       try {
         commitSnapshot(spark, path, snap)
         return snap
@@ -1949,14 +1950,10 @@ object Layout {
     */
   def commitTxn(spark: SparkSession, path: String, writer: String,
       batchId: Long): TableSnapshot = {
-    val snap = latestSnapshot(spark, path).getOrElse(
-      throw new IllegalStateException(s"commitTxn: no committed table under $path"))
-    assertWritable(snap, "commitTxn")
+    val snap = writableHead(spark, path, "commitTxn")
     if (snap.txns.get(writer).exists(_ >= batchId)) return snap
-    val next = snap.copy(version = snap.version + 1,
-      txns = snap.txns + (writer -> batchId), op = "txn")
-    commitSnapshot(spark, path, next)
-    next
+    commitNext(spark, path, snap.next(snap.files, "txn",
+      txns = snap.txns + (writer -> batchId)))
   }
 
   /** RESTORE — roll the table back to retained version `version` as a
@@ -1985,9 +1982,7 @@ object Layout {
     * restore (an explicit audit row in DESCRIBE HISTORY).
     */
   def restoreVersion(spark: SparkSession, path: String, version: Long): TableSnapshot = {
-    val cur = latestSnapshot(spark, path).getOrElse(
-      throw new IllegalStateException(s"restoreVersion: no committed table under $path"))
-    assertWritable(cur, "restoreVersion")
+    val cur = writableHead(spark, path, "restoreVersion")
     require(version <= cur.version,
       s"restoreVersion: v$version is ahead of the table (latest v${cur.version})")
     val tgt = snapshotAt(spark, path, version) // throws if vacuumed
@@ -2004,12 +1999,9 @@ object Layout {
       s"on disk under $path (e.g. ${missing.take(3).mkString(", ")}) — the " +
       "generation was reclaimed outside vacuum's retention contract; " +
       "restore from a replica or re-ingest instead")
-    val snap = TableSnapshot(cur.version + 1, tgt.keyName, tgt.files,
-      tgt.schemaHash, cur.txns, op = "restore",
-      statsCols = tgt.statsCols, schema = tgt.schema,
-      droppedCols = tgt.droppedCols, constraints = tgt.constraints)
-    commitSnapshot(spark, path, snap)
-    snap
+    commitNext(spark, path, cur.next(tgt.files, "restore", keyName = tgt.keyName,
+      schemaHash = tgt.schemaHash, statsCols = tgt.statsCols, schema = tgt.schema,
+      droppedCols = tgt.droppedCols, constraints = tgt.constraints))
   }
 
   /** What [[deleteWhere]] did: file and row accounting for the commit. */
@@ -2042,17 +2034,8 @@ object Layout {
   def deleteWhere(spark: SparkSession, path: String, predicate: Column,
       scanRanges: Seq[(String, Long, Long)] = Nil,
       nFiles: Int = 0): DeleteStats = {
-    val snap = latestSnapshot(spark, path).getOrElse(throw new IllegalStateException(
-      s"deleteWhere: no committed table under $path"))
-    assertWritable(snap, "deleteWhere")
-    val affected = snap.files.filter { f =>
-      scanRanges.forall { case (c, lo, hi) =>
-        val (mn, mx) = if (c == snap.keyName) (f.minKey, f.maxKey)
-          else f.stats.getOrElse(c, throw new IllegalArgumentException(
-            s"deleteWhere: snapshot v${snap.version} carries no stats for '$c'"))
-        mx >= lo && mn <= hi
-      }
-    }
+    val snap = writableHead(spark, path, "deleteWhere")
+    val (affected, untouched) = Layout.affected(snap, scanRanges, "deleteWhere")
     if (affected.isEmpty)
       return DeleteStats(snap.files.size.toLong, 0L, 0L, snap.version)
     val src = readFiles(spark, path, snap, affected.map(_.name))
@@ -2064,25 +2047,14 @@ object Layout {
     // vectors, so the rewrite MATERIALIZES them (rewritten entries
     // carry no DV) and the accounting must start from the live count
     val deleted = affected.map(_.liveRows).sum - keptRows
-    val untouched = snap.files.filterNot(affected.map(_.name).toSet contains _.name)
     if (deleted == 0L)
       return DeleteStats(snap.files.size.toLong, 0L, 0L, snap.version)
     require(untouched.nonEmpty || keptRows > 0L,
       s"deleteWhere would empty the table at $path entirely — a committed " +
       "snapshot must list at least one file; drop the table instead")
-    val moved =
-      if (keptRows == 0L) IndexedSeq.empty[String]
-      else stageAndMoveIn(keep, path, "delete", snap.keyName,
-        if (nFiles > 0) nFiles else affected.size)
-    val movedEntries = snapshotEntries(spark, path, snap.keyName, moved, snap.statsCols)
-    require(movedEntries.map(_.rows).sum == keptRows,
-      "deleteWhere: rewritten row count diverged from the survivor count; " +
-      "nothing committed, both generations on disk")
-    val next = TableSnapshot(snap.version + 1, snap.keyName,
-      untouched ++ movedEntries, snap.schemaHash, snap.txns,
-      op = "delete", statsCols = snap.statsCols, schema = snap.schema,
-      droppedCols = snap.droppedCols, constraints = snap.constraints)
-    commitSnapshot(spark, path, next)
+    val movedEntries = stageGeneration(spark, path, snap, keep, "delete",
+      if (nFiles > 0) nFiles else affected.size, keptRows, "deleteWhere")
+    val next = commitNext(spark, path, snap.next(untouched ++ movedEntries, "delete"))
     DeleteStats(snap.files.size.toLong, affected.size.toLong, deleted, next.version)
   }
 
@@ -2097,41 +2069,75 @@ object Layout {
       nFilesTotal: Long, nFilesDvUpdated: Long, nFilesDropped: Long,
       nRowsDeleted: Long, version: Long)
 
+  /** The body the deletion-vector verbs share ([[deleteWhereDv]],
+    * [[updateWhereDv]]): mark the rows of `live` (the positioned live
+    * rows of `affected`) that match `predicate` deleted, and commit that
+    * with the files `images` stages from the matched rows and their
+    * count (an UPDATE's new images; none for a DELETE) as ONE `op`
+    * commit. Each file's new positions are folded with its existing DV,
+    * so its one new ref covers its full deleted set; a file whose every
+    * row is now deleted leaves the list instead of carrying a full-file
+    * DV. Stats count the files re-pointed and dropped and the rows
+    * matched; nothing is committed when no row matches.
+    */
+  private def markDeleted(spark: SparkSession, path: String, snap: TableSnapshot,
+      affected: Seq[SnapshotFile], live: DataFrame, predicate: Column,
+      dvShards: Int, op: String, who: String)(
+      images: (DataFrame, Long) => Seq[SnapshotFile]): DvDeleteStats = {
+    // persisted: the predicate scan over the affected files' bytes is
+    // the dominant cost, and the count, the positions and the images
+    // all read this (∝ matched rows) frame
+    val matched = live.filter(coalesce(predicate, lit(false)))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try {
+      val nMatched = matched.count()
+      if (nMatched == 0L)
+        return DvDeleteStats(snap.files.size.toLong, 0L, 0L, 0L, snap.version)
+      val newPos = matched.select(col("_graft_dv_file").as("file"),
+        col("_graft_dv_pos").as("pos"))
+      val merged = dvPositions(spark, path, affected.flatMap(f => f.dv.map(f.name -> _)))
+        .fold(newPos)(newPos.unionByName(_)).distinct()
+      // per-file deleted counts: bounded by the affected file count
+      val counts = merged.groupBy(col("file"))
+        .agg(count(lit(1)).as("n")).collect()
+        .map(r => r.getString(0) -> r.getLong(1)).toMap
+      val byRows = affected.map(f => f.name -> f.rows).toMap
+      val dropped = counts.collect {
+        case (n, c) if c == byRows(n) => n
+      }.toSet
+      val survivors = snap.files.filterNot(f => dropped.contains(f.name))
+      // the images stage before the sidecar; a crash at any point before
+      // the commit leaves only vacuum-able orphans (vacuum's sweep
+      // covers dv-* too)
+      val added = images(matched.drop("_graft_dv_file", "_graft_dv_pos"), nMatched)
+      require(survivors.nonEmpty || added.nonEmpty,
+        s"$who would empty the table at $path entirely — a committed " +
+        "snapshot must list at least one file; drop the table instead")
+      val refOf = stageDvSidecar(spark, path, merged, counts, dropped, dvShards)
+      val next = commitNext(spark, path, snap.next(survivors.map(f =>
+        refOf.get(f.name).fold(f)(ref => f.copy(dv = Some(ref)))) ++ added, op))
+      DvDeleteStats(snap.files.size.toLong, refOf.size.toLong,
+        dropped.size.toLong, nMatched, next.version)
+    } finally { matched.unpersist(false): Unit }
+  }
+
   /** Stage a deletion-vector positions sidecar and derive each data
-    * file's new ref — the shared tail of [[deleteWhereDv]] and
-    * [[updateWhereDv]]. `merged` must hold the FULL per-file position
-    * sets (old folded with new, already distinct, already persisted by
-    * the caller); positions of fully-deleted files are excluded here.
-    * Writes `dvShards` hash-partitioned-by-file parquet shards under a
-    * hidden `.dvdelete-*` staging dir, moves them in as `dv-*`, and
-    * maps each file to (its shard, its position count) with one
+    * file's new ref. `merged` holds the FULL per-file position sets
+    * (old folded with new, already distinct); positions of fully-deleted
+    * files are excluded here. Writes `dvShards` hash-partitioned-by-file
+    * parquet shards (each data file's positions land in exactly one)
+    * under a hidden `.dvdelete-*` staging dir, moves them in as `dv-*`,
+    * and maps each file to (its shard, its position count) with one
     * column-pruned scan of the sidecar — bounded by the affected file
-    * count. Returns empty when every counted file is dropped. A crash
-    * anywhere before the caller's commit leaves only vacuum-able
-    * orphans.
+    * count. Returns empty when every counted file is dropped.
     */
   private def stageDvSidecar(spark: SparkSession, path: String,
       merged: DataFrame, counts: Map[String, Long], dropped: Set[String],
-      dvShards: Int, who: String): Map[String, DvRef] = {
+      dvShards: Int): Map[String, DvRef] = {
     if (counts.keySet.forall(dropped.contains)) return Map.empty
     val keepPos = if (dropped.isEmpty) merged
       else merged.filter(!col("file").isin(dropped.toSeq: _*))
-    val fs = fsOf(spark, path)
-    val token = java.util.UUID.randomUUID().toString.take(8)
-    val tmp = new org.apache.hadoop.fs.Path(s"$path/.dvdelete-$token")
-    keepPos.repartition(dvShards, col("file"))
-      .write.mode("overwrite").parquet(tmp.toString)
-    val staged = fs.listStatus(tmp)
-      .filter(st => st.isFile && st.getPath.getName.startsWith("part-"))
-    val moved = staged.zipWithIndex.map { case (st, i) =>
-      val target = new org.apache.hadoop.fs.Path(
-        s"$path/dv-$token-$i${suffixOf(st.getPath.getName)}")
-      if (!fs.rename(st.getPath, target))
-        throw new java.io.IOException(
-          s"$who rename ${st.getPath} -> $target failed")
-      target.getName
-    }.toIndexedSeq
-    fs.delete(tmp, true)
+    val moved = moveIn(keepPos.repartition(dvShards, col("file")), path, "dvdelete", "dv")
     spark.read.parquet(moved.map(n => s"$path/$n"): _*)
       .withColumn("dvfile", input_file_name())
       .groupBy(col("file"))
@@ -2179,86 +2185,13 @@ object Layout {
       scanRanges: Seq[(String, Long, Long)] = Nil,
       dvShards: Int = 1): DvDeleteStats = {
     require(dvShards >= 1, "deleteWhereDv: dvShards must be >= 1")
-    val snap = latestSnapshot(spark, path).getOrElse(throw new IllegalStateException(
-      s"deleteWhereDv: no committed table under $path"))
-    assertWritable(snap, "deleteWhereDv")
-    val affected = snap.files.filter { f =>
-      scanRanges.forall { case (c, lo, hi) =>
-        val (mn, mx) = if (c == snap.keyName) (f.minKey, f.maxKey)
-          else f.stats.getOrElse(c, throw new IllegalArgumentException(
-            s"deleteWhereDv: snapshot v${snap.version} carries no stats for '$c'"))
-        mx >= lo && mn <= hi
-      }
-    }
+    val snap = writableHead(spark, path, "deleteWhereDv")
+    val (affected, _) = Layout.affected(snap, scanRanges, "deleteWhereDv")
     if (affected.isEmpty)
       return DvDeleteStats(snap.files.size.toLong, 0L, 0L, 0L, snap.version)
-    // physical read (no DV application): positions are parquet row
-    // indexes, and re-listing an already-deleted position is harmless —
-    // the union below de-duplicates it
-    val names = affected.map(_.name)
-    val paths = names.map(n => s"$path/$n")
-    val base = snap.schema match {
-      case Some(st) => spark.read.schema(st).parquet(paths: _*)
-      case None     => spark.read.parquet(paths: _*)
-    }
-    // the metadata columns take collision-proof names UNTIL the user
-    // predicate has run — a table column named 'file' or 'pos' (SAM
-    // tables have 'pos') must keep resolving to the DATA, not to
-    // parquet metadata
-    val newPos = base
-      .withColumn("_graft_dv_file", col("_metadata.file_name"))
-      .withColumn("_graft_dv_pos", col("_metadata.row_index"))
-      .filter(coalesce(predicate, lit(false)))
-      .select(col("_graft_dv_file").as("file"), col("_graft_dv_pos").as("pos"))
-    // fold in the affected files' EXISTING positions so each file's new
-    // ref covers its full deleted set (one ref per file). Persisted:
-    // the predicate scan over the affected files' bytes is the
-    // dominant cost, and both the counts aggregate and the sidecar
-    // write below consume this (tiny, ∝ deleted rows) frame.
-    val existingRefs = affected.filter(_.dv.isDefined)
-    val merged = (if (existingRefs.isEmpty) newPos else {
-      val dvNames = existingRefs.map(_.dv.get.name).distinct
-      val old = spark.read.parquet(dvNames.map(n => s"$path/$n"): _*)
-        .filter(col("file").isin(existingRefs.map(_.name): _*))
-      newPos.unionByName(old)
-    }).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      // per-file deleted counts: bounded by the affected file count
-      val counts = merged.groupBy(col("file"))
-        .agg(count(lit(1)).as("n")).collect()
-        .map(r => r.getString(0) -> r.getLong(1)).toMap
-      val newlyDeleted = counts.values.sum -
-        affected.flatMap(_.dv).map(_.nDeleted).sum
-      if (newlyDeleted == 0L)
-        return DvDeleteStats(snap.files.size.toLong, 0L, 0L, 0L, snap.version)
-      val byRows = affected.map(f => f.name -> f.rows).toMap
-      val dropped = counts.collect {
-        case (n, c) if c == byRows(n) => n
-      }.toSet
-      val survivors = snap.files.filterNot(f => dropped.contains(f.name))
-      require(survivors.nonEmpty,
-        s"deleteWhereDv would empty the table at $path entirely — a committed " +
-        "snapshot must list at least one file; drop the table instead")
-      // fully-deleted files need no positions — they leave the list;
-      // vacuum's orphan sweep covers dv-*, so a crash between here and
-      // commit leaves reclaimable files, never a wrong table
-      val refOf = stageDvSidecar(spark, path, merged, counts, dropped,
-        dvShards, "dvdelete")
-      val nextFiles = survivors.map { f =>
-        refOf.get(f.name) match {
-          case Some(ref) => f.copy(dv = Some(ref))
-          case None      => f
-        }
-      }
-      val next = TableSnapshot(snap.version + 1, snap.keyName, nextFiles,
-        snap.schemaHash, snap.txns, op = "deletedv",
-        statsCols = snap.statsCols, schema = snap.schema,
-        droppedCols = snap.droppedCols, constraints = snap.constraints)
-      commitSnapshot(spark, path, next)
-      DvDeleteStats(snap.files.size.toLong, refOf.size.toLong,
-        dropped.size.toLong, newlyDeleted, next.version)
-    } finally { merged.unpersist(false): Unit }
+    markDeleted(spark, path, snap, affected,
+      readFilesDv(spark, path, snap, affected.map(_.name), snap.dvRefs, positioned = true),
+      predicate, dvShards, "deletedv", "deleteWhereDv")((_, _) => Nil)
   }
 
   /** What [[purgeDeletes]] did. */
@@ -2288,10 +2221,8 @@ object Layout {
       minDeletedFraction: Double = 0.0, nFiles: Int = 0): PurgeStats = {
     require(minDeletedFraction >= 0.0 && minDeletedFraction <= 1.0,
       s"purgeDeletes: minDeletedFraction must be in [0,1], got $minDeletedFraction")
-    val snap = latestSnapshot(spark, path).getOrElse(throw new IllegalStateException(
-      s"purgeDeletes: no committed table under $path"))
-    assertWritable(snap, "purgeDeletes")
-    val victims = snap.files.filter(f => f.dv.exists(
+    val snap = writableHead(spark, path, "purgeDeletes")
+    val (victims, untouched) = snap.files.partition(f => f.dv.exists(
       d => d.nDeleted.toDouble / f.rows >= minDeletedFraction))
     if (victims.isEmpty)
       return PurgeStats(snap.files.size.toLong, 0L, 0L, snap.version)
@@ -2299,18 +2230,9 @@ object Layout {
     // materialization; survivors re-cluster under fresh names
     val live = readFiles(spark, path, snap, victims.map(_.name))
     val expect = victims.map(_.liveRows).sum
-    val moved = stageAndMoveIn(live, path, "purge", snap.keyName,
-      if (nFiles > 0) nFiles else victims.size)
-    val movedEntries = snapshotEntries(spark, path, snap.keyName, moved, snap.statsCols)
-    require(movedEntries.map(_.rows).sum == expect,
-      "purgeDeletes: rewritten row count diverged from the victims' live " +
-      "count; nothing committed, both generations on disk")
-    val untouched = snap.files.filterNot(victims.map(_.name).toSet contains _.name)
-    val next = TableSnapshot(snap.version + 1, snap.keyName,
-      untouched ++ movedEntries, snap.schemaHash, snap.txns,
-      op = "purge", statsCols = snap.statsCols, schema = snap.schema,
-      droppedCols = snap.droppedCols, constraints = snap.constraints)
-    commitSnapshot(spark, path, next)
+    val movedEntries = stageGeneration(spark, path, snap, live, "purge",
+      if (nFiles > 0) nFiles else victims.size, expect, "purgeDeletes")
+    val next = commitNext(spark, path, snap.next(untouched ++ movedEntries, "purge"))
     PurgeStats(snap.files.size.toLong, victims.size.toLong, expect, next.version)
   }
 
@@ -2348,114 +2270,67 @@ object Layout {
       nFiles: Int = 0, dvShards: Int = 1): DvUpdateStats = {
     require(set.nonEmpty, "updateWhereDv: empty SET list")
     require(dvShards >= 1, "updateWhereDv: dvShards must be >= 1")
-    val snap = latestSnapshot(spark, path).getOrElse(throw new IllegalStateException(
-      s"updateWhereDv: no committed table under $path"))
-    assertWritable(snap, "updateWhereDv")
-    val affected = snap.files.filter { f =>
-      scanRanges.forall { case (c, lo, hi) =>
-        val (mn, mx) = if (c == snap.keyName) (f.minKey, f.maxKey)
-          else f.stats.getOrElse(c, throw new IllegalArgumentException(
-            s"updateWhereDv: snapshot v${snap.version} carries no stats for '$c'"))
-        mx >= lo && mn <= hi
-      }
-    }
+    val snap = writableHead(spark, path, "updateWhereDv")
+    val (affected, _) = Layout.affected(snap, scanRanges, "updateWhereDv")
     if (affected.isEmpty)
       return DvUpdateStats(snap.files.size.toLong, 0L, 0L, 0L, snap.version)
-    val names = affected.map(_.name)
-    val paths = names.map(n => s"$path/$n")
-    val raw0 = snap.schema match {
-      case Some(st) => spark.read.schema(st).parquet(paths: _*)
-      case None     => spark.read.parquet(paths: _*)
-    }
-    val missing = set.map(_._1).filterNot(raw0.columns.contains)
-    require(missing.isEmpty,
-      s"updateWhereDv: table at $path has no column(s) ${missing.mkString(", ")} " +
-      "— SET must name existing table columns")
-    val dataCols = raw0.columns.toIndexedSeq
-    val raw = raw0
-      .withColumn("_graft_dv_file", col("_metadata.file_name"))
-      .withColumn("_graft_dv_pos", col("_metadata.row_index"))
     // LIVE rows only: an already-deleted row matching the predicate
     // must not come back as a fresh image
-    val existingRefs = affected.filter(_.dv.isDefined)
-    def existingPositions(): Option[DataFrame] =
-      if (existingRefs.isEmpty) None
-      else Some(spark.read
-        .parquet(existingRefs.map(f => s"$path/${f.dv.get.name}").distinct: _*)
-        .filter(col("file").isin(existingRefs.map(_.name): _*)))
-    val live = existingPositions() match {
-      case None => raw
-      case Some(old) => raw.join(
-        broadcast(old.withColumnRenamed("file", "_graft_dv_file")
-          .withColumnRenamed("pos", "_graft_dv_pos")),
-        Seq("_graft_dv_file", "_graft_dv_pos"), "left_anti")
+    val live = readFilesDv(spark, path, snap, affected.map(_.name), snap.dvRefs,
+      positioned = true)
+    requireSetColumns(live, set, path, "updateWhereDv")
+    val d = markDeleted(spark, path, snap, affected, live, predicate, dvShards,
+      "updatedv", "updateWhereDv") { (matched, nMatched) =>
+      val updated = assign(matched, set, None)
+      checkImages(snap, path, updated, "updateWhereDv")
+      stageGeneration(spark, path, snap, updated, "update",
+        if (nFiles > 0) nFiles else math.max(1, affected.size / 4), nMatched,
+        "updateWhereDv")
     }
-    // persisted: the anti-join + predicate scan over the affected
-    // files' bytes is the dominant cost, and FOUR consumers read this
-    // (∝ updated rows) frame — the count, the position projection, the
-    // new-image staging, and through it the constraint check
-    val matched = live.filter(coalesce(predicate, lit(false)))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val nUpdated = matched.count()
-      if (nUpdated == 0L)
-        return DvUpdateStats(snap.files.size.toLong, 0L, 0L, 0L, snap.version)
-      // old images -> merged positions (fold with existing refs, exactly
-      // deleteWhereDv's discipline)
-      val newPos = matched.select(col("_graft_dv_file").as("file"),
-        col("_graft_dv_pos").as("pos"))
-      val merged = (existingPositions() match {
-        case None      => newPos
-        case Some(old) => newPos.unionByName(old)
-      }).distinct()
-      val counts = merged.groupBy(col("file"))
-        .agg(count(lit(1)).as("n")).collect()
-        .map(r => r.getString(0) -> r.getLong(1)).toMap
-      val byRows = affected.map(f => f.name -> f.rows).toMap
-      val dropped = counts.collect {
-        case (n, c) if c == byRows(n) => n
-      }.toSet
-      // new images: SET applied, types preserved, original column order
-      val setMap = set.toMap
-      val fieldTypes = raw0.schema.fields.map(f => f.name -> f.dataType).toMap
-      val updated = matched.select(dataCols.map { c =>
-        setMap.get(c) match {
-          case Some(e) => e.cast(fieldTypes(c)).as(c)
-          case None    => col(c)
-        }
-      }: _*)
-      snap.schemaHash.foreach { expect =>
-        val got = schemaHashOf(updated.schema)
-        require(got == expect,
-          s"updateWhereDv: updated-image schema (hash $got) does not match the " +
-          s"table's recorded schema (hash $expect) under $path")
+    DvUpdateStats(d.nFilesTotal, d.nFilesDvUpdated, d.nFilesDropped,
+      d.nRowsDeleted, d.version)
+  }
+
+  /** Refuse a SET list naming a column `rows` lacks, before any job. */
+  private def requireSetColumns(rows: DataFrame, set: Seq[(String, Column)],
+      path: String, who: String): Unit = {
+    val missing = set.map(_._1).filterNot(rows.columns.contains)
+    require(missing.isEmpty,
+      s"$who: table at $path has no column(s) ${missing.mkString(", ")} " +
+      "— SET must name existing table columns")
+  }
+
+  /** `rows` with every SET expression applied (only where `cond` holds,
+    * when one is given), each cast back to its column's type so the
+    * schema fingerprint is preserved by construction, in the table's own
+    * column order.
+    */
+  private def assign(rows: DataFrame, set: Seq[(String, Column)],
+      cond: Option[Column]): DataFrame = {
+    val setMap = set.toMap
+    rows.select(rows.schema.fields.toIndexedSeq.map { f =>
+      setMap.get(f.name) match {
+        case Some(e) =>
+          val v = e.cast(f.dataType)
+          cond.fold(v)(when(_, v).otherwise(col(f.name))).as(f.name)
+        case None => col(f.name)
       }
-      // the new images must satisfy the CHECK constraints before staging
-      verifyConstraints(updated, snap.constraints, "updateWhereDv")
-      // stage the NEW generation first, then the sidecar; a crash at any
-      // point before commit leaves only vacuum-able orphans
-      val moved = stageAndMoveIn(updated, path, "update",
-        snap.keyName, if (nFiles > 0) nFiles else math.max(1, affected.size / 4))
-      val movedEntries = snapshotEntries(spark, path, snap.keyName, moved, snap.statsCols)
-      require(movedEntries.map(_.rows).sum == nUpdated,
-        "updateWhereDv: appended image count diverged from the matched count; " +
-        "nothing committed, staged files are vacuum-able orphans")
-      val refOf = stageDvSidecar(spark, path, merged, counts, dropped,
-        dvShards, "updatedv")
-      val survivors = snap.files.filterNot(f => dropped.contains(f.name)).map { f =>
-        refOf.get(f.name) match {
-          case Some(ref) => f.copy(dv = Some(ref))
-          case None      => f
-        }
-      }
-      val next = TableSnapshot(snap.version + 1, snap.keyName,
-        survivors ++ movedEntries, snap.schemaHash, snap.txns,
-        op = "updatedv", statsCols = snap.statsCols, schema = snap.schema,
-        droppedCols = snap.droppedCols, constraints = snap.constraints)
-      commitSnapshot(spark, path, next)
-      DvUpdateStats(snap.files.size.toLong, refOf.size.toLong,
-        dropped.size.toLong, nUpdated, next.version)
-    } finally { matched.unpersist(false): Unit }
+    }: _*)
+  }
+
+  /** Refuse the rows a commit is about to add unless they match the
+    * table's recorded schema fingerprint and satisfy every CHECK
+    * constraint — before a byte is staged.
+    */
+  private def checkImages(snap: TableSnapshot, path: String, rows: DataFrame,
+      who: String): Unit = {
+    snap.schemaHash.foreach { expect =>
+      val got = schemaHashOf(rows.schema)
+      require(got == expect,
+        s"$who: rewritten schema (hash $got) does not match the table's " +
+        s"recorded schema (hash $expect) under $path — column set or order drifted")
+    }
+    verifyConstraints(rows, snap.constraints, who)
   }
 
   /** What [[updateWhere]] did — same accounting as [[DeleteStats]]. */
@@ -2490,60 +2365,27 @@ object Layout {
       scanRanges: Seq[(String, Long, Long)] = Nil,
       nFiles: Int = 0): UpdateStats = {
     require(set.nonEmpty, "updateWhere: empty SET list")
-    val snap = latestSnapshot(spark, path).getOrElse(throw new IllegalStateException(
-      s"updateWhere: no committed table under $path"))
-    assertWritable(snap, "updateWhere")
-    val affected = snap.files.filter { f =>
-      scanRanges.forall { case (c, lo, hi) =>
-        val (mn, mx) = if (c == snap.keyName) (f.minKey, f.maxKey)
-          else f.stats.getOrElse(c, throw new IllegalArgumentException(
-            s"updateWhere: snapshot v${snap.version} carries no stats for '$c'"))
-        mx >= lo && mn <= hi
-      }
-    }
+    val snap = writableHead(spark, path, "updateWhere")
+    val (affected, untouched) = Layout.affected(snap, scanRanges, "updateWhere")
     if (affected.isEmpty)
       return UpdateStats(snap.files.size.toLong, 0L, 0L, snap.version)
     val src = readFiles(spark, path, snap, affected.map(_.name))
-    val missing = set.map(_._1).filterNot(src.columns.contains)
-    require(missing.isEmpty,
-      s"updateWhere: table at $path has no column(s) ${missing.mkString(", ")} " +
-      "— SET must name existing table columns")
+    requireSetColumns(src, set, path, "updateWhere")
     val cond = coalesce(predicate, lit(false))
     val nUpdated = src.filter(cond).count()
     if (nUpdated == 0L)
       return UpdateStats(snap.files.size.toLong, 0L, 0L, snap.version)
-    val setMap = set.toMap
-    val fieldTypes = src.schema.fields.map(f => f.name -> f.dataType).toMap
-    val updated = src.select(src.columns.map { c =>
-      setMap.get(c) match {
-        case Some(e) => when(cond, e.cast(fieldTypes(c))).otherwise(col(c)).as(c)
-        case None    => col(c)
-      }
-    }.toIndexedSeq: _*)
-    snap.schemaHash.foreach { expect =>
-      val got = schemaHashOf(updated.schema)
-      require(got == expect,
-        s"updateWhere: rewritten schema (hash $got) does not match the " +
-        s"table's recorded schema (hash $expect) under $path")
-    }
+    val updated = assign(src, set, Some(cond))
     // the post-update images must satisfy the CHECK constraints (the
     // untouched rows passed at their own commit time; one pass over
     // the affected files covers both)
-    verifyConstraints(updated, snap.constraints, "updateWhere")
-    val untouched = snap.files.filterNot(affected.map(_.name).toSet contains _.name)
-    val nOut = if (nFiles > 0) nFiles else affected.size
-    val moved = stageAndMoveIn(updated, path, "update", snap.keyName, nOut)
-    val movedEntries = snapshotEntries(spark, path, snap.keyName, moved, snap.statsCols)
+    checkImages(snap, path, updated, "updateWhere")
     // live rows: readFiles applied any deletion vectors, so the rewrite
     // materializes them and the preservation check counts live rows
-    require(movedEntries.map(_.rows).sum == affected.map(_.liveRows).sum,
-      "updateWhere: rewritten row count diverged from the affected files' " +
-      "live row count; nothing committed, both generations on disk")
-    val next = TableSnapshot(snap.version + 1, snap.keyName,
-      untouched ++ movedEntries, snap.schemaHash, snap.txns,
-      op = "update", statsCols = snap.statsCols, schema = snap.schema,
-      droppedCols = snap.droppedCols, constraints = snap.constraints)
-    commitSnapshot(spark, path, next)
+    val movedEntries = stageGeneration(spark, path, snap, updated, "update",
+      if (nFiles > 0) nFiles else affected.size, affected.map(_.liveRows).sum,
+      "updateWhere")
+    val next = commitNext(spark, path, snap.next(untouched ++ movedEntries, "update"))
     UpdateStats(snap.files.size.toLong, affected.size.toLong, nUpdated, next.version)
   }
 
@@ -2584,9 +2426,7 @@ object Layout {
       idCol: String, payloadCols: Seq[String], key: Column,
       nFiles: Int = 0, txn: Option[(String, Long)] = None): UpsertStats = {
     require(payloadCols.nonEmpty)
-    val snap = latestSnapshot(spark, path).getOrElse(throw new IllegalStateException(
-      s"upsertCommitted: no committed table under $path"))
-    assertWritable(snap, "upsertCommitted")
+    val snap = writableHead(spark, path, "upsertCommitted")
     txn.foreach { case (app, id) =>
       if (snap.txns.get(app).exists(_ >= id))
         return UpsertStats(snap.files.size.toLong, 0L,
@@ -2596,20 +2436,7 @@ object Layout {
       s"upsertCommitted: '$idCol' has no per-file stats in snapshot " +
       s"v${snap.version} (key=${snap.keyName}, stats=${snap.statsCols.mkString(",")}) " +
       "— create the table with statsCols including the merge key")
-    import spark.implicits._
-    val boxes = snap.files.map { f =>
-      val (mn, mx) = if (idCol == snap.keyName) (f.minKey, f.maxKey) else f.stats(idCol)
-      (f.name, mn, mx)
-    }.toDF("__name", "__mn", "__mx")
-    val hit = changes.select(col(idCol).cast("long").as("__id"))
-      .join(broadcast(boxes),
-        col("__id") >= col("__mn") && col("__id") <= col("__mx"))
-      .select(col("__name")).distinct().as[String].collect().toSet
-    val affected0 = snap.files.filter(f => hit.contains(f.name))
-    // a pure-insert batch hits no box; anchor on one file so the new
-    // rows enter through the same join + commit path
-    val affected =
-      if (affected0.nonEmpty) affected0 else snap.files.sortBy(_.rows).take(1)
+    val (affected, untouched) = probed(snap, idCol, changes, col(idCol).cast("long"))
     val src = readFiles(spark, path, snap, affected.map(_.name))
     val missing = (idCol +: payloadCols).filterNot(src.columns.contains)
     require(missing.isEmpty,
@@ -2626,33 +2453,16 @@ object Layout {
         .map(col).toIndexedSeq: _*)
     val keyName = snap.keyName
     val clustered = applied.withColumn(keyName, key)
-    snap.schemaHash.foreach { expect =>
-      val got = schemaHashOf(clustered.schema)
-      require(got == expect,
-        s"upsertCommitted: rewritten schema (hash $got) does not match the " +
-        s"table's recorded schema (hash $expect) under $path — column set or " +
-        "order drifted")
-    }
     // the merged generation must satisfy the CHECK constraints
-    verifyConstraints(clustered, snap.constraints, "upsertCommitted")
+    checkImages(snap, path, clustered, "upsertCommitted")
     val keptRows = clustered.count()
-    val untouched = snap.files.filterNot(affected.map(_.name).toSet contains _.name)
     require(untouched.nonEmpty || keptRows > 0L,
       s"upsertCommitted would empty the table at $path entirely — a committed " +
       "snapshot must list at least one file; drop the table instead")
-    val moved =
-      if (keptRows == 0L) IndexedSeq.empty[String]
-      else stageAndMoveIn(clustered, path, "upsert", keyName,
-        if (nFiles > 0) nFiles else affected.size)
-    val movedEntries = snapshotEntries(spark, path, keyName, moved, snap.statsCols)
-    require(movedEntries.map(_.rows).sum == keptRows,
-      "upsertCommitted: rewritten row count diverged from the applied count; " +
-      "nothing committed, both generations on disk")
-    val next = TableSnapshot(snap.version + 1, keyName,
-      untouched ++ movedEntries, snap.schemaHash, snap.txns ++ txn,
-      op = "upsert", statsCols = snap.statsCols, schema = snap.schema,
-      droppedCols = snap.droppedCols, constraints = snap.constraints)
-    commitSnapshot(spark, path, next)
+    val movedEntries = stageGeneration(spark, path, snap, clustered, "upsert",
+      if (nFiles > 0) nFiles else affected.size, keptRows, "upsertCommitted")
+    val next = commitNext(spark, path,
+      snap.next(untouched ++ movedEntries, "upsert", txns = snap.txns ++ txn))
     UpsertStats(snap.files.size.toLong, affected.size.toLong,
       snap.totalLiveRows, next.totalLiveRows, next.version)
   }
@@ -2819,33 +2629,18 @@ object Layout {
         // content is the whole future table, so it must satisfy every
         // recorded CHECK constraint before a byte is staged
         verifyConstraints(clustered, p.constraints, "writeClustered")
-        val fs = fsOf(spark, path)
-        val token = java.util.UUID.randomUUID().toString.take(8)
-        val tmp = new org.apache.hadoop.fs.Path(s"$path/.rewrite-$token")
-        clustered.write.mode("overwrite").parquet(tmp.toString)
-        val staged = fs.listStatus(tmp)
-          .filter(st => st.isFile && st.getPath.getName.startsWith("part-"))
-        val moved = staged.zipWithIndex.map { case (st, i) =>
-          val target = new org.apache.hadoop.fs.Path(
-            s"$path/part-rewrite-$token-$i${suffixOf(st.getPath.getName)}")
-          if (!fs.rename(st.getPath, target))
-            throw new java.io.IOException(
-              s"rewrite rename ${st.getPath} -> $target failed")
-          target.getName
-        }.toIndexedSeq
-        fs.delete(tmp, true)
+        val moved = moveIn(clustered, path, "rewrite", "part-rewrite")
         // a rewrite keeps the table's pruning contract unless the caller
         // explicitly redefines it
         val sc = if (statsCols.nonEmpty) statsCols else p.statsCols
-        commitSnapshot(spark, path, TableSnapshot(
-          p.version + 1, keyName,
-          snapshotEntries(spark, path, keyName, moved, sc),
-          Some(schemaHashOf(clustered.schema)), p.txns ++ txn,
+        commitSnapshot(spark, path, p.next(
+          snapshotEntries(spark, path, keyName, moved, sc), "rewrite",
+          keyName = keyName, schemaHash = Some(schemaHashOf(clustered.schema)),
+          txns = p.txns ++ txn, statsCols = sc, schema = Some(clustered.schema),
           // tombstones CLEAR on a full rewrite: every file this snapshot
           // lists was just written through the current schema, so no
           // live file can resurrect a previously-dropped column's bytes
-          op = "rewrite", statsCols = sc, schema = Some(clustered.schema),
-          droppedCols = Nil, constraints = p.constraints))
+          droppedCols = Nil))
         readCommitted(spark, path)
       case None =>
         clustered.write.mode("overwrite").parquet(path)

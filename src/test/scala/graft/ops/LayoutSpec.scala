@@ -2084,4 +2084,83 @@ class LayoutSpec extends AnyFunSuite {
     v99.delete()
     assert(Layout.latestSnapshot(spark, dir).get.version >= 1L)
   }
+
+  test("carry rule: every mutating verb keeps the constraints, tombstones, stats and txns") {
+    val base = spark.range(4000).select(
+      col("id"),
+      ((col("id") * 7919L) % 1000).as("x"),
+      (col("id") % 13).as("y"),
+      (col("id") % 5).as("z"))
+    val key = pmod(col("x"), lit(64L))
+    val dir = java.nio.file.Files.createTempDirectory("graft_carry").toString
+    Layout.writeClustered(base, dir, key, nFiles = 8,
+      txn = Some("w" -> 1L), statsCols = Seq("x", "id"))
+    Layout.addCheckConstraint(spark, dir, "x_nonneg", "x >= 0"): Unit
+    Layout.dropColumn(spark, dir, "z"): Unit
+    val setup = Layout.latestSnapshot(spark, dir).get
+    // each verb must commit, and its commit must carry all four fields
+    // (a full rewrite clears the tombstones by design: every file it
+    // lists was just written through the current schema)
+    def after(verb: String, dropped: Seq[String] = Seq("z"))(body: => Any): Unit = {
+      val before = Layout.latestSnapshot(spark, dir).get.version
+      body
+      val s = Layout.latestSnapshot(spark, dir).get
+      assert(s.version > before, s"$verb committed nothing")
+      assert(s.constraints == Seq("x_nonneg" -> "x >= 0"), s"$verb lost the CHECK constraint")
+      assert(s.droppedCols == dropped, s"$verb lost the dropped-column tombstone")
+      assert(s.statsCols == Seq("x", "id"), s"$verb lost the stats columns")
+      assert(s.txns.get("w").contains(1L), s"$verb lost the txn map")
+    }
+    after("append")(Layout.appendClustered(
+      spark.range(4000, 4100).select(col("id"), (col("id") % 1000).as("x"),
+        (col("id") % 13).as("y")), dir, key, nFiles = 1))
+    after("delete")(Layout.deleteWhere(spark, dir, col("id") < 10L,
+      scanRanges = Seq(("id", 0L, 9L))))
+    after("deletedv")(Layout.deleteWhereDv(spark, dir, col("id").between(10L, 19L),
+      scanRanges = Seq(("id", 10L, 19L))))
+    after("update")(Layout.updateWhere(spark, dir, col("id") === 100L,
+      Seq("y" -> lit(7L)), scanRanges = Seq(("id", 100L, 100L))))
+    after("updatedv")(Layout.updateWhereDv(spark, dir, col("id") === 200L,
+      Seq("y" -> lit(8L)), scanRanges = Seq(("id", 200L, 200L))))
+    after("purge")(Layout.purgeDeletes(spark, dir))
+    after("upsert")(Layout.upsertCommitted(spark, dir,
+      Seq((300L, 2L, "upsert", 5L, 1L, 0L))
+        .toDF("id", "version", "op", "x", "y", "cluster_key"),
+      "id", Seq("x", "y", "cluster_key"), key))
+    after("addColumn")(Layout.addColumn(spark, dir, "w",
+      org.apache.spark.sql.types.LongType))
+    after("restore")(Layout.restoreVersion(spark, dir, setup.version))
+    after("compact")(Layout.compactFiles(spark, dir, "cluster_key",
+      minFileBytes = 1L << 30, targetFileBytes = 1L << 30))
+    after("commitTxn")(Layout.commitTxn(spark, dir, "w2", 5L))
+    after("rewrite", dropped = Nil)(Layout.writeClustered(
+      Layout.readCommitted(spark, dir).drop("cluster_key"), dir, key, nFiles = 4))
+    assert(Layout.readCommitted(spark, dir).count() ==
+      Layout.readVersion(spark, dir, setup.version).count())
+  }
+
+  test("minwriter is derived at commit: dropping the last constraint stops stamping it") {
+    def stamped(dir: String): Boolean = {
+      val v = Layout.latestSnapshot(spark, dir).get.version
+      val f = new java.io.File(dir, f"_manifests/v$v%010d.txt")
+      scala.io.Source.fromFile(f, "UTF-8").getLines().contains("minwriter=2")
+    }
+    // DV-free: the constraint alone stamps level 2, and its drop clears it
+    val dir = java.nio.file.Files.createTempDirectory("graft_minwriter").toString
+    Layout.writeClustered(spark.range(100).select(col("id")), dir,
+      col("id"), nFiles = 2)
+    assert(!stamped(dir))
+    Layout.addCheckConstraint(spark, dir, "id_nonneg", "id >= 0"): Unit
+    assert(stamped(dir))
+    val dropped = Layout.dropCheckConstraint(spark, dir, "id_nonneg")
+    assert(dropped.minWriter == 1)
+    assert(!stamped(dir), "a table with no level-2 feature left must not demand a level-2 writer")
+    assert(Layout.latestSnapshot(spark, dir).get.minWriter == 1)
+    // with deletion vectors the level stays 2 after the drop
+    val (dvDir, _) = dvTable("graft_minwriter_dv")
+    Layout.deleteWhereDv(spark, dvDir, col("id") < 100L): Unit
+    Layout.addCheckConstraint(spark, dvDir, "id_nonneg", "id >= 0"): Unit
+    Layout.dropCheckConstraint(spark, dvDir, "id_nonneg"): Unit
+    assert(stamped(dvDir))
+  }
 }
