@@ -1,5 +1,7 @@
 package graft.io
 
+import scala.collection.mutable
+
 import org.apache.hadoop.fs.{FileSystem, Path}
 
 /** BAI (BAM index) — the SAM spec's §5 binning scheme, re-implemented from
@@ -56,36 +58,37 @@ object Bai {
     out.result()
   }
 
-  /** Build the index by one sequential walk of a coordinate-sorted BAM,
-    * tracking each record's virtual start/end offsets. Bins, chunks and
-    * the linear index come from each record's raw refID, pos and binary
-    * CIGAR ([[BamScan.Records]]); no record is decoded to strings.
-    * Unmapped records (refID −1) are not indexed — `fetch` never returns
-    * them, matching pysam's region fetch. Throws on out-of-order records:
-    * a binning index over an unsorted file would silently miss reads.
+  /** The index accumulator. It is fed each record's refID, 0-based pos,
+    * reference span and virtual start/end offsets in file order: [[build]]
+    * feeds it from a file on disk, `Bam.write` from the writer as it emits
+    * each record. Unmapped records (refID −1) are not indexed — `fetch`
+    * never returns them, matching pysam's region fetch. A binning index
+    * over an unsorted file would silently miss reads, so the first mapped
+    * record out of coordinate order ends the accumulation and [[index]]
+    * refuses.
     */
-  def build(fs: FileSystem, path: Path): Index = {
-    val r = new BamScan.Records(fs, path, 0L)
-    try {
-      val refs = r.readHeader().refs
-      val nRef = refs.length
-      val bins = Array.fill(nRef)(
-        scala.collection.mutable.LinkedHashMap.empty[Int, scala.collection.mutable.ArrayBuffer[Chunk]])
-      val linear = Array.fill(nRef)(
-        scala.collection.mutable.ArrayBuffer.empty[Long])
-      var lastRef = -1
-      var lastPos = -1
-      while (r.advance()) {
-        val refId = r.refId
-        require(refId >= -1 && refId < nRef, s"BAM refID $refId out of range at ${r.voffset} of $path")
-        if (refId >= 0) {
-          val beg0 = r.pos0
-          require(refId > lastRef || (refId == lastRef && beg0 >= lastPos),
-            s"BAI requires a coordinate-sorted BAM: ${refs(refId)}:${beg0 + 1} after " +
-              s"ref#$lastRef:${lastPos + 1} in $path")
+  final class Builder(refs: Array[String], path: Path) {
+    private val bins =
+      Array.fill(refs.length)(mutable.LinkedHashMap.empty[Int, mutable.ArrayBuffer[Chunk]])
+    private val linear = Array.fill(refs.length)(mutable.ArrayBuffer.empty[Long])
+    private var lastRef = -1
+    private var lastPos = -1
+    private var unsorted: String = null
+
+    /** False from the first mapped record out of coordinate order on. */
+    def sorted: Boolean = unsorted == null
+
+    def add(refId: Int, beg0: Int, refSpan: Int, vBeg: Long, vEnd: Long): Unit = {
+      require(refId >= -1 && refId < refs.length,
+        s"BAM refID $refId out of range at $vBeg of $path")
+      if (refId >= 0 && sorted) {
+        if (refId < lastRef || (refId == lastRef && beg0 < lastPos))
+          unsorted = s"BAI requires a coordinate-sorted BAM: ${refs(refId)}:${beg0 + 1} after " +
+            s"ref#$lastRef:${lastPos + 1} in $path"
+        else {
           lastRef = refId
           lastPos = beg0
-          val end0 = beg0 + math.max(1, r.refSpan)
+          val end0 = beg0 + math.max(1, refSpan)
           // BAI addresses at most 512 Mbp: beyond 1<<29 the level-1 bin
           // numbers alias into the level-2 range (beg>>26 == 8 → bin 9)
           // and external readers (htslib/pysam) misread the index.
@@ -95,11 +98,8 @@ object Bai {
             s"BAI cannot index positions beyond 512 Mbp (record " +
               s"${refs(refId)}:${beg0 + 1} spans to $end0 in $path); " +
               "use a CSI-capable indexer for long contigs")
-          val vBeg = r.voffset
-          val vEnd = r.voffsetEnd
-          val bin = reg2bin(beg0, end0)
-          val bucket = bins(refId).getOrElseUpdate(
-            bin, scala.collection.mutable.ArrayBuffer.empty[Chunk])
+          val bucket =
+            bins(refId).getOrElseUpdate(reg2bin(beg0, end0), mutable.ArrayBuffer.empty[Chunk])
           // records are position-sorted, so per-bin chunks only ever grow
           // at the tail; merge when the new record starts in the block the
           // previous chunk ended in (htslib's adjacency rule)
@@ -115,11 +115,31 @@ object Bai {
             win += 1
           }
         }
-        r.skip()
       }
-      Index(Vector.tabulate(nRef)(i =>
+    }
+
+    def index: Index = {
+      require(sorted, unsorted)
+      Index(Vector.tabulate(refs.length)(i =>
         RefIndex(bins(i).map { case (b, cs) => b -> cs.toVector }.toMap,
           linear(i).toVector)))
+    }
+  }
+
+  /** Build the index by one sequential walk of a coordinate-sorted BAM:
+    * the [[BamScan.Records]] cursor feeds a [[Builder]] each record's raw
+    * refID, pos, binary-CIGAR span and virtual offsets; no record is
+    * decoded to strings. Throws on out-of-order records.
+    */
+  def build(fs: FileSystem, path: Path): Index = {
+    val r = new BamScan.Records(fs, path, 0L)
+    try {
+      val b = new Builder(r.readHeader().refs, path)
+      while (b.sorted && r.advance()) {
+        b.add(r.refId, r.pos0, if (r.refId >= 0) r.refSpan else 0, r.voffset, r.voffsetEnd)
+        r.skip()
+      }
+      b.index
     } finally r.close()
   }
 
@@ -179,53 +199,31 @@ object Bai {
     val out = fs.create(path, true)
     try {
       out.write(Array[Byte]('B', 'A', 'I', 1))
-      w32(out, idx.refs.length)
+      LE.put32(out, idx.refs.length)
       idx.refs.foreach { r =>
-        w32(out, r.bins.size)
+        LE.put32(out, r.bins.size)
         r.bins.toSeq.sortBy(_._1).foreach { case (bin, chunks) =>
-          w32(out, bin)
-          w32(out, chunks.length)
-          chunks.foreach { c => w64(out, c.beg); w64(out, c.end) }
+          LE.put32(out, bin)
+          LE.put32(out, chunks.length)
+          chunks.foreach { c => LE.put64(out, c.beg); LE.put64(out, c.end) }
         }
-        w32(out, r.linear.length)
-        r.linear.foreach(w64(out, _))
+        LE.put32(out, r.linear.length)
+        r.linear.foreach(LE.put64(out, _))
       }
     } finally out.close()
   }
 
   def read(fs: FileSystem, path: Path): Index = {
     val in = fs.open(path)
-    try {
-      val all = new java.io.DataInputStream(in)
-      val magic = new Array[Byte](4)
-      all.readFully(magic)
-      require(magic.toSeq == Seq[Byte]('B', 'A', 'I', 1), s"$path: not a BAI file")
-      val nRef = r32(all)
-      Index(Vector.fill(nRef) {
-        val nBin = r32(all)
-        val bins = (0 until nBin).map { _ =>
-          val bin = r32(all)
-          val nChunk = r32(all)
-          bin -> Vector.fill(nChunk)(Chunk(r64(all), r64(all)))
-        }.toMap
-        val nIntv = r32(all)
-        RefIndex(bins, Vector.fill(nIntv)(r64(all)))
-      })
-    } finally in.close()
+    val b = try java.nio.ByteBuffer.wrap(in.readAllBytes()) finally in.close()
+    b.order(java.nio.ByteOrder.LITTLE_ENDIAN)
+    require(b.remaining >= 4 && b.getInt == 0x01494142, s"$path: not a BAI file") // "BAI\1"
+    Index(Vector.fill(b.getInt) {
+      val bins = (0 until b.getInt).map { _ =>
+        val bin = b.getInt
+        bin -> Vector.fill(b.getInt)(Chunk(b.getLong, b.getLong))
+      }.toMap
+      RefIndex(bins, Vector.fill(b.getInt)(b.getLong))
+    })
   }
-
-  private def w32(out: java.io.OutputStream, v: Int): Unit = {
-    out.write(v & 0xff); out.write((v >> 8) & 0xff)
-    out.write((v >> 16) & 0xff); out.write((v >> 24) & 0xff)
-  }
-  private def w64(out: java.io.OutputStream, v: Long): Unit = {
-    w32(out, (v & 0xffffffffL).toInt); w32(out, (v >>> 32).toInt)
-  }
-  private def r32(in: java.io.DataInputStream): Int = {
-    val b = new Array[Byte](4)
-    in.readFully(b)
-    (b(0) & 0xff) | ((b(1) & 0xff) << 8) | ((b(2) & 0xff) << 16) | ((b(3) & 0xff) << 24)
-  }
-  private def r64(in: java.io.DataInputStream): Long =
-    (r32(in) & 0xffffffffL) | ((r32(in) & 0xffffffffL) << 32)
 }

@@ -1,6 +1,6 @@
 package graft.io
 
-import java.io.ByteArrayOutputStream
+import java.io.{ByteArrayOutputStream, OutputStream}
 import java.nio.charset.StandardCharsets.US_ASCII
 
 import org.apache.hadoop.fs.Path
@@ -44,6 +44,7 @@ object Bam {
       seq: String, qual: String, opt: Map[String, String])
 
   private val CigarOps = "MIDNSHP=X"
+  private val CigarOp = "(\\d+)([MIDNSHP=X])".r
   private val SeqNibbles = "=ACMGRSVTWYHKDBN"
 
   // ---- decode -----------------------------------------------------------
@@ -53,12 +54,12 @@ object Bam {
     require(bam.length >= 4 && bam(0) == 'B' && bam(1) == 'A' &&
       bam(2) == 'M' && bam(3) == 1, "not a BAM payload (bad magic)")
     var pos = 4
-    val lText = readI32(bam, pos); pos += 4 + lText
-    val nRef = readI32(bam, pos); pos += 4
+    val lText = LE.i32(bam, pos); pos += 4 + lText
+    val nRef = LE.i32(bam, pos); pos += 4
     val refNames = new Array[String](nRef)
     var r = 0
     while (r < nRef) {
-      val lName = readI32(bam, pos); pos += 4
+      val lName = LE.i32(bam, pos); pos += 4
       refNames(r) = new String(bam, pos, lName - 1, US_ASCII) // drop NUL
       pos += lName + 4 // skip l_ref
       r += 1
@@ -68,7 +69,7 @@ object Bam {
       private var p = start
       def hasNext: Boolean = p + 4 <= bam.length
       def next(): BamRecord = {
-        val blockSize = readI32(bam, p)
+        val blockSize = LE.i32(bam, p)
         // unchecked, a corrupt final record would surface as a raw
         // ArrayIndexOutOfBounds deep in decodeRecord
         require(blockSize >= 32 && p + 4 + blockSize <= bam.length,
@@ -84,17 +85,17 @@ object Bam {
   private[io] def decodeRecord(
       b: Array[Byte], off: Int, len: Int, refs: Array[String]): BamRecord = {
     var p = off
-    val refId = readI32(b, p); p += 4
-    val pos0 = readI32(b, p); p += 4
+    val refId = LE.i32(b, p); p += 4
+    val pos0 = LE.i32(b, p); p += 4
     val lReadName = b(p) & 0xff; p += 1
     val mapq = b(p) & 0xff; p += 1
     p += 2 // bin
-    val nCigar = Bgzf.readU16(b, p); p += 2
-    val flag = Bgzf.readU16(b, p); p += 2
-    val lSeq = readI32(b, p); p += 4
-    val nextRefId = readI32(b, p); p += 4
-    val nextPos0 = readI32(b, p); p += 4
-    val tlen = readI32(b, p); p += 4
+    val nCigar = LE.u16(b, p); p += 2
+    val flag = LE.u16(b, p); p += 2
+    val lSeq = LE.i32(b, p); p += 4
+    val nextRefId = LE.i32(b, p); p += 4
+    val nextPos0 = LE.i32(b, p); p += 4
+    val tlen = LE.i32(b, p); p += 4
     val name = new String(b, p, lReadName - 1, US_ASCII); p += lReadName
     val cigar =
       if (nCigar == 0) "*"
@@ -102,7 +103,7 @@ object Bam {
         val sb = new StringBuilder
         var i = 0
         while (i < nCigar) {
-          val v = readU32i(b, p + i * 4)
+          val v = LE.u32(b, p + i * 4)
           sb.append((v >>> 4).toString).append(CigarOps.charAt((v & 0xf).toInt))
           i += 1
         }
@@ -153,19 +154,19 @@ object Bam {
       case 'A' => (b(p).toChar.toString, p + 1)
       case 'c' => (b(p).toString, p + 1)
       case 'C' => ((b(p) & 0xff).toString, p + 1)
-      case 's' => (Bgzf.readU16(b, p).toShort.toString, p + 2)
-      case 'S' => (Bgzf.readU16(b, p).toString, p + 2)
-      case 'i' => (readI32(b, p).toString, p + 4)
-      case 'I' => (readU32i(b, p).toString, p + 4)
+      case 's' => (LE.u16(b, p).toShort.toString, p + 2)
+      case 'S' => (LE.u16(b, p).toString, p + 2)
+      case 'i' => (LE.i32(b, p).toString, p + 4)
+      case 'I' => (LE.u32(b, p).toString, p + 4)
       case 'f' =>
-        (java.lang.Float.intBitsToFloat(readI32(b, p)).toString, p + 4)
+        (java.lang.Float.intBitsToFloat(LE.i32(b, p)).toString, p + 4)
       case 'Z' | 'H' =>
         var e = p
         while (b(e) != 0) e += 1
         (new String(b, p, e - p, US_ASCII), e + 1)
       case 'B' =>
         val sub = b(p).toChar
-        val n = readI32(b, p + 1)
+        val n = LE.i32(b, p + 1)
         val width = sub match {
           case 'c' | 'C' => 1
           case 's' | 'S' => 2
@@ -210,14 +211,14 @@ object Bam {
     * record's raw bytes — it is the one definition, and no filter on the
     * decoded rows follows it.
     *
-    * The driver reads each file's header and `<file>.bai` (the index
-    * [[Bai.buildAll]] writes; [[Bai.build]] + [[Bai.write]] for a single
-    * file) — kilobytes per file, never record data — and keeps the BGZF
-    * chunks overlapping the region. A file whose header lacks `rname`, or
-    * whose bins miss the region, prunes to nothing; if no file names
-    * `rname` the call fails. One Spark job then byte-range-reads only the
-    * surviving chunks, each carrying its file's reference names, so no
-    * task re-reads a header. The `.bai`s are the manifest.
+    * The driver reads each file's header and `<file>.bai` ([[write]]
+    * indexes each sorted shard; [[Bai.buildAll]] other BAMs) — kilobytes
+    * per file, never record data — and keeps the BGZF chunks overlapping
+    * the region. A file whose header lacks `rname`, or whose bins miss the
+    * region, prunes to nothing; if no file names `rname` the call fails.
+    * One Spark job then byte-range-reads only the surviving chunks, each
+    * carrying its file's reference names, so no task re-reads a header.
+    * The `.bai`s are the manifest.
     *
     * Trade-off: the probe is serial on the driver, one header + index
     * open per file before the job starts. That is nothing at one shard
@@ -256,8 +257,8 @@ object Bam {
   /** Multi-shard coordinate-sorted BAM layout — the production form of
     * the single-shard fixture `q_bam_fetch` builds: range-partition on
     * (rname, pos, xxhash64(header)), sort within shards on (rname, pos)
-    * (the `.bai` precondition), write one BAM per shard through the
-    * existing per-partition sink, and index every shard. Returns the
+    * (the `.bai` precondition), and write one BAM per shard through
+    * [[write]], which indexes every shard as it writes it. Returns the
     * shard paths.
     *
     * The read-name hash is a deterministic tie-break: a range partitioner
@@ -279,9 +280,7 @@ object Bam {
     val sorted = df
       .repartitionByRange(nShards, col("rname"), col("pos"), xxhash64(col("header")))
       .sortWithinPartitions(col("rname"), col("pos"))
-    val files = write(sorted, dir, refLength, blockData)
-    Bai.buildAll(df.sparkSession, dir)
-    files
+    write(sorted, dir, refLength, blockData)
   }
 
   /** [[fetch]] under the name the sharded-layout callers use: a
@@ -307,18 +306,29 @@ object Bam {
     */
   def encode(records: Iterator[BamRecord], refs: Seq[(String, Int)]): Array[Byte] = {
     val out = new ByteArrayOutputStream(1 << 20)
+    encodeTo(out, records, refs)((_, _, _) => ())
+    out.toByteArray
+  }
+
+  /** [[encode]] into any stream: the header, then each record, with
+    * `starts(refId, pos0, refSpan)` called as each record begins — the
+    * hook [[write]] indexes through.
+    */
+  private[io] def encodeTo(out: OutputStream, records: Iterator[BamRecord],
+      refs: Seq[(String, Int)])(starts: (Int, Int, Int) => Unit): Unit = {
     val header = refs.map { case (n, l) => s"@SQ\tSN:$n\tLN:$l" }
       .mkString("", "\n", "\n")
     out.write(Array[Byte]('B', 'A', 'M', 1))
-    writeI32(out, header.length)
+    LE.put32(out, header.length)
     out.write(header.getBytes(US_ASCII))
-    writeI32(out, refs.size)
+    LE.put32(out, refs.size)
     refs.foreach { case (name, len) =>
-      writeI32(out, name.length + 1)
+      LE.put32(out, name.length + 1)
       out.write(name.getBytes(US_ASCII)); out.write(0)
-      writeI32(out, len)
+      LE.put32(out, len)
     }
     val refId = refs.map(_._1).zipWithIndex.toMap
+    val body = new ByteArrayOutputStream(256)
     records.foreach { rec =>
       // l_read_name is a single byte; an unchecked write would silently
       // truncate modulo 256 and desynchronize every following field
@@ -327,26 +337,31 @@ object Bam {
       require(rec.qual == "*" || rec.qual == null ||
         rec.qual.length == (if (rec.seq == "*") 0 else rec.seq.length),
         s"qual length ${rec.qual.length} != seq length for ${rec.header}")
-      val body = new ByteArrayOutputStream(256)
-      writeI32(body, refId.get(rec.rname).getOrElse(-1))
-      writeI32(body, rec.pos - 1)
-      body.write(rec.header.length + 1)
-      body.write(rec.mapq)
-      writeU16(body, 0) // bin (unused by this reader)
       val cigarOps: Seq[Int] =
         if (rec.cigar == "*" || rec.cigar == null) Nil
-        else "(\\d+)([MIDNSHP=X])".r.findAllMatchIn(rec.cigar).map { m =>
-          (m.group(1).toInt << 4) | CigarOps.indexOf(m.group(2).charAt(0))
-        }.toSeq
-      writeU16(body, cigarOps.size)
-      writeU16(body, rec.flag)
+        else {
+          val ops = CigarOp.findAllMatchIn(rec.cigar).toSeq
+          require(ops.map(_.matched).mkString == rec.cigar,
+            s"CIGAR '${rec.cigar}' of ${rec.header} is not a run of <length><op in $CigarOps>")
+          ops.map(m => (m.group(1).toInt << 4) | CigarOps.indexOf(m.group(2).charAt(0)))
+        }
+      val rid = refId.getOrElse(rec.rname, -1)
+      starts(rid, rec.pos - 1, cigarOps.filter(o => BamScan.RefOps(o & 0xf)).map(_ >>> 4).sum)
+      body.reset()
+      LE.put32(body, rid)
+      LE.put32(body, rec.pos - 1)
+      body.write(rec.header.length + 1)
+      body.write(rec.mapq)
+      LE.put16(body, 0) // bin (unused by this reader)
+      LE.put16(body, cigarOps.size)
+      LE.put16(body, rec.flag)
       val seq = if (rec.seq == "*") "" else rec.seq
-      writeI32(body, seq.length)
-      writeI32(body, refId.get(rec.rnext).getOrElse(-1))
-      writeI32(body, rec.pnext - 1)
-      writeI32(body, rec.tlen)
+      LE.put32(body, seq.length)
+      LE.put32(body, refId.getOrElse(rec.rnext, -1))
+      LE.put32(body, rec.pnext - 1)
+      LE.put32(body, rec.tlen)
       body.write(rec.header.getBytes(US_ASCII)); body.write(0)
-      cigarOps.foreach(writeI32(body, _))
+      cigarOps.foreach(LE.put32(body, _))
       var i = 0
       while (i < seq.length) {
         val hi = nibble(seq.charAt(i))
@@ -362,11 +377,9 @@ object Bam {
         body.write('Z')
         body.write(v.getBytes(US_ASCII)); body.write(0)
       }
-      val bytes = body.toByteArray
-      writeI32(out, bytes.length)
-      out.write(bytes)
+      LE.put32(out, body.size)
+      body.writeTo(out)
     }
-    out.toByteArray
   }
 
   private def nibble(c: Char): Int = {
@@ -377,13 +390,19 @@ object Bam {
   /** Distributed BAM sink: one BGZF-compressed shard per partition of `df`
     * (which must carry [[Sam.StdFields]] (+ optional `opt`)). The
     * reference-sequence dictionary is the distinct rname set (small by
-    * nature — a genome has dozens of contigs). Returns the shard paths.
+    * nature — a genome has dozens of contigs), sorted, one for all
+    * shards. Returns the shard paths.
     * Writes through the Hadoop FileSystem API, so any configured scheme
     * (local, HDFS, object stores) works; the partition-parallel shape —
     * no driver funnel — is the point. The `.bam` files `dir` already
     * holds, and their `.bai`s, are deleted first: a write of fewer
     * partitions must not leave stale shards that [[read]], [[fetch]] and
     * [[Bai.buildAll]] would mix into their results.
+    *
+    * The dictionary job (each partition's rname set) and the write job
+    * run over one RDD, so the input is parsed once. Each shard is written
+    * in one pass ([[writeShard]]), with its `.bai` when its mapped records
+    * are coordinate-sorted; a record such a shard cannot index fails the write.
     */
   def write(
       df: DataFrame, dir: String, refLength: Int = 500000000,
@@ -397,48 +416,56 @@ object Bam {
       dirFs.delete(new Path(st.getPath.toString + ".bai"), false)
     }
     dirFs.mkdirs(dirPath)
-    val refs = df.select(col("rname")).where(col("rname") =!= "*").distinct()
-      .collect().map(_.getString(0)).sorted.map(n => (n, refLength)).toSeq
     val serConf = new SerializableHadoopConf(spark.sessionState.newHadoopConf())
     val withOpt =
       if (df.columns.contains("opt")) df
       else df.withColumn("opt", map().cast("map<string,string>"))
-    withOpt.select(
-      col("header"), col("flag"), col("rname"), col("pos"), col("mapq"),
-      col("cigar"), col("rnext"), col("pnext"), col("tlen"), col("seq"),
-      col("qual"), col("opt"))
-      .as[BamRecord]
-      .mapPartitions { it =>
-        if (it.isEmpty) Iterator.empty
-        else {
-          val pid = org.apache.spark.TaskContext.getPartitionId()
-          val shard = new Path(s"$dir/part-$pid.bam")
-          val payload = encode(it, refs)
-          val out = shard.getFileSystem(serConf.value).create(shard, true)
-          try out.write(Bgzf.compress(payload, blockData)) finally out.close()
-          Iterator.single(shard.toString)
-        }
+    val records = withOpt
+      .select(org.apache.spark.sql.Encoders.product[BamRecord].schema.fieldNames.map(col): _*)
+      .as[BamRecord].rdd
+    val refs = records.mapPartitions(it => Iterator.single(it.map(_.rname).toSet))
+      .collect().flatten.distinct.filter(n => n != null && n != "*")
+      .sorted.map(n => (n, refLength)).toSeq
+    records.mapPartitions { it =>
+      if (it.isEmpty) Iterator.empty
+      else {
+        val shard = new Path(s"$dir/part-${org.apache.spark.TaskContext.getPartitionId()}.bam")
+        writeShard(shard.getFileSystem(serConf.value), shard, it, refs, blockData)
+        Iterator.single(shard.toString)
       }
-      .collect().toSeq
+    }.collect().toSeq
+  }
+
+  /** One shard in one pass: [[encodeTo]] streams into a [[Bgzf.Writer]]
+    * over the file and feeds a [[Bai.Builder]]. A record's end is the next
+    * record's start, or the EOF marker's offset after close, so a record
+    * that ends a block ends at the next block's start, as [[Bai.build]]
+    * reads it. The `.bai` is written if the records were sorted; a failure
+    * deletes the shard.
+    */
+  private[io] def writeShard(fs: org.apache.hadoop.fs.FileSystem, shard: Path,
+      records: Iterator[BamRecord], refs: Seq[(String, Int)], blockData: Int): Unit = {
+    val out = fs.create(shard, true)
+    val bgzf = new Bgzf.Writer(out, blockData)
+    val bai = new Bai.Builder(refs.map(_._1).toArray, shard)
+    var held: Long => Unit = _ => () // indexes the last record, given its end
+    try {
+      encodeTo(bgzf, records, refs) { (refId, pos0, span) =>
+        val vBeg = bgzf.voffset
+        held(vBeg)
+        held = bai.add(refId, pos0, span, vBeg, _)
+      }
+      bgzf.close()
+      held(bgzf.voffset)
+    } catch {
+      case e: Throwable =>
+        out.close()
+        fs.delete(shard, false)
+        throw e
+    }
+    if (bai.sorted) Bai.write(bai.index, fs, new Path(shard.toString + ".bai"))
   }
 
   /** The name test [[SplitFiles.list]] applies for every BAM reader. */
   private[io] def isBam(name: String): Boolean = name.endsWith(".bam")
-
-  // ---- little-endian helpers -------------------------------------------
-
-  private def readI32(b: Array[Byte], off: Int): Int =
-    (b(off) & 0xff) | ((b(off + 1) & 0xff) << 8) |
-      ((b(off + 2) & 0xff) << 16) | ((b(off + 3) & 0xff) << 24)
-
-  private def readU32i(b: Array[Byte], off: Int): Long = Bgzf.readU32(b, off)
-
-  private def writeI32(out: ByteArrayOutputStream, v: Int): Unit = {
-    out.write(v & 0xff); out.write((v >> 8) & 0xff)
-    out.write((v >> 16) & 0xff); out.write((v >> 24) & 0xff)
-  }
-
-  private def writeU16(out: ByteArrayOutputStream, v: Int): Unit = {
-    out.write(v & 0xff); out.write((v >> 8) & 0xff)
-  }
 }

@@ -108,15 +108,8 @@ private[io] object BamScan {
     }
 
     def u8(abs: Long): Int = data((abs - base).toInt) & 0xff
-    def u16(abs: Long): Int = {
-      val i = (abs - base).toInt
-      (data(i) & 0xff) | ((data(i + 1) & 0xff) << 8)
-    }
-    def i32(abs: Long): Int = {
-      val i = (abs - base).toInt
-      (data(i) & 0xff) | ((data(i + 1) & 0xff) << 8) |
-        ((data(i + 2) & 0xff) << 16) | ((data(i + 3) & 0xff) << 24)
-    }
+    def u16(abs: Long): Int = LE.u16(data, (abs - base).toInt)
+    def i32(abs: Long): Int = LE.i32(data, (abs - base).toInt)
     def string(abs: Long, n: Int): String =
       new String(data, (abs - base).toInt, n, java.nio.charset.StandardCharsets.US_ASCII)
 
@@ -180,8 +173,7 @@ private[io] object BamScan {
     while (i + 18 <= want) {
       if ((buf(i) & 0xff) == 0x1f && (buf(i + 1) & 0xff) == 0x8b &&
         buf(i + 2) == 8 && (buf(i + 3) & 0x04) == 4) {
-        val xlen = (buf(i + 10) & 0xff) | ((buf(i + 11) & 0xff) << 8)
-        val blockLen = if (i + 12 + xlen <= want) blockLenAt(buf, i, xlen) else -1
+        val blockLen = if (i + 12 + LE.u16(buf, i + 10) <= want) Bgzf.blockLength(buf, i) else -1
         if (blockLen > 0 && from + i + blockLen <= fileLen) {
           val ok =
             try {
@@ -202,19 +194,6 @@ private[io] object BamScan {
     if (from + want >= fileLen) fileLen
     else throw new IllegalStateException(
       s"no BGZF block boundary found within $want bytes after offset $from")
-  }
-
-  /** BSIZE+1 from a block header in `buf` at `i`, or -1 if BC missing. */
-  private def blockLenAt(buf: Array[Byte], i: Int, xlen: Int): Int = {
-    var sf = i + 12
-    val sfEnd = i + 12 + xlen
-    while (sf + 4 <= sfEnd) {
-      val slen = (buf(sf + 2) & 0xff) | ((buf(sf + 3) & 0xff) << 8)
-      if (buf(sf) == 'B' && buf(sf + 1) == 'C' && sf + 6 <= sfEnd)
-        return ((buf(sf + 4) & 0xff) | ((buf(sf + 5) & 0xff) << 8)) + 1
-      sf += 4 + slen
-    }
-    -1
   }
 
   // sanity bounds for the record-resync heuristic. Deliberately GENEROUS:
@@ -459,7 +438,7 @@ private[io] object BamScan {
     * over without decoding its strings; the first record on `refId`
     * starting past `end1` ends the chunk, as the file is
     * coordinate-sorted (a `.bai` exists only for such files, see
-    * [[Bai.build]]). Every record decoded overlaps the region.
+    * [[Bai.Builder]]). Every record decoded overlaps the region.
     */
   def chunkRecords(
       fs: FileSystem, path: Path, refs: Array[String],
@@ -476,6 +455,6 @@ private[io] object BamScan {
     * consume reference bases: M, D, N, = and X. Codes 9–15 are invalid.
     * [[graft.align.Cigar.refConsumed]] is the same span over CIGAR text.
     */
-  private val RefOps: Array[Boolean] =
+  private[io] val RefOps: Array[Boolean] =
     Array.tabulate(9)(i => i == 0 || i == 2 || i == 3 || i == 7 || i == 8)
 }

@@ -1,6 +1,6 @@
 package graft.io
 
-import java.io.ByteArrayOutputStream
+import java.io.{ByteArrayOutputStream, OutputStream}
 import java.util.zip.{CRC32, Deflater, Inflater}
 
 /** BGZF (blocked gzip) codec — the container format of BAM files
@@ -32,50 +32,72 @@ object Bgzf {
     0x42, 0x43, 0x02, 0x00, 0x1b, 0x00, 0x03, 0x00, 0x00, 0x00, 0x00, 0x00,
     0x00, 0x00, 0x00, 0x00).map(_.toByte)
 
-  /** One BGZF member: gzip header with the BC (BSIZE) extra subfield, raw
-    * deflate payload, CRC32 + ISIZE footer.
+  /** The one BGZF block emitter. Bytes written to it are cut into blocks
+    * of `blockData` uncompressed bytes, and a block is deflated as soon as
+    * it fills; `close` deflates the rest, appends the EOF marker and closes
+    * `out`. `blockData` below the default shrinks blocks — more of them per
+    * file, which is how tests force records to straddle block boundaries.
     */
-  def deflateBlock(data: Array[Byte], off: Int, len: Int): Array[Byte] = {
-    require(len <= 65535, "BGZF block payload must be < 64 KiB")
-    val deflater = new Deflater(Deflater.DEFAULT_COMPRESSION, true)
-    deflater.setInput(data, off, len)
-    deflater.finish()
-    val cbuf = new Array[Byte](len + 1024)
-    val clen = deflater.deflate(cbuf)
-    require(deflater.finished(), "BGZF block did not fit the deflate buffer")
-    deflater.end()
-    val crc = new CRC32
-    crc.update(data, off, len)
-    val bsize = clen + 12 + 6 + 8 // header + XLEN extra + footer
-    require(bsize <= 65536, "compressed BGZF block exceeds BSIZE range")
-    val out = new Array[Byte](bsize)
-    val h = Array(0x1f, 0x8b, 0x08, 0x04, 0, 0, 0, 0, 0, 0xff).map(_.toByte)
-    System.arraycopy(h, 0, out, 0, 10)
-    writeU16(out, 10, 6) // XLEN
-    out(12) = 'B'; out(13) = 'C'
-    writeU16(out, 14, 2) // subfield length
-    writeU16(out, 16, bsize - 1) // BSIZE = block length - 1
-    System.arraycopy(cbuf, 0, out, 18, clen)
-    writeU32(out, 18 + clen, crc.getValue)
-    writeU32(out, 18 + clen + 4, len.toLong)
-    out
-  }
-
-  /** Whole-payload compress: chunk into ≤`blockData` blocks + EOF marker.
-    * `blockData` below the default shrinks blocks — more of them per file,
-    * which is how tests force records to straddle block boundaries.
-    */
-  def compress(data: Array[Byte], blockData: Int = MaxBlockData): Array[Byte] = {
+  final class Writer(out: OutputStream, blockData: Int = MaxBlockData) extends OutputStream {
     require(blockData > 0 && blockData <= MaxBlockData,
       s"blockData must be in (0, $MaxBlockData], got $blockData")
-    val out = new ByteArrayOutputStream(data.length / 2 + 64)
-    var off = 0
-    while (off < data.length) {
-      val len = math.min(blockData, data.length - off)
-      out.write(deflateBlock(data, off, len))
-      off += len
+    private val data = new Array[Byte](blockData)
+    private val cbuf = new Array[Byte](blockData + 1024)
+    private val deflater = new Deflater(Deflater.DEFAULT_COMPRESSION, true)
+    private var pending = 0 // bytes in `data`
+    private var emitted = 0L // compressed bytes written to `out`
+
+    /** Virtual offset of the next byte written: compressed bytes emitted
+      * << 16 | bytes pending. A full block is already deflated, so the end
+      * of a block reads as the next block's start, as a reader sees it;
+      * after `close` this is the EOF marker's offset.
+      */
+    def voffset: Long = (emitted << 16) | pending
+
+    override def write(b: Int): Unit = write(Array(b.toByte), 0, 1)
+
+    override def write(b: Array[Byte], off: Int, len: Int): Unit = {
+      val n = math.min(blockData - pending, len)
+      System.arraycopy(b, off, data, pending, n)
+      pending += n
+      if (pending == blockData) deflateBlock()
+      if (n < len) write(b, off + n, len - n)
     }
-    out.write(EofMarker)
+
+    override def close(): Unit = {
+      if (pending > 0) deflateBlock()
+      deflater.end()
+      out.write(EofMarker)
+      out.close()
+    }
+
+    /** One BGZF member of the pending bytes: gzip header with the BC
+      * (BSIZE) extra subfield, raw deflate payload, CRC32 + ISIZE footer.
+      */
+    private def deflateBlock(): Unit = {
+      deflater.reset()
+      deflater.setInput(data, 0, pending)
+      deflater.finish()
+      val clen = deflater.deflate(cbuf)
+      require(deflater.finished(), "BGZF block did not fit the deflate buffer")
+      val crc = new CRC32
+      crc.update(data, 0, pending)
+      val bsize = clen + 12 + 6 + 8 // header + XLEN extra + footer
+      require(bsize <= 65536, "compressed BGZF block exceeds BSIZE range")
+      out.write(EofMarker, 0, 16) // the header and BC subfield id every member shares
+      LE.put16(out, bsize - 1) // BSIZE = block length - 1
+      out.write(cbuf, 0, clen)
+      LE.put32(out, crc.getValue.toInt)
+      LE.put32(out, pending) // ISIZE
+      emitted += bsize
+      pending = 0
+    }
+  }
+
+  /** Whole-payload compress: [[Writer]] over an array. */
+  def compress(data: Array[Byte], blockData: Int = MaxBlockData): Array[Byte] = {
+    val out = new ByteArrayOutputStream(data.length / 2 + 64)
+    scala.util.Using.resource(new Writer(out, blockData))(_.write(data))
     out.toByteArray
   }
 
@@ -88,24 +110,15 @@ object Bgzf {
     require(data.length - off >= 18, s"truncated BGZF block at $off")
     require((data(off) & 0xff) == 0x1f && (data(off + 1) & 0xff) == 0x8b,
       s"bad gzip magic at $off")
-    val xlen = readU16(data, off + 10)
-    // scan extra subfields for BC
-    var sf = off + 12
-    val sfEnd = off + 12 + xlen
-    var bsize = -1
-    while (sf < sfEnd && bsize < 0) {
-      require(sf + 4 <= data.length, s"truncated BGZF extra field at $off")
-      val slen = readU16(data, sf + 2)
-      if (data(sf) == 'B' && data(sf + 1) == 'C') bsize = readU16(data, sf + 4)
-      sf += 4 + slen
-    }
-    require(bsize >= 0, s"BGZF BC subfield missing at $off")
-    val blockLen = bsize + 1
+    val xlen = LE.u16(data, off + 10)
+    require(off + 12 + xlen <= data.length, s"truncated BGZF extra field at $off")
+    val blockLen = blockLength(data, off)
+    require(blockLen > 0, s"BGZF BC subfield missing at $off")
     require(off + blockLen <= data.length, s"BGZF block at $off overruns input")
     val cdataOff = off + 12 + xlen
     val cdataLen = blockLen - 12 - xlen - 8
     require(cdataLen >= 0, s"BGZF block at $off has negative cdata length")
-    val isize = readU32(data, off + blockLen - 4).toInt
+    val isize = LE.u32(data, off + blockLen - 4).toInt
     val ubuf =
       if (isize == 0) Array.emptyByteArray
       else {
@@ -121,7 +134,7 @@ object Bgzf {
       }
     val crc = new CRC32
     crc.update(ubuf)
-    require(crc.getValue == readU32(data, off + blockLen - 8),
+    require(crc.getValue == LE.u32(data, off + blockLen - 8),
       s"BGZF block at $off fails CRC")
     (ubuf, blockLen)
   }
@@ -131,14 +144,8 @@ object Bgzf {
     * streaming through GZIPInputStream, so malformed chains fail loudly.
     */
   def inflate(data: Array[Byte]): Array[Byte] = {
-    val out = new ByteArrayOutputStream(data.length * 3)
-    var pos = 0
-    while (pos < data.length) {
-      val (ubuf, blockLen) = inflateBlockAt(data, pos)
-      out.write(ubuf)
-      pos += blockLen
-    }
-    out.toByteArray
+    val in = new java.io.ByteArrayInputStream(data)
+    Iterator.continually(readBlockFrom(in)).takeWhile(_.nonEmpty).map(_.get._1).toArray.flatten
   }
 
   /** Read ONE member from a stream positioned at a block boundary; None at
@@ -151,19 +158,11 @@ object Bgzf {
     else {
       require((head(0) & 0xff) == 0x1f && (head(1) & 0xff) == 0x8b,
         "bad gzip magic mid-stream")
-      val xlen = readU16(head, 10)
+      val xlen = LE.u16(head, 10)
       val blockHead = java.util.Arrays.copyOf(head, 12 + xlen)
       require(readFully(in, blockHead, 12, xlen), "truncated BGZF extra field")
-      var sf = 12
-      var bsize = -1
-      while (sf < 12 + xlen && bsize < 0) {
-        val slen = readU16(blockHead, sf + 2)
-        if (blockHead(sf) == 'B' && blockHead(sf + 1) == 'C')
-          bsize = readU16(blockHead, sf + 4)
-        sf += 4 + slen
-      }
-      require(bsize >= 0, "BGZF BC subfield missing mid-stream")
-      val blockLen = bsize + 1
+      val blockLen = blockLength(blockHead, 0)
+      require(blockLen > 0, "BGZF BC subfield missing mid-stream")
       val block = java.util.Arrays.copyOf(blockHead, blockLen)
       require(readFully(in, block, 12 + xlen, blockLen - 12 - xlen),
         "truncated BGZF block body")
@@ -176,35 +175,36 @@ object Bgzf {
     */
   private def readFully(
       in: java.io.InputStream, buf: Array[Byte], off: Int, len: Int): Boolean = {
-    var got = 0
-    while (got < len) {
-      val n = in.read(buf, off + got, len - got)
-      if (n < 0) {
-        if (got == 0) return false
-        throw new IllegalStateException(
-          s"stream ended $got bytes into a $len-byte BGZF read")
-      }
-      got += n
+    val got = in.readNBytes(buf, off, len)
+    if (got > 0 && got < len) throw new IllegalStateException(
+      s"stream ended $got bytes into a $len-byte BGZF read")
+    got == len
+  }
+
+  /** The length (BSIZE + 1) of the block whose header is at `off`, from
+    * the BC subfield of its extra field, which must lie inside `b`; -1
+    * when there is no BC subfield.
+    */
+  private[io] def blockLength(b: Array[Byte], off: Int): Int = {
+    val sfEnd = off + 12 + LE.u16(b, off + 10)
+    var sf = off + 12
+    while (sf + 4 <= sfEnd) {
+      if (b(sf) == 'B' && b(sf + 1) == 'C' && sf + 6 <= sfEnd) return LE.u16(b, sf + 4) + 1
+      sf += 4 + LE.u16(b, sf + 2)
     }
-    true
+    -1
   }
+}
 
-  private def writeU16(b: Array[Byte], off: Int, v: Int): Unit = {
-    b(off) = (v & 0xff).toByte
-    b(off + 1) = ((v >> 8) & 0xff).toByte
+/** Little-endian field reads and writes, shared by every codec in `io`. */
+private[io] object LE {
+  def u16(b: Array[Byte], off: Int): Int = (b(off) & 0xff) | ((b(off + 1) & 0xff) << 8)
+  def i32(b: Array[Byte], off: Int): Int = u16(b, off) | (u16(b, off + 2) << 16)
+  def u32(b: Array[Byte], off: Int): Long = i32(b, off) & 0xffffffffL
+
+  def put16(out: OutputStream, v: Int): Unit = { out.write(v); out.write(v >> 8) }
+  def put32(out: OutputStream, v: Int): Unit = { put16(out, v); put16(out, v >> 16) }
+  def put64(out: OutputStream, v: Long): Unit = {
+    put32(out, v.toInt); put32(out, (v >>> 32).toInt)
   }
-
-  private def writeU32(b: Array[Byte], off: Int, v: Long): Unit = {
-    b(off) = (v & 0xff).toByte
-    b(off + 1) = ((v >> 8) & 0xff).toByte
-    b(off + 2) = ((v >> 16) & 0xff).toByte
-    b(off + 3) = ((v >> 24) & 0xff).toByte
-  }
-
-  private[io] def readU16(b: Array[Byte], off: Int): Int =
-    (b(off) & 0xff) | ((b(off + 1) & 0xff) << 8)
-
-  private[io] def readU32(b: Array[Byte], off: Int): Long =
-    (b(off) & 0xffL) | ((b(off + 1) & 0xffL) << 8) |
-      ((b(off + 2) & 0xffL) << 16) | ((b(off + 3) & 0xffL) << 24)
 }

@@ -647,8 +647,7 @@ object Warc {
       var pos = 10
       if ((flg & 4) != 0) { // FEXTRA
         if (!ensure(pos + 2)) return null
-        val xlen = (win(pos) & 0xff) | ((win(pos + 1) & 0xff) << 8)
-        pos += 2 + xlen
+        pos += 2 + LE.u16(win, pos)
         if (!ensure(pos)) return null
       }
       if ((flg & 8) != 0) { pos = skipZeroTerminated(pos); if (pos < 0) return null }
@@ -682,11 +681,8 @@ object Warc {
         }
         val consumed = fed - inf.getRemaining
         if (!ensure(consumed + 8)) return null
-        def le32(o: Int): Long =
-          (win(o) & 0xffL) | ((win(o + 1) & 0xffL) << 8) |
-            ((win(o + 2) & 0xffL) << 16) | ((win(o + 3) & 0xffL) << 24)
-        if (le32(consumed) != crc.getValue) return null
-        if (le32(consumed + 4) != (outBuf.size.toLong & 0xffffffffL)) return null
+        if (LE.u32(win, consumed) != crc.getValue) return null
+        if (LE.u32(win, consumed + 4) != (outBuf.size.toLong & 0xffffffffL)) return null
         val bytes = outBuf.toByteArray
         if (winStart != expectedNext && !startsWithWarc(bytes)) return null
         scanPos = consumed + 8

@@ -314,8 +314,14 @@ object Layout {
     // list, never the raw directory — a directory listing would resurrect
     // uncommitted orphans (a failed append's moved-in files) into the
     // next snapshot. Raw directories (no log) keep the listing behavior.
-    val committed = latestSnapshot(spark, path).filter(_.keyName == keyName)
-    committed.foreach(assertWritable(_, "compactFiles"))
+    val committed = latestSnapshot(spark, path)
+    committed.foreach { snap =>
+      require(snap.keyName == keyName,
+        s"compactFiles: the committed table at $path is keyed on " +
+        s"'${snap.keyName}', not '$keyName' — compacting under another key " +
+        "would re-key the table at commit")
+      assertWritable(snap, "compactFiles")
+    }
     // an UNCOMMITTED compaction of a committed table would physically
     // replace files the latest snapshot still references (breaking every
     // committed reader) or leave a moved-in generation as orphans for no
@@ -1369,6 +1375,7 @@ object Layout {
         AggEtlStats(0L, srcSnap.version, d.totalRows, 0L,
           d.files.size.toLong, d.version, caughtUp = false)
       case Some(dst0) =>
+        assertWritable(dst0, "incrementalAggregate")
         val from = dst0.txns.getOrElse(writer, throw new IllegalStateException(
           s"incrementalAggregate: view at $dstPath carries no high-water " +
           s"mark for writer '$writer' — it was not bootstrapped by this " +
@@ -1494,7 +1501,7 @@ object Layout {
     // nothing. Content equality makes re-validation redundant — the rows
     // are the source's, which the source verified on add.
     def mirrorConstraints(want: Seq[(String, String)]): Unit = {
-      val d = replica()
+      val d = writableHead(spark, dstPath, "replicateCommitted")
       if (d.constraints != want)
         commitSnapshot(spark, dstPath, d.next(d.files, "constraint", constraints = want))
     }
@@ -1512,6 +1519,7 @@ object Layout {
         mirrorConstraints(srcSnap.constraints)
         SyncStats(0L, srcSnap.version, 1L, replica().version, caughtUp = false)
       case Some(dst0) =>
+        assertWritable(dst0, "replicateCommitted")
         val from = dst0.txns.getOrElse(writer, throw new IllegalStateException(
           s"replicateCommitted: replica at $dstPath carries no high-water " +
           s"mark for writer '$writer' — it was not bootstrapped by this " +

@@ -75,8 +75,9 @@ object SamDomain {
     }),
 
     // Indexed region fetch under the oracle (round 3): coordinate-sorted
-    // single-shard BAM → Bai.build → Bam.fetch("ref1", 1, 12) → the
-    // q_sam_dist pipeline over only the overlapping reads. Every read
+    // single-shard BAM, indexed as Bam.write writes it →
+    // Bam.fetch("ref1", 1, 12) → the q_sam_dist pipeline over only the
+    // overlapping reads. Every read
     // spans 20 bases, so "overlaps [1,12]" is exactly pos <= 12 — the
     // oracle filters the same predicate, hash-checking the whole
     // .bai path (binning, chunk merge, virtual-offset seek, overlap
@@ -97,7 +98,6 @@ object SamDomain {
       graft.io.Bam.write(
         sam.coalesce(1).sortWithinPartitions("rname", "pos"),
         tmp, blockData = 4096)
-      graft.io.Bai.buildAll(s, tmp)
       val bam = new java.io.File(tmp).listFiles()
         .map(_.getAbsolutePath).filter(_.endsWith(".bam")).head
       val st = SeqTable.fromSam(graft.io.Bam.fetch(s, bam, "ref1", 1, 12))

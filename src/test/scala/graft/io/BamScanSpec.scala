@@ -61,9 +61,13 @@ class BamScanSpec extends AnyFunSuite {
     Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
       .exists(t => Option(t.getMessage).exists(_.contains(msg)))
 
+  private def bytes(p: Path): Array[Byte] = Files.readAllBytes(java.nio.file.Paths.get(p.toUri.getPath))
+
+  /** The dictionary of [[mkRecords]]. */
+  private val refs3 = Seq(("chr1", 1 << 20), ("chr2", 1 << 20), ("chr3", 1 << 20))
+
   private def writeBam(recs: Seq[Bam.BamRecord], blockData: Int): String = {
-    val refs = Seq(("chr1", 1 << 20), ("chr2", 1 << 20), ("chr3", 1 << 20))
-    val payload = Bam.encode(recs.iterator, refs)
+    val payload = Bam.encode(recs.iterator, refs3)
     val f = Files.createTempFile("bamscan", ".bam")
     Files.write(f, Bgzf.compress(payload, blockData))
     f.toFile.getAbsolutePath
@@ -400,6 +404,32 @@ class BamScanSpec extends AnyFunSuite {
     assert(single == 1, s"single-file fetch ran $single jobs")
   }
 
+  test("writeSharded parses its input once: its jobs, and an index per shard from the write") {
+    val sam = Files.createTempFile("bamjobs", ".sam")
+    Files.write(sam, rnd.shuffle(mkRecords(800)).map { r =>
+      Seq(r.header, r.flag, r.rname, r.pos, r.mapq, r.cigar, r.rnext, r.pnext, r.tlen, r.seq, r.qual)
+        .mkString("\t")
+    }.mkString("", "\n", "\n").getBytes("US-ASCII"))
+    val dir = Files.createTempDirectory("graft_bam_write_jobs").toString
+    var files: Seq[String] = Nil
+    val jobs = TestSpark.jobsRun {
+      files = Bam.writeSharded(Sam.read(spark, sam.toString), dir, nShards = 4, blockData = 2048)
+    }
+    // the range bounds' sampling, the shuffle's map stage, the reference
+    // dictionary and the write; the parent's separate dictionary query
+    // re-ran the parse and the sampling (8 jobs)
+    assert(jobs == 4, s"writeSharded ran $jobs jobs")
+    assert(files.length == 4)
+    val fs = new Path(dir).getFileSystem(new Configuration())
+    for (f <- files) {
+      val p = new Path(f)
+      val built = new Path(f + ".built")
+      Bai.write(Bai.build(fs, p), fs, built)
+      assert(bytes(new Path(f + ".bai")).sameElements(bytes(built)),
+        s"the in-write index of $f differs from Bai.build's")
+    }
+  }
+
   test("buildAll indexes every .bam in a directory, one task per file") {
     val dir = Files.createTempDirectory("baidir")
     for (i <- 0 until 3) {
@@ -430,15 +460,38 @@ class BamScanSpec extends AnyFunSuite {
     // the ownership contract under fuzz, not just at hand-picked sizes.
     // Each case also fetches one random region through the index and the
     // chunk reader, whose raw-CIGAR span must agree with the text one.
+    // Every case also writes the records through the write task's one
+    // pass, which must give the same .bam bytes and a .bai byte-equal to
+    // the index built over the written file. One case in five puts the
+    // whole payload in one full block and one in five ends the first
+    // block flush with a record: a record that ends a block must end at
+    // the next block's start in both indexes.
     val conf = new Configuration()
     var overlaps = 0
     for (c <- 1 to 25) {
       val recs = mkRecords(20 + rnd.nextInt(150), everyOp = true)
-      val blockData = 256 + rnd.nextInt(4000)
+      val payload = Bam.encode(recs.iterator, refs3)
+      val ends = recs.scanLeft(Bam.encode(Iterator.empty, refs3).length) { (at, _) =>
+        at + 4 + java.nio.ByteBuffer.wrap(payload, at, 4).order(java.nio.ByteOrder.LITTLE_ENDIAN).getInt
+      }.tail
+      val blockData = c % 5 match {
+        case 0 => payload.length
+        case 1 => ends.find(_ >= 512).get
+        case _ => 256 + rnd.nextInt(4000)
+      }
       val path = writeBam(recs, blockData)
       val fileLen = new java.io.File(path).length()
       val splitSize = 200L + rnd.nextInt(math.max(1, fileLen.toInt))
       val fs = new Path(path).getFileSystem(conf)
+
+      val shard = new Path(path + ".shard.bam")
+      Bam.writeShard(fs, shard, recs.iterator, refs3, blockData)
+      assert(bytes(shard).sameElements(bytes(new Path(path))),
+        s"case $c: blockData=$blockData: the one-pass .bam differs from compress(encode)")
+      val built = new Path(path + ".built.bai")
+      Bai.write(Bai.build(fs, shard), fs, built)
+      assert(bytes(new Path(shard.toString + ".bai")).sameElements(bytes(built)),
+        s"case $c: blockData=$blockData: the in-write .bai differs from Bai.build's")
       val got = (0L until fileLen by splitSize).flatMap { off =>
         BamScan.splitRecords(fs, new Path(path), fileLen,
           off, math.min(off + splitSize, fileLen),
@@ -469,7 +522,8 @@ class BamScanSpec extends AnyFunSuite {
         s"case $c: region $rname:$beg-$end fetched ${fetched.size} records, " +
           s"the text-CIGAR overlap has ${overlap.size}")
       overlaps += overlap.size
-      new java.io.File(path).delete()
+      Seq(path, shard.toString, shard.toString + ".bai", built.toString)
+        .foreach(f => new java.io.File(f).delete())
     }
     assert(overlaps > 0, "the random regions must overlap some records")
   }

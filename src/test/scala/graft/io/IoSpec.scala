@@ -205,6 +205,28 @@ class BgzfSpec extends AnyFunSuite {
     assert(gz.takeRight(28).toSeq == Bgzf.EofMarker.toSeq)
   }
 
+  test("the block writer cuts the same blocks however its input arrives, and tracks virtual offsets") {
+    val rnd = new scala.util.Random(7)
+    val data = Array.fill(5000)(rnd.nextInt(4).toByte)
+    val whole = Bgzf.compress(data, 1000)
+    // block starts, the EOF marker's included
+    val starts = Iterator.iterate(0)(p => p + Bgzf.inflateBlockAt(whole, p)._2)
+      .takeWhile(_ < whole.length).toVector
+    val out = new java.io.ByteArrayOutputStream()
+    val w = new Bgzf.Writer(out, 1000)
+    var at = 0
+    while (at < data.length) {
+      val n = math.min(rnd.nextInt(700), data.length - at)
+      if (n == 0) w.write(data(at).toInt) else w.write(data, at, n)
+      at += math.max(n, 1)
+      // a full block is deflated at once: its end reads as the next start
+      assert(w.voffset == ((starts(at / 1000).toLong << 16) | (at % 1000)), s"after $at bytes")
+    }
+    w.close()
+    assert(w.voffset == starts.last.toLong << 16, "after close: the EOF marker's offset")
+    assert(out.toByteArray.toSeq == whole.toSeq)
+  }
+
   test("empty payload is just the EOF marker; inflate survives it") {
     val gz = Bgzf.compress(Array.emptyByteArray)
     assert(gz.toSeq == Bgzf.EofMarker.toSeq)
@@ -231,6 +253,14 @@ class BamSpec extends AnyFunSuite {
     assert(back.map(r => (r.header, r.flag, r.rname, r.pos, r.cigar, r.seq, r.qual)) ==
       recs.map(r => (r.header, r.flag, r.rname, r.pos, r.cigar, r.seq, r.qual)))
     assert(back.head.opt == Map("NM" -> "3", "XS" -> "hello:world"))
+  }
+
+  test("encode fails, naming the read, on a CIGAR it cannot spell") {
+    for (cigar <- Seq("3M2B4M", "10M5Q", "M10", "4M ")) {
+      val e = intercept[IllegalArgumentException](Bam.encode(
+        Iterator(rec("bad1", 5, "ACGT", "IIII", cigar = cigar)), Seq(("chr1", 1000))))
+      assert(e.getMessage.contains(s"CIGAR '$cigar' of bad1"), e.getMessage)
+    }
   }
 
   test("pysam pos contract: BAM stores 0-based, reader emits 1-based") {

@@ -2068,6 +2068,68 @@ class LayoutSpec extends AnyFunSuite {
     v99.delete(): Unit
   }
 
+  /** Commits a copy of the latest snapshot of `dir` as v99, stamped as
+    * requiring a future writer level; returns the version file.
+    */
+  private def stampFutureWriter(dir: String): java.io.File = {
+    val mdir = new java.io.File(dir, "_manifests")
+    val cur = mdir.listFiles().filter(_.getName.endsWith(".txt")).maxBy(_.getName)
+    val v99 = new java.io.File(mdir, "v0000000099.txt")
+    val w = new java.io.PrintWriter(v99, "UTF-8")
+    scala.io.Source.fromFile(cur, "UTF-8").getLines().foreach { l =>
+      if (!l.startsWith("minwriter=")) w.println(l)
+      if (l.startsWith("key=")) w.println("minwriter=99")
+    }
+    w.close()
+    assert(Layout.latestSnapshot(spark, dir).get.minWriter == 99)
+    v99
+  }
+
+  test("minwriter: incrementalAggregate refuses to merge into a newer-writer view") {
+    val src = java.nio.file.Files.createTempDirectory("graft_agg_wrt_src").toString
+    val dst = java.nio.file.Files.createTempDirectory("graft_agg_wrt_dst").toString + "/v"
+    def rows(lo: Long, hi: Long) = spark.range(lo, hi).select(col("id"), (col("id") % 10).as("g"))
+    val aggs = Seq(("n", "", "count"))
+    Layout.writeClustered(rows(0L, 500L), src, col("id"), nFiles = 2)
+    Layout.incrementalAggregate(spark, src, dst, "g", aggs): Unit
+    Layout.appendClustered(rows(500L, 600L), src, col("id"), nFiles = 1): Unit
+    stampFutureWriter(dst)
+    val ex = intercept[IllegalArgumentException](
+      Layout.incrementalAggregate(spark, src, dst, "g", aggs))
+    assert(ex.getMessage.contains("incrementalAggregate: table requires writer version 99"),
+      ex.getMessage)
+    assert(Layout.latestSnapshot(spark, dst).get.version == 99L, "the view was committed to")
+  }
+
+  test("minwriter: replicateCommitted refuses to mirror constraints into a newer-writer replica") {
+    val src = java.nio.file.Files.createTempDirectory("graft_repl_wrt_src").toString
+    val dst = java.nio.file.Files.createTempDirectory("graft_repl_wrt_dst").toString + "/r"
+    Layout.writeClustered(spark.range(1, 301).select(col("id"), (col("id") % 9).as("x")),
+      src, col("id"), nFiles = 2, statsCols = Seq("id"))
+    Layout.replicateCommitted(spark, src, dst, "id"): Unit
+    // a constraint-only window: the catch-up commits nothing but the mirror
+    Layout.addCheckConstraint(spark, src, "x_nonneg", "x >= 0"): Unit
+    stampFutureWriter(dst)
+    val ex = intercept[IllegalArgumentException](
+      Layout.replicateCommitted(spark, src, dst, "id"))
+    assert(ex.getMessage.contains("replicateCommitted: table requires writer version 99"),
+      ex.getMessage)
+    assert(Layout.latestSnapshot(spark, dst).get.version == 99L, "the replica was committed to")
+  }
+
+  test("compactFiles refuses a key that differs from the committed table's") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_compact_key").toString
+    Layout.writeClustered(spark.range(2000).select(col("id")), dir,
+      pmod(col("id"), lit(16L)), nFiles = 4)
+    val before = Layout.latestSnapshot(spark, dir).get
+    val ex = intercept[IllegalArgumentException](Layout.compactFiles(spark, dir, "id",
+      minFileBytes = 1L << 30, targetFileBytes = 1L << 30))
+    assert(ex.getMessage.contains("keyed on 'cluster_key', not 'id'"), ex.getMessage)
+    val after = Layout.latestSnapshot(spark, dir).get
+    assert(after.version == before.version && after.keyName == "cluster_key",
+      "a refused compaction committed")
+  }
+
   test("minreader: a snapshot stamped above this reader's level refuses to parse") {
     val (dir, _) = dvTable("graft_dv_rdr")
     val mdir = new java.io.File(dir, "_manifests")
