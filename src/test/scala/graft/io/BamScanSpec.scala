@@ -416,8 +416,8 @@ class BamScanSpec extends AnyFunSuite {
       files = Bam.writeSharded(Sam.read(spark, sam.toString), dir, nShards = 4, blockData = 2048)
     }
     // the range bounds' sampling, the shuffle's map stage, the reference
-    // dictionary and the write; the parent's separate dictionary query
-    // re-ran the parse and the sampling (8 jobs)
+    // dictionary and the write; a separate dictionary query would
+    // re-run the parse and the sampling (8 jobs)
     assert(jobs == 4, s"writeSharded ran $jobs jobs")
     assert(files.length == 4)
     val fs = new Path(dir).getFileSystem(new Configuration())
