@@ -65,7 +65,9 @@ object Bai {
     * never returns them, matching pysam's region fetch. A binning index
     * over an unsorted file would silently miss reads, so the first mapped
     * record out of coordinate order ends the accumulation and [[index]]
-    * refuses.
+    * refuses. A record past the 512 Mbp BAI limit is a pending refusal
+    * too: [[index]] throws it only if the records turn out sorted, so a
+    * writer that indexes sorted shards alone does not fail an unsorted one.
     */
   final class Builder(refs: Array[String], path: Path) {
     private val bins =
@@ -74,6 +76,7 @@ object Bai {
     private var lastRef = -1
     private var lastPos = -1
     private var unsorted: String = null
+    private var tooLong: String = null
 
     /** False from the first mapped record out of coordinate order on. */
     def sorted: Boolean = unsorted == null
@@ -94,10 +97,12 @@ object Bai {
           // and external readers (htslib/pysam) misread the index.
           // htslib refuses to write a .bai for such contigs; CSI is the
           // format for them.
-          require(end0 <= (1 << 29),
-            s"BAI cannot index positions beyond 512 Mbp (record " +
+          if (end0 > (1 << 29)) {
+            if (tooLong == null) tooLong = s"BAI cannot index positions beyond 512 Mbp (record " +
               s"${refs(refId)}:${beg0 + 1} spans to $end0 in $path); " +
-              "use a CSI-capable indexer for long contigs")
+              "use a CSI-capable indexer for long contigs"
+            return
+          }
           val bucket =
             bins(refId).getOrElseUpdate(reg2bin(beg0, end0), mutable.ArrayBuffer.empty[Chunk])
           // records are position-sorted, so per-bin chunks only ever grow
@@ -120,6 +125,7 @@ object Bai {
 
     def index: Index = {
       require(sorted, unsorted)
+      require(tooLong == null, tooLong)
       Index(Vector.tabulate(refs.length)(i =>
         RefIndex(bins(i).map { case (b, cs) => b -> cs.toVector }.toMap,
           linear(i).toVector)))

@@ -400,7 +400,9 @@ object Bam {
     * [[Bai.buildAll]] would mix into their results.
     *
     * The dictionary job (each partition's rname set) and the write job
-    * run over one RDD, so the input is parsed once. Each shard is written
+    * run over one RDD. The input is parsed once only when `df`'s plan ends
+    * in an exchange, as in [[writeSharded]], whose write job reuses the
+    * shuffle output; otherwise each job recomputes `df`. Each shard is written
     * in one pass ([[writeShard]]), with its `.bai` when its mapped records
     * are coordinate-sorted; a record such a shard cannot index fails the write.
     */
@@ -440,13 +442,14 @@ object Bam {
     * over the file and feeds a [[Bai.Builder]]. A record's end is the next
     * record's start, or the EOF marker's offset after close, so a record
     * that ends a block ends at the next block's start, as [[Bai.build]]
-    * reads it. The `.bai` is written if the records were sorted; a failure
-    * deletes the shard.
+    * reads it. The `.bai` is written if the records were sorted. A failure
+    * (an unencodable record, an unindexable sorted shard) deletes the shard
+    * and its `.bai` and rethrows the first exception.
     */
   private[io] def writeShard(fs: org.apache.hadoop.fs.FileSystem, shard: Path,
       records: Iterator[BamRecord], refs: Seq[(String, Int)], blockData: Int): Unit = {
-    val out = fs.create(shard, true)
-    val bgzf = new Bgzf.Writer(out, blockData)
+    val baiPath = new Path(shard.toString + ".bai")
+    val bgzf = new Bgzf.Writer(fs.create(shard, true), blockData)
     val bai = new Bai.Builder(refs.map(_._1).toArray, shard)
     var held: Long => Unit = _ => () // indexes the last record, given its end
     try {
@@ -457,13 +460,15 @@ object Bam {
       }
       bgzf.close()
       held(bgzf.voffset)
+      if (bai.sorted) Bai.write(bai.index, fs, baiPath)
     } catch {
       case e: Throwable =>
-        out.close()
-        fs.delete(shard, false)
+        def quietly(f: => Any): Unit = try f catch { case s: Throwable => e.addSuppressed(s) }
+        quietly(bgzf.abort())
+        quietly(fs.delete(shard, false))
+        quietly(fs.delete(baiPath, false))
         throw e
     }
-    if (bai.sorted) Bai.write(bai.index, fs, new Path(shard.toString + ".bai"))
   }
 
   /** The name test [[SplitFiles.list]] applies for every BAM reader. */

@@ -54,7 +54,11 @@ object Bgzf {
       */
     def voffset: Long = (emitted << 16) | pending
 
-    override def write(b: Int): Unit = write(Array(b.toByte), 0, 1)
+    override def write(b: Int): Unit = {
+      data(pending) = b.toByte
+      pending += 1
+      if (pending == blockData) deflateBlock()
+    }
 
     override def write(b: Array[Byte], off: Int, len: Int): Unit = {
       val n = math.min(blockData - pending, len)
@@ -64,12 +68,13 @@ object Bgzf {
       if (n < len) write(b, off + n, len - n)
     }
 
-    override def close(): Unit = {
-      if (pending > 0) deflateBlock()
-      deflater.end()
-      out.write(EofMarker)
-      out.close()
-    }
+    override def close(): Unit =
+      try { if (pending > 0) deflateBlock(); out.write(EofMarker) } finally abort()
+
+    /** Ends the deflater and closes `out` without finishing the file: the
+      * way out for a writer whose file is to be discarded.
+      */
+    def abort(): Unit = try deflater.end() finally out.close()
 
     /** One BGZF member of the pending bytes: gzip header with the BC
       * (BSIZE) extra subfield, raw deflate payload, CRC32 + ISIZE footer.

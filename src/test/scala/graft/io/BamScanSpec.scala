@@ -595,6 +595,54 @@ class BamScanSpec extends AnyFunSuite {
     assert(e.getMessage.contains("512 Mbp"))
   }
 
+  /** A chr3 record past the 512 Mbp BAI limit. */
+  private val far = Bam.BamRecord("rFar", 0, "chr3", (1 << 29) + 1, 60,
+    "20M", "*", 0, 0, "A" * 20, "I" * 20, Map.empty)
+
+  test("the write task indexes a sorted shard only; an unsorted one is written without a .bai") {
+    val fs = new Path("/").getFileSystem(new Configuration())
+    val recs = mkRecords(60)
+    // coalesce(1) keeps the frame's order: descending positions, no index
+    val dir = Files.createTempDirectory("graft_bam_unsorted").toString
+    val Seq(written) = Bam.write(spark.createDataFrame(recs.reverse).coalesce(1), dir, blockData = 512)
+    assert(bytes(new Path(written)).sameElements(Bgzf.compress(Bam.encode(recs.reverse.iterator,
+      recs.map(_.rname).distinct.sorted.map((_, 500000000))), 512)))
+    assert(!fs.exists(new Path(written + ".bai")), "an unsorted shard must get no .bai")
+    // a record past 512 Mbp ahead of the disorder is no reason to fail:
+    // the shard turns out unsorted, so no index would be written
+    val shard = new Path(Files.createTempDirectory("graft_bam_far").resolve("part-0.bam").toString)
+    Bam.writeShard(fs, shard, (recs :+ far :+ recs.head).iterator, refs3, 512)
+    assert(fs.exists(shard) && !fs.exists(new Path(shard.toString + ".bai")))
+    assert(bytes(shard).sameElements(Bgzf.compress(Bam.encode((recs :+ far :+ recs.head).iterator, refs3), 512)))
+  }
+
+  test("a sorted shard past 512 Mbp fails the write with Bai.build's message and leaves no file") {
+    val fs = new Path("/").getFileSystem(new Configuration())
+    val shard = new Path(Files.createTempDirectory("graft_bam_far").resolve("part-0.bam").toString)
+    val e = intercept[IllegalArgumentException] {
+      Bam.writeShard(fs, shard, (mkRecords(60) :+ far).iterator, refs3, 512)
+    }
+    assert(e.getMessage.contains("512 Mbp") && e.getMessage.contains("chr3"))
+    assert(!fs.exists(shard) && !fs.exists(new Path(shard.toString + ".bai")))
+  }
+
+  test("a failed shard write deletes its partial .bam and rethrows the first exception") {
+    val fs = new Path("/").getFileSystem(new Configuration())
+    val dir = Files.createTempDirectory("graft_bam_fail")
+    val shard = new Path(dir.resolve("part-0.bam").toString)
+    // blockData 512: many blocks reach the file before the failure
+    val bad = mkRecords(200).updated(150, mkRecords(1).head.copy(header = "rBad", cigar = "10M5Q"))
+    val e = intercept[IllegalArgumentException](Bam.writeShard(fs, shard, bad.iterator, refs3, 512))
+    assert(e.getMessage.contains("rBad"))
+    assert(!fs.exists(shard))
+    val boom = mkRecords(200).iterator ++ Iterator.continually[Bam.BamRecord](
+      throw new IllegalStateException("input failed"))
+    val e2 = intercept[IllegalStateException](Bam.writeShard(fs, shard, boom, refs3, 512))
+    assert(e2.getMessage == "input failed" && e2.getSuppressed.isEmpty)
+    assert(!fs.exists(shard) && !fs.exists(new Path(shard.toString + ".bai")))
+    assert(dir.toFile.list().forall(_.startsWith(".")), "only checksum files may remain")
+  }
+
   test("zero-length .bam files are skipped at listing, not aborted on (advice r3)") {
     // one listing rule for every reader: a directory holding one real
     // file, a zero-length one (e.g. an in-progress write), and _SUCCESS
