@@ -422,11 +422,16 @@ object SeqTable {
       pos, pos + maxLen - 1)
   }
 
+  /** Reads whose letters [[fromReadsDf]] guesses the sequence type from:
+    * the first 1000 in partition order, the rows `limit(1000)` collects.
+    */
+  private val GuessRows = 1000
+
   /** Distributed S6: build from a DataFrame of pre-aligned reads
-    * (read_id, seq[, qual]) without collecting — the window length comes
-    * from one tiny aggregate and padding is a column expression. This is
-    * the constructor FASTQ/FASTA scans feed at scale; the Seq overload
-    * exists for fixture-sized inputs.
+    * (read_id, seq[, qual]) without collecting — the window length and the
+    * type guess come from one per-partition scan and padding is a column
+    * expression. This is the constructor FASTQ/FASTA scans feed at scale;
+    * the Seq overload exists for fixture-sized inputs.
     */
   def fromReadsDf(
       df: DataFrame,
@@ -434,14 +439,41 @@ object SeqTable {
       seqType: Option[String] = None,
       phredAdjust: Int = Alphabets.PhredAdjust): SeqTable = {
     val spark = df.sparkSession
+    import spark.implicits._
     val hasQ = df.columns.contains("qual")
+    // one scan, one job: each partition returns its row count, its longest
+    // seq (in code points, as `length`) and, over its first GuessRows rows,
+    // the letters each row adds to the partition's letter set with the
+    // row's index. The type guess depends only on the letter set, so
+    // O(partitions × alphabet) reaches the driver, not the reads.
+    val partials = df.select(col("seq"))
+      .mapPartitions { it =>
+        var n = 0L; var maxLen = -1
+        val seen = scala.collection.mutable.Set.empty[Char]
+        val grows = Seq.newBuilder[(Long, String)]
+        it.foreach { r =>
+          if (!r.isNullAt(0)) {
+            val s = r.getString(0)
+            maxLen = math.max(maxLen, s.codePointCount(0, s.length))
+            if (n < GuessRows) {
+              val added = s.distinct.filterNot(seen)
+              if (added.nonEmpty) { seen ++= added; grows += ((n, added)) }
+            }
+          }
+          n += 1
+        }
+        Iterator.single((n, maxLen, grows.result()))
+      }.collect()
+    require(partials.exists(_._2 >= 0), "fromReadsDf: no reads")
+    val maxLen = partials.map(_._2).max
     val st = seqType.getOrElse {
-      val sample = df.select(col("seq")).limit(1000)
-        .collect().map(_.getString(0))
-      Alphabets.guessSeqType(sample)
+      // `b` rows precede a partition; its growth within the prefix counts
+      val before = partials.scanLeft(0L)(_ + _._1)
+      Alphabets.guessSeqType(partials.zip(before).flatMap { case ((_, _, grows), b) =>
+        grows.collect { case (i, added) if b + i < GuessRows => added }
+      })
     }
     val fill = Alphabets.fillFor(st)
-    val maxLen = df.agg(max(length(col("seq")))).head().getInt(0)
     val reads = df.select(
       col("read_id"),
       rpad(col("seq"), maxLen, fill.toString).as("seq"),

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** A reference sequence to compare reads against; `pos` is the reference
@@ -11,20 +11,27 @@ final case class RefSeq(name: String, seq: String, pos: Int = 1)
 /** Read × reference comparison products (SURVEY §2.4, J1-J7).
   *
   * The reference implements these as numpy broadcasts of an N×P matrix
-  * against an M×P matrix (numpy_ops.py:21-104). Spark-first shape: explode
-  * the (small, driver-held) reference set into a long (ref_name, position,
-  * ref_base) frame and broadcast-join it against the long read frame on
-  * `position` — a broadcast hash join with no shuffle on the read side;
-  * downstream reductions group by (read_id, ref_name).
+  * against an M×P matrix (numpy_ops.py:21-104). Spark-first shape: the
+  * (small, driver-held) reference set becomes a literal position →
+  * (ref_name, ref_base) [[PositionIndex]], and each row of the long read
+  * frame looks up the letters of the refs covering its position — no
+  * join, no broadcast job, no shuffle on the read side; downstream
+  * reductions group by (read_id, ref_name).
   */
 object Compare {
 
-  /** Long (ref_name, position, ref_base) frame from driver-side refs. */
-  def refLetters(spark: SparkSession, refs: Seq[RefSeq]): DataFrame = {
-    import spark.implicits._
-    refs.flatMap { r =>
-      r.seq.zipWithIndex.map { case (c, i) => (r.name, r.pos + i, c.toString) }
-    }.toDF("ref_name", "position", "ref_base")
+  /** Each row of `df` (which has `position`) once per ref covering its
+    * position, with that ref's `ref_name` and `ref_base` added: the rows of
+    * an inner join on `position` against the refs' letters.
+    */
+  private def withRefBases(df: DataFrame, refs: Seq[RefSeq]): DataFrame = {
+    val letters = refs.flatMap { r =>
+      r.seq.zipWithIndex.map { case (c, i) => (r.pos + i, (r.name, c.toString)) }
+    }
+    // named fields: the generator's outputs are the ref_name and ref_base
+    // columns themselves, so filters on them stay above it as written
+    df.select(col("*"), inline(PositionIndex.lookup(letters, col("position"))
+      .cast("array<struct<ref_name:string,ref_base:string>>")))
   }
 
   /** J1/J2 `compare_sequence_matrices` / `compare_to_references`
@@ -37,8 +44,9 @@ object Compare {
     * reference maps to SQL NULL here.
     *
     * Output: (read_id, ref_name, position, matched BOOLEAN nullable).
-    * Positions compared = intersection of read and ref coverage (the inner
-    * join), matching `_get_positions` (seqtables.py:711-727).
+    * Positions compared = intersection of read and ref coverage (the
+    * position lookup's inner-join rows), matching `_get_positions`
+    * (seqtables.py:711-727).
     */
   def compareToReferences(
       long: DataFrame,
@@ -46,7 +54,6 @@ object Compare {
       treatAsMatch: Seq[Char] = Nil,
       flip: Boolean = false,
       ignoreChars: Seq[Char] = Nil): DataFrame = {
-    val refsDf = refLetters(long.sparkSession, refs)
     val tam = treatAsMatch.map(_.toString)
     val ign = ignoreChars.map(_.toString)
     val eq0 = col("base") === col("ref_base")
@@ -55,7 +62,7 @@ object Compare {
     val matched =
       if (ign.isEmpty) eq2
       else when(col("base").isin(ign: _*) || col("ref_base").isin(ign: _*), lit(null)).otherwise(eq2)
-    long.join(broadcast(refsDf), Seq("position"))
+    withRefBases(long, refs)
       .select(col("read_id"), col("ref_name"), col("position"), matched.as("matched"))
   }
 
@@ -94,8 +101,7 @@ object Compare {
       ignoreChars: Seq[Char] = Nil): DataFrame = {
     val dist = Distributions.seqDist(long, ignoreChars)
       .withColumnRenamed("base", "read_base")
-    val refsDf = refLetters(long.sparkSession, refs)
-    val joined = dist.join(broadcast(refsDf), Seq("position"))
+    val joined = withRefBases(dist, refs)
     val total = if (normalized)
       joined.groupBy(col("ref_name")).agg(sum(col("cnt")).as("grand_total"))
     else null

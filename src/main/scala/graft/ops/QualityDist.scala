@@ -23,7 +23,11 @@ import org.apache.spark.sql.functions._
   * size 20 — useful for feeding box-plot renderers without shipping the
   * raw data.
   *
-  * One hash aggregate keyed by bin (cardinality ≈ dozens).
+  * One map stage and one aggregate keyed by bin (cardinality ≈ dozens):
+  * each position finds its bins in a literal [[PositionIndex]] (no join
+  * against the bin list), one array `percentile` gives every percentile
+  * column, and the dozens of result rows are sorted in one partition (no
+  * range shuffle). Overlapping bins count a position once per bin.
   *
   * Output: (bin_label, bin_start, bin_end, n, mean, median, min, max,
   * p0, p10, p25, p50, p75, p90, p100, <extra user percentiles>).
@@ -52,11 +56,12 @@ object QualityDist {
       bins: Seq[(Int, Int)],
       excludeNullQuality: Boolean = true,
       percentiles: Seq[Double] = Nil): DataFrame = {
-    val spark = long.sparkSession
-    import spark.implicits._
-    val binsDf = broadcast(
-      bins.map { case (a, b) => (s"$a-$b", a, b) }
-        .toDF("bin_label", "bin_start", "bin_end"))
+    // one group per distinct bin; a listed duplicate covers its positions
+    // twice, as a join against the bin list would
+    val distinct = bins.distinct
+    val covering = PositionIndex.lookup(
+      bins.flatMap { b => val i = distinct.indexOf(b); (b._1 to b._2).map((_, i)) },
+      col("position"))
     val base = if (excludeNullQuality) long.filter(col("qual") > 0) else long
     // user percentiles round to integers BY THE REFERENCE'S CONTRACT
     // (numpy_ops.py:243 `[round(p, 0) for p in percentiles]`); Python
@@ -64,19 +69,25 @@ object QualityDist {
     // math.round (half-up), keeps half-integer requests reference-equal
     val per = (percentiles.map(math.rint) ++ ProgramRequired)
       .distinct.sorted
-    val pctExprs = per.map(p =>
-      percentile(col("qual"), lit(p / 100.0)).as(s"p${p.toInt}"))
+    val pct = (p: Double) => col("pct").getItem(per.indexOf(p))
     base
-      .join(binsDf, col("position").between(col("bin_start"), col("bin_end")))
-      .groupBy(col("bin_label"), col("bin_start"), col("bin_end"))
+      .select(explode(covering).as("bin"), col("qual"))
+      .groupBy(col("bin"))
       .agg(
         count(lit(1)).as("n"),
-        Seq(
-          avg(col("qual")).as("mean"),
-          percentile(col("qual"), lit(0.5)).as("median"),
-          min(col("qual")).as("min"),
-          max(col("qual")).as("max")) ++ pctExprs: _*)
-      .orderBy(col("bin_start"))
+        avg(col("qual")).as("mean"),
+        min(col("qual")).as("min"),
+        max(col("qual")).as("max"),
+        percentile(col("qual"), array(per.map(p => lit(p / 100.0)): _*)).as("pct"))
+      .select(Seq(
+        get(typedLit(distinct.map { case (a, e) => s"$a-$e" }), col("bin")).as("bin_label"),
+        get(typedLit(distinct.map(_._1)), col("bin")).as("bin_start"),
+        get(typedLit(distinct.map(_._2)), col("bin")).as("bin_end"),
+        col("n"), col("mean"), pct(50).as("median"), col("min"), col("max")) ++
+        per.map(p => pct(p).as(s"p${p.toInt}")): _*)
+      // dozens of rows: one partition sorts them without a range shuffle
+      .coalesce(1)
+      .sortWithinPartitions(col("bin_start"))
   }
 
   /** The reference's synthetic box-plot sample (numpy_ops.py:311-325): a

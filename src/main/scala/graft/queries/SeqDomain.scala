@@ -73,7 +73,7 @@ object SeqDomain {
         .select(col("position"), round(col("entropy"), 6).as("entropy"))
         .orderBy(col("position"))),
 
-    // J1-J3 hamming distance vs a broadcast reference.
+    // J1-J3 hamming distance vs a driver-held reference (a literal lookup).
     "q_hamming_doc0" -> ((s, dir) =>
       Compare.hammingDistance(docTable(s, dir).long, Seq(doc0Ref(s, dir)))
         .orderBy(col("read_id"))),

@@ -59,10 +59,24 @@ class PlanSpec extends AnyFunSuite {
     assert(exchanges <= 2, s"k-mer counts should be one shuffle:\n$p")
   }
 
-  test("comparison queries broadcast the reference side") {
+  test("comparison queries look the reference up as a literal, no join") {
     val p = physicalPlan("q_hamming_doc0")
-    assert(p.contains("BroadcastHashJoin") || p.contains("BroadcastExchange"),
-      "reference letters should broadcast:\n" + p.take(800))
+    assert(p.contains("Generate inline"), "reference letters are looked up per row:\n" + p.take(800))
+    assert(!p.contains("Join") && !p.contains("BroadcastExchange"),
+      "the reference side needs no join or broadcast:\n" + p.take(800))
+    // the groupBy's shuffle and the query's own orderBy; none for the refs
+    val exchanges = "Exchange ".r.findAllIn(p).length
+    assert(exchanges == 2, s"expected the aggregate's and the sort's exchanges only:\n$p")
+  }
+
+  test("quality bins: no join against the bins, no range exchange") {
+    val long = graft.core.SeqTable.fromReads(spark,
+      Seq(("r1", "ACGT", "IIII"), ("r2", "ACGT", "5I5I"))).long
+    val p = graft.ops.QualityDist(long, graft.ops.QualityDist.fastqcBins(4))
+      .queryExecution.executedPlan.toString
+    assert(p.contains("percentile"), p.take(800))
+    assert(!p.contains("BroadcastNestedLoopJoin") && !p.contains("Join"), p.take(800))
+    assert(!p.contains("rangepartitioning"), s"the bins' sort needs no range shuffle:\n$p")
   }
 
   test("distributed bigram scoring: token-keyed joins, no cartesian, no window") {

@@ -327,4 +327,41 @@ class FromReadsDfSpec extends org.scalatest.funsuite.AnyFunSuite {
     assert(!st.meta.hasQuality)
     assert(st.reads.head().getString(2) == "!!!!")
   }
+
+  test("fromReadsDf is one eager job") {
+    val df = spark.sparkContext.parallelize(
+      (0 until 40).map(i => (s"r$i", "ACGT".take(1 + i % 4), "IIII".take(1 + i % 4))), 4)
+      .toDF("read_id", "seq", "qual")
+    var st: SeqTable = null
+    val jobs = graft.TestSpark.jobsRun { st = SeqTable.fromReadsDf(df) }
+    assert(jobs == 1, s"fromReadsDf ran $jobs eager jobs")
+    assert(st.maxPos == 4 && st.meta.seqType == "NT")
+  }
+
+  test("fromReadsDf guesses the type from the first 1000 reads in partition order") {
+    // 4 partitions of 300 reads: the first 1000 are partitions 0-2 and the
+    // first 100 rows of partition 3; one protein-only read sits at global
+    // row `at`, partition 1 is empty of new letters, partition 2 adds 'N'
+    def input(at: Int) = spark.sparkContext.parallelize((0 until 1200).map { i =>
+      (s"r$i", if (i == at) "MEQW" else if (i == 650) "ACGN" else "ACGT")
+    }, 4).toDF("read_id", "seq")
+    def limitGuess(df: org.apache.spark.sql.DataFrame) = graft.model.Alphabets.guessSeqType(
+      df.select("seq").limit(1000).collect().map(_.getString(0)))
+    for ((at, want) <- Seq(999 -> "AA", 1000 -> "NT", 1199 -> "NT", 0 -> "AA", -1 -> "NT")) {
+      val df = input(at)
+      assert(limitGuess(df) == want, s"limit(1000) guess with the protein read at $at")
+      assert(SeqTable.fromReadsDf(df).meta.seqType == want, s"protein read at $at")
+    }
+    // a partition with no rows shifts nothing
+    val gap = spark.sparkContext.parallelize(Seq(("a", "ACGT")), 1)
+      .union(spark.sparkContext.emptyRDD[(String, String)])
+      .union(spark.sparkContext.parallelize(Seq(("b", "MEQW")), 1)).toDF("read_id", "seq")
+    assert(SeqTable.fromReadsDf(gap).meta.seqType == limitGuess(gap))
+  }
+
+  test("fromReadsDf on an empty input fails loudly") {
+    val empty = Seq.empty[(String, String)].toDF("read_id", "seq")
+    val e = intercept[IllegalArgumentException](SeqTable.fromReadsDf(empty))
+    assert(e.getMessage.contains("fromReadsDf: no reads"))
+  }
 }

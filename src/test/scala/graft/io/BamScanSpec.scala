@@ -5,6 +5,7 @@ import java.nio.file.Files
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
@@ -14,8 +15,20 @@ import graft.TestSpark
   * size must produce exactly the whole-file record set — no duplicates,
   * no drops — even when records straddle BGZF block boundaries.
   */
-class BamScanSpec extends AnyFunSuite {
+class BamScanSpec extends AnyFunSuite with BeforeAndAfterAll {
   private val spark = TestSpark.spark
+
+  /** Every file and directory this spec writes lives under `tmp`, removed
+    * when the spec ends.
+    */
+  private val tmp = Files.createTempDirectory("graft_bam_spec")
+
+  override def afterAll(): Unit = {
+    val all = Files.walk(tmp)
+    try all.sorted(java.util.Comparator.reverseOrder()).forEach(p => Files.delete(p))
+    finally all.close()
+    super.afterAll()
+  }
 
   private val rnd = new scala.util.Random(11)
   private val bases = "ACGT"
@@ -68,7 +81,7 @@ class BamScanSpec extends AnyFunSuite {
 
   private def writeBam(recs: Seq[Bam.BamRecord], blockData: Int): String = {
     val payload = Bam.encode(recs.iterator, refs3)
-    val f = Files.createTempFile("bamscan", ".bam")
+    val f = Files.createTempFile(tmp, "bamscan", ".bam")
     Files.write(f, Bgzf.compress(payload, blockData))
     f.toFile.getAbsolutePath
   }
@@ -117,7 +130,7 @@ class BamScanSpec extends AnyFunSuite {
     val path = writeBam(recs, blockData = 2048)
     val bytes = Files.readAllBytes(java.nio.file.Paths.get(path))
     val cut = java.util.Arrays.copyOf(bytes, bytes.length - 40) // rips the EOF + part of last block
-    val f = Files.createTempFile("bamtrunc", ".bam")
+    val f = Files.createTempFile(tmp, "bamtrunc", ".bam")
     Files.write(f, cut)
     val e = intercept[org.apache.spark.SparkException] {
       Bam.read(spark, f.toFile.getAbsolutePath).collect()
@@ -130,7 +143,7 @@ class BamScanSpec extends AnyFunSuite {
     val blocks = Iterator.iterate(0L)(p => p + Bgzf.inflateBlockAt(bytes, p.toInt)._2)
       .takeWhile(_ < bytes.length).toVector
     val atBlock = java.util.Arrays.copyOf(bytes, blocks(blocks.length - 2).toInt)
-    val g = Files.createTempFile("bamcut", ".bam")
+    val g = Files.createTempFile(tmp, "bamcut", ".bam")
     Files.write(g, bytes)
     val fs = new Path(g.toString).getFileSystem(new Configuration())
     Bai.write(Bai.build(fs, new Path(g.toString)), fs, new Path(g.toString + ".bai"))
@@ -152,10 +165,10 @@ class BamScanSpec extends AnyFunSuite {
     var at50 = Bam.encode(Iterator.empty, refs).length
     for (_ <- 0 until 50) at50 += 4 + le.getInt(at50)
     val head = Bgzf.compress(payload.take(at50), 512).dropRight(Bgzf.EofMarker.length)
-    val whole = Files.createTempFile("bamwhole", ".bam")
+    val whole = Files.createTempFile(tmp, "bamwhole", ".bam")
     Files.write(whole, head ++ Bgzf.compress(payload.drop(at50), 512))
     assert(Bam.read(spark, whole.toString, splitSize = 1024).count() == 100)
-    val noEof = Files.createTempFile("bamnoeof", ".bam")
+    val noEof = Files.createTempFile(tmp, "bamnoeof", ".bam")
     Files.write(noEof, head)
     val msg = s"missing BGZF EOF marker in file:$noEof"
     for (splitSize <- Seq(64L << 20, 1024L)) {
@@ -184,7 +197,7 @@ class BamScanSpec extends AnyFunSuite {
     for ((payload, msg) <- Seq(
         badOp -> s"invalid CIGAR op code 9 at inflated offset $p of",
         badSize -> s"corrupt BAM record at inflated offset $p of")) {
-      val f = Files.createTempFile("bambad", ".bam")
+      val f = Files.createTempFile(tmp, "bambad", ".bam")
       Files.write(f, Bgzf.compress(payload, 2048))
       val fs = new Path(f.toString).getFileSystem(new Configuration())
       val built = intercept[RuntimeException](Bai.build(fs, new Path(f.toString)))
@@ -242,7 +255,7 @@ class BamScanSpec extends AnyFunSuite {
   test("sharded layout: writeSharded + fetchSharded equal the full-scan filter") {
     import spark.implicits._
     val recs = mkRecords(1500)
-    val dir = java.nio.file.Files.createTempDirectory("graft_bam_sharded").toString
+    val dir = Files.createTempDirectory(tmp, "graft_bam_sharded").toString
     // UNSORTED input frame — writeSharded owns the coordinate ordering
     val df = spark.createDataset(rnd.shuffle(recs)).toDF()
     val files = Bam.writeSharded(df, dir, nShards = 4, blockData = 2048)
@@ -320,7 +333,7 @@ class BamScanSpec extends AnyFunSuite {
     }
     val cold = mkRecords(300)
     val recs = hot ++ cold
-    val dir = Files.createTempDirectory("graft_bam_hot").toString
+    val dir = Files.createTempDirectory(tmp, "graft_bam_hot").toString
     val files = Bam.writeSharded(spark.createDataset(rnd.shuffle(recs)).toDF(), dir,
       nShards = 4, blockData = 2048)
     val perShard = files.map(f => Bam.read(spark, f).count())
@@ -390,7 +403,7 @@ class BamScanSpec extends AnyFunSuite {
   test("a region fetch is one Spark job, over a sharded layout and over one file") {
     import spark.implicits._
     val recs = mkRecords(800)
-    val dir = Files.createTempDirectory("graft_bam_jobs").toString
+    val dir = Files.createTempDirectory(tmp, "graft_bam_jobs").toString
     val files = Bam.writeSharded(spark.createDataset(recs).toDF(), dir, nShards = 4,
       blockData = 2048)
     assert(files.length == 4, s"fixture must write 4 shards, got ${files.length}")
@@ -405,12 +418,12 @@ class BamScanSpec extends AnyFunSuite {
   }
 
   test("writeSharded parses its input once: its jobs, and an index per shard from the write") {
-    val sam = Files.createTempFile("bamjobs", ".sam")
+    val sam = Files.createTempFile(tmp, "bamjobs", ".sam")
     Files.write(sam, rnd.shuffle(mkRecords(800)).map { r =>
       Seq(r.header, r.flag, r.rname, r.pos, r.mapq, r.cigar, r.rnext, r.pnext, r.tlen, r.seq, r.qual)
         .mkString("\t")
     }.mkString("", "\n", "\n").getBytes("US-ASCII"))
-    val dir = Files.createTempDirectory("graft_bam_write_jobs").toString
+    val dir = Files.createTempDirectory(tmp, "graft_bam_write_jobs").toString
     var files: Seq[String] = Nil
     val jobs = TestSpark.jobsRun {
       files = Bam.writeSharded(Sam.read(spark, sam.toString), dir, nShards = 4, blockData = 2048)
@@ -431,7 +444,7 @@ class BamScanSpec extends AnyFunSuite {
   }
 
   test("buildAll indexes every .bam in a directory, one task per file") {
-    val dir = Files.createTempDirectory("baidir")
+    val dir = Files.createTempDirectory(tmp, "baidir")
     for (i <- 0 until 3) {
       val recs = mkRecords(100)
       val payload = Bam.encode(recs.iterator,
@@ -586,7 +599,7 @@ class BamScanSpec extends AnyFunSuite {
     val far = Bam.BamRecord("rFar", 0, "chrBig", (1 << 29) + 1, 60,
       "20M", "*", 0, 0, "A" * 20, "I" * 20, Map.empty)
     val payload = Bam.encode(Iterator(far), Seq(("chrBig", (1 << 30))))
-    val f = Files.createTempFile("bambig", ".bam")
+    val f = Files.createTempFile(tmp, "bambig", ".bam")
     Files.write(f, Bgzf.compress(payload, 4096))
     val fs = new Path(f.toString).getFileSystem(new Configuration())
     val e = intercept[IllegalArgumentException] {
@@ -603,14 +616,14 @@ class BamScanSpec extends AnyFunSuite {
     val fs = new Path("/").getFileSystem(new Configuration())
     val recs = mkRecords(60)
     // coalesce(1) keeps the frame's order: descending positions, no index
-    val dir = Files.createTempDirectory("graft_bam_unsorted").toString
+    val dir = Files.createTempDirectory(tmp, "graft_bam_unsorted").toString
     val Seq(written) = Bam.write(spark.createDataFrame(recs.reverse).coalesce(1), dir, blockData = 512)
     assert(bytes(new Path(written)).sameElements(Bgzf.compress(Bam.encode(recs.reverse.iterator,
       recs.map(_.rname).distinct.sorted.map((_, 500000000))), 512)))
     assert(!fs.exists(new Path(written + ".bai")), "an unsorted shard must get no .bai")
     // a record past 512 Mbp ahead of the disorder is no reason to fail:
     // the shard turns out unsorted, so no index would be written
-    val shard = new Path(Files.createTempDirectory("graft_bam_far").resolve("part-0.bam").toString)
+    val shard = new Path(Files.createTempDirectory(tmp, "graft_bam_far").resolve("part-0.bam").toString)
     Bam.writeShard(fs, shard, (recs :+ far :+ recs.head).iterator, refs3, 512)
     assert(fs.exists(shard) && !fs.exists(new Path(shard.toString + ".bai")))
     assert(bytes(shard).sameElements(Bgzf.compress(Bam.encode((recs :+ far :+ recs.head).iterator, refs3), 512)))
@@ -618,7 +631,7 @@ class BamScanSpec extends AnyFunSuite {
 
   test("a sorted shard past 512 Mbp fails the write with Bai.build's message and leaves no file") {
     val fs = new Path("/").getFileSystem(new Configuration())
-    val shard = new Path(Files.createTempDirectory("graft_bam_far").resolve("part-0.bam").toString)
+    val shard = new Path(Files.createTempDirectory(tmp, "graft_bam_far").resolve("part-0.bam").toString)
     val e = intercept[IllegalArgumentException] {
       Bam.writeShard(fs, shard, (mkRecords(60) :+ far).iterator, refs3, 512)
     }
@@ -628,7 +641,7 @@ class BamScanSpec extends AnyFunSuite {
 
   test("a failed shard write deletes its partial .bam and rethrows the first exception") {
     val fs = new Path("/").getFileSystem(new Configuration())
-    val dir = Files.createTempDirectory("graft_bam_fail")
+    val dir = Files.createTempDirectory(tmp, "graft_bam_fail")
     val shard = new Path(dir.resolve("part-0.bam").toString)
     // blockData 512: many blocks reach the file before the failure
     val bad = mkRecords(200).updated(150, mkRecords(1).head.copy(header = "rBad", cigar = "10M5Q"))
@@ -648,7 +661,7 @@ class BamScanSpec extends AnyFunSuite {
     // file, a zero-length one (e.g. an in-progress write), and _SUCCESS
     // and hidden copies of the real file; only the real file is read
     def layout(ext: String, real: Array[Byte]): String = {
-      val dir = Files.createTempDirectory(s"listing_$ext")
+      val dir = Files.createTempDirectory(tmp, s"listing_$ext")
       Files.write(dir.resolve(s"good.$ext"), real)
       Files.createFile(dir.resolve(s"inflight.$ext"))
       Files.write(dir.resolve("_SUCCESS"), real)
